@@ -2,7 +2,7 @@ package graft
 
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analytics.NsQueries
@@ -61,7 +61,9 @@ object Main {
         graft.sources.ApiClient.extract(
           spark, url, s"$storeRoot/raw_archive", headers, clock)
       } else RawSource.readRawJsonArray(spark, rawPath)
-    if (raw.isEmpty) return Seq("extracted" -> 0L) // P13 short-circuit
+    // one count serves both the P13 short-circuit and the report
+    val extracted = raw.count()
+    if (extracted == 0) return Seq("extracted" -> 0L) // P13 short-circuit
 
     // Load 1 (bronze): raw JSON kept verbatim, insert-if-absent on the
     // natural key (`raw_disruptions`, schema.sql:7-12).
@@ -77,31 +79,32 @@ object Main {
 
     // Days whose gold stats this batch invalidates: the incoming rows'
     // days plus the days of any stored versions they replace (an
-    // upsert can move a disruption across days). Collected BEFORE the
-    // upsert swaps the files the stored-side plan reads; the set is
-    // small (days per batch), so a driver-side collect is free.
-    def dates(df: org.apache.spark.sql.DataFrame): Seq[Option[java.sql.Date]] =
-      // bounded-collect: distinct() calendar dates — O(days touched
-      // by one batch), not rows
-      df.select(to_date(col("start_time")).as("d")).distinct()
-        .collect().map(r => Option(r.getDate(0))).toSeq
-    val touched = (dates(cleaned) ++ store.read("disruptions").toSeq.flatMap(ex =>
-      dates(ex.join(cleaned.select("disruption_id"), Seq("disruption_id"), "left_semi")))
-      ).distinct
+    // upsert can move a disruption across days), in one query.
+    // Collected BEFORE the upsert swaps the files the stored-side plan
+    // reads; the set is small (days per batch), so a driver-side
+    // collect is free. Quality counters (observe/CollectMetrics) ride
+    // this job, which reads every cleaned row once per run — the
+    // reference's per-run record accounting without a second scan; a
+    // QueryExecutionListener (or StreamingQueryListener) drains them.
+    val observed = graft.etl.Metrics.observeQuality(cleaned, "silver_load",
+      nullCols = Seq("end_time", "duration_minutes"),
+      checks = Map("impact_range" -> col("impact_level").between(1, 5)))
+    def day(df: org.apache.spark.sql.DataFrame) =
+      df.select(to_date(col("start_time")).as("d"))
+    val dayRows = store.read("disruptions").foldLeft(day(observed)) { (acc, ex) =>
+      acc.union(day(ex.join(cleaned.select("disruption_id"), Seq("disruption_id"), "left_semi")))
+    }
+    // bounded-collect: distinct() calendar dates — O(days touched by
+    // one batch), not rows
+    val touched = dayRows.distinct().collect().map(r => Option(r.getDate(0))).toSeq
     val touchedDays = touched.flatten
     // a NULL start_time is its own refreshable "day": the stats table
     // carries a null-date group and it must stay in sync too
     val touchedNull = touched.contains(None)
 
     // Load 2 (silver): latest-wins upsert — re-running the same batch
-    // is a no-op, later batches update ongoing disruptions. Quality
-    // counters (observe/CollectMetrics) ride the load job itself — the
-    // reference's per-run record accounting without a second scan;
-    // a QueryExecutionListener (or StreamingQueryListener) drains them.
-    val observed = graft.etl.Metrics.observeQuality(cleaned, "silver_load",
-      nullCols = Seq("end_time", "duration_minutes"),
-      checks = Map("impact_range" -> col("impact_level").between(1, 5)))
-    store.upsert("disruptions", observed, "disruption_id", "updated_at")
+    // writes nothing, later batches update ongoing disruptions.
+    store.upsert("disruptions", cleaned, "disruption_id", "updated_at")
 
     // Dimension seed (ON CONFLICT DO NOTHING ≡ append-if-absent).
     val stations = spark.createDataFrame(NsSchemas.stationSeed)
@@ -113,27 +116,34 @@ object Main {
     // but never populated — refreshed ONLY for the touched days (the
     // reference recomputes from the full table every run, which at
     // 100 TB rescans the corpus; per-day stats depend only on that
-    // day's rows, so a partition-grain replaceWhere is exact).
+    // day's rows, so a partition-grain replaceWhere is exact). The
+    // refresh runs even when silver did not change: it is what repairs
+    // a crash between the silver commit and the gold write.
     val silver = store.read("disruptions").get
     def touchedCond(day: org.apache.spark.sql.Column): Option[org.apache.spark.sql.Column] = {
       val inDays = if (touchedDays.nonEmpty) Some(day.isInCollection(touchedDays)) else None
       val isNull = if (touchedNull) Some(day.isNull) else None
       (inDays.toSeq ++ isNull.toSeq).reduceOption(_ || _)
     }
-    touchedCond(to_date(col("start_time"))).foreach { silverCond =>
-      store.replaceWhere("daily_stats",
-        NsQueries.dailyStats(silver.filter(silverCond), clock),
-        touchedCond(col("date")).get)
+    val dailyStatsRows = touchedCond(to_date(col("start_time"))) match {
+      case Some(silverCond) =>
+        store.replaceWhere("daily_stats",
+          NsQueries.dailyStats(silver.filter(silverCond), clock),
+          touchedCond(col("date")).get)
+      case None => store.read("daily_stats").map(_.count()).getOrElse(0L)
     }
 
-    // Report (pipeline.py:304-342).
+    // Report (pipeline.py:304-342); the silver row count is observed on
+    // the report's own scan.
+    val silverRows = Observation()
     // bounded-collect: todaysReport is a global O(1)-row aggregate
-    val report = NsQueries.todaysReport(silver, clock).collect()(0)
+    val report = NsQueries.todaysReport(
+      silver.observe(silverRows, count(lit(1)).as("n")), clock).collect()(0)
     Seq(
-      "extracted" -> raw.count(),
+      "extracted" -> extracted,
       "bronze_inserted" -> bronzeInserted,
-      "silver_rows" -> silver.count(),
-      "daily_stats_rows" -> store.read("daily_stats").map(_.count()).getOrElse(0L),
+      "silver_rows" -> silverRows.get("n").asInstanceOf[Long],
+      "daily_stats_rows" -> dailyStatsRows,
       "report_total_today" -> report.getAs[Long]("total"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -240,35 +240,31 @@ object NsQueries {
     * station and modal hour (ties break to the lexicographically /
     * numerically smallest, documented since the reference never
     * defined them).
+    *
+    * One aggregation over one row per (disruption, affected station):
+    * the disruption's own measures count on its first station row only
+    * (`__pos` 0, or null when it has no stations), and
+    * `mode(…, deterministic = true)` picks the modal
+    * value with ties to the smallest. The null-date group has no modal
+    * station, as a join on the date key never matched it.
     */
   def dailyStats(d: DataFrame, clock: Clock): DataFrame = {
-    val base = d.groupBy(to_date(col("start_time")).as("date"))
+    val rows = d.select(
+      to_date(col("start_time")).as("date"), col("start_time"), col("type"),
+      col("duration_minutes"),
+      posexplode_outer(split(col("affected_stations"), ",")).as(Seq("__pos", "__station")))
+    val first = coalesce(col("__pos"), lit(0)) === 0
+    rows.groupBy("date")
       .agg(
-        count(lit(1)).as("total_disruptions"),
-        sum(when(col("type") === "cancellation", 1).otherwise(0))
+        count(when(first, 1)).as("total_disruptions"),
+        sum(when(first && col("type") === "cancellation", 1).otherwise(0))
           .as("total_cancellations"),
-        avg(col("duration_minutes")).as("avg_duration_minutes"),
-        max(col("duration_minutes")).as("max_duration_minutes"))
-
-    def modal(df: DataFrame, keyCol: Column, out: String): DataFrame = {
-      val g = df.groupBy(to_date(col("start_time")).as("date"), keyCol.as(out))
-        .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy("date").orderBy(desc("cnt"), asc(out))
-      g.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("date"), col(out))
-    }
-    val topStation = modal(
-      d.filter(col("affected_stations").isNotNull)
-        .select(col("start_time"),
-          explode(split(col("affected_stations"), ",")).as("sc")),
-      col("sc"), "most_affected_station")
-    val topHour = modal(
-      d.filter(col("start_time").isNotNull),
-      date_format(col("start_time"), "HH"), "peak_hour")
-
-    base
-      .join(topStation, Seq("date"), "left")
-      .join(topHour, Seq("date"), "left")
+        avg(when(first, col("duration_minutes"))).as("avg_duration_minutes"),
+        max(when(first, col("duration_minutes"))).as("max_duration_minutes"),
+        when(col("date").isNotNull, mode(col("__station"), deterministic = true))
+          .as("most_affected_station"),
+        mode(when(first, date_format(col("start_time"), "HH")), deterministic = true)
+          .as("peak_hour"))
       .withColumn("calculated_at", clock.ts)
       .orderBy("date")
   }

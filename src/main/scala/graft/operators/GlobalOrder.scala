@@ -151,9 +151,11 @@ object GlobalOrder {
         sum("__v").over(Window.partitionBy("__bkt").orderBy(order: _*)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .join(broadcast(per), "__bkt")
-      .withColumn(name,
-        when(col("__soff").isNull, col("__lsum"))
-          .otherwise(col("__soff") + col("__lsum")))
+      // either part may be null (no earlier bucket, or a prefix of
+      // null values): like the built-in frame, a sum ignores null
+      // parts and is null only when every part is
+      .withColumn(name, coalesce(
+        col("__soff") + col("__lsum"), col("__lsum"), col("__soff")))
       .drop("__bkt", "__v", "__lsum", "__soff")
   }
 

@@ -1,10 +1,14 @@
 package graft.store
 
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets
+
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Parquet-backed table store with the reference's two idempotent
   * load semantics (`src/pipeline.py:133-298`), re-expressed as set
@@ -12,9 +16,10 @@ import org.apache.spark.sql.expressions.Window
   *
   *  - insert-if-absent (S7): anti-join new rows against existing keys,
   *    append only the novel ones — `INSERT … ON CONFLICT DO NOTHING`;
-  *  - upsert (S8): union + latest-wins `row_number` rewrite —
-  *    `UPDATE` existing / `INSERT` new, per-record savepoints replaced
-  *    by an upfront validity filter (Spark tasks are all-or-nothing).
+  *  - upsert (S8): latest-wins merge that rewrites the table only when
+  *    a batch row changes it — `UPDATE` existing / `INSERT` new,
+  *    per-record savepoints replaced by an upfront validity filter
+  *    (Spark tasks are all-or-nothing).
   *
   * Both satisfy the reference's explicit "safe to re-run" contract
   * (README.md:37): applying the same batch twice ≡ once.
@@ -26,63 +31,76 @@ final class TableStore(spark: SparkSession, root: String) {
 
   def path(table: String): String = s"$root/$table"
 
-  /** Schema catalog: what a real table store keeps in its metastore,
-    * so readers never pay parquet footer inference (a Spark job per
-    * `spark.read.parquet` call — measured ~60 ms each at gate scale,
-    * and the store paths call `read` once per batch). Writes record
-    * `df.schema.asNullable`, which is exactly what file-source
-    * inference would return (file sources force every field nullable
-    * — verified empirically on this Spark: write
-    * `k:bigint:false` → read `k:bigint:true`), so a memoized read is
-    * plan-identical to an inferred one. Contract: this TableStore
-    * instance is the only writer of `root` (already the store's
-    * documented role — mutable state goes through TableStore);
-    * external writes would go unseen by the memo exactly as they
-    * would by a real catalog.
+  /** Schema catalog, kept with the data: every write stores the frame's
+    * schema as the `_`-prefixed side file [[SchemaFile]] inside the
+    * table directory (swaps write it into `__tmp` before the rename, so
+    * it commits with the data), and [[read]] uses it instead of parquet
+    * footer inference — a Spark job per `spark.read.parquet` call,
+    * measured ~60 ms each at gate scale. Because the catalog lives on
+    * disk, a fresh TableStore on an existing root (one per pipeline
+    * run, one JVM per run in production) reads without inference too.
+    * The stored schema is `df.schema` forced nullable, which is exactly
+    * what file-source inference returns (file sources force every
+    * field nullable — write `k:bigint:false` → read `k:bigint:true`),
+    * so a catalogued read is plan-identical to an inferred one. Spark's
+    * file index skips `_`/`.`-prefixed files, so the side file (and the
+    * local filesystem's `.crc` next to it) is invisible to
+    * `spark.read.parquet`, [[registerViews]] and [[fileCount]]. A table
+    * without the side file (written before it existed, or by another
+    * writer) falls back to inference.
     */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private lazy val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
 
   // recursive nullable-forcing, matching file-source inference
   // (DataSource.resolveRelation applies asNullable to file schemas;
   // the method itself is private[spark])
-  private def forceNullable(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case s: StructType => StructType(s.fields.map(f =>
-        f.copy(dataType = forceNullable(f.dataType), nullable = true)))
-      case a: ArrayType => a.copy(
-        elementType = forceNullable(a.elementType), containsNull = true)
-      case m: MapType => m.copy(
-        keyType = forceNullable(m.keyType),
-        valueType = forceNullable(m.valueType), valueContainsNull = true)
-      case other => other
-    }
+  private def forceNullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = forceNullable(f.dataType), nullable = true)))
+    case a: ArrayType => a.copy(
+      elementType = forceNullable(a.elementType), containsNull = true)
+    case m: MapType => m.copy(
+      keyType = forceNullable(m.keyType),
+      valueType = forceNullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
-  private def memoize(table: String, df: DataFrame): Unit =
-    schemaMemo.put(table,
-      forceNullable(df.schema).asInstanceOf[org.apache.spark.sql.types.StructType])
-
-  def exists(table: String): Boolean = {
-    val p = new Path(path(table))
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  private def saveSchema(dir: String, df: DataFrame): Unit = {
+    val out = fs.create(new Path(dir, TableStore.SchemaFile), true)
+    try out.write(forceNullable(df.schema).json.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
   }
+
+  private def storedSchema(table: String): Option[StructType] =
+    try {
+      val in = fs.open(new Path(path(table), TableStore.SchemaFile))
+      try Some(DataType.fromJson(
+        new String(in.readAllBytes(), StandardCharsets.UTF_8)).asInstanceOf[StructType])
+      finally in.close()
+    } catch { case _: FileNotFoundException => None }
+
+  def exists(table: String): Boolean = fs.exists(new Path(path(table)))
 
   def read(table: String): Option[DataFrame] =
     if (!exists(table)) None
-    else Some(schemaMemo.get(table) match {
-      case null =>
-        val df = spark.read.parquet(path(table))
-        memoize(table, df)
-        df
-      case known => spark.read.schema(known).parquet(path(table))
+    else Some(storedSchema(table) match {
+      case Some(known) => spark.read.schema(known).parquet(path(table))
+      case None => spark.read.parquet(path(table))
     })
 
-  def write(table: String, df: DataFrame): Unit = {
-    df.write.mode(SaveMode.Overwrite).parquet(path(table))
-    memoize(table, df)
+  /** Overwrite `table` with `df`; returns the rows written, counted by
+    * an observation on the write job itself.
+    */
+  def write(table: String, df: DataFrame): Long = {
+    val n = counted(df)(_.write.mode(SaveMode.Overwrite).parquet(path(table)))
+    saveSchema(path(table), df)
+    n
+  }
+
+  private def counted(df: DataFrame)(save: DataFrame => Unit): Long = {
+    val rows = Observation()
+    save(df.observe(rows, count(lit(1)).as("n")))
+    rows.get("n").asInstanceOf[Long]
   }
 
   /** Append only rows whose key is not already present; returns the
@@ -90,9 +108,7 @@ final class TableStore(spark: SparkSession, root: String) {
     */
   def appendIfAbsent(table: String, df: DataFrame, key: String): Long =
     read(table) match {
-      case None =>
-        write(table, df.dropDuplicates(key))
-        spark.read.parquet(path(table)).count()
+      case None => write(table, df.dropDuplicates(key))
       case Some(existing) =>
         val novel = df.dropDuplicates(key)
           .join(existing.select(key), Seq(key), "left_anti")
@@ -103,32 +119,50 @@ final class TableStore(spark: SparkSession, root: String) {
 
   /** Latest-wins upsert: rows in `df` replace existing rows with the
     * same key; among duplicates the highest `versionCol` (then the
-    * incoming batch over the stored copy) wins.
+    * incoming batch over the stored copy) wins. Returns the number of
+    * rows that changed the table.
     */
-  def upsert(table: String, df: DataFrame, key: String, versionCol: String): Unit =
+  def upsert(table: String, df: DataFrame, key: String, versionCol: String): Long =
     upsert(table, df, Seq(key), versionCol)
 
   /** Composite-key latest-wins upsert (same semantics as the
-    * single-key form; the key is the tuple of `keys`).
+    * single-key form; the key is the tuple of `keys`, compared
+    * null-safely, so a null key is one key like any other).
+    *
+    * One pass over the batch finds the rows that change the table: after
+    * in-batch latest-wins dedup, a row changes the table unless the
+    * stored row with its key has a higher version (nulls lowest) or is
+    * identical in every column. Nothing changes → nothing is written:
+    * a replayed batch, or the empty final micro-batch a streaming query
+    * delivers to foreachBatch, costs one probe job over the batch and
+    * no rewrite. Otherwise the stored rows of the changed keys are
+    * anti-joined away and the changed rows appended: the table is
+    * streamed through a join against the (small) changed keys instead
+    * of the table-wide `row_number` shuffle a union-and-rank merge
+    * needs. Broadcast choices are left to the planner's threshold.
     */
-  def upsert(table: String, df: DataFrame, keys: Seq[String], versionCol: String): Unit =
+  def upsert(table: String, df: DataFrame, keys: Seq[String], versionCol: String): Long = {
+    val latest = dedupLatest(df.withColumn("__src", lit(1)), keys, versionCol)
     read(table) match {
-      case None => write(table, dedupLatest(df.withColumn("__src", lit(1)), keys, versionCol))
+      case None => write(table, latest)
       case Some(existing) =>
-        // An empty incoming batch is a provable no-op (union adds no
-        // rows, latest-wins keeps every stored row), so skip the
-        // read-merge-rewrite of the whole table. Streaming callers hit
-        // this every run: the engine's final no-data micro-batch
-        // (watermark finalization) delivers an empty frame to
-        // foreachBatch, which otherwise paid a full table rewrite.
-        // The isEmpty probe is a LIMIT-1 job on the batch — cheap next
-        // to the rewrite it avoids and negligible next to a real merge.
-        if (df.isEmpty) ()
-        else swapWrite(table, dedupLatest(
-          existing.withColumn("__src", lit(0))
-            .unionByName(df.withColumn("__src", lit(1))),
-          keys, versionCol))
+        val stored = existing.select(existing.columns.map(c => col(c).as(s"__s_$c")): _*)
+        def s(c: String) = col(s"__s_$c")
+        val sameKey = keys.map(k => col(k) <=> s(k)).reduce(_ && _)
+        val storedHigher = coalesce(s(versionCol) > col(versionCol),
+          s(versionCol).isNotNull && col(versionCol).isNull)
+        val identical = latest.columns.map(c => col(c) <=> s(c)).reduce(_ && _)
+        val changed = latest.join(stored, sameKey && (storedHigher || identical), "left_anti")
+        val n = changed.count()
+        if (n > 0) {
+          val changedKeys = changed.select(keys.map(k => col(k).as(s"__c_$k")): _*)
+          swapWrite(table, existing
+            .join(changedKeys, keys.map(k => col(k) <=> col(s"__c_$k")).reduce(_ && _), "left_anti")
+            .unionByName(changed))
+        }
+        n
     }
+  }
 
   /** Apply a CDC changelog: `changes` carries the table schema plus
     * `opCol` ∈ {I, U, D} and a monotone `versionCol`. Per key the
@@ -245,9 +279,10 @@ final class TableStore(spark: SparkSession, root: String) {
     * everything else is untouched — including removing matched rows
     * that `df` no longer contains, which an upsert cannot express.
     * The refresh primitive for partition-grain recomputes: rewrite
-    * the touched partitions, never the table.
+    * the touched partitions, never the table. Returns the table's row
+    * count after the write, observed on the write job.
     */
-  def replaceWhere(table: String, df: DataFrame, cond: org.apache.spark.sql.Column): Unit =
+  def replaceWhere(table: String, df: DataFrame, cond: org.apache.spark.sql.Column): Long =
     read(table) match {
       case None => write(table, df)
       case Some(existing) =>
@@ -289,15 +324,13 @@ final class TableStore(spark: SparkSession, root: String) {
     */
   def compact(table: String, targetFileMB: Int = 128): Unit =
     read(table).foreach { df =>
-      val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-      val bytes = fs.getContentSummary(new Path(path(table))).getLength
+        val bytes = fs.getContentSummary(new Path(path(table))).getLength
       val nFiles = math.max(1, (bytes / (targetFileMB * 1024L * 1024L)).toInt)
       swapWrite(table, df.repartition(nFiles))
     }
 
   /** Number of data files currently backing a table. */
   def fileCount(table: String): Int = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     fs.listStatus(new Path(path(table)))
       .count(s => s.isFile && s.getPath.getName.startsWith("part-"))
   }
@@ -309,7 +342,6 @@ final class TableStore(spark: SparkSession, root: String) {
     * `__old`) is skipped. Returns the registered view names.
     */
   def registerViews(): Seq[String] = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     def leaves(p: Path, rel: String): Seq[String] = {
       val entries = fs.listStatus(p).toSeq
       if (entries.exists(e => e.isFile && e.getPath.getName.startsWith("part-")))
@@ -345,7 +377,6 @@ final class TableStore(spark: SparkSession, root: String) {
   def writeVersion(table: String, df: DataFrame): Int = {
     // number past EVERY existing dir (committed or crashed debris) so
     // the fresh write never lands in a half-written directory
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     val dir = new Path(path(table))
     val existing =
       if (!fs.exists(dir)) Nil
@@ -359,7 +390,6 @@ final class TableStore(spark: SparkSession, root: String) {
 
   /** Committed versions, ascending ( = dirs carrying `_SUCCESS`). */
   def versions(table: String): Seq[Int] = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     val dir = new Path(path(table))
     if (!fs.exists(dir)) return Nil
     fs.listStatus(dir).toSeq
@@ -384,7 +414,6 @@ final class TableStore(spark: SparkSession, root: String) {
     * debris) — the retention pass that bounds storage growth.
     */
   def vacuum(table: String, keep: Int): Unit = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     val committed = versions(table)
     val keepSet = committed.takeRight(keep).toSet
     val dir = new Path(path(table))
@@ -404,10 +433,12 @@ final class TableStore(spark: SparkSession, root: String) {
     * only deleted once the new data is confirmed in place — a failed
     * swap must never lose the table.
     */
-  private[store] def swapWrite(table: String, df: DataFrame): Unit = {
-    swapDir(table)(tmp => df.write.mode(SaveMode.Overwrite).parquet(tmp))
-    memoize(table, df)
-  }
+  private[store] def swapWrite(table: String, df: DataFrame): Long =
+    swapDir(table) { tmp =>
+      val n = counted(df)(_.write.mode(SaveMode.Overwrite).parquet(tmp))
+      saveSchema(tmp, df)
+      n
+    }
 
   /** Multi-dataset variant of [[swapWrite]]: each `(name, df)` lands at
     * `<table>/<name>`, and the ONE parent-directory rename installs all
@@ -421,17 +452,16 @@ final class TableStore(spark: SparkSession, root: String) {
     swapDir(table) { tmp =>
       parts.foreach { case (name, df) =>
         df.write.mode(SaveMode.Overwrite).parquet(s"$tmp/$name")
+        saveSchema(s"$tmp/$name", df)
       }
     }
-    parts.foreach { case (name, df) => memoize(s"$table/$name", df) }
   }
 
-  private def swapDir(table: String)(writeTo: String => Unit): Unit = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+  private def swapDir[A](table: String)(writeTo: String => A): A = {
     val target = new Path(path(table))
     val tmp = new Path(path(table) + "__tmp")
     val old = new Path(path(table) + "__old")
-    writeTo(tmp.toString)
+    val written = writeTo(tmp.toString)
     if (fs.exists(old)) fs.delete(old, true)
     val hadTarget = fs.exists(target)
     if (hadTarget && !fs.rename(target, old)) {
@@ -449,5 +479,13 @@ final class TableStore(spark: SparkSession, root: String) {
            else "no previous table existed"))
     }
     if (hadTarget) fs.delete(old, true)
+    written
   }
+}
+
+object TableStore {
+  /** Per-table schema side file (see the schema-catalog note on
+    * [[TableStore]]); `_`-prefixed so file listings skip it.
+    */
+  val SchemaFile = "_schema.json"
 }

@@ -122,6 +122,67 @@ class NsQueriesSpec extends SparkSpec {
     assert(d10.getAs[String]("peak_hour") == "06")
   }
 
+  /** The two-window formulation `dailyStats` replaced: per-day base
+    * aggregates left-joined with a `row_number` pick of the modal
+    * station and hour (count desc, then value asc). Kept as the oracle
+    * for the one-aggregation `mode` form.
+    */
+  private def windowDailyStats(d: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val base = d.groupBy(to_date(col("start_time")).as("date"))
+      .agg(
+        count(lit(1)).as("total_disruptions"),
+        sum(when(col("type") === "cancellation", 1).otherwise(0)).as("total_cancellations"),
+        avg(col("duration_minutes")).as("avg_duration_minutes"),
+        max(col("duration_minutes")).as("max_duration_minutes"))
+    def modal(df: DataFrame, keyCol: Column, out: String): DataFrame = {
+      val g = df.groupBy(to_date(col("start_time")).as("date"), keyCol.as(out))
+        .agg(count(lit(1)).as("cnt"))
+      val w = Window.partitionBy("date").orderBy(desc("cnt"), asc(out))
+      g.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+        .select(col("date"), col(out))
+    }
+    val topStation = modal(
+      d.filter(col("affected_stations").isNotNull)
+        .select(col("start_time"), explode(split(col("affected_stations"), ",")).as("sc")),
+      col("sc"), "most_affected_station")
+    val topHour = modal(d.filter(col("start_time").isNotNull),
+      date_format(col("start_time"), "HH"), "peak_hour")
+    base.join(topStation, Seq("date"), "left").join(topHour, Seq("date"), "left")
+  }
+
+  test("daily_stats mode rewrite matches the window formulation on ties and null days") {
+    import spark.implicits._
+    // 03-09: stations UTR and ASD tie at 2 (ASD wins), hours 14 and 09
+    // tie at 1 (09 wins); 03-10: no stations at all, repeated codes in
+    // one row, an empty code; null start_time: its own group, stations
+    // but no modal station or hour
+    val tie = Seq(
+      ("t1", "disruption",   Some("2026-03-09T14:00:00Z"), 30.0,  Some("UTR,ASD")),
+      ("t2", "cancellation", Some("2026-03-09T09:00:00Z"), 45.5,  Some("ASD,UTR")),
+      ("t3", "maintenance",  Some("2026-03-10T11:00:00Z"), 12.25, None),
+      ("t4", "disruption",   Some("2026-03-10T11:30:00Z"), 7.0,   None),
+      ("t5", "disruption",   Some("2026-03-11T05:00:00Z"), 3.0,   Some("GVC,GVC,,RTD")),
+      ("t6", "disruption",   Some("2026-03-11T06:00:00Z"), 4.0,   Some("RTD")),
+      ("t7", "cancellation", None,                         1.0,   Some("EHV,ASD")),
+      ("t8", "disruption",   None,                         2.0,   Some("EHV")))
+      .map { case (id, t, st, dur, sc) => (id, t, st.map(ts), dur, sc) }
+      .toDF("disruption_id", "type", "start_time", "duration_minutes", "affected_stations")
+    val got = NsQueries.dailyStats(tie, clock).drop("calculated_at")
+    val want = windowDailyStats(tie)
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(got.collect().map(_.toSeq).toSet == want.collect().map(_.toSeq).toSet)
+    val byDate = got.collect().map(r => Option(r.getAs[java.sql.Date]("date")).map(_.toString) -> r).toMap
+    assert(byDate(Some("2026-03-09")).getAs[String]("most_affected_station") == "ASD")
+    assert(byDate(Some("2026-03-09")).getAs[String]("peak_hour") == "09")
+    assert(byDate(Some("2026-03-10")).isNullAt(5))
+    assert(byDate(Some("2026-03-11")).getAs[String]("most_affected_station") == "GVC")
+    assert(byDate(None).getAs[Long]("total_disruptions") == 2L)
+    assert(byDate(None).isNullAt(5) && byDate(None).isNullAt(6))
+  }
+
   test("today's report counts only rows created today") {
     val r = NsQueries.todaysReport(disruptions, clock).collect()(0)
     assert(r.getAs[Long]("total") == 7L)

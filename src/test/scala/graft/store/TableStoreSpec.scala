@@ -2,12 +2,40 @@ package graft.store
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.SparkSpec
 
 class TableStoreSpec extends SparkSpec {
 
   private def newStore(): TableStore =
     new TableStore(spark, Files.createTempDirectory("graft-store").toString)
+
+  /** Spark jobs started while `f` runs. Events reach a listener in the
+    * order they were posted, so once a sentinel job submitted after `f`
+    * has been seen, every job `f` started has been seen too.
+    */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("tablestore-probe", "probe")
+      try f finally sc.setJobGroup("tablestore-sentinel", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 20000
+      while (!groups.contains("tablestore-sentinel") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains("tablestore-sentinel"), "sentinel job never seen")
+      groups.toArray.count(_ == "tablestore-probe")
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("appendIfAbsent inserts only novel keys and is idempotent") {
     import spark.implicits._
@@ -200,5 +228,76 @@ class TableStoreSpec extends SparkSpec {
     store.applyCdc("t", Seq(("b", 8, 30L, "I")).toDF("k", "v", "ver", "op"),
       "k", "ver")
     assert(snap() == expected + (("b", 8, 30L)))
+  }
+
+  test("a fresh TableStore on an existing root reads without footer inference") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store-schema").toString
+    val writer = new TableStore(spark, root)
+    writer.write("w", Seq((1L, "a")).toDF("k", "v"))
+    writer.upsert("u", Seq((1L, "a", 10L)).toDF("k", "v", "ver"), "k", "ver")
+    writer.upsert("u", Seq((2L, "b", 11L)).toDF("k", "v", "ver"), "k", "ver") // swap path
+    writer.appendIfAbsent("a", Seq((1L, "a")).toDF("k", "v"), "k")
+    val agg = new AggTable(writer, "agg", AggSpec(Seq("k"), Seq("x")))
+    agg.accumulate("b1", Seq(("a", 1.0)).toDF("k", "x"))
+    agg.accumulate("b2", Seq(("a", 2.0)).toDF("k", "x")) // multi-part swap
+
+    val reader = new TableStore(spark, root)
+    val tables = Seq("w", "u", "a", "agg/state", "agg/ledger")
+    assert(jobsDuring(tables.foreach(t => reader.read(t).get)) == 0)
+    // the catalogued schema is exactly what inference returns
+    tables.foreach { t =>
+      assert(reader.read(t).get.schema == spark.read.parquet(reader.path(t)).schema, t)
+    }
+    // the probe is not vacuous: bare inference does start a job
+    assert(jobsDuring(spark.read.parquet(reader.path("u"))) >= 1)
+  }
+
+  test("the schema side file is invisible to readers, views and fileCount") {
+    import spark.implicits._
+    val store = newStore()
+    store.write("t", Seq((1L, "a"), (2L, "b")).toDF("k", "v").repartition(2))
+    val dir = new java.io.File(store.path("t"))
+    assert(new java.io.File(dir, TableStore.SchemaFile).isFile)
+    val parquet = spark.read.parquet(store.path("t"))
+    assert(parquet.columns.toSeq == Seq("k", "v") && parquet.count() == 2)
+    assert(store.fileCount("t") == dir.listFiles().count(_.getName.startsWith("part-")))
+    assert(store.registerViews() == Seq("t"))
+    assert(spark.sql("SELECT count(*) FROM t").head().getLong(0) == 2L)
+  }
+
+  test("a table written without the schema side file still reads") {
+    import spark.implicits._
+    val store = newStore()
+    Seq((1L, "a", 10L), (2L, "b", 10L)).toDF("k", "v", "ver")
+      .write.parquet(store.path("legacy"))
+    assert(!new java.io.File(store.path("legacy"), TableStore.SchemaFile).exists())
+    val df = store.read("legacy").get
+    assert(df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(1L -> "a", 2L -> "b"))
+    // the next write through the store adds the side file
+    store.upsert("legacy", Seq((3L, "c", 11L)).toDF("k", "v", "ver"), "k", "ver")
+    assert(new java.io.File(store.path("legacy"), TableStore.SchemaFile).isFile)
+    assert(store.read("legacy").get.count() == 3)
+  }
+
+  test("upsert returns the changed rows and rewrites nothing when none change") {
+    import spark.implicits._
+    val store = newStore()
+    val batch = Seq(("a", 1, 10L), ("b", 2, 10L)).toDF("k", "v", "ver")
+    assert(store.upsert("r", batch, "k", "ver") == 2)
+    def parts() = new java.io.File(store.path("r")).listFiles()
+      .filter(_.getName.startsWith("part-")).map(f => f.getName -> f.lastModified()).toSet
+    val before = parts()
+    // a replay, a stale row and an empty batch change nothing
+    assert(store.upsert("r", batch, "k", "ver") == 0)
+    assert(store.upsert("r", Seq(("a", 9, 9L)).toDF("k", "v", "ver"), "k", "ver") == 0)
+    assert(store.upsert("r", batch.limit(0), "k", "ver") == 0)
+    assert(parts() == before)
+    // a tie on version with new content, and a new key, do change it
+    assert(store.upsert("r", Seq(("a", 5, 10L), ("c", 3, 1L)).toDF("k", "v", "ver"),
+      "k", "ver") == 2)
+    assert(store.read("r").get.collect().map(r => r.getString(0) -> r.getInt(1)).toMap ==
+      Map("a" -> 5, "b" -> 2, "c" -> 3))
   }
 }
