@@ -1,12 +1,58 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
 /** Benchmark main: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":...,"queries":{...}} for the driver.
   */
 object Bench {
+
+  type Gate = (SparkSession, String) => DataFrame
+
+  /** The timed action is a NOOP-SINK WRITE, not count(): count() lets
+    * Catalyst eliminate cardinality-preserving work — left joins whose
+    * right side is distinct on the join key (q109's whole near-dup
+    * stage vanished from its own timing: 1.5 s counted vs 3.5 s
+    * evaluated at sf0.1), every final total-order sort, and unused
+    * aggregate expressions. The noop sink evaluates every output row
+    * and column with zero I/O, so the timing covers the plan a real
+    * consumer pays. Round-9 re-baseline: totals are NOT comparable to
+    * BENCH_r01–r08 lines, which measured the count()-pruned plans.
+    */
+  def evaluate(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Resolve and scan every input table once, so no timed gate pays a
+    * table's first read. A table the directory lacks is skipped (the
+    * dev/GenSf1 rungs carry only the tables the scaling ladder reads);
+    * a gate that needs it fails on its own.
+    */
+  def warmTables(spark: SparkSession, dir: String): Unit =
+    Tables.names.foreach { n =>
+      try Tables.load(spark, dir, n).count()
+      catch { case _: AnalysisException => () }
+    }
+
+  /** One timed pass over `queries`: wall seconds per query that
+    * completed, None for one that threw — a failing gate is reported
+    * by name, never timed as a run. `slot(i)` runs before the i-th
+    * query (the canary positions).
+    */
+  def timedPass(
+      spark: SparkSession, dir: String, queries: Seq[(String, Gate)],
+      slot: Int => Unit = _ => ()): Seq[(String, Option[Double])] =
+    queries.zipWithIndex.map { case ((n, fn), i) =>
+      slot(i)
+      val t0 = System.nanoTime()
+      val ok =
+        try { evaluate(fn(spark, dir)); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $n failed: ${e.getMessage}")
+          false
+        }
+      n -> Option.when(ok)((System.nanoTime() - t0) / 1e9)
+    }
 
   /** Self-localizing contention evidence (round-10 verdict: the dump
     * carries per-slot canary positions, but a human had to read them —
@@ -59,35 +105,9 @@ object Bench {
       val small = "/root/testdata/sf0.001"
       if (new java.io.File(small).isDirectory) small else sfDir
     }
-    // The timed action is a NOOP-SINK WRITE, not count(): count() lets
-    // Catalyst eliminate cardinality-preserving work — left joins whose
-    // right side is distinct on the join key (q109's whole near-dup
-    // stage vanished from its own timing: 1.5 s counted vs 3.5 s
-    // evaluated at sf0.1), every final total-order sort, and unused
-    // aggregate expressions. The noop sink evaluates every output row
-    // and column with zero I/O, so the timing covers the plan a real
-    // consumer pays. Round-9 re-baseline: totals are NOT comparable to
-    // BENCH_r01–r08 lines, which measured the count()-pruned plans.
-    def evaluate(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
+    warmTables(spark, sfDir)
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
       try evaluate(fn(spark, warmDir)) catch { case _: Throwable => () }
-    }
-
-    // TWO full timed passes at the bench SF, per-query min. The
-    // small-SF warm pass compiles the static plan's codegen, but with
-    // AQE on the FINAL physical plan depends on data size (broadcast
-    // conversions, coalesced partition counts, skew splits), so some
-    // bench-SF stages still compile cold in pass 1 — pass 1 is
-    // therefore also the AQE-shape warmup, and pass 2 is the
-    // steady-state measurement. min-of-two also strips one-JVM
-    // contention noise (GC, cache churn from 500+ sequential
-    // queries), which r4 showed can drift shared-query timings 2-3×.
-    def time(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { evaluate(fn(spark, sfDir)) } catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
     }
 
     // Load canary: fixed CPU-bound work saturating every core, zero
@@ -144,22 +164,34 @@ object Bench {
     // contention signature (checked into `contended` below).
     val floorInflated = sessionFloor > 2.0 * absRef
 
+    // TWO full timed passes at the bench SF, per-query min. The
+    // small-SF warm pass compiles the static plan's codegen, but with
+    // AQE on the FINAL physical plan depends on data size (broadcast
+    // conversions, coalesced partition counts, skew splits), so some
+    // bench-SF stages still compile cold in pass 1 — pass 1 is
+    // therefore also the AQE-shape warmup, and pass 2 is the
+    // steady-state measurement. min-of-two also strips one-JVM
+    // contention noise (GC, cache churn from 500+ sequential
+    // queries), which r4 showed can drift shared-query timings 2-3×.
     val all = SparkEntry.queries.toSeq.sortBy(_._1)
-    def pass(tag: String): Seq[(String, Double)] = {
+    def pass(tag: String): Seq[(String, Option[Double])] = {
       canary(s"$tag:0")
-      val r = all.zipWithIndex.map { case ((n, fn), i) =>
-        if (i > 0 && i % 25 == 0) canary(s"$tag:$i")
-        n -> time(n, fn)
-      }
+      val r = timedPass(spark, sfDir, all,
+        i => if (i > 0 && i % 25 == 0) canary(s"$tag:$i"))
       canary(s"$tag:end")
       r
     }
     val p1 = pass("p1")
     System.gc()
-    val p2m = pass("p2").toMap
-    val results = p1.map { case (n, t) =>
-      n -> math.min(t, p2m.getOrElse(n, t))
-    }
+    val p2 = pass("p2")
+    // a gate that threw in either timed pass is a failure: it is left
+    // out of the total and listed by name
+    val failed = (p1 ++ p2).collect { case (n, None) => n }.distinct.sorted
+    val p1m = p1.collect { case (n, Some(t)) => n -> t }.toMap
+    val p2m = p2.collect { case (n, Some(t)) => n -> t }.toMap
+    val results = p1m.toSeq.collect {
+      case (n, t) if !failed.contains(n) => n -> math.min(t, p2m(n))
+    }.sortBy(_._1)
     val cMin = canaryTimes.map(_._2).min
     val cMax = canaryTimes.map(_._2).max
     // Two contention signatures, both flagged: (a) SPREAD — load that
@@ -176,15 +208,15 @@ object Bench {
         floorInflated
     // (c) WHERE: adjacent-slot segments whose both ends ran slow — the
     // loaded stretch of the query list, named by the artifact itself.
-    // Printed capped at 6 entries (the driver tails ~4 KB of stdout;
-    // a fully-loaded run has ~45 segments) — the dump carries them all.
+    // Segment and failure lists are printed capped at 6 entries (the
+    // driver tails ~4 KB of stdout; a fully-loaded run has ~45
+    // segments) — the dump carries them all.
     val segments = contendedSegments(canaryTimes.toSeq, refIdleSec)
     def segJson(ss: Seq[String]): String =
       ss.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val segsPrinted =
-      if (segments.size <= 6) segJson(segments)
-      else segJson(segments.take(6)).dropRight(1) +
-        s""","+${segments.size - 6} more"]"""
+    def capped(ss: Seq[String]): String =
+      if (ss.size <= 6) segJson(ss)
+      else segJson(ss.take(6)).dropRight(1) + s""","+${ss.size - 6} more"]"""
     // The driver records only a bounded (~4 KB) TAIL of stdout, and a
     // per-query map over 300+ queries makes the JSON line ~5.5 KB — the
     // head gets truncated away and json parsing fails (BENCH_r01–r03
@@ -227,22 +259,22 @@ object Bench {
       s"bench_dumps/bench_${stem}_$pid.json"
     })
     locally {
-      val p1m = p1.toMap
       // canary is a normal first element (no hand-glued separator), so
       // the dump stays valid JSON even with an empty results set
       val fields =
         ("\"canary\":" + canaryTimes.map { case (at, c) =>
           f"""{"at":"$at","t":$c%.3f}""" }.mkString("[", ",", "]")) +:
         ("\"contended_segments\":" + segJson(segments)) +:
+        ("\"failed\":" + segJson(failed)) +:
         results.sortBy(-_._2).map { case (n, t) =>
-          val (a, b) = (p1m.getOrElse(n, t), p2m.getOrElse(n, t))
-          "\"" + n + "\":" + f"""{"min":$t%.3f,"p1":$a%.3f,"p2":$b%.3f}"""
+          "\"" + n + "\":" + f"""{"min":$t%.3f,"p1":${p1m(n)}%.3f,"p2":${p2m(n)}%.3f}"""
         }
       val p = java.nio.file.Paths.get(dumpPath)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.writeString(p, fields.mkString("{", ",", "}"))
     }
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"action":"noop-write","contended":$contended,"contended_segments":$segsPrinted,"canary":{"min":$cMin%.3f,"max":$cMax%.3f,"n":${canaryTimes.size},"ref":$refIdleSec%.3f,"session_floor":$sessionFloor%.3f},"dump":"$dumpPath","queries":$qs,"sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"action":"noop-write","contended":$contended,"contended_segments":${capped(segments)},"failed":${capped(failed)},"canary":{"min":$cMin%.3f,"max":$cMax%.3f,"n":${canaryTimes.size},"ref":$refIdleSec%.3f,"session_floor":$sessionFloor%.3f},"dump":"$dumpPath","queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

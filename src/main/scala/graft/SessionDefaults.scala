@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's baseline session configuration, in ONE place so every
-  * entry point — Bench, Verify, PlanDump/TimeQuery and the pipeline
-  * Main — plans queries the same way. Round-11's review flagged that
+  * entry point — Bench, Verify, dev/Probe and the pipeline Main —
+  * plans queries the same way. Round-11's review flagged that
   * `preferSortMergeJoin=false` lived only in the bench harness, which
   * made the engine's join strategy differ by entry point; it is engine
   * policy, not a bench setting.
@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   * Everything here is scale-safe policy, not local-mode tuning:
   *  - AQE + partition coalescing: the adaptive baseline
   *    (optimization guide §9). `parallelismFirst` stays at its default
-  *    (true): an in-session A/B (dev/ConfAb, round 12) measured
-  *    byte-based coalescing (`parallelismFirst=false`, advisory 1m or
+  *    (true): an in-session A/B (OPTIMIZATION_r12.md, "Tiny-shuffle
+  *    partitioning") measured byte-based coalescing (`parallelismFirst=false`, advisory 1m or
   *    64m) at −50..−69% on the CPU-dense gates (q288 pair expansion,
   *    q472 ordered folds) whose shuffles are byte-small but
   *    compute-heavy — bytes are the wrong proxy for work in this

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * resolution only, never data: `spark.read.parquet` pays schema
   * inference (a footer-reading job) plus file listing on EVERY call,
   * measured 68 ms steady-state per table at bench scale
-  * (dev/OverheadProbe), which multiplied across 535 gates × 2 timed
+  * (OPTIMIZATION_r11.md, "Tables.load"), which multiplied across 535 gates × 2 timed
   * passes was ~1/4 of the whole bench wall. A real deployment resolves
   * a table once in its catalog/metastore for exactly this reason; the
   * cached object is an immutable logical plan whose every action still

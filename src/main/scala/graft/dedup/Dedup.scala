@@ -35,14 +35,15 @@ object Dedup extends Logging {
     * (DedupSpec pins the equivalence; q71 oracle-gates the result
     * against a recursive closure).
     *
-    * `localEdgeCap` PROVENANCE (dev/ClusterAb min-of-3 same-JVM,
-    * 32-core/128 GiB, SCALING.md round 11): the cap counts DIRECTED
-    * edges (the doubled frame), so 2²⁰ ≈ 5·10⁵ input pairs. The
-    * crossover is component-SHAPE-dependent — isolated-pair corpora
-    * (the common near-dup output) flip to distributed at ~3·10⁵ input
-    * pairs (×2.2 against local at 10⁶), while chain-shaped corpora
-    * keep local winning ×3–6 until ~3·10⁶ (label propagation pays
-    * O(log diameter) join rounds that union-find doesn't). The default
+    * `localEdgeCap` PROVENANCE (min-of-3 same-JVM, 32-core/128 GiB,
+    * SCALING.md "Round 11: the last chosen-not-measured cutoff"): the
+    * cap counts DIRECTED edges (the doubled frame), so 2²⁰ ≈ 5·10⁵
+    * input pairs. The crossover is component-SHAPE-dependent —
+    * isolated-pair corpora (the common near-dup output) flip to
+    * distributed at ~3·10⁵ input pairs (×2.2 against local at 10⁶),
+    * while chain-shaped corpora keep local winning ×3–6 until ~3·10⁶
+    * (label propagation pays O(log diameter) join rounds that
+    * union-find doesn't). The default
     * sits between the two crossovers because the mis-route costs are
     * asymmetric: a pairs corpus at the cap boundary pays ≤×2, lowering
     * the cap a decade would cost chain corpora ×3–6. Driver heap
@@ -128,7 +129,7 @@ object Dedup extends Logging {
     // Only the (src <= dst) half of the direction-doubled frame ships:
     // union-find is symmetric, so half the rows carry full information
     // (self-loops survive the <= and register their node), and the
-    // solve keys a primitive LongMap (dev/ClusterAb, SCALING.md r11).
+    // solve keys a primitive LongMap (SCALING.md round 11, localEdgeCap).
     // bounded-collect: O(localEdgeCap) — callers gate on nEdges <=
     // localEdgeCap, so at most that many pairs land on the driver;
     // past the cap the distributed label-propagation path runs instead

@@ -156,10 +156,8 @@ object StreamScale {
     // force-dropped on the hdfs backend.
     val hdfsBackend = sys.env.get("STREAM_SCALE_BACKEND").contains("hdfs")
     val shapesRun = if (hdfsBackend) shapes - "quota" else shapes
-    val builder = SparkSession.builder().master(s"local[$cpus]")
+    val builder = graft.SessionDefaults.builder(cpus)
       .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     if (!hdfsBackend)
       // the production state backend; required by transformWithState
       builder.config("spark.sql.streaming.stateStore.providerClass",

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.LongAdder
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Dev measurement listener shared by the scale harnesses
-  * ([[ScaleSlopes]], [[StreamScale]]): sums task-level input /
+  * ([[Probe]] slopes, [[StreamScale]]): sums task-level input /
   * shuffle bytes and buckets per-task run times by stage so the
   * straggler signature (one dominant key serializing a stage — a
   * max/median blowout WITHIN one stage, invisible in stage-level

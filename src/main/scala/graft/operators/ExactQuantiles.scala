@@ -124,7 +124,8 @@ object ExactQuantiles {
     * win rung, so the exact value is insensitive on this box; the
     * regime driver is the built-in's single-threaded per-group buffer
     * merge, which a cluster with different per-task memory should
-    * re-probe (dev/QuantAutoAb) rather than inherit blindly.
+    * re-probe (SCALING.md "Round 10: the graph family's own decade",
+    * postscript 2) rather than inherit blindly.
     */
   val DefaultLargeGroupCutoff: Double = 10000.0
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DateType, LongType, NumericType, TimestampType}
 
 /** Global-order window functions WITHOUT the single-partition
   * WindowExec.
@@ -49,6 +49,23 @@ object GlobalOrder {
   private def nBuckets(df: DataFrame): Int =
     4 * df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
 
+  /** The leading key as a double in the key's own order — bucketing
+    * is only correct when bucket order is sort order. Numeric, date and
+    * timestamp keys have such a projection; any other key (a string
+    * "10" < "9" cast to 10.0 > 9.0) would yield silently wrong ranks,
+    * so it is rejected before any job runs.
+    */
+  private def orderValue(df: DataFrame, leadKey: Column): Column =
+    df.select(leadKey).schema.head.dataType match {
+      case _: NumericType => leadKey.cast("double")
+      case DateType => unix_date(leadKey).cast("double")
+      case TimestampType => unix_micros(leadKey).cast("double")
+      case t => throw new IllegalArgumentException(
+        s"GlobalOrder: the leading sort key must be numeric, date or " +
+          s"timestamp, got ${t.simpleString} — bucket by value needs " +
+          "an order-preserving numeric projection of the key")
+    }
+
   /** df + `__bkt` (bucket id ascending in GLOBAL sort order of the
     * leading key) + `__nb` (bucket count). Null leading keys get the
     * first bucket ascending / last descending, matching Spark's
@@ -56,6 +73,7 @@ object GlobalOrder {
     */
   private def bucketed(
       df: DataFrame, leadKey: Column, leadDesc: Boolean): DataFrame = {
+    val v = orderValue(df, leadKey)
     // Materialize the input ONCE: the two-phase form reads it three
     // times (bounds, per-bucket offsets, the bucketed window itself),
     // and the input is typically an expensive upstream subtree (a
@@ -64,10 +82,7 @@ object GlobalOrder {
     // pattern for multi-consumer forks in this tree.
     val in = df.localCheckpoint()
     val nB = nBuckets(df)
-    val bounds = in.agg(
-      min(leadKey.cast("double")).as("__lo"),
-      max(leadKey.cast("double")).as("__hi"))
-    val v = leadKey.cast("double")
+    val bounds = in.agg(min(v).as("__lo"), max(v).as("__hi"))
     val span = col("__hi") - col("__lo")
     val raw = when(col("__lo").isNull || span <= lit(0.0), lit(0L))
       .otherwise(least(

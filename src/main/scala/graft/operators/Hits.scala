@@ -101,8 +101,9 @@ object Hits {
     * differences cannot flip a rung onto the wrong form — but the
     * breaking costs are driver-broadcast and single-task-fold bound,
     * so a cluster with a different driver/executor memory ratio should
-    * re-probe its own rungs (dev/Q472AutoAb is the harness) rather
-    * than inherit this box's constant blindly.
+    * re-probe its own rungs (SCALING.md "Round 10: the graph family's
+    * own decade" has the protocol) rather than inherit this box's
+    * constant blindly.
     */
   val DefaultMaxBroadcastNodes: Long = 500000L
 

@@ -41,7 +41,7 @@ object GraphGateSource {
     cache.entrySet.removeIf(e =>
       e.getValue.sparkSession.sparkContext.isStopped)
 
-  /** Measurement tools only (dev/ScaleSlopes): drop every cached
+  /** Measurement tools only (dev/Probe slopes): drop every cached
     * frame so a timed pass pays the full build again — otherwise the
     * ladder's byte slopes silently exclude the shared-build work that
     * production pays once per job.

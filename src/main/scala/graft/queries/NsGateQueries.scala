@@ -422,47 +422,45 @@ object NsGateQueries {
         col("type").as(s"${p}_type"),
         col("start_time").as(s"${p}_start_time"),
         col("end_time").as(s"${p}_end_time"))
-      s.conf.set(RangeJoinRewrite.binMinutesKey, "120")
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ RangeJoinRewrite
-      try {
-        val joined = side("a").join(side("b"),
-          col("a_disruption_id") < col("b_disruption_id") &&
-            col("a_start_time") < col("b_end_time") &&
-            col("a_end_time") > col("b_start_time"))
-        val overlapMin = floor(
-          (unix_micros(least(col("a_end_time"), col("b_end_time"))) -
-            unix_micros(greatest(col("a_start_time"), col("b_start_time"))))
-            .cast("double") / 60000000d).cast(IntegerType)
-        val q = joined
-          .filter(col("a_start_time") >= cutoff)
-          .select(
-            col("a_disruption_id").as("disruption_a"),
-            col("b_disruption_id").as("disruption_b"),
-            col("a_type").as("type_a"), col("b_type").as("type_b"),
-            col("a_start_time").as("a_start"), col("a_end_time").as("a_end"),
-            col("b_start_time").as("b_start"), col("b_end_time").as("b_end"),
-            overlapMin.as("overlap_minutes"))
-          .orderBy(desc("overlap_minutes"), asc("disruption_a"), asc("disruption_b"))
-          .limit(50)
-        val binGenerates = q.queryExecution.optimizedPlan.collect {
-          case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
-        }
-        require(binGenerates.size == 2,
-          s"range-join rewrite did not fire (bin Generates: ${binGenerates.size})")
-        val phys = q.queryExecution.executedPlan.toString
-        require(!phys.contains("BroadcastNestedLoop") &&
-          !phys.contains("CartesianProduct"),
-          "rewritten overlap join still plans a nested-loop join")
-        // bounded-collect: LIMIT 50 rows — executed eagerly so the
-        // optimizer rule can be uninstalled before any neighbor plans
-        val rows = q.collect().toSeq
-        s.createDataFrame(s.sparkContext.parallelize(rows, 1), q.schema)
-          .orderBy(desc("overlap_minutes"), asc("disruption_a"), asc("disruption_b"))
-      } finally {
+      QueryDef.withConf(s, RangeJoinRewrite.binMinutesKey, "120") {
         s.experimental.extraOptimizations =
+          s.experimental.extraOptimizations :+ RangeJoinRewrite
+        try {
+          val joined = side("a").join(side("b"),
+            col("a_disruption_id") < col("b_disruption_id") &&
+              col("a_start_time") < col("b_end_time") &&
+              col("a_end_time") > col("b_start_time"))
+          val overlapMin = floor(
+            (unix_micros(least(col("a_end_time"), col("b_end_time"))) -
+              unix_micros(greatest(col("a_start_time"), col("b_start_time"))))
+              .cast("double") / 60000000d).cast(IntegerType)
+          val q = joined
+            .filter(col("a_start_time") >= cutoff)
+            .select(
+              col("a_disruption_id").as("disruption_a"),
+              col("b_disruption_id").as("disruption_b"),
+              col("a_type").as("type_a"), col("b_type").as("type_b"),
+              col("a_start_time").as("a_start"), col("a_end_time").as("a_end"),
+              col("b_start_time").as("b_start"), col("b_end_time").as("b_end"),
+              overlapMin.as("overlap_minutes"))
+            .orderBy(desc("overlap_minutes"), asc("disruption_a"), asc("disruption_b"))
+            .limit(50)
+          val binGenerates = q.queryExecution.optimizedPlan.collect {
+            case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
+          }
+          require(binGenerates.size == 2,
+            s"range-join rewrite did not fire (bin Generates: ${binGenerates.size})")
+          val phys = q.queryExecution.executedPlan.toString
+          require(!phys.contains("BroadcastNestedLoop") &&
+            !phys.contains("CartesianProduct"),
+            "rewritten overlap join still plans a nested-loop join")
+          // bounded-collect: LIMIT 50 rows — executed eagerly so the
+          // optimizer rule can be uninstalled before any neighbor plans
+          val rows = q.collect().toSeq
+          s.createDataFrame(s.sparkContext.parallelize(rows, 1), q.schema)
+            .orderBy(desc("overlap_minutes"), asc("disruption_a"), asc("disruption_b"))
+        } finally s.experimental.extraOptimizations =
           s.experimental.extraOptimizations.filterNot(_ == RangeJoinRewrite)
-        s.conf.unset(RangeJoinRewrite.binMinutesKey)
       }
     },
     Some(s"""WITH $disruptionsSql

@@ -41,4 +41,17 @@ object QueryDef {
     *    HUGEINT), ranks cast to BIGINT on the Spark side.
     */
   val determinismNotes: String = "see scaladoc"
+
+  /** Run `body` with a session conf pinned, restoring the prior value
+    * (or unsetting it) afterwards, also when `body` throws — for gates
+    * that need a conf only while they plan or run.
+    */
+  def withConf[T](s: SparkSession, k: String, v: String)(body: => T): T = {
+    val prior = s.conf.getOption(k)
+    s.conf.set(k, v)
+    try body finally prior match {
+      case Some(p) => s.conf.set(k, p)
+      case None    => s.conf.unset(k)
+    }
+  }
 }

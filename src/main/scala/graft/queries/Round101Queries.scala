@@ -45,16 +45,6 @@ object Round101Queries {
     */
   private val StreamGateShufflePartitions = 4
 
-  /** Dev A/B hook (graft.stream.parts system property): lets
-    * dev/StreamProf alternate the state-store instance count
-    * in-session, where cross-JVM A/Bs drown in box-load noise.
-    * Absent (every production/bench/verify path) it is the pinned
-    * constant above.
-    */
-  private def streamGateParts: Int =
-    sys.props.get("graft.stream.parts").map(_.toInt)
-      .getOrElse(StreamGateShufflePartitions)
-
   /** Run a streaming gate body in its own temp dir — with the gate
     * shuffle fan-out above — and delete the dir EAGERLY once the
     * result is materialized: the returned frame reads lazily from
@@ -71,15 +61,9 @@ object Round101Queries {
     val tmp = Files.createTempDirectory(prefix)
     val hook = new Thread(() => rmTree(tmp))
     Runtime.getRuntime.addShutdownHook(hook)
-    val key = "spark.sql.shuffle.partitions"
-    val prior = s.conf.getOption(key)
-    s.conf.set(key, streamGateParts.toString)
-    try body(tmp).localCheckpoint()
+    try QueryDef.withConf(s, "spark.sql.shuffle.partitions",
+      StreamGateShufflePartitions.toString)(body(tmp).localCheckpoint())
     finally {
-      prior match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
       rmTree(tmp)
       // throws IllegalStateException if shutdown already started —
       // in which case the hook itself is doing the cleanup
@@ -440,11 +424,8 @@ object Round101Queries {
         writeChronoSlices(ev, p, col("ts"), 4)
       }.toString
       val out = tmp.resolve("out").toString
-      val confKey = "spark.sql.streaming.stateStore.providerClass"
-      val prior = s.conf.getOption(confKey)
-      s.conf.set(confKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      QueryDef.withConf(s, "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         val stream = s.readStream
           .schema(ev.schema)
           .option("maxFilesPerTrigger", 2)
@@ -460,9 +441,6 @@ object Round101Queries {
           }
           .start()
         try q.processAllAvailable() finally q.stop()
-      } finally prior match {
-        case Some(v) => s.conf.set(confKey, v)
-        case None    => s.conf.unset(confKey)
       }
       // ts reported at MILLISECOND resolution: the processor orders
       // by ms, so same-ms rows are interchangeable — reporting µs

@@ -62,7 +62,7 @@ object Round102Queries {
       val edges = GraphGateSource.custPartEdges(s, dir)
       // 4 iterations, not q472's 6: the top-10 authority RANKING —
       // all this float-free gate projects — settles at 4 rounds
-      // (dev/HitsIters: iters-4 ≡ iters-6 part order at gate SF), the
+      // (measured: iters-4 ≡ iters-6 part order at gate SF), the
       // oracle recursion below runs the matching 4 rounds, and
       // HitsVariantsSpec's broadcast-vs-copartitioned tolerance check
       // discriminates at any matched iteration count. q472 keeps 6 —

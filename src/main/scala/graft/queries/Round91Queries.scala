@@ -48,31 +48,20 @@ object Round91Queries {
   // state, never by |E|; per-half-step localCheckpoint truncates the
   // 12-step lineage. Top-10 authority parts — the "catalog anchors"
   // bought by the broadest heavy buyers.
-  /** Run `body` with a session conf pinned, restoring the prior value
-    * after — the withGateDir pattern for a single conf.
-    */
-  private def withConf[T](s: SparkSession, k: String, v: String)(body: => T): T = {
-    val prior = s.conf.getOption(k)
-    s.conf.set(k, v)
-    try body finally prior match {
-      case Some(p) => s.conf.set(k, p)
-      case None    => s.conf.unset(k)
-    }
-  }
-
   private val q472 = QueryDef(
     "q472_hits",
-    // AQE OFF for the iteration loop (round-12 A/B, dev/ConfAb
-    // in-session: 3.51→3.23 and 3.18→2.92 s, +8% twice): every join
-    // in the 12 half-steps is explicitly broadcast-hinted and every
-    // fold is exchange-free on the pinned edge layout, so adaptive
+    // AQE OFF for the iteration loop (round-12 in-session A/B,
+    // OPTIMIZATION_r12.md "Graph family": 3.51→3.23 and 3.18→2.92 s,
+    // +8% twice): every join in the 12 half-steps is explicitly
+    // broadcast-hinted and every fold is exchange-free on the pinned
+    // edge layout, so adaptive
     // re-planning has NO decision space here — it re-plans 12
     // half-step chains for nothing, at any scale. The co-partitioned
     // sibling q529, whose per-iteration exchanges AQE does optimize,
     // measured the OPPOSITE (3.03→3.44 s with AQE off) and keeps it.
     // Results are bit-identical by construction (ordered folds are
     // partitioning-independent; oracle hash-gated).
-    (s, dir) => withConf(s, "spark.sql.adaptive.enabled", "false") {
+    (s, dir) => QueryDef.withConf(s, "spark.sql.adaptive.enabled", "false") {
       // session-scoped shared edge cache (one build per JVM for both
       // HITS gates × all bench executions — see GraphGateSource)
       val edges = GraphGateSource.custPartEdges(s, dir)

@@ -43,7 +43,7 @@ object TrainedModels {
   private val pqCache =
     new ConcurrentHashMap[(String, Int, Int, Int), PqIndex.Codebook]()
 
-  /** Measurement tools only (dev/ScaleSlopes): drop the cached
+  /** Measurement tools only (dev/Probe slopes): drop the cached
     * models so a timed pass pays training again.
     */
   private[graft] def invalidate(): Unit = { ivfCache.clear(); pqCache.clear() }

@@ -108,4 +108,35 @@ class GlobalOrderSpec extends SparkSpec {
         s"prefixMax mismatch seed=$seed ties=$ties")
     }
   }
+
+  test("date and timestamp leading keys bucket in key order") {
+    for ((seed, n, ties) <- cases; desc <- Seq(false, true)) {
+      val base = frame(seed, n, ties)
+      for (key <- Seq(
+          expr("date_add(DATE'2020-01-01', CAST(k % 5000 AS INT))"),
+          expr("timestamp_seconds(k)"))) {
+        val df = base.withColumn("k", key)
+        val lead = if (desc) col("k").desc else col("k").asc
+        val order = Seq(lead, col("id").asc)
+        val expect = df.withColumn("rn",
+          row_number().over(Window.orderBy(order: _*)))
+        val got = GlobalOrder.rowNumber(df, col("k"), desc, order, "rn")
+        assert(got.select("id", "rn").except(expect.select("id", "rn")).isEmpty &&
+          expect.select("id", "rn").except(got.select("id", "rn")).isEmpty,
+          s"rowNumber mismatch on $key seed=$seed ties=$ties desc=$desc")
+      }
+    }
+  }
+
+  test("a string leading key is rejected, not silently mis-ranked") {
+    // as doubles "10" > "9", as strings "10" < "9": bucketing by the
+    // cast value would split the string order across buckets
+    val df = Seq("9", "10", "11", "x").toDF("k").withColumn("id", monotonically_increasing_id())
+    val e = intercept[IllegalArgumentException] {
+      GlobalOrder.rowNumber(df, col("k"), leadDesc = false,
+        Seq(col("k"), col("id")), "rn")
+    }
+    assert(e.getMessage.contains("numeric, date or timestamp") &&
+      e.getMessage.contains("string"), e.getMessage)
+  }
 }

@@ -12,7 +12,7 @@ import graft.SparkSpec
   * reads every column for a four-column aggregate, or that applies
   * its selective filter after the read, is the difference between a
   * ~10% scan and a full-corpus scan; these pins were previously only
-  * a dev tool (dev/ExplainAudit), so a regression could land
+  * a dev tool (dev/Probe plan), so a regression could land
   * silently. Plan-string checks are deliberately loose on format
   * (Spark's scan rendering varies) but tight on the facts: which
   * columns the scan reads, which predicates it pushes.
