@@ -59,7 +59,7 @@ object Main {
           .map(k => Map("Ocp-Apim-Subscription-Key" -> k))
           .getOrElse(Map.empty[String, String])
         graft.sources.ApiClient.extract(
-          spark, url, s"$storeRoot/raw_archive", headers, clock)
+          spark, url, store.path("raw_archive"), headers, clock)
       } else RawSource.readRawJsonArray(spark, rawPath)
     // one count serves both the P13 short-circuit and the report
     val extracted = raw.count()
@@ -80,12 +80,13 @@ object Main {
     // Days whose gold stats this batch invalidates: the incoming rows'
     // days plus the days of any stored versions they replace (an
     // upsert can move a disruption across days), in one query.
-    // Collected BEFORE the upsert swaps the files the stored-side plan
-    // reads; the set is small (days per batch), so a driver-side
-    // collect is free. Quality counters (observe/CollectMetrics) ride
-    // this job, which reads every cleaned row once per run — the
-    // reference's per-run record accounting without a second scan; a
-    // QueryExecutionListener (or StreamingQueryListener) drains them.
+    // Collected BEFORE the upsert's commit retires the files the
+    // stored-side plan reads; the set is small (days per batch), so a
+    // driver-side collect is free. Quality counters (observe/
+    // CollectMetrics) ride this job, which reads every cleaned row once
+    // per run — the reference's per-run record accounting without a
+    // second scan; a QueryExecutionListener (or StreamingQueryListener)
+    // drains them.
     val observed = graft.etl.Metrics.observeQuality(cleaned, "silver_load",
       nullCols = Seq("end_time", "duration_minutes"),
       checks = Map("impact_range" -> col("impact_level").between(1, 5)))
@@ -102,9 +103,34 @@ object Main {
     // carries a null-date group and it must stay in sync too
     val touchedNull = touched.contains(None)
 
+    // Gold: materialize the daily_stats table the reference declared
+    // but never populated — refreshed ONLY for the touched days (the
+    // reference recomputes from the full table every run, which at
+    // 100 TB rescans the corpus; per-day stats depend only on that
+    // day's rows, so a partition-grain replaceWhere is exact).
+    def touchedCond(day: org.apache.spark.sql.Column): Option[org.apache.spark.sql.Column] = {
+      val inDays = if (touchedDays.nonEmpty) Some(day.isInCollection(touchedDays)) else None
+      val isNull = if (touchedNull) Some(day.isNull) else None
+      (inDays.toSeq ++ isNull.toSeq).reduceOption(_ || _)
+    }
+    def refreshGold(silver: org.apache.spark.sql.DataFrame): Long =
+      touchedCond(to_date(col("start_time"))) match {
+        case Some(silverCond) =>
+          store.replaceWhere("daily_stats",
+            NsQueries.dailyStats(silver.filter(silverCond), clock),
+            touchedCond(col("date")).get)
+        case None => store.read("daily_stats").map(_.count()).getOrElse(0L)
+      }
+    var dailyStatsRows = 0L
+
     // Load 2 (silver): latest-wins upsert — re-running the same batch
-    // writes nothing, later batches update ongoing disruptions.
-    store.upsert("disruptions", cleaned, "disruption_id", "updated_at")
+    // writes nothing, later batches update ongoing disruptions. Gold is
+    // refreshed from the upserted rows before they commit, so a crash
+    // between the two commits leaves the upsert undone, and its re-run
+    // (same touched days) refreshes gold again; the refresh runs even
+    // when silver does not change.
+    store.upsert("disruptions", cleaned, Seq("disruption_id"), "updated_at",
+      before = silver => dailyStatsRows = refreshGold(silver))
 
     // Dimension seed (ON CONFLICT DO NOTHING ≡ append-if-absent).
     val stations = spark.createDataFrame(NsSchemas.stationSeed)
@@ -112,29 +138,9 @@ object Main {
       .withColumn("last_updated", clock.ts)
     store.appendIfAbsent("stations", stations, "station_code")
 
-    // Gold: materialize the daily_stats table the reference declared
-    // but never populated — refreshed ONLY for the touched days (the
-    // reference recomputes from the full table every run, which at
-    // 100 TB rescans the corpus; per-day stats depend only on that
-    // day's rows, so a partition-grain replaceWhere is exact). The
-    // refresh runs even when silver did not change: it is what repairs
-    // a crash between the silver commit and the gold write.
-    val silver = store.read("disruptions").get
-    def touchedCond(day: org.apache.spark.sql.Column): Option[org.apache.spark.sql.Column] = {
-      val inDays = if (touchedDays.nonEmpty) Some(day.isInCollection(touchedDays)) else None
-      val isNull = if (touchedNull) Some(day.isNull) else None
-      (inDays.toSeq ++ isNull.toSeq).reduceOption(_ || _)
-    }
-    val dailyStatsRows = touchedCond(to_date(col("start_time"))) match {
-      case Some(silverCond) =>
-        store.replaceWhere("daily_stats",
-          NsQueries.dailyStats(silver.filter(silverCond), clock),
-          touchedCond(col("date")).get)
-      case None => store.read("daily_stats").map(_.count()).getOrElse(0L)
-    }
-
     // Report (pipeline.py:304-342); the silver row count is observed on
     // the report's own scan.
+    val silver = store.read("disruptions").get
     val silverRows = Observation()
     // bounded-collect: todaysReport is a global O(1)-row aggregate
     val report = NsQueries.todaysReport(

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.store.TableStore
@@ -43,15 +43,16 @@ final class LshIndex(
     LshIndex.candidatePairs(nb, store.read(table))
   }
 
-  /** Index the batch: append bands for doc ids not yet present.
+  /** Index the batch: append bands for doc ids not yet present
+    * ([[TableStore.appendNewKeys]]).
     *
     * Each append lands one parquet file-set; a long-running admission
     * pipeline would otherwise accumulate small files forever (per-file
     * open/footer cost eventually dominating the candidate join's index
     * scan), so once the table's file count exceeds `compactAboveFiles`
     * the append triggers [[TableStore.compact]] — a row-preserving
-    * rewrite under the store's atomic temp-then-rename swap, so a
-    * reader never observes a partial index and re-running is a no-op.
+    * rewrite committed as one new table version, so a reader never
+    * observes a partial index and re-running is a no-op.
     *
     * SINGLE-WRITER contract: the whole add (dedup anti-join → append →
     * fileCount/compact check-then-act) is `synchronized` on this
@@ -59,19 +60,13 @@ final class LshIndex(
     * same single-flight discipline as the q205 fixture write; without
     * it two adds could double-insert a shared doc's bands (both
     * anti-join against the pre-append index) or interleave an append
-    * with the compaction's swap. Writers going through SEPARATE
-    * LshIndex instances on the same table are still the caller's
-    * responsibility: one admission pipeline per table.
+    * with the compaction's commit. Adds through SEPARATE instances
+    * that overlap cannot both land: the store commits the first and
+    * the other fails (one admission pipeline per table).
     */
   def add(newDocs: DataFrame): Unit = this.synchronized {
-    val nb = bands(newDocs)
-    store.read(table) match {
-      case None => store.write(table, nb)
-      case Some(idx) =>
-        nb.join(idx.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-          .write.mode(SaveMode.Append).parquet(store.path(table))
-        if (store.fileCount(table) > compactAboveFiles) store.compact(table)
-    }
+    store.appendNewKeys(table, bands(newDocs), "doc_id")
+    if (store.fileCount(table) > compactAboveFiles) store.compact(table)
   }
 }
 

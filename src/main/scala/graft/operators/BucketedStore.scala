@@ -1,4 +1,4 @@
-package graft.store
+package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 

@@ -2,7 +2,6 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
@@ -10,7 +9,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType, ShortType}
 
-import graft.store.AggSpec
+import graft.store.AggTable
 
 /** Optimizer rule: answer aggregates over a base table from its
   * incrementally-maintained [[graft.store.AggTable]] state instead of
@@ -35,8 +34,9 @@ import graft.store.AggSpec
   *    `min(m)` → min(min_m), or `max(m)` → max(max_m) over spec
   *    measures — the algebraic set the state closes over (avg and
   *    count(col) are NOT rewritten: the state keeps no per-measure
-  *    null counts, and [[AggSpec]] sums null-skip like SQL only when
-  *    the measure is never-null; count(DISTINCT …) is never derivable);
+  *    null counts, and [[graft.store.AggSpec]] sums null-skip like SQL
+  *    only when the measure is never-null; count(DISTINCT …) is never
+  *    derivable);
   *  - `sum` measures are integral or DECIMAL(≤18, ≤2) at the base, so
   *    the DECIMAL(18,2) state sum is bit-identical to the base sum
   *    (float sums would change by partial-aggregation order; min/max
@@ -48,28 +48,21 @@ import graft.store.AggSpec
   */
 object MatViewRewrite extends Rule[LogicalPlan] {
 
-  /** One registered materialization: base parquet path answered by
-    * the state parquet at `statePath` for `spec`.
-    */
-  final case class Registration(spec: AggSpec, statePath: String)
-
-  private val registry = new ConcurrentHashMap[String, Registration]()
+  private val registry = new ConcurrentHashMap[String, AggTable]()
 
   private def canon(p: String): String =
     p.stripSuffix("/").replaceFirst("^file:", "")
 
-  /** Route aggregates over `basePath` to the AggTable state at
-    * `statePath` (usually `store.path(table) + "/state"`).
-    */
-  def register(basePath: String, spec: AggSpec, statePath: String): Unit =
-    registry.put(canon(basePath), Registration(spec, statePath))
+  /** Route aggregates over `basePath` to the state of `view`. */
+  def register(basePath: String, view: AggTable): Unit =
+    registry.put(canon(basePath), view)
 
   def unregister(basePath: String): Unit = registry.remove(canon(basePath))
 
   def clear(): Unit = registry.clear()
 
   /** The registration whose base path backs this scan, if any. */
-  private def registered(lr: LogicalRelation): Option[Registration] =
+  private def registered(lr: LogicalRelation): Option[AggTable] =
     lr.relation match {
       case fs: HadoopFsRelation =>
         fs.location.rootPaths.iterator
@@ -102,8 +95,8 @@ object MatViewRewrite extends Rule[LogicalPlan] {
       case agg @ Aggregate(groupExprs, aggExprs, child, _) =>
         (for {
           (lr, filters) <- strip(child)
-          reg <- registered(lr)
-          rewritten <- tryRewrite(agg, groupExprs, aggExprs, filters, reg)
+          view <- registered(lr)
+          rewritten <- tryRewrite(agg, groupExprs, aggExprs, filters, view)
         } yield rewritten).getOrElse(agg)
     }
   }
@@ -113,14 +106,13 @@ object MatViewRewrite extends Rule[LogicalPlan] {
       groupExprs: Seq[Expression],
       aggExprs: Seq[NamedExpression],
       filters: Seq[Expression],
-      reg: Registration): Option[LogicalPlan] = {
-    val keys = reg.spec.keys.toSet
-    val measures = reg.spec.measures.toSet
+      view: AggTable): Option[LogicalPlan] = {
+    val keys = view.spec.keys.toSet
+    val measures = view.spec.measures.toSet
 
-    // analyzed scan of the state parquet; bail quietly if missing
-    val state =
-      try SparkSession.active.read.parquet(reg.statePath).queryExecution.analyzed
-      catch { case _: Throwable => return None }
+    // analyzed scan of the committed state (built from its manifest:
+    // no listing, no inference job); bail quietly if none yet
+    val state = view.state.getOrElse(return None).queryExecution.analyzed
     val stateAttr = state.output.map(a => a.name -> a).toMap
     def s(name: String): Option[AttributeReference] =
       stateAttr.get(name).collect { case a: AttributeReference => a }

@@ -94,7 +94,7 @@ object Round12Queries {
     covers = Seq("S-scd2-gate"))
 
   // ---------------------------------------------- bucketed co-located join
-  // store/BucketedStore under the oracle: lineitem and orders are
+  // operators/BucketedStore under the oracle: lineitem and orders are
   // written bucketed+sorted on the join key, then joined and
   // aggregated — the physical plan has NO Exchange before the join
   // (asserted in Round12QueriesSpec; the write paid the partitioning
@@ -113,7 +113,7 @@ object Round12Queries {
   private val q189 = QueryDef(
     "q189_bucketed_join",
     (s, dir) => {
-      val bs = new graft.store.BucketedStore(s)
+      val bs = new graft.operators.BucketedStore(s)
       val ctx = s.sparkContext.applicationId + ":" + s.sparkContext.startTime
       if (bucketedFixture.get != ((ctx, dir))) {
         // a fresh in-memory catalog does not know about tables a prior

@@ -139,7 +139,7 @@ object Round25Queries {
       val base = t(s, dir, "lineitem")
       (0 to 2).foreach(b =>
         aggTable.accumulate(s"b$b", base.filter(col("l_orderkey") % 3 === b)))
-      MatViewRewrite.register(basePath, spec, s"$root/li_stats/state")
+      MatViewRewrite.register(basePath, aggTable)
       s.experimental.extraOptimizations =
         s.experimental.extraOptimizations :+ MatViewRewrite
       try {

@@ -69,40 +69,34 @@ final case class AggSpec(keys: Seq[String], measures: Seq[String]) {
   * `accumulate(batchId, batch)` folds one batch's [[AggSpec.partial]]
   * into the persisted state; already-applied batch ids are skipped, so
   * re-running a batch (the reference's "safe to re-run" contract) is a
-  * no-op. The state and the applied-ids ledger live under ONE table
-  * directory (`<table>/state`, `<table>/ledger`) installed by a single
-  * atomic rename ([[TableStore.swapWriteParts]]), so a crash can never
-  * persist one without the other — on retry the batch either replays
-  * cleanly (neither landed) or is skipped (both landed). Exactly-once
-  * is therefore as strong as the filesystem's rename; on a store
-  * without atomic rename (S3), use a transactional table format.
+  * no-op. The state and the applied-ids ledger are two parts of one
+  * table (`<table>/state`, `<table>/ledger`) written by ONE
+  * [[TableStore.commit]], so a crash can never persist one without the
+  * other — on retry the batch either replays cleanly (neither landed)
+  * or is skipped (both landed).
   */
-final class AggTable(store: TableStore, table: String, spec: AggSpec) {
+final class AggTable(store: TableStore, table: String, val spec: AggSpec) {
 
-  private val statePart = s"$table/state"
-  private val ledgerPart = s"$table/ledger"
-
-  def state: Option[DataFrame] = store.read(statePart)
+  def state: Option[DataFrame] = store.read(s"$table/state")
 
   /** Final aggregates of everything accumulated so far. */
   def result: Option[DataFrame] = state.map(spec.finish)
 
-  // Driver-side mirror of the applied-ids ledger, lazily seeded from
-  // the store (the DedupStore pattern): the ledger stays the
-  // crash-safe record — it lands in every atomic swap and a fresh
-  // instance re-reads it — but this instance stops paying a
-  // ledger-scan job per accumulate. O(batches) ids by construction.
-  private var appliedMemo: Option[scala.collection.mutable.Set[String]] = None
+  // The version this instance builds on and a driver-side mirror of
+  // its ledger (O(batches) ids), seeded once and advanced by this
+  // instance's commits: an accumulate pays no ledger-scan job, and
+  // once another writer commits, the next accumulate fails instead of
+  // trusting the stale mirror. A fresh instance re-reads the ledger.
+  private var mirror: Option[(TableStore.Snapshot, Set[String])] = None
 
-  private def appliedIds: scala.collection.mutable.Set[String] =
-    appliedMemo.getOrElse {
-      val s = scala.collection.mutable.Set.empty[String]
-      // bounded-collect: O(batches) ids — the ledger's documented size
-      store.read(ledgerPart).foreach(
-        _.select("batch_id").collect().foreach(r => s += r.getString(0)))
-      appliedMemo = Some(s)
-      s
-    }
+  private def current: (TableStore.Snapshot, Set[String]) = mirror.getOrElse {
+    val base = store.snapshot(table)
+    // bounded-collect: O(batches) ids — the ledger's documented size
+    val ids = store.read(base, "ledger").fold(Set.empty[String])(
+      _.select("batch_id").collect().map(_.getString(0)).toSet)
+    mirror = Some((base, ids))
+    (base, ids)
+  }
 
   /** Fold one batch into the state; false if batchId was already
     * applied (nothing happens).
@@ -110,22 +104,14 @@ final class AggTable(store: TableStore, table: String, spec: AggSpec) {
   def accumulate(batchId: String, batch: DataFrame): Boolean = {
     val spark = batch.sparkSession
     import spark.implicits._
-    if (appliedIds.contains(batchId)) false
+    val (base, applied) = current
+    if (applied.contains(batchId)) false
     else {
       val p = spec.partial(batch)
-      val ids = (appliedIds.toSeq :+ batchId).sorted.toDF("batch_id")
-        .coalesce(1)
-      state match {
-        case None =>
-          store.swapWriteParts(table, Seq("state" -> p, "ledger" -> ids))
-        case Some(st) =>
-          // no pre-swap materialization: swapWriteParts writes both
-          // parts into `<table>__tmp` before the one rename, so the
-          // merge plan still reads the live state files while writing
-          store.swapWriteParts(table,
-            Seq("state" -> spec.merge(st, p), "ledger" -> ids))
-      }
-      appliedIds += batchId
+      val next = store.commit(base, Seq(
+        TableStore.Write("state", store.read(base, "state").fold(p)(spec.merge(_, p))),
+        TableStore.Write("ledger", (applied + batchId).toSeq.sorted.toDF("batch_id").coalesce(1))))
+      mirror = Some((next, applied + batchId))
       true
     }
   }

@@ -14,9 +14,8 @@ import graft.dedup.BloomDedup
   * never seen before — across batches and within the batch — with
   * crash-safe exactly-once semantics.
   *
-  * State is three datasets under ONE table directory installed by a
-  * single atomic rename ([[TableStore.swapWriteParts]], the same
-  * commit primitive as [[AggTable]]):
+  * State is three parts of one table, written by ONE
+  * [[TableStore.commit]] (the same commit as [[AggTable]]'s):
   *   - `docs`   — the admitted corpus;
   *   - `bloom`  — a serialized bloom filter over every admitted key,
   *     MERGED incrementally (OR of filters = filter of the union), so
@@ -39,46 +38,32 @@ final class DedupStore(
     table: String,
     keyCol: String,
     expectedItems: Long = 10000000L) {
+  import DedupStore.Mirror
 
-  private val docsPart = s"$table/docs"
-  private val bloomPart = s"$table/bloom"
-  private val ledgerPart = s"$table/ledger"
+  def corpus: Option[DataFrame] = store.read(s"$table/docs")
 
-  def corpus: Option[DataFrame] = store.read(docsPart)
+  // The version this instance builds on and driver-side mirrors of
+  // its CONTROL state — the applied batch ids and the merged bloom bits,
+  // both tiny — seeded once and advanced by this instance's commits:
+  // an admit pays no ledger-scan or bloom head() job, and once another
+  // writer commits, the next admit fails instead of trusting stale
+  // mirrors. A fresh instance re-reads both from the store.
+  private var mirror: Option[Mirror] = None
 
-  // Driver-side mirrors of the persisted CONTROL state — the applied
-  // batch ids and the merged bloom bits — lazily seeded from the
-  // store on first use. The store stays the crash-safe source of
-  // truth (both still land in every atomic swap; a fresh instance
-  // re-reads them); the mirrors remove a ledger-scan job and a bloom
-  // head() job from every admit. Both are tiny by construction (the
-  // ledger is O(batches) ids; the filter is already merged on the
-  // driver). Contract: one instance is the sole writer of its table
-  // — the TableStore schema-catalog contract this store already
-  // lives under.
-  private var appliedMemo: Option[scala.collection.mutable.Set[String]] = None
-  private var bloomMemo: Option[Option[Array[Byte]]] = None
-
-  private def appliedIds: scala.collection.mutable.Set[String] =
-    appliedMemo.getOrElse {
-      val s = scala.collection.mutable.Set.empty[String]
-      // bounded-collect: O(batches) ids — the ledger's documented size
-      store.read(ledgerPart).foreach(
-        _.select("batch_id").collect().foreach(r => s += r.getString(0)))
-      appliedMemo = Some(s)
-      s
-    }
-
-  // NULL bloom cell = "no keys admitted yet" (an empty corpus after a
-  // fully-duplicate or empty first batch) — flattened to None so every
-  // consumer treats it as filter-absent
-  private def bloomBytes: Option[Array[Byte]] =
-    bloomMemo.getOrElse {
-      val b = store.read(bloomPart)
-        .flatMap(df => Option(df.head().getAs[Array[Byte]]("bloom")))
-      bloomMemo = Some(b)
-      b
-    }
+  private def current: Mirror = mirror.getOrElse {
+    val base = store.snapshot(table)
+    // bounded-collect: O(batches) ids — the ledger's documented size
+    val applied = store.read(base, "ledger").fold(Set.empty[String])(
+      _.select("batch_id").collect().map(_.getString(0)).toSet)
+    // NULL bloom cell = "no keys admitted yet" (an empty corpus after a
+    // fully-duplicate or empty first batch) — flattened to None so every
+    // consumer treats it as filter-absent
+    val bloom = store.read(base, "bloom")
+      .flatMap(df => Option(df.head().getAs[Array[Byte]]("bloom")))
+    val m = Mirror(base, applied, bloom)
+    mirror = Some(m)
+    m
+  }
 
   /** Admit one batch; returns the number of documents actually added
     * (0 on a replayed batch id).
@@ -86,7 +71,9 @@ final class DedupStore(
   def admit(batchId: String, batch: DataFrame): Long = {
     val spark = batch.sparkSession
     import spark.implicits._
-    if (appliedIds.contains(batchId)) return 0L
+    val Mirror(base, applied, bloomBytes) = current
+    if (applied.contains(batchId)) return 0L
+    store.requireLatest(base)
 
     // batch-internal exact dedup: lowest-ordered row per key wins
     val cols = batch.columns
@@ -96,7 +83,8 @@ final class DedupStore(
 
     // vs corpus: bloom prefilter (stored filter, no corpus scan) +
     // exact verify join for possible members only
-    val fresh = (corpus, bloomBytes) match {
+    val stored = store.read(base, "docs")
+    val fresh = (stored, bloomBytes) match {
       case (Some(c), Some(bits)) =>
         val mc = BloomDedup.mightContain(bits, Seq(keyCol))
         internal.filter(!mc).unionByName(
@@ -129,24 +117,19 @@ final class DedupStore(
       case (None, None) => null
     }
 
-    // No pre-swap materialization needed: swapWriteParts writes every
-    // part into `<table>__tmp` BEFORE the one directory rename, so
-    // these plans still read the live table files while writing —
-    // the old localCheckpoints here were an extra materialization
-    // pass per admit. (applyCdc keeps its checkpoint: it performs TWO
-    // swaps, and the second plan reads files the first swap removed.)
-    val newDocs = corpus.fold(freshMat)(_.unionByName(freshMat))
     // the ledger is O(batches) rows forever — one partition, always;
     // rebuilt from the driver mirror (sorted for determinism), no
     // read-union pass
-    val newLedger = (appliedIds.toSeq :+ batchId).sorted.toDF("batch_id")
-      .coalesce(1)
-    store.swapWriteParts(table, Seq(
-      "docs" -> newDocs,
-      "bloom" -> Seq(Tuple1(mergedBits)).toDF("bloom"),
-      "ledger" -> newLedger))
-    appliedIds += batchId
-    bloomMemo = Some(Option(mergedBits))
+    val next = store.commit(base, Seq(
+      TableStore.Write("docs", stored.fold(freshMat)(_.unionByName(freshMat))),
+      TableStore.Write("bloom", Seq(Tuple1(mergedBits)).toDF("bloom")),
+      TableStore.Write("ledger", (applied + batchId).toSeq.sorted.toDF("batch_id").coalesce(1))))
+    mirror = Some(Mirror(next, applied + batchId, Option(mergedBits)))
     added
   }
+}
+
+object DedupStore {
+  private final case class Mirror(
+      base: TableStore.Snapshot, applied: Set[String], bloom: Option[Array[Byte]])
 }

@@ -186,9 +186,9 @@ object EventStreams {
   /** Maintain a [[graft.store.AggTable]] from a stream: every
     * micro-batch folds its mergeable partial into the persisted
     * aggregate state (O(batch + touched groups) per trigger — the
-    * stored view is never recomputed). Exactly-once to the
-    * non-transactional parquet store comes from pairing the streaming
-    * engine's replay-stable batch ids with the AggTable ledger: a
+    * stored view is never recomputed). Exactly-once comes from
+    * pairing the streaming engine's replay-stable batch ids with the
+    * AggTable ledger, committed with the state: a
     * replayed batch after a crash is recognized and skipped
     * ([[maintainAggregateBatch]] is the testable body).
     */

@@ -13,46 +13,7 @@ class MainSpec extends SparkSpec {
 
   // ------------------------------------------------ synthetic batches
 
-  import MainSpec.Rec
-
-  private def ts(day: Int, hour: Int): String = f"2026-02-$day%02dT$hour%02d:15:00+0100"
-
-  private val types = Seq("storing", "werkzaamheden", "CALAMITY", "cancellation", "verstoring")
-  private val stationCodes = Seq("ASD", "UTR", "RTD", "GVC")
-
-  /** 40 records over six days: unparseable starts (a null-date group),
-    * open disruptions without an end, records without stations, one
-    * record without an id, and few station codes and hours, so the
-    * modal station and hour tie often.
-    */
-  private val history: Seq[Rec] = (0 until 40).map { i =>
-    val rnd = new scala.util.Random(i.toLong)
-    Rec(
-      id = if (i == 7) None else Some(s"h$i"),
-      typ = types(i % types.size),
-      title = s"Disruption number $i",
-      start = if (i % 9 == 4) "not-a-date" else ts(20 + i % 6, Seq(6, 8, 8, 17)(rnd.nextInt(4))),
-      end = if (i % 4 == 1) None else Some(ts(20 + i % 6, 22)),
-      stations = rnd.shuffle(stationCodes).take(rnd.nextInt(3)))
-  }
-
-  /** The next day: ten new records, plus updates of three history
-    * records — one moved to another day, two now with an end.
-    */
-  private val update: Seq[Rec] =
-    (0 until 10).map(i => Rec(Some(s"n$i"), types(i % types.size), s"New disruption $i",
-      ts(26, 7 + i % 3), Some(ts(26, 21)), stationCodes.take(1 + i % 2))) ++ Seq(
-      history(1).copy(start = ts(26, 9), end = Some(ts(26, 10))),
-      history(5).copy(end = Some(ts(25, 23))),
-      history(9).copy(end = Some(ts(24, 23))))
-
-  private def snapshot(dir: java.nio.file.Path, name: String, recs: Seq[Rec]): String = {
-    val f = dir.resolve(name)
-    Files.write(f, recs.map(_.json).mkString("[\n", ",\n", "\n]").getBytes("UTF-8"))
-    f.toString
-  }
-
-  private def clockOn(day: Int) = Clock(java.time.Instant.parse(f"2026-02-$day%02dT23:30:00Z"))
+  import MainSpec._
 
   /** Rows as comparable values; doubles rounded, since an incremental
     * and a full aggregation may sum in different orders.
@@ -112,6 +73,27 @@ class MainSpec extends SparkSpec {
     assert(replay == second.updated("bronze_inserted", 0L))
     assert(parts() == before)
     assert(rows(store.read("daily_stats").get.drop("calculated_at")) == stats)
+  }
+
+  test("api: extract source converges with the file path on a synthetic snapshot") {
+    // the golden case below, over the synthetic history: the api:
+    // prefix fetches through ApiClient (file:// transport) and archives
+    // the snapshot under the store before the pipeline reads it back
+    val dir = Files.createTempDirectory("graft-main-api")
+    val raw = snapshot(dir, "history.json", history)
+    val (rootApi, rootFile) = (dir.resolve("api").toString, dir.resolve("file").toString)
+    val clock = clockOn(25)
+    val viaApi = Main.run(spark, s"api:${Paths.get(raw).toUri}", rootApi, clock).toMap
+    val viaFile = Main.run(spark, raw, rootFile, clock).toMap
+    assert(viaApi == viaFile)
+    assert(viaApi("extracted") == 40L)
+    val (sApi, sFile) = (new graft.store.TableStore(spark, rootApi),
+      new graft.store.TableStore(spark, rootFile))
+    val archived = new java.io.File(sApi.path("raw_archive")).listFiles()
+    assert(archived != null && archived.exists(
+      _.getName.matches("disruptions_\\d{8}_\\d{6}\\.json")),
+      s"no dated archive under ${sApi.path("raw_archive")}")
+    assert(rows(sApi.read("disruptions").get) == rows(sFile.read("disruptions").get))
   }
 
   // ------------------------------------------------ golden capture
@@ -176,8 +158,47 @@ class MainSpec extends SparkSpec {
 }
 
 object MainSpec {
+  private def ts(day: Int, hour: Int): String = f"2026-02-$day%02dT$hour%02d:15:00+0100"
+
+  private val types = Seq("storing", "werkzaamheden", "CALAMITY", "cancellation", "verstoring")
+  private val stationCodes = Seq("ASD", "UTR", "RTD", "GVC")
+
+  /** 40 records over six days: unparseable starts (a null-date group),
+    * open disruptions without an end, records without stations, one
+    * record without an id, and few station codes and hours, so the
+    * modal station and hour tie often.
+    */
+  private[graft] val history: Seq[Rec] = (0 until 40).map { i =>
+    val rnd = new scala.util.Random(i.toLong)
+    Rec(
+      id = if (i == 7) None else Some(s"h$i"),
+      typ = types(i % types.size),
+      title = s"Disruption number $i",
+      start = if (i % 9 == 4) "not-a-date" else ts(20 + i % 6, Seq(6, 8, 8, 17)(rnd.nextInt(4))),
+      end = if (i % 4 == 1) None else Some(ts(20 + i % 6, 22)),
+      stations = rnd.shuffle(stationCodes).take(rnd.nextInt(3)))
+  }
+
+  /** The next day: ten new records, plus updates of three history
+    * records — one moved to another day, two now with an end.
+    */
+  private[graft] val update: Seq[Rec] =
+    (0 until 10).map(i => Rec(Some(s"n$i"), types(i % types.size), s"New disruption $i",
+      ts(26, 7 + i % 3), Some(ts(26, 21)), stationCodes.take(1 + i % 2))) ++ Seq(
+      history(1).copy(start = ts(26, 9), end = Some(ts(26, 10))),
+      history(5).copy(end = Some(ts(25, 23))),
+      history(9).copy(end = Some(ts(24, 23))))
+
+  private[graft] def snapshot(dir: java.nio.file.Path, name: String, recs: Seq[Rec]): String = {
+    val f = dir.resolve(name)
+    Files.write(f, recs.map(_.json).mkString("[\n", ",\n", "\n]").getBytes("UTF-8"))
+    f.toString
+  }
+
+  private[graft] def clockOn(day: Int) = Clock(java.time.Instant.parse(f"2026-02-$day%02dT23:30:00Z"))
+
   /** One raw NS API record, rendered as the JSON the extract reads. */
-  private final case class Rec(
+  private[graft] final case class Rec(
       id: Option[String], typ: String, title: String,
       start: String, end: Option[String], stations: Seq[String]) {
     def json: String = {

@@ -52,8 +52,7 @@ class MatViewPropertiesSpec extends SparkSpec {
           table.accumulate(s"batch-$b",
             slice.toDF("k", "v", "idx").select("k", "v"))
         }
-        MatViewRewrite.register(base, AggSpec(Seq("k"), Seq("v")),
-          store.path("stats") + "/state")
+        MatViewRewrite.register(base, table)
 
         val stateQ = spark.read.parquet(base).groupBy("k")
           .agg(count(lit(1)).as("n"), sum("v").as("s"),

@@ -43,9 +43,8 @@ class MatViewRewriteSpec extends SparkSpec {
     val df = spark.read.parquet(base)
     agg.accumulate("b1", df.filter(col("v") >= 3))
     agg.accumulate("b2", df.filter(col("v") < 3))
-    val statePath = store.path("stats") + "/state"
-    MatViewRewrite.register(base, AggSpec(Seq("k"), Seq("v")), statePath)
-    (base, statePath)
+    MatViewRewrite.register(base, agg)
+    (base, store.path("stats") + "/state")
   }
 
   test("aggregate over the base table is answered from the state") {
@@ -152,7 +151,7 @@ class MatViewRewriteSpec extends SparkSpec {
       val agg = new AggTable(store, "stats", AggSpec(Seq("k"), Seq("v")))
       agg.accumulate("b1", spark.read.parquet(base))
       val statePath = store.path("stats") + "/state"
-      MatViewRewrite.register(base, AggSpec(Seq("k"), Seq("v")), statePath)
+      MatViewRewrite.register(base, agg)
 
       // bare float sum must NOT rewrite (order-dependent) ...
       val bare = spark.read.parquet(base).groupBy("k").agg(sum("v").as("s"))
@@ -198,7 +197,7 @@ class MatViewRewriteSpec extends SparkSpec {
       query.stop()
       (b1 ++ b2).toDF().write.mode("append").parquet(base)
 
-      MatViewRewrite.register(base, spec, store.path("ev_stats") + "/state")
+      MatViewRewrite.register(base, new AggTable(store, "ev_stats", spec))
       val q = spark.read.parquet(base).groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(DecimalType(18, 2))).as("s"),

@@ -64,8 +64,8 @@ class AggTableSpec extends SparkSpec {
     val agg = new AggTable(store, "stats", spec)
     agg.accumulate("b1", Seq(("a", 1.00)).toDF("k", "v"))
     agg.accumulate("b2", Seq(("a", 2.00)).toDF("k", "v"))
-    // both live under <table>/ and are installed by ONE rename — a
-    // crash can never persist the ledger without the matching state
+    // both are parts of <table>, written by ONE commit — a crash can
+    // never persist the ledger without the matching state
     assert(store.exists("stats/state") && store.exists("stats/ledger"))
     assert(!store.exists("stats__batches"))
     assert(store.read("stats/ledger").get.collect()

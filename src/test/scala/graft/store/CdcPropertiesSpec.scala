@@ -71,7 +71,7 @@ class CdcPropertiesSpec extends SparkSpec {
           store.read("t").get.select("k", "ver", "payload").collect()
             .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
         def tombSnapshot(): Map[Long, Long] =
-          store.read("t__tombstones").get.collect()
+          store.read("t/_tombstones").get.collect()
             .map(r => r.getLong(0) -> r.getLong(1)).toMap
         val live = liveSnapshot()
         val tombs = tombSnapshot()

@@ -156,19 +156,21 @@ class TableStoreSpec extends SparkSpec {
     // old version is untouched by the new commit (snapshot isolation)
     assert(store.readVersion("t", 1).count() == 1)
     assert(store.readLatest("t").get.count() == 2)
-    // a crashed write = directory without _SUCCESS → readers ignore it
-    val crashed = new java.io.File(s"$root/t/v=3"); crashed.mkdirs()
-    new java.io.File(crashed, "part-junk.parquet").createNewFile()
+    // a crashed write = data files no manifest lists, and a manifest
+    // cut short → readers ignore both
+    new java.io.File(s"$root/t/part-junk.parquet").createNewFile()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/t/_manifest/3.json"), "{\"wri")
     assert(store.versions("t") == Seq(1, 2))
     assert(store.readLatest("t").get.count() == 2)
-    // the next commit claims a fresh number above the debris or reuses
-    // 3's slot only if uncommitted — either way it becomes the latest
+    // the next commit claims a number past the debris and is the latest
     val v = store.writeVersion("t", Seq((9, "z")).toDF("k", "v"))
-    assert(store.versions("t").last == v)
+    assert(v > 2 && store.versions("t").last == v)
     intercept[IllegalArgumentException](store.readVersion("t", 99))
     store.vacuum("t", keep = 1)
     assert(store.versions("t") == Seq(v))
-    assert(!new java.io.File(s"$root/t/v=1").exists())
+    // only the retained version's files are left
+    assert(spark.read.parquet(store.path("t")).collect().map(_.getInt(0)).toSeq == Seq(9))
+    assert(!new java.io.File(s"$root/t/part-junk.parquet").exists())
   }
 
   test("scd2Upsert discards late-arriving stale rows (history stays monotone)") {
@@ -236,16 +238,16 @@ class TableStoreSpec extends SparkSpec {
     val writer = new TableStore(spark, root)
     writer.write("w", Seq((1L, "a")).toDF("k", "v"))
     writer.upsert("u", Seq((1L, "a", 10L)).toDF("k", "v", "ver"), "k", "ver")
-    writer.upsert("u", Seq((2L, "b", 11L)).toDF("k", "v", "ver"), "k", "ver") // swap path
+    writer.upsert("u", Seq((2L, "b", 11L)).toDF("k", "v", "ver"), "k", "ver") // second version
     writer.appendIfAbsent("a", Seq((1L, "a")).toDF("k", "v"), "k")
     val agg = new AggTable(writer, "agg", AggSpec(Seq("k"), Seq("x")))
     agg.accumulate("b1", Seq(("a", 1.0)).toDF("k", "x"))
-    agg.accumulate("b2", Seq(("a", 2.0)).toDF("k", "x")) // multi-part swap
+    agg.accumulate("b2", Seq(("a", 2.0)).toDF("k", "x")) // multi-part commit
 
     val reader = new TableStore(spark, root)
     val tables = Seq("w", "u", "a", "agg/state", "agg/ledger")
     assert(jobsDuring(tables.foreach(t => reader.read(t).get)) == 0)
-    // the catalogued schema is exactly what inference returns
+    // the manifest's schema is exactly what inference returns
     tables.foreach { t =>
       assert(reader.read(t).get.schema == spark.read.parquet(reader.path(t)).schema, t)
     }
@@ -253,32 +255,58 @@ class TableStoreSpec extends SparkSpec {
     assert(jobsDuring(spark.read.parquet(reader.path("u"))) >= 1)
   }
 
-  test("the schema side file is invisible to readers, views and fileCount") {
+  test("the manifest is invisible to readers, views and fileCount") {
     import spark.implicits._
     val store = newStore()
     store.write("t", Seq((1L, "a"), (2L, "b")).toDF("k", "v").repartition(2))
+    store.write("t", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").repartition(2))
     val dir = new java.io.File(store.path("t"))
-    assert(new java.io.File(dir, TableStore.SchemaFile).isFile)
+    assert(new java.io.File(dir, "_manifest").listFiles().map(_.getName)
+      .filterNot(_.startsWith(".")).toSeq == Seq("2.json"))
+    // at rest the directory holds only the current version's files
     val parquet = spark.read.parquet(store.path("t"))
-    assert(parquet.columns.toSeq == Seq("k", "v") && parquet.count() == 2)
+    assert(parquet.columns.toSeq == Seq("k", "v") && parquet.count() == 3)
     assert(store.fileCount("t") == dir.listFiles().count(_.getName.startsWith("part-")))
     assert(store.registerViews() == Seq("t"))
-    assert(spark.sql("SELECT count(*) FROM t").head().getLong(0) == 2L)
+    assert(spark.sql("SELECT count(*) FROM t").head().getLong(0) == 3L)
   }
 
   test("a table written without the schema side file still reads") {
     import spark.implicits._
-    val store = newStore()
+    val root = Files.createTempDirectory("graft-store-legacy").toString
+    val store = new TableStore(spark, root)
     Seq((1L, "a", 10L), (2L, "b", 10L)).toDF("k", "v", "ver")
       .write.parquet(store.path("legacy"))
-    assert(!new java.io.File(store.path("legacy"), TableStore.SchemaFile).exists())
     val df = store.read("legacy").get
     assert(df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
       Map(1L -> "a", 2L -> "b"))
-    // the next write through the store adds the side file
-    store.upsert("legacy", Seq((3L, "c", 11L)).toDF("k", "v", "ver"), "k", "ver")
-    assert(new java.io.File(store.path("legacy"), TableStore.SchemaFile).isFile)
-    assert(store.read("legacy").get.count() == 3)
+    // an append keeps the legacy files as part of the new version
+    assert(store.appendIfAbsent("legacy", Seq((3L, "c", 11L)).toDF("k", "v", "ver"), "k") == 1)
+    assert(new java.io.File(store.path("legacy"), "_manifest/2.json").isFile)
+    assert(new TableStore(spark, root).read("legacy").get.count() == 3)
+    store.upsert("legacy", Seq((4L, "d", 11L)).toDF("k", "v", "ver"), "k", "ver")
+    assert(store.read("legacy").get.count() == 4)
+  }
+
+  test("a fresh store reads a 41-file table without listing or starting a job") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store-files").toString
+    val writer = new TableStore(spark, root)
+    writer.write("t", spark.sparkContext.parallelize((1 to 41).map(i => (i.toLong, s"v$i")), 41)
+      .toDF("k", "v"))
+    writer.writePartitioned("p", Seq((1L, 1), (2L, 2)).toDF("k", "day"), Seq("day"))
+    assert(writer.fileCount("t") == 41)
+    val reader = new TableStore(spark, root)
+    assert(jobsDuring(Seq("t", "p").foreach(t => reader.read(t).get)) == 0)
+    assert(reader.read("t").get.count() == 41)
+    // a partitioned table keeps its partition column
+    assert(reader.read("p").get.schema.fieldNames.toSeq == Seq("k", "day"))
+    assert(reader.read("p").get.filter("day = 2").collect().map(_.getLong(0)).toSeq == Seq(2L))
+    // the probe is not vacuous: 41 paths past the parallel-listing
+    // threshold start a listing job even with the schema given
+    val files = new java.io.File(reader.path("t")).listFiles()
+      .filter(_.getName.startsWith("part-")).map(_.getPath)
+    assert(jobsDuring(spark.read.schema(reader.read("t").get.schema).parquet(files.toSeq: _*)) >= 1)
   }
 
   test("upsert returns the changed rows and rewrites nothing when none change") {
