@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{CleanerGateQuery, ExtraQueries, NsGateQueries, QueryDef, RelationalQueries, Round10Queries, Round11Queries, Round12Queries, Round13Queries, Round14Queries, Round15Queries, Round16Queries, Round17Queries, Round18Queries, Round19Queries, Round20Queries, Round21Queries, Round22Queries, Round23Queries, Round24Queries, Round25Queries, Round26Queries, Round27Queries, Round28Queries, Round29Queries, Round30Queries, Round31Queries, Round32Queries, Round33Queries, Round34Queries, Round35Queries, Round36Queries, Round37Queries, Round38Queries, Round39Queries, Round40Queries, Round41Queries, Round42Queries, Round43Queries, Round44Queries, Round45Queries, Round46Queries, Round47Queries, Round48Queries, Round49Queries, Round50Queries, Round51Queries, Round52Queries, Round53Queries, Round54Queries, Round55Queries, Round56Queries, Round57Queries, Round58Queries, Round59Queries, Round60Queries, Round61Queries, Round62Queries, Round63Queries, Round64Queries, Round65Queries, Round66Queries, Round67Queries, Round68Queries, Round69Queries, Round70Queries, Round71Queries, Round72Queries, Round73Queries, Round74Queries, Round75Queries, Round76Queries, Round77Queries, Round78Queries, Round79Queries, Round80Queries, Round81Queries, Round82Queries, Round83Queries, Round84Queries, Round85Queries, Round86Queries, Round87Queries, Round88Queries, Round89Queries, Round90Queries, Round91Queries, Round92Queries, Round93Queries, Round94Queries, Round95Queries, Round96Queries, Round97Queries, Round98Queries, Round99Queries, Round100Queries, Round101Queries, Round102Queries, Round103Queries, Round104Queries, Round105Queries, Round2Queries, Round3Queries, Round4Queries, Round5Queries, Round6Queries, Round7Queries, Round8Queries, Round9Queries, TextQueries}
+import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -13,31 +13,34 @@ import graft.queries.{CleanerGateQuery, ExtraQueries, NsGateQueries, QueryDef, R
   */
 object SparkEntry {
 
-  private def defs: Seq[QueryDef] =
-    RelationalQueries.all ++ TextQueries.all ++ NsGateQueries.all ++
-      ExtraQueries.all ++ CleanerGateQuery.all ++ Round2Queries.all ++
-      Round3Queries.all ++ Round4Queries.all ++ Round5Queries.all ++
-      Round6Queries.all ++ Round7Queries.all ++ Round8Queries.all ++
-      Round9Queries.all ++ Round10Queries.all ++ Round11Queries.all ++
-      Round12Queries.all ++ Round13Queries.all ++ Round14Queries.all ++ Round15Queries.all ++ Round16Queries.all ++ Round17Queries.all ++ Round18Queries.all ++ Round19Queries.all ++ Round20Queries.all ++ Round21Queries.all ++ Round22Queries.all ++ Round23Queries.all ++ Round24Queries.all ++ Round25Queries.all ++ Round26Queries.all ++ Round27Queries.all ++ Round28Queries.all ++ Round29Queries.all ++ Round30Queries.all ++ Round31Queries.all ++ Round32Queries.all ++ Round33Queries.all ++ Round34Queries.all ++ Round35Queries.all ++ Round36Queries.all ++ Round37Queries.all ++ Round38Queries.all ++ Round39Queries.all ++ Round40Queries.all ++ Round41Queries.all ++ Round42Queries.all ++ Round43Queries.all ++ Round44Queries.all ++ Round45Queries.all ++ Round46Queries.all ++ Round47Queries.all ++ Round48Queries.all ++ Round49Queries.all ++ Round50Queries.all ++ Round51Queries.all ++ Round52Queries.all ++ Round53Queries.all ++ Round54Queries.all ++ Round55Queries.all ++ Round56Queries.all ++ Round57Queries.all ++ Round58Queries.all ++ Round59Queries.all ++ Round60Queries.all ++ Round61Queries.all ++ Round62Queries.all ++ Round63Queries.all ++ Round64Queries.all ++ Round65Queries.all ++ Round66Queries.all ++ Round67Queries.all ++ Round68Queries.all ++ Round69Queries.all ++ Round70Queries.all ++ Round71Queries.all ++ Round72Queries.all ++ Round73Queries.all ++ Round74Queries.all ++ Round75Queries.all ++ Round76Queries.all ++ Round77Queries.all ++ Round78Queries.all ++ Round79Queries.all ++ Round80Queries.all ++ Round81Queries.all ++ Round82Queries.all ++ Round83Queries.all ++ Round84Queries.all ++ Round85Queries.all ++ Round86Queries.all ++ Round87Queries.all ++ Round88Queries.all ++ Round89Queries.all ++ Round90Queries.all ++ Round91Queries.all ++ Round92Queries.all ++ Round93Queries.all ++ Round94Queries.all ++ Round95Queries.all ++ Round96Queries.all ++ Round97Queries.all ++ Round98Queries.all ++ Round99Queries.all ++ Round100Queries.all ++ Round101Queries.all ++ Round102Queries.all ++ Round103Queries.all ++ Round104Queries.all ++ Round105Queries.all
+  /** Gates by name; two gates with one name fail here, naming it. */
+  private[graft] def registry(gates: Seq[QueryDef]): Map[String, QueryDef] = {
+    val dups = gates.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(dups.isEmpty, s"duplicate gate name: ${dups.toSeq.sorted.mkString(", ")}")
+    gates.map(d => d.name -> d).toMap
+  }
+
+  private val byName = registry(RelationalGates.all ++ NsGates.all ++ TextGates.all ++
+    DedupGates.all ++ SimilarityGates.all ++ GraphGates.all ++ StatisticsGates.all ++
+    MlGates.all ++ StreamGates.all ++ StoreGates.all)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q11_join_dims")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map(d => d.name -> d.run).toMap
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (n, d) => n -> d.run }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    defs.flatMap(d => d.oracle.map(sql => d.name -> sql)).toMap
+  val oracleSql: Map[String, String] =
+    byName.flatMap { case (n, d) => d.oracle.map(n -> _) }
 
   /** Oracles that need the live (spark, testdata dir) pair to render —
     * gates whose SQL inlines data-derived model literals (trained ANN
     * centroids/codebooks). Verify evaluates these at dump time and
     * merges them into oracle_sql.json alongside [[oracleSql]]. */
-  def dynamicOracleSql: Map[String, (SparkSession, String) => String] =
-    defs.flatMap(d => d.dynOracle.map(f => d.name -> f)).toMap
+  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+    byName.flatMap { case (n, d) => d.dynOracle.map(n -> _) }
 }

@@ -119,7 +119,7 @@ object Hits {
     math.max(r.getLong(0), r.getLong(1))
   }
 
-  /** The q472 gate shape (see Round91Queries for the hash-gated
+  /** The q472 gate shape (see GraphGates for the hash-gated
     * original and its in-file commentary).
     */
   private def broadcastAuthorities(

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * This object single-sources that baseline so that
   *
   *  - the recall floors inside q45/q106 and
-  *  - the sibling hash gates q45b/q106b (Round102Queries)
+  *  - the sibling hash gates q45b/q106b (SimilarityGates)
   *
   * run the IDENTICAL code path: the hash gates prove the baseline's
   * values/ranking against DuckDB, and the recall floors then measure

@@ -68,7 +68,7 @@ object AnnModelOracle {
 
   /** Oracle for q45_ivf_ann: IVF probe/search with the centroid model
     * inlined, in-query brute-force top-k baseline, recall@k column.
-    * Mirrors ExtraQueries.q45 stage for stage.
+    * Mirrors SimilarityGates.q45 stage for stage.
     */
   def ivfSql(
       model: TrainedModels.IvfModel,
@@ -119,7 +119,7 @@ object AnnModelOracle {
 
   /** Oracle for q106_pq_ann: PQ encode + ADC candidate generation +
     * exact refine with the codebook inlined, brute-force baseline,
-    * recall@k column. Mirrors Round4Queries.q106 stage for stage.
+    * recall@k column. Mirrors SimilarityGates.q106 stage for stage.
     */
   def pqSql(
       book: PqIndex.Codebook,

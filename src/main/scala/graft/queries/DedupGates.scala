@@ -1,0 +1,1873 @@
+package graft.queries
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+
+import graft.Tables.{load => t}
+import graft.dedup.{BloomDedup, PrefixFilterJoin}
+
+import QueryDef.{spread, toksOf}
+
+/** Exact and near deduplication gates: hash, MinHash+LSH, SimHash and
+  * n-gram Jaccard candidates, Bloom and prefix filters, cluster
+  * canonicalization and the dedup audits built on them.
+  *
+  * Scale design: every near-dup path is inverted-index shaped (shingle
+  * → doc postings → candidate pairs) rather than all-pairs, so the
+  * shuffle volume is O(postings), not O(n²).
+  *
+  * Determinism: hashes are md5 hex strings (identical in Spark and
+  * DuckDB); MinHash compares hex strings lexicographically so no
+  * integer conversion is needed; doubles come from exact integer
+  * counts or identical IEEE expression trees.
+  */
+object DedupGates {
+
+  /** Word-3-gram shingle postings per doc: (doc_id, s). NOT deduped —
+    * every consumer aggregates with duplicate-insensitive functions
+    * (min for MinHash signatures, collect_set/countDistinct for
+    * Jaccard), so a standalone distinct would only add a shuffle.
+    *
+    * Uses the native [[graft.functions.WordShingles]] expression (one
+    * byte scan + contiguous slices per row, fused in codegen) —
+    * byte-identical to the split/transform/concat_ws HOF chain it
+    * replaced (WordShinglesSpec pins the equivalence; a shingle of
+    * single-space-joined words IS a contiguous span of the original).
+    * Docs with fewer than 3 words yield an empty array and vanish in
+    * the explode, matching the old size filter.
+    */
+  /** DISTINCT (doc_id, s) by construction: the dedup happens in the
+    * per-row `array_distinct` (O(shingles) in the scan task) instead
+    * of leaving duplicate postings for every consumer to re-dedup at
+    * shuffle level — the SQL twin below is `SELECT DISTINCT` for the
+    * same reason. Consumers rely on this: `jaccardPairsFrom`'s sizes
+    * use a plain count, q47 joins the postings without re-distincting.
+    */
+  private def shingles(d: DataFrame): DataFrame =
+    d.select(
+      col("doc_id"),
+      explode(array_distinct(
+        graft.functions.WordShingles(d.sparkSession, col("text"), 3))).as("s"))
+
+  /** DuckDB twin of [[shingles]] as a CTE body. */
+  private val shinglesSql: String =
+    """toksrc AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+       sh AS (SELECT DISTINCT doc_id,
+                unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
+                       i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+              FROM toksrc WHERE len(tk) >= 3)"""
+
+  // ---------------------------------------------------------------- dedup: exact
+  private val q21 = QueryDef(
+    "q21_dedup_exact",
+    (s, dir) => {
+      val d = t(s, dir, "documents")
+      d.groupBy(col("lang"))
+        .agg(
+          count(lit(1)).as("n_docs"),
+          countDistinct(md5(col("text"))).as("n_unique"),
+          (count(lit(1)) - countDistinct(md5(col("text")))).as("n_exact_dups"),
+          countDistinct(md5(lower(regexp_replace(col("text"), " +", " "))))
+            .as("n_unique_norm"))
+        .orderBy("lang")
+    },
+    Some("""SELECT lang,
+      CAST(COUNT(*) AS BIGINT) AS n_docs,
+      CAST(COUNT(DISTINCT md5(text)) AS BIGINT) AS n_unique,
+      CAST(COUNT(*) - COUNT(DISTINCT md5(text)) AS BIGINT) AS n_exact_dups,
+      CAST(COUNT(DISTINCT md5(lower(regexp_replace(text, ' +', ' ', 'g')))) AS BIGINT) AS n_unique_norm
+      FROM documents GROUP BY lang ORDER BY lang"""),
+    covers = Seq("DEDUP-exact"))
+
+  // ---------------------------------------------------------------- dedup: n-gram jaccard
+  // Inverted-index near-dup: shingle postings → candidate pairs →
+  // exact Jaccard. Only docs sharing ≥1 shingle ever pair up.
+  /** Shingle postings as q22/q23 consume them — factored out so
+    * composers (q291 precision/recall) can build them ONCE and feed
+    * both pipelines instead of paying the explode twice.
+    */
+  private[queries] def shinglePostings(s: SparkSession, dir: String): DataFrame =
+    shingles(spread(s, t(s, dir, "documents")))
+
+  /** q22's exact-Jaccard pair pipeline over prebuilt postings.
+    * Contract: `sh` is DISTINCT per (doc_id, s) — [[shinglePostings]]
+    * guarantees it — so the size count needs no distinct pass.
+    */
+  private[queries] def jaccardPairsFrom(sh: DataFrame): DataFrame = {
+      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      // Postings-list pair expansion: group each shingle's (sorted,
+      // deduped) doc list and emit its pairs with the codegen'd
+      // OrderedPairs expression — one shuffle less than the
+      // self-join form, no hash build, no interpreted per-pair HOFs.
+      // Shingles shared by >1000 docs are non-discriminative
+      // boilerplate; the cap bounds the quadratic expansion at scale
+      // (never fires on this corpus: max posting list is ~25, so the
+      // oracle join stays equivalent).
+      val ds = col("ds")
+      val pairs = sh.groupBy("s")
+        .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
+        .filter(size(ds).between(2, 1000))
+        .select(explode(graft.functions.OrderedPairs(sh.sparkSession, ds)).as("p"))
+        .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(count(lit(1)).as("common"))
+      // SHUFFLE_HASH pins the hash build to the O(docs) sizes side:
+      // Catalyst cannot estimate the OrderedPairs explode (Generate
+      // keeps its child's stats), UNDERESTIMATES the quadratic pair
+      // frame, and on dense corpora tries to BROADCAST it — a driver
+      // collect that aborted q105's sf1 run (round-9 decade-up audit)
+      pairs
+        .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na")
+          .hint("shuffle_hash"), "doc_a")
+        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb")
+          .hint("shuffle_hash"), "doc_b")
+        .withColumn("jaccard",
+          col("common").cast("double") / (col("na") + col("nb") - col("common")))
+        .filter(col("jaccard") >= 0.4)
+        .select("doc_a", "doc_b", "common", "na", "nb", "jaccard")
+        .orderBy("doc_a", "doc_b")
+  }
+
+  private[queries] val q22 = QueryDef(
+    "q22_ngram_jaccard",
+    (s, dir) =>
+      // postings feed both the sizes and the pair expansion — one
+      // explode, materialized once
+      jaccardPairsFrom(shinglePostings(s, dir).persist()),
+    Some(s"""WITH $shinglesSql,
+      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1),
+      pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                       CAST(COUNT(*) AS BIGINT) AS common
+                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+                GROUP BY 1, 2)
+      SELECT doc_a, doc_b, common, sa.n AS na, sb.n AS nb,
+             CAST(common AS DOUBLE) / (sa.n + sb.n - common) AS jaccard
+      FROM pairs
+      JOIN sizes sa ON doc_a = sa.doc_id
+      JOIN sizes sb ON doc_b = sb.doc_id
+      WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.4
+      ORDER BY doc_a, doc_b"""),
+    covers = Seq("DEDUP-jaccard"))
+
+  // ---------------------------------------------------------------- dedup: MinHash + LSH
+  // 8 MinHash functions (min md5 over salted shingles — hex strings
+  // compare like the underlying 128-bit ints), banded 2×4: candidate
+  // pairs share ≥1 band. Postings-shaped, no all-pairs stage.
+  private val nHashes = 8
+
+  private val bandSize = 2
+
+  /** q23's banded-LSH candidate pipeline over prebuilt postings. */
+  private[queries] def lshCandidatesFrom(s: SparkSession, sh: DataFrame): DataFrame = {
+      // Whole signature in ONE custom DeclarativeAggregate buffer
+      // (graft.functions.MinHashSignature) — the oracle below proves
+      // it equals nHashes independent min(md5) aggregates.
+      val sig = sh.groupBy("doc_id")
+        .agg(graft.functions.MinHashSignature(s, col("s"), nHashes).as("sig"))
+        .select(col("doc_id") +:
+          (0 until nHashes).map(j => element_at(col("sig"), j + 1).as(s"h$j")): _*)
+      val bandCols = (0 until nHashes / bandSize).map { b =>
+        md5(concat(lit(s"band$b:"),
+          col(s"h${b * bandSize}"), col(s"h${b * bandSize + 1}")))
+      }
+      val bands = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bkey"))
+      bands.as("a")
+        .join(bands.as("b"),
+          col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
+        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .agg(count(lit(1)).as("shared_bands"))
+        .orderBy("doc_a", "doc_b")
+  }
+
+  private val q23 = QueryDef(
+    "q23_minhash_lsh",
+    (s, dir) => lshCandidatesFrom(s, shinglePostings(s, dir)),
+    Some {
+      val hs = (0 until nHashes)
+        .map(j => s"min(substr(md5('$j:' || s), 1, 15)) AS h$j").mkString(", ")
+      val bandList = (0 until nHashes / bandSize)
+        .map(b => s"md5('band$b:' || h${b * bandSize} || h${b * bandSize + 1})")
+        .mkString(", ")
+      s"""WITH $shinglesSql,
+      sig AS (SELECT doc_id, $hs FROM sh GROUP BY doc_id),
+      bands AS (SELECT doc_id, unnest([$bandList]) AS bkey FROM sig)
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+             CAST(COUNT(*) AS BIGINT) AS shared_bands
+      FROM bands a JOIN bands b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
+      GROUP BY 1, 2 ORDER BY doc_a, doc_b"""
+    },
+    covers = Seq("DEDUP-minhash"))
+
+  // ---------------------------------------------------------------- dedup: SimHash
+  // 16-bit SimHash: bit k of a token's md5 (low bit of hex digit k+1)
+  // votes ±1; the sign of the vote sum per bit forms the signature.
+  // Docs pair when signatures are identical (Hamming 0).
+  private val simBits = 16
+
+  private val q24 = QueryDef(
+    "q24_simhash",
+    (s, dir) => {
+      // per-ROW signature via array HOFs — no explode, so the only
+      // shuffle left is the tiny signature groupBy: at corpus scale
+      // the old token-level explode+groupBy moved |tokens| rows
+      // through an exchange to compute what is a per-document
+      // function. md5 per token computed once (its own projection),
+      // then 16 integer vote folds over the hash array; votes are
+      // order-independent integer sums, so the signature is
+      // bit-identical to the exploded form and the SQL oracle.
+      val d = spread(s, t(s, dir, "documents"))
+      val withHashes = d.select(col("doc_id"),
+        transform(toksOf(col("text")), tok => md5(tok)).as("hs"))
+      val sim = (0 until simBits).map { k =>
+        val vote = aggregate(col("hs"), lit(0), (acc, h) =>
+          acc + when(
+            (instr(lit("0123456789abcdef"), substring(h, k + 1, 1)) - 1)
+              .bitwiseAND(1) === 1, 1).otherwise(-1))
+        when(vote > 0, lit(1L << k)).otherwise(lit(0L))
+      }.reduce(_ + _)
+      val sigs = withHashes.select(col("doc_id"), sim.as("simhash"))
+      val grouped = sigs.groupBy("simhash")
+        .agg(count(lit(1)).as("n_docs"), min("doc_id").as("min_doc"))
+      grouped.filter(col("n_docs") > 1)
+        .select("simhash", "n_docs", "min_doc")
+        .orderBy("simhash")
+    },
+    Some {
+      val vs = (0 until simBits).map(k =>
+        s"SUM(CASE WHEN (strpos('0123456789abcdef', substr(md5(tok), ${k + 1}, 1)) - 1) & 1 = 1 THEN 1 ELSE -1 END) AS v$k"
+      ).mkString(", ")
+      val sim = (0 until simBits).map(k =>
+        s"CASE WHEN v$k > 0 THEN ${1L << k} ELSE 0 END").mkString(" + ")
+      s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
+      votes AS (SELECT doc_id, $vs FROM tok GROUP BY doc_id),
+      sigs AS (SELECT doc_id, CAST($sim AS BIGINT) AS simhash FROM votes)
+      SELECT simhash, CAST(COUNT(*) AS BIGINT) AS n_docs,
+             CAST(MIN(doc_id) AS BIGINT) AS min_doc
+      FROM sigs GROUP BY simhash HAVING COUNT(*) > 1 ORDER BY simhash"""
+    },
+    covers = Seq("DEDUP-simhash"))
+
+  // ---------------------------------------------------------------- dedup: LSH → exact verify
+  // The complete near-dup decision pipeline: MinHash/LSH proposes
+  // candidate pairs (sub-quadratic), exact Jaccard verifies them, and
+  // the keep/drop decision falls out — precision of the sketch is
+  // visible in the is_dup column. Corpus-level removal on top of these
+  // pairs lives in graft.dedup.Dedup (DedupSpec).
+  private val q47 = QueryDef(
+    "q47_minhash_verified",
+    (s, dir) => {
+      // the postings feed both the sketch and the verify stage — one
+      // explode, materialized once
+      val sh = shingles(spread(s, t(s, dir, "documents"))).persist()
+      // candidates via banded MinHash (as q23)
+      val sig = sh.groupBy("doc_id")
+        .agg(graft.functions.MinHashSignature(s, col("s"), nHashes).as("sig"))
+        .select(col("doc_id") +:
+          (0 until nHashes).map(j => element_at(col("sig"), j + 1).as(s"h$j")): _*)
+      val bandCols = (0 until nHashes / bandSize).map { b =>
+        md5(concat(lit(s"band$b:"),
+          col(s"h${b * bandSize}"), col(s"h${b * bandSize + 1}")))
+      }
+      val bands = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bkey"))
+      // cand feeds both the verify restriction and the final join;
+      // persisting it keeps the MinHash aggregate single-pass
+      val cand = bands.as("a")
+        .join(bands.as("b"),
+          col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
+        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .agg(count(lit(1)).as("shared_bands"))
+        .persist()
+      // Exact verification restricted to candidate docs — that's the
+      // entire economics of LSH→verify: the sketch proposes o(n²)
+      // pairs, so the exact Jaccard pass touches only their postings
+      // (broadcast semi-join keeps the narrow shape), never the full
+      // corpus × corpus co-shingle expansion.
+      val candDocs = cand.select(col("doc_a").as("doc_id"))
+        .union(cand.select(col("doc_b").as("doc_id"))).distinct()
+      // sh is DISTINCT per (doc_id, s) by construction (shingles), so
+      // sizes need no distinct pass and the co-shingle join needs no
+      // per-side re-distinct — three shuffle-level dedups removed
+      val shCand = sh.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
+      val sizes = shCand.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      val common = shCand.select(col("doc_id").as("doc_a"), col("s"))
+        .join(shCand.select(col("doc_id").as("doc_b"), col("s")), "s")
+        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("common"))
+      cand
+        .join(common, Seq("doc_a", "doc_b"), "left")
+        .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
+        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
+        .withColumn("jaccard",
+          coalesce(col("common"), lit(0L)).cast("double") /
+            (col("na") + col("nb") - coalesce(col("common"), lit(0L))))
+        .withColumn("is_dup", col("jaccard") >= 0.4)
+        .select("doc_a", "doc_b", "shared_bands", "jaccard", "is_dup")
+        .orderBy("doc_a", "doc_b")
+    },
+    Some {
+      val hs = (0 until nHashes)
+        .map(j => s"min(substr(md5('$j:' || s), 1, 15)) AS h$j").mkString(", ")
+      val bandList = (0 until nHashes / bandSize)
+        .map(b => s"md5('band$b:' || h${b * bandSize} || h${b * bandSize + 1})")
+        .mkString(", ")
+      s"""WITH $shinglesSql,
+      sig AS (SELECT doc_id, $hs FROM sh GROUP BY doc_id),
+      bands AS (SELECT doc_id, unnest([$bandList]) AS bkey FROM sig),
+      cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                      CAST(COUNT(*) AS BIGINT) AS shared_bands
+               FROM bands a JOIN bands b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
+               GROUP BY 1, 2),
+      sizes AS (SELECT doc_id, CAST(COUNT(DISTINCT s) AS BIGINT) AS n FROM sh GROUP BY 1),
+      common AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                        CAST(COUNT(DISTINCT a.s) AS BIGINT) AS common
+                 FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+                 GROUP BY 1, 2)
+      SELECT c.doc_a, c.doc_b, c.shared_bands,
+        CAST(COALESCE(cm.common, 0) AS DOUBLE) / (sa.n + sb.n - COALESCE(cm.common, 0)) AS jaccard,
+        CAST(COALESCE(cm.common, 0) AS DOUBLE) / (sa.n + sb.n - COALESCE(cm.common, 0)) >= 0.4 AS is_dup
+      FROM cand c
+      LEFT JOIN common cm ON c.doc_a = cm.doc_a AND c.doc_b = cm.doc_b
+      JOIN sizes sa ON c.doc_a = sa.doc_id
+      JOIN sizes sb ON c.doc_b = sb.doc_id
+      ORDER BY c.doc_a, c.doc_b"""
+    },
+    covers = Seq("DEDUP-minhash", "DEDUP-jaccard"))
+
+  // ------------------------------------------------------------ SimHash multi-probe
+  // q24 finds identical signatures (Hamming 0); this is the distance-2
+  // generalization: 32-bit SimHash, probe set = signature ∪ its 32
+  // one-bit flips, so any pair within Hamming 2 shares a probe (flip
+  // one differing bit on each side) — bucket join on the probe, then
+  // exact popcount verification. Candidate volume stays o(n²) because
+  // 32-bit chance collisions are rare.
+  private val q66 = QueryDef(
+    "q66_simhash_probe",
+    (s, dir) => {
+      val bits = 32
+      val d = spread(s, t(s, dir, "documents"))
+      val tok = d.select(col("doc_id"), explode(toksOf(col("text"))).as("tok"))
+        .withColumn("h", md5(col("tok")))
+      val voteCols = (0 until bits).map { k =>
+        sum(when(
+          (instr(lit("0123456789abcdef"), substring(col("h"), k + 1, 1)) - 1)
+            .bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"v$k")
+      }
+      val votes = tok.groupBy("doc_id").agg(voteCols.head, voteCols.tail: _*)
+      val sim = (0 until bits).map { k =>
+        when(col(s"v$k") > 0, lit(1L << k)).otherwise(lit(0L))
+      }.reduce(_ + _)
+      val sigs = votes.select(col("doc_id"), sim.as("simhash")).persist()
+      val probeArr = array(
+        (col("simhash") +:
+          (0 until bits).map(i => col("simhash").bitwiseXOR(lit(1L << i)))): _*)
+      val probes = sigs.select(col("doc_id"), col("simhash"),
+        explode(probeArr).as("probe"))
+      probes.as("a")
+        .join(probes.as("b"),
+          col("a.probe") === col("b.probe") && col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+          col("a.simhash").as("sig_a"), col("b.simhash").as("sig_b"))
+        .distinct()
+        .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
+        .filter(col("hamming") <= 2)
+        .select("doc_a", "doc_b", "hamming")
+        .orderBy("doc_a", "doc_b")
+    },
+    Some {
+      val bits = 32
+      val vs = (0 until bits).map(k =>
+        s"SUM(CASE WHEN (strpos('0123456789abcdef', substr(md5(tok), ${k + 1}, 1)) - 1) & 1 = 1 THEN 1 ELSE -1 END) AS v$k"
+      ).mkString(", ")
+      val sim = (0 until bits).map(k =>
+        s"CASE WHEN v$k > 0 THEN ${1L << k} ELSE 0 END").mkString(" + ")
+      s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
+      votes AS (SELECT doc_id, $vs FROM tok GROUP BY doc_id),
+      sigs AS (SELECT doc_id, CAST($sim AS BIGINT) AS simhash FROM votes),
+      probes AS (
+        SELECT doc_id, simhash, unnest(list_prepend(simhash,
+          list_transform(range(0, $bits), i -> xor(simhash, CAST(1 AS BIGINT) << i)))) AS probe
+        FROM sigs),
+      cand AS (
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               a.simhash AS sig_a, b.simhash AS sig_b
+        FROM probes a JOIN probes b ON a.probe = b.probe AND a.doc_id < b.doc_id)
+      SELECT doc_a, doc_b, CAST(bit_count(xor(sig_a, sig_b)) AS INTEGER) AS hamming
+      FROM cand WHERE bit_count(xor(sig_a, sig_b)) <= 2
+      ORDER BY doc_a, doc_b"""
+    },
+    covers = Seq("DEDUP-simhash"))
+
+  // ------------------------------------------------------------ connected components
+  // graft.dedup.Dedup.clusters under the gate: near-dup pairs (q22's
+  // verified Jaccard pipeline) → connected components by pointer-
+  // jumping min-label propagation; the oracle computes ground truth
+  // with a recursive transitive closure, so a propagation that stops
+  // short (the round-1 advisory) would hash-mismatch.
+  private val q71 = QueryDef(
+    "q71_dedup_clusters",
+    (s, dir) => {
+      // session-cached copy of q22's verified-pairs output (the shared
+      // input of q71/q192/q289/q332/q351/q359 — q22's own gate still
+      // rebuilds, so its bench timing stays honest)
+      val pairs = GraphGateSource.cached(s, "q22-pairs:" + dir)(
+        q22.run(s, dir))
+        .select("doc_a", "doc_b")
+      graft.dedup.Dedup.clusters(pairs)
+        .select(col("doc_id"), col("cluster_id"))
+        .orderBy("doc_id")
+    },
+    Some("""WITH RECURSIVE toksrc AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+      sh AS (SELECT DISTINCT doc_id,
+               unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
+                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+             FROM toksrc WHERE len(tk) >= 3),
+      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1),
+      p0 AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS common
+             FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
+      pairs AS (SELECT doc_a, doc_b FROM p0
+                JOIN sizes sa ON doc_a = sa.doc_id
+                JOIN sizes sb ON doc_b = sb.doc_id
+                WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.4),
+      edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
+                UNION SELECT doc_b, doc_a FROM pairs),
+      reach(a, b) AS (
+        SELECT a, b FROM edges
+        UNION
+        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
+      SELECT a AS doc_id, CAST(LEAST(a, MIN(b)) AS BIGINT) AS cluster_id
+      FROM reach GROUP BY a ORDER BY doc_id"""),
+    covers = Seq("DEDUP-components"))
+
+  // ------------------------------------------------------------ incremental LSH dedup
+  // The stateless core of dedup/LshIndex under the oracle gate: new
+  // batch (doc_id % 10 = 0) vs already-indexed corpus (the rest).
+  // Candidates are batch-internal plus batch-vs-corpus band-key hits;
+  // corpus-internal pairs are never produced — at 100 TB the corpus
+  // re-pairs with itself exactly never, only each day's batch pays.
+  private val q93 = QueryDef(
+    "q93_lsh_incremental",
+    (s, dir) => {
+      // one small file → spread before the md5/shingle-heavy compute
+      val docs = t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism)
+      val isNew = col("doc_id") % 10 === 0
+      // both band sets feed multiple joins inside candidatePairs —
+      // materialize the shingle+minhash work once per side, exactly as
+      // LshIndex.candidates does (the stored index is parquet there,
+      // already materialized)
+      val nb = graft.dedup.LshIndex.bands(docs.filter(isNew)).localCheckpoint()
+      val idx = graft.dedup.LshIndex.bands(docs.filter(!isNew)).localCheckpoint()
+      graft.dedup.LshIndex.candidatePairs(nb, Some(idx))
+        .orderBy("doc_a", "doc_b")
+    },
+    Some {
+      val hs = (0 until 8).map(j => s"min(substr(md5('$j:' || s), 1, 15)) AS h$j").mkString(", ")
+      val bandList = (0 until 4)
+        .map(b => s"md5('band$b:' || h${2 * b} || h${2 * b + 1})").mkString(", ")
+      s"""WITH toksrc AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+      sh AS (SELECT DISTINCT doc_id,
+               unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
+                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+             FROM toksrc WHERE len(tk) >= 3),
+      sig AS (SELECT doc_id, $hs FROM sh GROUP BY doc_id),
+      bands AS (SELECT doc_id, doc_id % 10 = 0 AS is_new, unnest([$bandList]) AS bkey FROM sig),
+      pairs AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM bands a JOIN bands b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
+        WHERE a.is_new AND b.is_new
+        UNION ALL
+        SELECT least(a.doc_id, b.doc_id) AS doc_a, greatest(a.doc_id, b.doc_id) AS doc_b
+        FROM bands a JOIN bands b ON a.bkey = b.bkey AND a.doc_id <> b.doc_id
+        WHERE a.is_new AND NOT b.is_new)
+      SELECT doc_a, doc_b, CAST(COUNT(*) AS BIGINT) AS shared_bands
+      FROM pairs GROUP BY 1, 2 ORDER BY doc_a, doc_b"""
+    },
+    covers = Seq("DEDUP-minhash-incremental"))
+
+  // ------------------------------------------------------------ embedding-cosine near-dup
+  // Near-duplicate detection in EMBEDDING space (the prompt's
+  // "embedding-cosine near-dup"): hyperplane sign-buckets (q30's
+  // scheme) propose intra-bucket candidate pairs, the native
+  // CosineSimilarity expression verifies them exactly, and pairs at or
+  // above the threshold survive. Never all-pairs: candidates are
+  // bucket-local, and at 100 TB the bucket id is the shuffle key so
+  // each bucket pairs independently. The float→double promotion +
+  // sequential fold is bit-identical in Spark and DuckDB, so even the
+  // threshold filter is deterministic.
+  private val q95 = QueryDef(
+    "q95_embedding_neardup",
+    (s, dir) => {
+      val e = t(s, dir, "embeddings").repartition(s.sparkContext.defaultParallelism)
+      def bucketOf(emb: Column): Column =
+        concat(Seq(1, 9, 17, 25).map(d =>
+          when(element_at(emb, d) >= 0, "1").otherwise("0")): _*)
+      val b = e.select(col("vec_id"), col("embedding"),
+        bucketOf(col("embedding")).as("bucket"))
+      val cos = graft.functions.CosineSimilarity(s, col("a_emb"), col("b_emb"))
+      b.select(col("vec_id").as("id_a"), col("embedding").as("a_emb"), col("bucket"))
+        .join(b.select(col("vec_id").as("id_b"), col("embedding").as("b_emb"), col("bucket")),
+          Seq("bucket"))
+        .filter(col("id_a") < col("id_b"))
+        .withColumn("cos", cos)
+        .filter(col("cos") >= 0.35)
+        .select("id_a", "id_b", "bucket", "cos")
+        .orderBy("id_a", "id_b")
+    },
+    Some("""WITH b AS (
+        SELECT vec_id, embedding,
+          (CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END) ||
+          (CASE WHEN embedding[9] >= 0 THEN '1' ELSE '0' END) ||
+          (CASE WHEN embedding[17] >= 0 THEN '1' ELSE '0' END) ||
+          (CASE WHEN embedding[25] >= 0 THEN '1' ELSE '0' END) AS bucket
+        FROM embeddings),
+      scored AS (
+        SELECT a.vec_id AS id_a, c.vec_id AS id_b, a.bucket,
+          list_sum(list_transform(list_zip(a.embedding, c.embedding),
+            x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) /
+          (sqrt(list_sum(list_transform(list_zip(a.embedding, a.embedding),
+            x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))) *
+           sqrt(list_sum(list_transform(list_zip(c.embedding, c.embedding),
+            x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))))) AS cos
+        FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id)
+      SELECT id_a, id_b, bucket, cos FROM scored WHERE cos >= 0.35
+      ORDER BY id_a, id_b"""),
+    covers = Seq("DEDUP-embedding-cosine"))
+
+  // ------------------------------------------------- bloom-prefilter dedup
+  // Which documents of an incoming batch (doc_id % 5 = 0) are NOT
+  // already in the corpus (the rest)? BloomDedup: corpus-side bloom
+  // filter prunes the batch before an exact verify join — result is
+  // bit-identical to the plain NOT EXISTS the oracle runs.
+  private val q99 = QueryDef(
+    "q99_bloom_prefilter",
+    (s, dir) => {
+      val d = t(s, dir, "documents")
+      val corpus = d.filter(col("doc_id") % 5 =!= 0)
+      val batch = d.filter(col("doc_id") % 5 === 0)
+      BloomDedup.newRows(batch, corpus, Seq("text"), expectedItems = 100000L)
+        .select(col("doc_id"), col("n_chars"))
+        .orderBy("doc_id")
+    },
+    Some("""SELECT doc_id, n_chars FROM documents b
+      WHERE doc_id % 5 = 0 AND NOT EXISTS (
+        SELECT 1 FROM documents c WHERE c.doc_id % 5 <> 0 AND c.text = b.text)
+      ORDER BY doc_id"""),
+    covers = Seq("T-dedup-bloom", "S7"))
+
+  // ------------------------------------------------- containment near-dup
+  // Shingle-containment join: containment(A→B) = |S(A)∩S(B)| / |S(A)|
+  // over distinct word trigrams, via inverted-index postings (the
+  // asymmetric complement of Jaccard — catches documents EMBEDDED in
+  // larger ones, which symmetric similarity underweights). Pairs form
+  // only where a shingle is shared, so the shuffle is
+  // posting-bounded, not O(n²).
+  private val q105 = QueryDef(
+    "q105_containment",
+    (s, dir) => {
+      // postings feed both sizes and pair expansion — one explode,
+      // materialized once (q22's pattern). Shared-shingle counts are
+      // SYMMETRIC, so enumerate unordered pairs with array HOFs over
+      // each shingle's grouped posting list (no self-join, no hash
+      // build) and mirror them afterwards; only the containment
+      // denominator differs per direction. The posting-size cap
+      // bounds the quadratic expansion against degenerate boilerplate
+      // shingles at scale (far above any list in this corpus, so the
+      // oracle's self-join stays equivalent).
+      // the session-cached distinct (doc_id, shingle) frame is the
+      // same row set as the per-doc array_distinct explode this
+      // replaced (a (doc, shingle) dup can only arise within one doc)
+      val sh = GraphGateSource.cached(s, "shingle-distinct:" + dir)(
+        t(s, dir, "documents").select(col("doc_id"),
+          explode(graft.functions.WordShingles(s, col("text"), 3))
+            .as("s")).distinct())
+        .withColumnRenamed("s", "sh")
+      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      val ds = col("ds")
+      val half = sh.groupBy("sh")
+        .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
+        .filter(size(ds).between(2, 100000))
+        .select(explode(graft.functions.OrderedPairs(s, ds)).as("p"))
+        .groupBy(col("p.a").as("a_id"), col("p.b").as("b_id"))
+        .agg(count(lit(1)).as("shared"))
+      val pairs = half.unionAll(half.select(
+        col("b_id").as("a_id"), col("a_id").as("b_id"), col("shared")))
+      val containment = col("shared").cast("double") / col("n")
+      // SHUFFLE_HASH on the doc-level sizes side: Catalyst cannot
+      // estimate the OrderedPairs explode (Generate keeps the child's
+      // stats), so it UNDERESTIMATES the pair frame and tries to
+      // BROADCAST it — at the sf1 rung that is a 1 GiB driver collect
+      // (found by the round-9 decade-up audit: spark.driver
+      // .maxResultSize abort). The hash hint pins the build to the
+      // O(docs) side, partitioned — correct at any corpus size
+      pairs.join(sizes.withColumnRenamed("doc_id", "a_id")
+        .hint("shuffle_hash"), "a_id")
+        .filter(containment >= 0.5)
+        .select(col("a_id"), col("b_id"), col("shared"), containment.as("containment"))
+        .orderBy("a_id", "b_id")
+    },
+    Some("""WITH sh AS (
+        SELECT doc_id, unnest(list_distinct(list_transform(
+          range(1, greatest(len(string_split(text,' ')) - 1, 1)),
+          i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
+               || ' ' || string_split(text,' ')[i+2]))) AS s
+        FROM documents),
+      sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) n FROM sh GROUP BY doc_id),
+      pairs AS (
+        SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS shared
+        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id <> b.doc_id
+        GROUP BY a.doc_id, b.doc_id)
+      SELECT a_id, b_id, shared,
+        CAST(shared AS DOUBLE) / sa.n AS containment
+      FROM pairs JOIN sizes sa ON a_id = sa.doc_id
+      WHERE CAST(shared AS DOUBLE) / sa.n >= 0.5
+      ORDER BY a_id, b_id"""),
+    covers = Seq("T-dedup-containment", "J2"))
+
+  // ------------------------------------------ incremental corpus admission
+  // store/DedupStore folded over three arrival batches (doc_id % 3,
+  // admitted in order): bloom-prefiltered exactly-once admission whose
+  // final corpus must equal the oracle's one-shot first-seen-wins
+  // dedup — (arrival batch, doc_id) ordered — proving cross-batch and
+  // in-batch dedup compose with the atomic state commit.
+  private val q113 = QueryDef(
+    "q113_incremental_admission",
+    (s, dir) => {
+      val d = t(s, dir, "documents").select("doc_id", "text")
+      val root = java.nio.file.Files.createTempDirectory("graft_admit").toString
+      // filter sized ~20× the sf0.1 corpus: admission cost scales with
+      // the filter's bit array (built per task, merged on the driver),
+      // so size for the expected corpus, not a universal constant
+      val ds = new graft.store.DedupStore(
+        new graft.store.TableStore(s, root), "corpus", "text", 100000L)
+      (0 to 2).foreach(b => ds.admit(s"b$b", d.filter(col("doc_id") % 3 === b)))
+      ds.corpus.get.select("doc_id").orderBy("doc_id")
+    },
+    Some("""SELECT doc_id FROM (
+        SELECT doc_id, row_number() OVER (
+          PARTITION BY text ORDER BY doc_id % 3, doc_id) AS rn
+        FROM documents) WHERE rn = 1 ORDER BY doc_id"""),
+    covers = Seq("T-dedup-incremental", "S7"))
+
+  // ------------------------------------- prefix-filtered similarity join
+  // Exact shingle-Jaccard ≥ 0.8 self-join through
+  // dedup/PrefixFilterJoin: candidates come only from short
+  // rare-shingle prefixes (the PPJoin pruning), then exact
+  // verification. The oracle is the O(n²) brute-force join —
+  // hash-equality proves the pruning loses NO pairs while indexing
+  // ~1/5 of the shingles (at sf0.1: 119k candidate pairs where the
+  // full posting join touches 1.13M). Trigram shingles, not words:
+  // this corpus has a 31-word vocabulary, so word sets carry no
+  // rarity signal, while the shingle vocabulary is combinatorial.
+  private val q141 = QueryDef(
+    "q141_prefix_filter_join",
+    (s, dir) =>
+      PrefixFilterJoin
+        .shingleSelfJoin(t(s, dir, "documents"), "doc_id", "text", 3, 4, 5)
+        .orderBy("a_id", "b_id"),
+    Some("""WITH tok AS (
+        SELECT doc_id, unnest(list_distinct(list_transform(
+          range(1, greatest(len(string_split(text,' ')) - 1, 1)),
+          i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
+               || ' ' || string_split(text,' ')[i+2]))) AS tk
+        FROM documents),
+      sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) n FROM tok GROUP BY doc_id),
+      pairs AS (
+        SELECT a.doc_id a_id, b.doc_id b_id, CAST(count(*) AS BIGINT) shared
+        FROM tok a JOIN tok b ON a.tk = b.tk AND a.doc_id < b.doc_id
+        GROUP BY 1, 2)
+      SELECT a_id, b_id, shared,
+        CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) AS jaccard
+      FROM pairs JOIN sizes sa ON a_id = sa.doc_id JOIN sizes sb ON b_id = sb.doc_id
+      WHERE shared * 18 >= (sa.n + sb.n) * 8
+      ORDER BY a_id, b_id"""),
+    covers = Seq("T-dedup-prefix", "J2"))
+
+  private def shingles5(s: SparkSession, d: DataFrame): DataFrame =
+    d.select(col("doc_id"),
+        explode(graft.functions.WordShingles(s, col("text"), 5)).as("s"))
+      .distinct()
+
+  private val sh5Sql =
+    """toksrc AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+       sh AS (SELECT DISTINCT doc_id,
+                unnest(list_transform(range(1, greatest(len(tk) - 3, 1)),
+                       i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' ||
+                            tk[i+3] || ' ' || tk[i+4])) AS s
+              FROM toksrc WHERE len(tk) >= 5)"""
+
+  // ------------------------------------------- duplicated-span fraction
+  // Exact-substring-dedup diagnostic (the Lee et al. "deduplicating
+  // training data" signal at 5-gram granularity): per document, the
+  // fraction of its distinct word 5-grams that also occur in some
+  // OTHER document. Docs with a high shared-span fraction are copies
+  // or templates; the fraction is exactly the integer ratio of two
+  // distinct-counts, so the gate is hash-exact.
+  private val q157 = QueryDef(
+    "q157_dup_spans",
+    (s, dir) => {
+      val sh = shingles5(s, t(s, dir, "documents"))
+      // a shingle is shared if its posting list has ≥2 docs; count per
+      // doc how many of ITS shingles are shared. One aggregate over
+      // the postings (carrying each shingle's doc count back to its
+      // postings via a window avoids a second shuffle of the big side).
+      val w = Window.partitionBy("s")
+      sh.withColumn("nd", count(lit(1)).over(w))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n5"),
+          sum(when(col("nd") >= 2, 1).otherwise(0)).as("n_shared"))
+        .select(col("doc_id"), col("n5"), col("n_shared"),
+          (col("n_shared").cast("double") / col("n5")).as("dup_frac"))
+        .orderBy("doc_id")
+    },
+    Some(s"""WITH $sh5Sql,
+      counted AS (SELECT doc_id, s, COUNT(*) OVER (PARTITION BY s) AS nd FROM sh)
+      SELECT doc_id,
+        CAST(COUNT(*) AS BIGINT) AS n5,
+        CAST(SUM(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared,
+        CAST(SUM(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS dup_frac
+      FROM counted GROUP BY doc_id ORDER BY doc_id"""),
+    covers = Seq("DEDUP-substring"))
+
+  // --------------------------------------- exact-substring span removal
+  // The REWRITE stage of exact-substring dedup (q157 only measures):
+  // any 5-gram appearing in ≥2 documents is boilerplate; every token
+  // it covers is dropped from every document, and the surviving
+  // tokens are reassembled in order. Plan: one posting build (doc,
+  // pos, gram), one gram-frequency aggregate, a semi-join back, a
+  // covered-position explode (×5, distinct), an anti-join on (doc,
+  // pos), and one per-doc reassembly groupBy — every step keyed and
+  // partitionable, nothing quadratic; the shared-gram side is
+  // DISTINCT doc counts so a gram repeated inside ONE doc is not
+  // boilerplate. Output compares via md5 digest of the rewritten
+  // text, so a single misplaced token mismatches.
+  private val q174 = QueryDef(
+    "q174_span_removal",
+    (s, dir) => {
+      val docs = t(s, dir, "documents")
+        .select(col("doc_id"), col("text"), split(col("text"), " ").as("tk"))
+      val tok = docs.select(col("doc_id"),
+        posexplode(col("tk")).as(Seq("pos0", "term")))
+      val grams = docs
+        .select(col("doc_id"),
+          posexplode(graft.functions.WordShingles(s, col("text"), 5))
+            .as(Seq("gpos0", "g")))
+      val shared = grams.groupBy("g")
+        .agg(countDistinct(col("doc_id")).as("nd"))
+        .filter(col("nd") >= 2)
+        .select("g")
+      val covered = grams.join(shared, Seq("g"), "left_semi")
+        .select(col("doc_id"),
+          explode(sequence(col("gpos0"), col("gpos0") + 4)).as("pos0"))
+        .distinct()
+      val kept = tok.join(covered, Seq("doc_id", "pos0"), "left_anti")
+      kept.groupBy("doc_id")
+        .agg(count(lit(1)).as("n_kept"),
+          md5(concat_ws(" ",
+            transform(sort_array(collect_list(struct(col("pos0"), col("term")))),
+              x => x("term")))).as("digest"))
+        .join(docs.select(col("doc_id"), size(col("tk")).cast(LongType).as("n_tok")),
+          Seq("doc_id"), "right")
+        .select(col("doc_id"), col("n_tok"),
+          coalesce(col("n_kept"), lit(0L)).as("n_kept"),
+          (col("n_tok") - coalesce(col("n_kept"), lit(0L))).as("n_removed"),
+          coalesce(col("digest"), md5(lit(""))).as("digest"))
+        .orderBy("doc_id")
+    },
+    Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+      toki AS (SELECT doc_id, tk, unnest(generate_series(1, len(tk))) AS i FROM d),
+      tok AS (SELECT doc_id, i - 1 AS pos0, tk[i] AS term FROM toki),
+      gri AS (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 4)) AS i
+              FROM d WHERE len(tk) >= 5),
+      gr AS (SELECT doc_id, i - 1 AS gpos0,
+               tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' ||
+               tk[i+3] || ' ' || tk[i+4] AS g
+             FROM gri),
+      shared AS (SELECT g FROM gr GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2),
+      covi AS (SELECT gr.doc_id, gr.gpos0, unnest(generate_series(0, 4)) AS off
+               FROM gr JOIN shared USING (g)),
+      cov AS (SELECT DISTINCT doc_id, gpos0 + off AS pos0 FROM covi),
+      kept AS (SELECT t.doc_id, t.pos0, t.term FROM tok t
+               WHERE NOT EXISTS (SELECT 1 FROM cov c
+                 WHERE c.doc_id = t.doc_id AND c.pos0 = t.pos0)),
+      agg AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept,
+                md5(string_agg(term, ' ' ORDER BY pos0)) AS digest
+              FROM kept GROUP BY doc_id)
+      SELECT d.doc_id, CAST(len(d.tk) AS BIGINT) AS n_tok,
+        COALESCE(a.n_kept, 0) AS n_kept,
+        CAST(len(d.tk) AS BIGINT) - COALESCE(a.n_kept, 0) AS n_removed,
+        COALESCE(a.digest, md5('')) AS digest
+      FROM d LEFT JOIN agg a ON d.doc_id = a.doc_id
+      ORDER BY d.doc_id"""),
+    covers = Seq("DEDUP-span-removal"))
+
+  // -------------------------------------- near-dup canonicalization
+  // The decision stage after near-dup clustering (q71 gates the
+  // components themselves): within every cluster keep ONE canonical
+  // document — longest text, ties to the lowest doc_id — and mark
+  // the rest dropped with a pointer to their replacement. Window
+  // rank inside clusters is O(cluster) work after the same
+  // clustering cost as q71; singleton docs (no near-dup) keep
+  // themselves. This is the exact shape of a production dedup sweep:
+  // the corpus rewrite is driven by the (doc → canonical) map this
+  // query emits.
+  private val q192 = QueryDef(
+    "q192_dedup_canonicalize",
+    (s, dir) => {
+      // session-cached copy of q22's verified-pairs output (the shared
+      // input of q71/q192/q289/q332/q351/q359 — q22's own gate still
+      // rebuilds, so its bench timing stays honest)
+      val pairs = GraphGateSource.cached(s, "q22-pairs:" + dir)(
+        q22.run(s, dir))
+        .select("doc_a", "doc_b")
+      val clusters = graft.dedup.Dedup.clusters(pairs)
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("n_chars"))
+      val labeled = docs.join(clusters, Seq("doc_id"), "left")
+        .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
+      val w = Window.partitionBy("cluster_id")
+        .orderBy(desc("n_chars"), col("doc_id"))
+      labeled
+        .withColumn("rk", row_number().over(w))
+        .withColumn("canonical_id",
+          first(col("doc_id")).over(w.rowsBetween(Window.unboundedPreceding,
+            Window.unboundedFollowing)))
+        .select(col("doc_id"), col("cluster_id"), col("canonical_id"),
+          (col("rk") === 1).as("kept"))
+        .orderBy("doc_id")
+    },
+    Some("""WITH RECURSIVE toksrc AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+      sh AS (SELECT DISTINCT doc_id,
+               unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
+                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+             FROM toksrc WHERE len(tk) >= 3),
+      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1),
+      p0 AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS common
+             FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
+      pairs AS (SELECT doc_a, doc_b FROM p0
+                JOIN sizes sa ON doc_a = sa.doc_id
+                JOIN sizes sb ON doc_b = sb.doc_id
+                WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.4),
+      edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
+                UNION SELECT doc_b, doc_a FROM pairs),
+      reach(a, b) AS (
+        SELECT a, b FROM edges
+        UNION
+        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+      comp AS (SELECT a AS doc_id, CAST(LEAST(a, MIN(b)) AS BIGINT) AS cluster_id
+               FROM reach GROUP BY a),
+      labeled AS (
+        SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id, d.n_chars
+        FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
+      ranked AS (
+        SELECT doc_id, cluster_id,
+          ROW_NUMBER() OVER (PARTITION BY cluster_id
+            ORDER BY n_chars DESC, doc_id) AS rk,
+          FIRST_VALUE(doc_id) OVER (PARTITION BY cluster_id
+            ORDER BY n_chars DESC, doc_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS canonical_id
+        FROM labeled)
+      SELECT doc_id, cluster_id, canonical_id, rk = 1 AS kept
+      FROM ranked ORDER BY doc_id"""),
+    covers = Seq("DEDUP-canonicalize"))
+
+  // ------------------------------------------- bag-of-words duplicates
+  // Duplicate grouping that exact-hash dedup (q21) misses: documents
+  // equal up to word ORDER and MULTIPLICITY collapse onto a sorted
+  // distinct-token signature. The signature is an in-row projection
+  // (narrow), the grouping is the only shuffle, and the md5 group key
+  // keeps the gate's compare representation-independent. Shuffled or
+  // stuttered near-dup copies — common crawl artifacts — land in one
+  // cluster without any pairwise comparison.
+  private val q213 = QueryDef(
+    "q213_bag_dup_groups",
+    (s, dir) => {
+      val sig = md5(
+        array_join(sort_array(array_distinct(split(col("text"), " "))), " ")
+          .cast("binary"))
+      t(s, dir, "documents")
+        .select(col("doc_id"), sig.as("sig"))
+        .groupBy("sig")
+        .agg(
+          count(lit(1)).as("n_docs"),
+          min(col("doc_id")).as("keeper"),
+          array_join(sort_array(collect_list(col("doc_id").cast("string"))), ",")
+            .as("members"))
+        .filter(col("n_docs") > 1)
+        .orderBy("keeper")
+    },
+    Some("""SELECT
+        md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS sig,
+        CAST(COUNT(*) AS BIGINT) AS n_docs,
+        CAST(MIN(doc_id) AS BIGINT) AS keeper,
+        array_to_string(list_sort(list(CAST(doc_id AS VARCHAR))), ',') AS members
+      FROM documents
+      GROUP BY 1 HAVING COUNT(*) > 1
+      ORDER BY keeper"""),
+    covers = Seq("DEDUP-bag-of-words"))
+
+  // ------------------------------------------------- sketch calibration
+  // How good is the MinHash estimate? For a deterministic sample of
+  // adjacent-id document pairs, compare the sketch estimate (equal
+  // signature components / 16 — an integer ratio) against the EXACT
+  // shingle Jaccard (distinct-set intersection over union, also
+  // integers), and emit the absolute error. This is the calibration
+  // audit that sizes nHashes before trusting the q23 LSH pipeline on
+  // a corpus — and it is fully deterministic, so it hash-gates. The
+  // signature compare is in-row (zip_with); the exact side is an
+  // equi-join on shingles, postings-shaped like q22.
+  private val q287 = QueryDef(
+    "q287_minhash_calibration",
+    (s, dir) => {
+      val nH = 16
+      val d = t(s, dir, "documents")
+      // distinct at the array (per-row, in the scan task) instead of a
+      // shuffle-level .distinct() — same rows, one exchange less per
+      // evaluation. (Materializing sh/sig here measured WORSE: the
+      // postings re-derive from a 1-task scan faster than checkpoint
+      // blocks store + re-read, r11 A/B.)
+      val sh = d.select(col("doc_id"),
+          explode(array_distinct(
+            graft.functions.WordShingles(s, col("text"), 3))).as("sh"))
+      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
+      val sig = sh.groupBy("doc_id")
+        .agg(graft.functions.MinHashSignature(s, col("sh"), nH).as("sig"))
+      val a = sig.filter(col("doc_id") % 10 === 0)
+        .select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))
+      val b = sig.select((col("doc_id") - 1).as("doc_a"),
+        col("doc_id").as("doc_b"), col("sig").as("sig_b"))
+      val matched = a.join(b, "doc_a")
+      val est = aggregate(
+        zip_with(col("sig_a"), col("sig_b"),
+          (x, y) => when(x === y, lit(1L)).otherwise(lit(0L))),
+        lit(0L), (acc, x) => acc + x)
+      val inter = sh.select(col("doc_id").as("doc_a"), col("sh"))
+        .join(sh.select((col("doc_id") - 1).as("doc_a"), col("sh")), Seq("doc_a", "sh"))
+        .groupBy("doc_a").agg(count(lit(1)).as("ninter"))
+      matched
+        .withColumn("n_eq", est)
+        .join(sizes.select(col("doc_id").as("doc_a"), col("nsh").as("na")),
+          "doc_a")
+        .join(sizes.select((col("doc_id") - 1).as("doc_a"), col("nsh").as("nb")),
+          "doc_a")
+        .join(inter, Seq("doc_a"), "left")
+        .withColumn("ninter", coalesce(col("ninter"), lit(0L)))
+        .select(col("doc_a"), col("doc_b"), col("n_eq"),
+          (col("n_eq").cast("double") / lit(nH.toDouble)).as("est_jaccard"),
+          (col("ninter").cast("double") /
+            (col("na") + col("nb") - col("ninter")).cast("double"))
+            .as("exact_jaccard"),
+          abs(col("n_eq").cast("double") / lit(nH.toDouble) -
+            col("ninter").cast("double") /
+              (col("na") + col("nb") - col("ninter")).cast("double"))
+            .as("abs_err"))
+        .orderBy("doc_a")
+    },
+    Some {
+      val hs = (0 until 16)
+        .map(j => s"min(substr(md5('$j:' || sh), 1, 15)) AS h$j")
+        .mkString(", ")
+      val eqs = (0 until 16)
+        .map(j => s"CASE WHEN a.h$j = b.h$j THEN 1 ELSE 0 END")
+        .mkString(" + ")
+      s"""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS tk
+             FROM documents),
+      sh AS (SELECT DISTINCT doc_id,
+               tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS sh
+             FROM tok, unnest(range(1, greatest(len(tk) - 1, 1))) r(i)
+             WHERE len(tk) >= 3),
+      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS nsh
+                FROM sh GROUP BY 1),
+      sig AS (SELECT doc_id, $hs FROM sh GROUP BY doc_id),
+      pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                  CAST($eqs AS BIGINT) AS n_eq
+        FROM sig a JOIN sig b ON b.doc_id = a.doc_id + 1
+        WHERE a.doc_id % 10 = 0),
+      inter AS (SELECT a.doc_id AS doc_a, CAST(COUNT(*) AS BIGINT) AS ninter
+        FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1 AND a.sh = b.sh
+        WHERE a.doc_id % 10 = 0 GROUP BY 1)
+      SELECT p.doc_a, p.doc_b, p.n_eq,
+        CAST(p.n_eq AS DOUBLE) / CAST(16 AS DOUBLE) AS est_jaccard,
+        CAST(COALESCE(i.ninter, 0) AS DOUBLE)
+          / CAST(sa.nsh + sb.nsh - COALESCE(i.ninter, 0) AS DOUBLE)
+          AS exact_jaccard,
+        abs(CAST(p.n_eq AS DOUBLE) / CAST(16 AS DOUBLE)
+          - CAST(COALESCE(i.ninter, 0) AS DOUBLE)
+            / CAST(sa.nsh + sb.nsh - COALESCE(i.ninter, 0) AS DOUBLE))
+          AS abs_err
+      FROM pairs p
+      JOIN sizes sa ON sa.doc_id = p.doc_a
+      JOIN sizes sb ON sb.doc_id = p.doc_b
+      LEFT JOIN inter i ON i.doc_a = p.doc_a
+      ORDER BY p.doc_a"""
+    },
+    covers = Seq("DEDUP-calibration"))
+
+  // ------------------------------------------------- dedup impact
+  // The dedup report a curation run ships with: near-dup clusters
+  // (q71's connected components over the q22 similarity pairs)
+  // summarized as a cluster-size histogram plus the singleton count —
+  // and the headline removable-duplicate ratio (docs − canonical
+  // survivors) ∕ docs. Everything is exact counts over the component
+  // assignment; the transitive closure is [[graft.dedup.Dedup]]'s.
+  private val q289 = QueryDef(
+    "q289_cluster_size_dist",
+    (s, dir) => {
+      // session-cached copy of q22's verified-pairs output (the shared
+      // input of q71/q192/q289/q332/q351/q359 — q22's own gate still
+      // rebuilds, so its bench timing stays honest)
+      val pairs = GraphGateSource.cached(s, "q22-pairs:" + dir)(
+        q22.run(s, dir))
+        .select("doc_a", "doc_b")
+      val clusters = graft.dedup.Dedup.clusters(pairs)
+      val sizes = clusters.groupBy("cluster_id")
+        .agg(count(lit(1)).as("size"))
+      val nDocs = t(s, dir, "documents").count()
+      val nClustered = clusters.count()
+      val dist = sizes.groupBy("size").agg(count(lit(1)).as("n_clusters"))
+      import s.implicits._
+      val singletons = Seq((1L, nDocs - nClustered))
+        .toDF("size", "n_clusters")
+      dist.unionByName(singletons)
+        .filter(col("n_clusters") > 0)
+        .orderBy("size")
+    },
+    Some("""WITH RECURSIVE toksrc AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+      sh AS (SELECT DISTINCT doc_id,
+               unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
+                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+             FROM toksrc WHERE len(tk) >= 3),
+      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1),
+      p0 AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS common
+             FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
+      pairs AS (SELECT doc_a, doc_b FROM p0
+                JOIN sizes sa ON doc_a = sa.doc_id
+                JOIN sizes sb ON doc_b = sb.doc_id
+                WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.4),
+      edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
+                UNION SELECT doc_b, doc_a FROM pairs),
+      reach(a, b) AS (
+        SELECT a, b FROM edges
+        UNION
+        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+      assign AS (SELECT a AS doc_id, CAST(LEAST(a, MIN(b)) AS BIGINT) AS cluster_id
+                 FROM reach GROUP BY a),
+      csz AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS size
+              FROM assign GROUP BY 1),
+      dist AS (SELECT size, CAST(COUNT(*) AS BIGINT) AS n_clusters
+               FROM csz GROUP BY 1
+               UNION ALL
+               SELECT CAST(1 AS BIGINT),
+                 (SELECT CAST(COUNT(*) AS BIGINT) FROM documents)
+                   - (SELECT CAST(COUNT(*) AS BIGINT) FROM assign))
+      SELECT size, n_clusters FROM dist WHERE n_clusters > 0
+      ORDER BY size"""),
+    covers = Seq("DEDUP-impact-report"))
+
+  // ------------------------------------------------- LSH P/R
+  // Does the q23 banding actually find the near-duplicates q22
+  // defines? Join the LSH candidate pairs against the exact-Jaccard
+  // truth set (≥ 0.4) and report the confusion counts with precision
+  // and recall — the end-to-end eval of the dedup retrieval stage
+  // (q287 calibrates the estimator; this scores the INDEX). All
+  // counts are exact longs from two full-outer-reconciled pair sets;
+  // the two ratios close as single divisions. Both pipelines are the
+  // gate queries' own factored bodies fed from ONE materialized
+  // shingle-posting set — building q22 and q23 via their registry
+  // entries paid the shingle explode twice (measured ~1.4x slower).
+  private val q291 = QueryDef(
+    "q291_lsh_precision_recall",
+    (s, dir) => {
+      val sh = shinglePostings(s, dir).localCheckpoint()
+      // ground truth is q22's verified-pairs pipeline — read the
+      // session-cached copy (oracle re-derives it independently)
+      val truth = GraphGateSource.cached(s, "q22-pairs:" + dir)(
+          q22.run(s, dir))
+        .select(col("doc_a"), col("doc_b"), lit(1L).as("is_truth"))
+      val cand = lshCandidatesFrom(s, sh)
+        .select(col("doc_a"), col("doc_b"), lit(1L).as("is_cand"))
+      val merged = truth.join(cand, Seq("doc_a", "doc_b"), "full_outer")
+        .select(coalesce(col("is_truth"), lit(0L)).as("is_truth"),
+          coalesce(col("is_cand"), lit(0L)).as("is_cand"))
+      merged.agg(
+          sum(col("is_truth")).as("n_truth"),
+          sum(col("is_cand")).as("n_candidates"),
+          sum(col("is_truth") * col("is_cand")).as("tp"))
+        .select(col("n_truth"), col("n_candidates"), col("tp"),
+          (col("n_candidates") - col("tp")).as("fp"),
+          (col("n_truth") - col("tp")).as("fn"),
+          (col("tp").cast("double") / col("n_candidates").cast("double"))
+            .as("precision"),
+          (col("tp").cast("double") / col("n_truth").cast("double"))
+            .as("recall"))
+    },
+    Some("""WITH toksrc AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+      sh AS (SELECT DISTINCT doc_id,
+               unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
+                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+             FROM toksrc WHERE len(tk) >= 3),
+      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1),
+      p0 AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               CAST(COUNT(*) AS BIGINT) AS common
+             FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+             GROUP BY 1, 2),
+      truth AS (SELECT doc_a, doc_b FROM p0
+                JOIN sizes sa ON doc_a = sa.doc_id
+                JOIN sizes sb ON doc_b = sb.doc_id
+                WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.4),
+      sig AS (SELECT doc_id,
+          min(substr(md5('0:' || s), 1, 15)) AS h0,
+          min(substr(md5('1:' || s), 1, 15)) AS h1,
+          min(substr(md5('2:' || s), 1, 15)) AS h2,
+          min(substr(md5('3:' || s), 1, 15)) AS h3,
+          min(substr(md5('4:' || s), 1, 15)) AS h4,
+          min(substr(md5('5:' || s), 1, 15)) AS h5,
+          min(substr(md5('6:' || s), 1, 15)) AS h6,
+          min(substr(md5('7:' || s), 1, 15)) AS h7
+        FROM sh GROUP BY doc_id),
+      bands AS (SELECT doc_id, unnest([
+          md5('band0:' || h0 || h1), md5('band1:' || h2 || h3),
+          md5('band2:' || h4 || h5), md5('band3:' || h6 || h7)]) AS bkey
+        FROM sig),
+      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM bands a JOIN bands b ON a.bkey = b.bkey AND a.doc_id < b.doc_id),
+      merged AS (SELECT
+          CASE WHEN t.doc_a IS NOT NULL THEN 1 ELSE 0 END AS is_truth,
+          CASE WHEN c.doc_a IS NOT NULL THEN 1 ELSE 0 END AS is_cand
+        FROM truth t FULL OUTER JOIN cand c
+          ON t.doc_a = c.doc_a AND t.doc_b = c.doc_b),
+      g AS (SELECT CAST(SUM(is_truth) AS BIGINT) AS n_truth,
+          CAST(SUM(is_cand) AS BIGINT) AS n_candidates,
+          CAST(SUM(is_truth * is_cand) AS BIGINT) AS tp
+        FROM merged)
+      SELECT n_truth, n_candidates, tp,
+        n_candidates - tp AS fp, n_truth - tp AS fn,
+        CAST(tp AS DOUBLE) / CAST(n_candidates AS DOUBLE) AS precision,
+        CAST(tp AS DOUBLE) / CAST(n_truth AS DOUBLE) AS recall
+      FROM g"""),
+    covers = Seq("DEDUP-index-eval"))
+
+  // ------------------------------------------------- cross-source dup matrix
+  // Which source pairs feed each other's content: documents keyed by a
+  // 5-word prefix fingerprint (exact-dup md5 finds nothing in this
+  // corpus; the prefix catches shared openings), distinct (source, fp)
+  // postings self-joined on fp — the contamination matrix a mixture
+  // designer reads before weighting sources. The join key is the
+  // fingerprint (high cardinality, no skew); the distinct is one
+  // shuffle and the matrix is |sources|² at most.
+  private val q305 = QueryDef(
+    "q305_source_dup_matrix",
+    (s, dir) => {
+      val fp = t(s, dir, "documents")
+        .select(col("source"),
+          concat_ws(" ", slice(split(col("text"), " "), 1, 5)).as("fp"))
+        .distinct()
+      fp.as("a").join(fp.as("b"), Seq("fp"))
+        .filter(col("a.source") < col("b.source"))
+        .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
+        .agg(countDistinct(col("fp")).as("shared_fps"))
+        .orderBy("src_a", "src_b")
+    },
+    Some("""WITH fp AS (SELECT DISTINCT source,
+          array_to_string(string_split(text, ' ')[1:5], ' ') AS fp
+        FROM documents)
+      SELECT a.source AS src_a, b.source AS src_b,
+        CAST(COUNT(DISTINCT fp) AS BIGINT) AS shared_fps
+      FROM fp a JOIN fp b USING (fp)
+      WHERE a.source < b.source
+      GROUP BY a.source, b.source
+      ORDER BY src_a, src_b"""),
+    covers = Seq("DD-source-matrix"))
+
+  // ------------------------------------------------- LSH band load
+  // The tuning audit behind q23's banding: per band, how many buckets,
+  // the heaviest bucket, singleton buckets, and the candidate-pair
+  // work Σ sz·(sz−1)/2 the verify stage will pay. Overloaded buckets
+  // are exactly the skew that melts an executor at corpus scale, so
+  // this table IS the pre-flight check before running the dedup join.
+  // Signature = 8 composable min(md5) aggregates in one pass (the
+  // column-for-column oracle of graft.functions.MinHashSignature),
+  // banded 4×2 like q23.
+  private val q308 = QueryDef(
+    "q308_lsh_band_stats",
+    (s, dir) => {
+      val d = t(s, dir, "documents")
+      val sh = d.select(col("doc_id"),
+        explode(graft.functions.WordShingles(d.sparkSession, col("text"), 3)).as("s"))
+      val sig = sh.groupBy("doc_id")
+        .agg((0 until 8).map(j =>
+          min(substring(md5(concat(lit(s"$j:"), col("s"))), 1, 15)).as(s"h$j")).head,
+          (1 until 8).map(j =>
+            min(substring(md5(concat(lit(s"$j:"), col("s"))), 1, 15)).as(s"h$j")): _*)
+      val bandStructs = (0 until 4).map { b =>
+        struct(lit(b.toLong).as("band"),
+          md5(concat(lit(s"band$b:"), col(s"h${2 * b}"), col(s"h${2 * b + 1}")))
+            .as("bkey"))
+      }
+      val buckets = sig
+        .select(explode(array(bandStructs: _*)).as("p"))
+        .select(col("p.band"), col("p.bkey"))
+        .groupBy("band", "bkey").agg(count(lit(1)).as("sz"))
+      buckets.groupBy("band")
+        .agg(count(lit(1)).as("n_buckets"),
+          max(col("sz")).as("max_bucket"),
+          sum(col("sz") * (col("sz") - 1L)).as("twice_pairs"),
+          sum(when(col("sz") === 1L, 1L).otherwise(0L)).as("singletons"))
+        .select(col("band"), col("n_buckets"), col("max_bucket"),
+          expr("twice_pairs DIV 2").as("cand_pairs"), col("singletons"))
+        .orderBy("band")
+    },
+    Some {
+      val hs = (0 until 8)
+        .map(j => s"min(substr(md5('$j:' || s), 1, 15)) AS h$j").mkString(", ")
+      val bandSel = (0 until 4)
+        .map(b => s"SELECT CAST($b AS BIGINT) AS band, " +
+          s"md5('band$b:' || h${2 * b} || h${2 * b + 1}) AS bkey FROM sig")
+        .mkString(" UNION ALL ")
+      s"""WITH toksrc AS (SELECT doc_id, string_split(text, ' ') AS tk
+               FROM documents),
+         sh AS (SELECT DISTINCT doc_id,
+                  unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
+                         i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+                FROM toksrc WHERE len(tk) >= 3),
+      sig AS (SELECT doc_id, $hs FROM sh GROUP BY doc_id),
+      bands AS ($bandSel),
+      buckets AS (SELECT band, bkey, CAST(COUNT(*) AS BIGINT) AS sz
+        FROM bands GROUP BY band, bkey)
+      SELECT band, CAST(COUNT(*) AS BIGINT) AS n_buckets,
+        MAX(sz) AS max_bucket,
+        CAST(SUM(sz * (sz - 1)) AS BIGINT) // 2 AS cand_pairs,
+        CAST(SUM(CASE WHEN sz = 1 THEN 1 ELSE 0 END) AS BIGINT) AS singletons
+      FROM buckets GROUP BY band ORDER BY band"""
+    },
+    covers = Seq("DD-lsh-audit"))
+
+  // ------------------------------------------------- dup token inflation
+  // What exact-duplicate documents do to corpus statistics: top-20
+  // term frequencies in the raw corpus vs the text-distinct corpus,
+  // and the inflation ratio raw/deduped. Every term surviving in raw
+  // survives dedup (one copy of each distinct text remains), so the
+  // ratio's denominator is never zero. The distinct is one shuffle on
+  // text; both token explosions aggregate map-side before their
+  // term-keyed shuffles.
+  private val q311 = QueryDef(
+    "q311_dup_token_inflation",
+    (s, dir) => {
+      val d = t(s, dir, "documents")
+      def tf(df: DataFrame): DataFrame = df
+        .select(explode(split(col("text"), " ")).as("term"))
+        .groupBy("term").agg(count(lit(1)).as("f"))
+      val raw = tf(d).withColumnRenamed("f", "freq_raw")
+      val ded = tf(d.select("text").distinct())
+        .withColumnRenamed("f", "freq_dedup")
+      raw.join(ded, Seq("term"))
+        .orderBy(desc("freq_raw"), asc("term")).limit(20)
+        .select(col("term"), col("freq_raw"), col("freq_dedup"),
+          (col("freq_raw").cast("double") / col("freq_dedup").cast("double"))
+            .as("inflation"))
+        .orderBy(desc("freq_raw"), asc("term"))
+    },
+    Some("""WITH raw AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS freq_raw
+          FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
+          GROUP BY term),
+      ded AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS freq_dedup
+          FROM (SELECT unnest(string_split(text, ' ')) AS term
+                FROM (SELECT DISTINCT text FROM documents))
+          GROUP BY term)
+      SELECT term, freq_raw, freq_dedup,
+        CAST(freq_raw AS DOUBLE) / CAST(freq_dedup AS DOUBLE) AS inflation
+      FROM raw JOIN ded USING (term)
+      ORDER BY freq_raw DESC, term LIMIT 20"""),
+    covers = Seq("DD-token-inflation"))
+
+  // ------------------------------------------------- dedup survivor bias
+  // Exact dedup (one survivor per distinct text) does not remove
+  // uniformly: the language mix BEFORE vs AFTER, with the
+  // percentage-point shift — curation's side effect on the mixture,
+  // measured. Shares are exact-count divisions; the shift is one
+  // subtraction of identically-shaped doubles.
+  private val q329 = QueryDef(
+    "q329_dedup_survivor_bias",
+    (s, dir) => {
+      val d = t(s, dir, "documents")
+      val before = d.groupBy("lang").agg(count(lit(1)).as("n_before"))
+      val after = d.groupBy("text", "lang").agg(count(lit(1)).as("copies"))
+        .groupBy("lang").agg(count(lit(1)).as("n_after"))
+      val tot = before.agg(sum(col("n_before")).as("tb"))
+      val tota = after.agg(sum(col("n_after")).as("ta"))
+      before.join(after, Seq("lang"))
+        .crossJoin(broadcast(tot)).crossJoin(broadcast(tota))
+        .select(col("lang"), col("n_before"), col("n_after"),
+          (col("n_before").cast("double") / col("tb").cast("double"))
+            .as("share_before"),
+          (col("n_after").cast("double") / col("ta").cast("double"))
+            .as("share_after"),
+          (col("n_after").cast("double") / col("ta").cast("double") -
+            col("n_before").cast("double") / col("tb").cast("double"))
+            .as("shift"))
+        .orderBy("lang")
+    },
+    Some("""WITH before AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_before
+          FROM documents GROUP BY lang),
+      dd AS (SELECT lang FROM (SELECT DISTINCT text, lang FROM documents)),
+      aft AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_after
+              FROM dd GROUP BY lang),
+      tb AS (SELECT CAST(SUM(n_before) AS BIGINT) AS tb FROM before),
+      ta AS (SELECT CAST(SUM(n_after) AS BIGINT) AS ta FROM aft)
+      SELECT lang, n_before, n_after,
+        CAST(n_before AS DOUBLE) / CAST(tb AS DOUBLE) AS share_before,
+        CAST(n_after AS DOUBLE) / CAST(ta AS DOUBLE) AS share_after,
+        CAST(n_after AS DOUBLE) / CAST(ta AS DOUBLE)
+          - CAST(n_before AS DOUBLE) / CAST(tb AS DOUBLE) AS shift
+      FROM before JOIN aft USING (lang), tb, ta
+      ORDER BY lang"""),
+    covers = Seq("DD-survivor-bias"))
+
+  // ------------------------------------------------- sim-graph degree
+  // Shape of the near-duplicate similarity graph: per-document
+  // neighbor count (from q22's Jaccard≥0.4 pairs, both directions)
+  // folded to a degree histogram, plus the isolated-document count as
+  // degree 0 — the connectivity profile that predicts dedup cluster
+  // blowup before running the transitive closure.
+  private val q332 = QueryDef(
+    "q332_simgraph_degree_hist",
+    (s, dir) => {
+      // session-cached copy of q22's verified-pairs output (the shared
+      // input of q71/q192/q289/q332/q351/q359 — q22's own gate still
+      // rebuilds, so its bench timing stays honest)
+      val pairs = GraphGateSource.cached(s, "q22-pairs:" + dir)(
+        q22.run(s, dir))
+        .select("doc_a", "doc_b")
+      // materialize the (tiny) degree table ONCE: it feeds the
+      // histogram AND the isolated count, and each evaluation would
+      // otherwise re-run the full q22 shingle-pair join behind it
+      // (measured ~2x the query's whole cost)
+      val deg = pairs.select(col("doc_a").as("doc_id"))
+        .unionAll(pairs.select(col("doc_b").as("doc_id")))
+        .groupBy("doc_id").agg(count(lit(1)).as("degree"))
+        .localCheckpoint()
+      val nDocs = t(s, dir, "documents").count()
+      val withIso = deg.groupBy("degree").agg(count(lit(1)).as("n_docs"))
+      import s.implicits._
+      val isolated = Seq((0L, nDocs - deg.count())).toDF("degree", "n_docs")
+      withIso.unionByName(isolated)
+        .filter(col("n_docs") > 0)
+        .orderBy("degree")
+    },
+    Some("""WITH toksrc AS (SELECT doc_id, string_split(text, ' ') AS tk
+          FROM documents),
+      sh AS (SELECT DISTINCT doc_id,
+               unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
+                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+             FROM toksrc WHERE len(tk) >= 3),
+      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh
+                GROUP BY doc_id),
+      p0 AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               CAST(COUNT(*) AS BIGINT) AS common
+             FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+             GROUP BY 1, 2),
+      pairs AS (SELECT doc_a, doc_b FROM p0
+                JOIN sizes sa ON doc_a = sa.doc_id
+                JOIN sizes sb ON doc_b = sb.doc_id
+                WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.4),
+      deg AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS degree FROM (
+                SELECT doc_a AS doc_id FROM pairs
+                UNION ALL SELECT doc_b FROM pairs)
+              GROUP BY doc_id),
+      hist AS (SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_docs
+               FROM deg GROUP BY degree
+               UNION ALL
+               SELECT 0,
+                 (SELECT COUNT(*) FROM documents)
+                   - (SELECT COUNT(*) FROM deg))
+      SELECT degree, n_docs FROM hist WHERE n_docs > 0
+      ORDER BY degree"""),
+    covers = Seq("DD-degree-hist"))
+
+  // ------------------------------------------------- dup propensity
+  // Are longer documents duplicated more? Exact-dup group size
+  // (copies per distinct text) crossed with the 200-char length band:
+  // per band, distinct texts, total docs, and the mean copy count —
+  // the curation prior that decides where dedup effort pays.
+  private val q337 = QueryDef(
+    "q337_dup_propensity",
+    (s, dir) => {
+      val groups = t(s, dir, "documents")
+        .groupBy(col("text"), expr("n_chars DIV 200").as("len_band"))
+        .agg(count(lit(1)).as("copies"))
+      groups.groupBy("len_band")
+        .agg(count(lit(1)).as("n_texts"), sum(col("copies")).as("n_docs"),
+          max(col("copies")).as("max_copies"))
+        .select(col("len_band"), col("n_texts"), col("n_docs"),
+          col("max_copies"),
+          (col("n_docs").cast("double") / col("n_texts").cast("double"))
+            .as("mean_copies"))
+        .orderBy("len_band")
+    },
+    Some("""WITH g AS (SELECT text, n_chars // 200 AS len_band,
+          CAST(COUNT(*) AS BIGINT) AS copies
+        FROM documents GROUP BY text, len_band)
+      SELECT len_band, CAST(COUNT(*) AS BIGINT) AS n_texts,
+        CAST(SUM(copies) AS BIGINT) AS n_docs,
+        MAX(copies) AS max_copies,
+        CAST(SUM(copies) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS mean_copies
+      FROM g GROUP BY len_band
+      ORDER BY len_band"""),
+    covers = Seq("DD-propensity"))
+
+  // ------------------------------------------------- cluster purity
+  // Are near-duplicate clusters cross-lingual? The q22 similarity
+  // pairs close transitively ([[graft.dedup.Dedup]]); each cluster
+  // reports its size and distinct languages, summarized per size with
+  // the mixed-cluster count — cross-lingual near-dups usually mean
+  // template/boilerplate contamination, a different cleanup than
+  // same-language dedup.
+  private val q351 = QueryDef(
+    "q351_cluster_purity",
+    (s, dir) => {
+      // session-cached copy of q22's verified-pairs output (the shared
+      // input of q71/q192/q289/q332/q351/q359 — q22's own gate still
+      // rebuilds, so its bench timing stays honest)
+      val pairs = GraphGateSource.cached(s, "q22-pairs:" + dir)(
+        q22.run(s, dir))
+        .select("doc_a", "doc_b")
+      val clusters = graft.dedup.Dedup.clusters(pairs)
+      val withLang = clusters.join(
+        t(s, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
+      val per = withLang.groupBy("cluster_id")
+        .agg(count(lit(1)).as("size"),
+          countDistinct(col("lang")).as("n_langs"))
+      per.groupBy("size")
+        .agg(count(lit(1)).as("n_clusters"),
+          sum(when(col("n_langs") > 1, 1L).otherwise(0L)).as("n_mixed"),
+          max(col("n_langs")).as("max_langs"))
+        .orderBy("size")
+    },
+    Some("""WITH RECURSIVE toksrc AS (SELECT doc_id, string_split(text, ' ')
+            AS tk FROM documents),
+      sh AS (SELECT DISTINCT doc_id,
+               unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
+                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+             FROM toksrc WHERE len(tk) >= 3),
+      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh
+                GROUP BY doc_id),
+      p0 AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               CAST(COUNT(*) AS BIGINT) AS common
+             FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+             GROUP BY 1, 2),
+      pairs AS (SELECT doc_a, doc_b FROM p0
+                JOIN sizes sa ON doc_a = sa.doc_id
+                JOIN sizes sb ON doc_b = sb.doc_id
+                WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.4),
+      edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
+                UNION SELECT doc_b, doc_a FROM pairs),
+      reach(a, b) AS (
+        SELECT a, b FROM edges
+        UNION
+        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+      assign AS (SELECT a AS doc_id, CAST(LEAST(a, MIN(b)) AS BIGINT)
+            AS cluster_id
+          FROM reach GROUP BY a),
+      per AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS size,
+          CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs
+        FROM assign JOIN documents USING (doc_id)
+        GROUP BY cluster_id)
+      SELECT size, CAST(COUNT(*) AS BIGINT) AS n_clusters,
+        CAST(SUM(CASE WHEN n_langs > 1 THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_mixed,
+        MAX(n_langs) AS max_langs
+      FROM per GROUP BY size
+      ORDER BY size"""),
+    covers = Seq("DD-cluster-purity"))
+
+  // ------------------------------------------------- dedup savings
+  // The storage-savings report per source: bytes (n_chars) before and
+  // after exact-text dedup and the savings rate — what the dedup run
+  // is worth, in units leadership understands. Distinct texts keep
+  // ONE representative's bytes; all sums exact longs.
+  private val q355 = QueryDef(
+    "q355_dedup_savings",
+    (s, dir) => {
+      val d = t(s, dir, "documents")
+      val before = d.groupBy("source")
+        .agg(count(lit(1)).as("docs_before"),
+          sum(col("n_chars")).as("bytes_before"))
+      val after = d.groupBy("source", "text")
+        .agg(min(col("n_chars")).as("nc"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("docs_after"), sum(col("nc")).as("bytes_after"))
+      before.join(after, Seq("source"))
+        .select(col("source"), col("docs_before"), col("docs_after"),
+          col("bytes_before"), col("bytes_after"),
+          ((col("bytes_before") - col("bytes_after")).cast("double") /
+            col("bytes_before").cast("double")).as("savings_rate"))
+        .orderBy("source")
+    },
+    Some("""WITH before AS (SELECT source,
+          CAST(COUNT(*) AS BIGINT) AS docs_before,
+          CAST(SUM(n_chars) AS BIGINT) AS bytes_before
+        FROM documents GROUP BY source),
+      dd AS (SELECT source, text, CAST(MIN(n_chars) AS BIGINT) AS nc
+             FROM documents GROUP BY source, text),
+      aft AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS docs_after,
+          CAST(SUM(nc) AS BIGINT) AS bytes_after
+        FROM dd GROUP BY source)
+      SELECT source, docs_before, docs_after, bytes_before, bytes_after,
+        CAST(bytes_before - bytes_after AS DOUBLE)
+          / CAST(bytes_before AS DOUBLE) AS savings_rate
+      FROM before JOIN aft USING (source)
+      ORDER BY source"""),
+    covers = Seq("DD-savings"))
+
+  // ------------------------------------------------- split leakage
+  // Train/eval hygiene: assign documents to arms by md5 parity (the
+  // q346 split) and count near-duplicate pairs (q22's Jaccard≥0.4)
+  // that CROSS the boundary — each one leaks eval content into
+  // training. Reports within/cross pair counts and the leakage rate;
+  // the pair set is the dedup prefilter's output, orders smaller than
+  // the corpus.
+  private val q359 = QueryDef(
+    "q359_split_leakage",
+    (s, dir) => {
+      val arm = t(s, dir, "documents")
+        .select(col("doc_id"),
+          (conv(substring(md5(col("text")), 1, 8), 16, 10)
+            .cast(LongType) % 2).cast(LongType).as("arm"))
+      // session-cached copy of q22's verified-pairs output (the shared
+      // input of q71/q192/q289/q332/q351/q359 — q22's own gate still
+      // rebuilds, so its bench timing stays honest)
+      val pairs = GraphGateSource.cached(s, "q22-pairs:" + dir)(
+        q22.run(s, dir))
+        .select("doc_a", "doc_b")
+      val tagged = pairs
+        .join(arm.select(col("doc_id").as("doc_a"), col("arm").as("arm_a")),
+          Seq("doc_a"))
+        .join(arm.select(col("doc_id").as("doc_b"), col("arm").as("arm_b")),
+          Seq("doc_b"))
+      tagged.agg(count(lit(1)).as("n_pairs"),
+        sum(when(col("arm_a") === col("arm_b"), 1L).otherwise(0L))
+          .as("n_within"),
+        sum(when(col("arm_a") =!= col("arm_b"), 1L).otherwise(0L))
+          .as("n_cross"))
+        .select(col("n_pairs"), col("n_within"), col("n_cross"),
+          (col("n_cross").cast("double") / col("n_pairs").cast("double"))
+            .as("leakage_rate"))
+    },
+    Some("""WITH arm AS (SELECT doc_id,
+          CAST(CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) % 2
+            AS BIGINT) AS arm
+        FROM documents),
+      toksrc AS (SELECT doc_id, string_split(text, ' ') AS tk
+                 FROM documents),
+      sh AS (SELECT DISTINCT doc_id,
+               unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
+                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+             FROM toksrc WHERE len(tk) >= 3),
+      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh
+                GROUP BY doc_id),
+      p0 AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               CAST(COUNT(*) AS BIGINT) AS common
+             FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+             GROUP BY 1, 2),
+      pairs AS (SELECT doc_a, doc_b FROM p0
+                JOIN sizes sa ON doc_a = sa.doc_id
+                JOIN sizes sb ON doc_b = sb.doc_id
+                WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.4),
+      tagged AS (SELECT aa.arm AS arm_a, ab.arm AS arm_b
+        FROM pairs
+        JOIN arm aa ON doc_a = aa.doc_id
+        JOIN arm ab ON doc_b = ab.doc_id)
+      SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
+        CAST(SUM(CASE WHEN arm_a = arm_b THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_within,
+        CAST(SUM(CASE WHEN arm_a <> arm_b THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_cross,
+        CAST(SUM(CASE WHEN arm_a <> arm_b THEN 1 ELSE 0 END) AS DOUBLE)
+          / CAST(COUNT(*) AS DOUBLE) AS leakage_rate
+      FROM tagged"""),
+    covers = Seq("DD-split-leakage"))
+
+  // ------------------------------------------------- normalization tiers
+  // How sensitive is dedup to normalization? Distinct-doc counts
+  // under three keys — exact text, lowercased, and
+  // whitespace-collapsed lowercase — per language. The gap between
+  // tiers is the dup mass each normalization step would additionally
+  // collapse.
+  private val q376 = QueryDef(
+    "q376_normalization_tiers",
+    (s, dir) => {
+      val d = t(s, dir, "documents")
+      d.groupBy("lang")
+        .agg(count(lit(1)).as("n_docs"),
+          countDistinct(col("text")).as("distinct_exact"),
+          countDistinct(lower(col("text"))).as("distinct_lower"),
+          countDistinct(regexp_replace(lower(col("text")), " +", " "))
+            .as("distinct_norm"))
+        .select(col("lang"), col("n_docs"), col("distinct_exact"),
+          col("distinct_lower"), col("distinct_norm"),
+          (col("distinct_exact") - col("distinct_norm")).as("extra_collapsed"))
+        .orderBy("lang")
+    },
+    Some("""SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        CAST(COUNT(DISTINCT text) AS BIGINT) AS distinct_exact,
+        CAST(COUNT(DISTINCT lower(text)) AS BIGINT) AS distinct_lower,
+        CAST(COUNT(DISTINCT regexp_replace(lower(text), ' +', ' ', 'g'))
+          AS BIGINT) AS distinct_norm,
+        CAST(COUNT(DISTINCT text) AS BIGINT)
+          - CAST(COUNT(DISTINCT regexp_replace(lower(text), ' +', ' ', 'g'))
+            AS BIGINT) AS extra_collapsed
+      FROM documents
+      GROUP BY lang
+      ORDER BY lang"""),
+    covers = Seq("DD-normalization-tiers"))
+
+  // ------------------------------------------------- jaccard histogram
+  // Threshold-tuning curve for the q22 dedup join: ALL shingle-
+  // sharing candidate pairs bucketed by Jaccard decile — how many
+  // pairs each threshold choice would admit. The exact-integer bucket
+  // is (10·common) DIV union, so no double ever decides a boundary.
+  private val q380 = QueryDef(
+    "q380_jaccard_histogram",
+    (s, dir) => {
+      // session-cached distinct (doc_id, shingle) postings — q105's
+      // containment scan shares the same frame; q22/q23 still build
+      // their own (their bench timings stay honest)
+      val sh = GraphGateSource.cached(s, "shingle-distinct:" + dir)(
+        t(s, dir, "documents").select(col("doc_id"),
+          explode(graft.functions.WordShingles(s, col("text"), 3))
+            .as("s")).distinct())
+      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      val common = sh.as("a").join(sh.as("b"),
+          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
+        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .agg(count(lit(1)).as("common"))
+      // SHUFFLE_HASH pins the hash build to the O(docs) sizes side —
+      // the co-shingle pair frame's cardinality is join-output (badly
+      // estimated); a misestimated broadcast of the PAIR side is the
+      // q105 sf1 driver-collect abort class (round-9 audit)
+      common
+        .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na"))
+          .hint("shuffle_hash"), Seq("doc_a"))
+        .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb"))
+          .hint("shuffle_hash"), Seq("doc_b"))
+        .withColumn("bucket",
+          expr("(10 * common) DIV (na + nb - common)"))
+        .groupBy("bucket").agg(count(lit(1)).as("n_pairs"))
+        .orderBy("bucket")
+    },
+    Some("""WITH toksrc AS (SELECT doc_id, string_split(text, ' ') AS tk
+          FROM documents),
+      sh AS (SELECT DISTINCT doc_id,
+               unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
+                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+             FROM toksrc WHERE len(tk) >= 3),
+      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh
+                GROUP BY doc_id),
+      common AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               CAST(COUNT(*) AS BIGINT) AS common
+             FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+             GROUP BY 1, 2)
+      SELECT (10 * common) // (sa.n + sb.n - common) AS bucket,
+        CAST(COUNT(*) AS BIGINT) AS n_pairs
+      FROM common
+      JOIN sizes sa ON doc_a = sa.doc_id
+      JOIN sizes sb ON doc_b = sb.doc_id
+      GROUP BY bucket
+      ORDER BY bucket"""),
+    covers = Seq("DD-threshold-curve"))
+
+  // ------------------------------------------------- novelty decay
+  // Is later-ingested content still new? Per ingestion decile (ntile
+  // over doc_id), the share of its 3-gram shingle INSTANCES whose
+  // first corpus occurrence (min doc_id) falls in that same decile —
+  // the new-content rate a crawl-scheduling decision reads. Shingle
+  // first-owners aggregate once; everything else is exact counts.
+  private val q389 = QueryDef(
+    "q389_novelty_by_ingestion",
+    (s, dir) => {
+      val d = t(s, dir, "documents")
+      // ingestion deciles over ALL DOCUMENTS — row-scale; two-phase
+      // GlobalOrder form (round-12 window audit, bit-identical by
+      // GlobalOrderSpec)
+      val dec = graft.operators.GlobalOrder.ntile(
+          d.select(col("doc_id")), 10, col("doc_id"), leadDesc = false,
+          Seq(col("doc_id")), "decile")
+        .withColumn("decile", col("decile").cast(LongType))
+      val sh = d.select(col("doc_id"),
+        explode(graft.functions.WordShingles(d.sparkSession, col("text"), 3))
+          .as("s")).distinct()
+      val firstOwner = sh.groupBy("s").agg(min(col("doc_id")).as("first_doc"))
+      val inst = sh.join(firstOwner, Seq("s"))
+        .join(dec, Seq("doc_id"))
+        .join(dec.select(col("doc_id").as("first_doc"),
+          col("decile").as("first_decile")), Seq("first_doc"))
+      inst.groupBy("decile")
+        .agg(count(lit(1)).as("n_shingles"),
+          sum(when(col("first_decile") === col("decile"), 1L).otherwise(0L))
+            .as("novel"))
+        .select(col("decile"), col("n_shingles"), col("novel"),
+          (col("novel").cast("double") / col("n_shingles").cast("double"))
+            .as("novelty_rate"))
+        .orderBy("decile")
+    },
+    Some("""WITH dec AS (SELECT doc_id,
+          CAST(ntile(10) OVER (ORDER BY doc_id) AS BIGINT) AS decile
+        FROM documents),
+      toksrc AS (SELECT doc_id, string_split(text, ' ') AS tk
+                 FROM documents),
+      sh AS (SELECT DISTINCT doc_id,
+               unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
+                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+             FROM toksrc WHERE len(tk) >= 3),
+      fo AS (SELECT s, MIN(doc_id) AS first_doc FROM sh GROUP BY s),
+      inst AS (SELECT d1.decile, d2.decile AS first_decile
+        FROM sh
+        JOIN fo USING (s)
+        JOIN dec d1 ON sh.doc_id = d1.doc_id
+        JOIN dec d2 ON fo.first_doc = d2.doc_id)
+      SELECT decile, CAST(COUNT(*) AS BIGINT) AS n_shingles,
+        CAST(SUM(CASE WHEN first_decile = decile THEN 1 ELSE 0 END)
+          AS BIGINT) AS novel,
+        CAST(SUM(CASE WHEN first_decile = decile THEN 1 ELSE 0 END)
+          AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS novelty_rate
+      FROM inst GROUP BY decile
+      ORDER BY decile"""),
+    covers = Seq("DD-novelty-decay"))
+
+  // ------------------------------------------------- duplicate locality
+  // Are near-duplicates ingestion-neighbors or corpus-wide? q22's
+  // verified pairs bucketed by doc-id distance, with micro-averaged
+  // Jaccard per bucket as Σcommon/Σunion — exact integer sums, never
+  // a mean of per-pair doubles. Shard-local dedup only works if the
+  // mass sits in the near buckets; this query measures that.
+  private val q417 = QueryDef(
+    "q417_dup_locality",
+    (s, dir) => {
+      // session-cached copy of q22's verified-pairs pipeline (the
+      // oracle re-derives it independently from documents)
+      val pairs = GraphGateSource.cached(s, "q22-pairs:" + dir)(
+        q22.run(s, dir))
+      val b = pairs
+        .withColumn("dist", col("doc_b") - col("doc_a"))
+        .withColumn("bucket",
+          when(col("dist") <= 1L, "1_adjacent")
+            .when(col("dist") <= 10L, "2_near")
+            .when(col("dist") <= 100L, "3_mid")
+            .otherwise("4_far"))
+      // total pairs via a window over the 4-bucket aggregate — a
+      // second b.agg() pass would re-run the whole shingle join
+      val wAll = Window.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing)
+      b.groupBy("bucket")
+        .agg(count(lit(1)).as("n_pairs"),
+          sum(col("common")).as("s_common"),
+          sum(col("na") + col("nb") - col("common")).as("s_union"))
+        .withColumn("np", sum(col("n_pairs")).over(wAll))
+        .select(col("bucket"), col("n_pairs"),
+          (col("n_pairs").cast("double") / col("np").cast("double"))
+            .as("pair_share"),
+          (col("s_common").cast("double") / col("s_union").cast("double"))
+            .as("micro_jaccard"))
+        .orderBy("bucket")
+    },
+    Some("""WITH toksrc AS (SELECT doc_id, string_split(text, ' ') AS tk
+          FROM documents),
+      sh AS (SELECT DISTINCT doc_id,
+               unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
+                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+             FROM toksrc WHERE len(tk) >= 3),
+      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
+        FROM sh GROUP BY 1),
+      p0 AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+          CAST(COUNT(*) AS BIGINT) AS common
+        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+        GROUP BY 1, 2),
+      pairs AS (SELECT doc_a, doc_b, common, sa.n AS na, sb.n AS nb
+        FROM p0
+        JOIN sizes sa ON doc_a = sa.doc_id
+        JOIN sizes sb ON doc_b = sb.doc_id
+        WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.4),
+      b AS (SELECT CASE WHEN doc_b - doc_a <= 1 THEN '1_adjacent'
+               WHEN doc_b - doc_a <= 10 THEN '2_near'
+               WHEN doc_b - doc_a <= 100 THEN '3_mid'
+               ELSE '4_far' END AS bucket, common, na, nb
+        FROM pairs),
+      tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS np FROM b)
+      SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_pairs,
+        CAST(COUNT(*) AS DOUBLE) / CAST(MIN(np) AS DOUBLE) AS pair_share,
+        CAST(SUM(common) AS DOUBLE)
+          / CAST(SUM(na + nb - common) AS DOUBLE) AS micro_jaccard
+      FROM b, tot GROUP BY bucket ORDER BY bucket"""),
+    covers = Seq("DEDUP-locality"))
+
+  // ------------------------------------------------- dup transitivity
+  // Is near-duplication transitive at the q22 threshold? For every
+  // wedge (a~b, b~c) in the verified pair graph, does (a~c) also
+  // hold — the closure rate that decides whether cluster-level dedup
+  // (q71) over-merges. Pure joins over the (small) verified pair set.
+  private val q428 = QueryDef(
+    "q428_dup_transitivity",
+    (s, dir) => {
+      // the pair set appears THREE times in the plan (both wedge
+      // sides + the closing probe) — materialize the expensive
+      // shingle-join output once
+      // session-cached copy of q22's verified-pairs pipeline (the
+      // oracle re-derives it independently from documents)
+      val pairs = GraphGateSource.cached(s, "q22-pairs:" + dir)(
+        q22.run(s, dir))
+        .select(col("doc_a"), col("doc_b"))
+        .localCheckpoint()
+      val und = pairs
+        .unionByName(pairs.select(col("doc_b").as("doc_a"),
+          col("doc_a").as("doc_b")))
+      val wedge = und.as("e1").join(und.as("e2"),
+          col("e1.doc_b") === col("e2.doc_a"))
+        .filter(col("e1.doc_a") < col("e2.doc_b"))
+        .select(col("e1.doc_a").as("a"), col("e1.doc_b").as("b"),
+          col("e2.doc_b").as("c"))
+      val closed = wedge.join(pairs,
+          col("a") === col("doc_a") && col("c") === col("doc_b"),
+          "left")
+        .select(col("a"), col("b"), col("c"),
+          col("doc_a").isNotNull.cast(LongType).as("is_closed"))
+      closed.agg(count(lit(1)).as("n_wedges"),
+          sum(col("is_closed")).as("n_closed"))
+        .select(col("n_wedges"), col("n_closed"),
+          (col("n_closed").cast("double") / col("n_wedges").cast("double"))
+            .as("closure_rate"))
+    },
+    Some("""WITH toksrc AS (SELECT doc_id, string_split(text, ' ') AS tk
+          FROM documents),
+      sh AS (SELECT DISTINCT doc_id,
+               unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
+                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+             FROM toksrc WHERE len(tk) >= 3),
+      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
+        FROM sh GROUP BY 1),
+      p0 AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+          CAST(COUNT(*) AS BIGINT) AS common
+        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+        GROUP BY 1, 2),
+      pairs AS (SELECT doc_a, doc_b FROM p0
+        JOIN sizes sa ON doc_a = sa.doc_id
+        JOIN sizes sb ON doc_b = sb.doc_id
+        WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.4),
+      und AS (SELECT doc_a, doc_b FROM pairs
+        UNION ALL SELECT doc_b, doc_a FROM pairs),
+      wedge AS (SELECT e1.doc_a AS a, e1.doc_b AS b, e2.doc_b AS c
+        FROM und e1 JOIN und e2 ON e1.doc_b = e2.doc_a
+        WHERE e1.doc_a < e2.doc_b),
+      closed AS (SELECT w.a, w.b, w.c,
+          CASE WHEN p.doc_a IS NOT NULL THEN 1 ELSE 0 END AS is_closed
+        FROM wedge w LEFT JOIN pairs p
+          ON w.a = p.doc_a AND w.c = p.doc_b)
+      SELECT CAST(COUNT(*) AS BIGINT) AS n_wedges,
+        CAST(SUM(is_closed) AS BIGINT) AS n_closed,
+        CAST(SUM(is_closed) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
+          AS closure_rate
+      FROM closed"""),
+    covers = Seq("DEDUP-transitivity"))
+
+  val all: Seq[QueryDef] = Seq(q21, q22, q23, q24, q47, q66, q71, q93, q95,
+    q99, q105, q113, q141, q157, q174, q192, q213, q287, q289, q291, q305,
+    q308, q311, q329, q332, q337, q351, q355, q359, q376, q380, q389, q417,
+    q428)
+}

@@ -11,7 +11,7 @@ import graft.Tables
   * two HITS gates (q472 broadcast form, q529 co-partitioned form)
   * both derive from lineitem ⋈ orders + DISTINCT.
   *
-  * The Round101 `cachedSrc` pattern applied to the graph gates: the
+  * The StreamGates `cachedSrc` pattern applied to the graph gates: the
   * edge build is a full lineitem scan + join + distinct shuffle that
   * each gate EXECUTION used to repeat (Bench runs every gate three
   * times — warm + two timed passes — so the same edge frame was built

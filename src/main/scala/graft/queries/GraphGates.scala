@@ -1,0 +1,977 @@
+package graft.queries
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, LongType}
+
+import graft.Tables.{load => t}
+import graft.dedup.Dedup
+import graft.operators.{Bfs, KCore}
+
+/** Graph gates over the co-purchase and customer–part networks:
+  * PageRank, BFS, HITS, triangles, k-core, percolation, centrality and
+  * community structure.
+  */
+object GraphGates {
+
+  /** Session-cached DISTINCT customer→supplier edge frame — q151
+    * PageRank and q152 BFS share it. Node ids are parity-tagged
+    * LONGS (customer k → 2k, supplier k → 2k+1), not the oracle's
+    * 'c…'/'s…' strings: every iteration joins and shuffles on the
+    * node key, and long keys hash/compare without per-row string
+    * traffic. PageRank is integer fixed-point (order-independent),
+    * so the encoding is bit-neutral — the gates decode back to the
+    * exact oracle strings at output ([[decodeNode]]).
+    */
+  private def custSuppEdges(s: SparkSession, dir: String): DataFrame =
+    GraphGateSource.cached(s, "cust-supp:" + dir)(
+      t(s, dir, "lineitem")
+        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+        .select((col("o_custkey") * 2).as("src"),
+          (col("l_suppkey") * 2 + 1).as("dst"))
+        .distinct())
+
+  /** Long node id → the oracle's string id ('c<k>' / 's<k>'). */
+  private def decodeNode(node: Column): Column =
+    when(node % 2 === 0, concat(lit("c"), (node / 2).cast(LongType)))
+      .otherwise(concat(lit("s"), ((node - 1) / 2).cast(LongType)))
+
+  // ------------------------------------------------------------- PageRank
+  // Two fixed-point PageRank iterations over the bidirected
+  // customer↔supplier trade graph (operators/PageRank): integer
+  // fixed-point arithmetic makes iterative link analysis exact under
+  // any partitioning — the oracle re-implements both iterations as
+  // chained CTEs and must hash-match bit for bit. Per iteration: one
+  // edges⋈ranks equi-join + one aggregation, the formulation that
+  // scales with |E|.
+  private val q151 = QueryDef(
+    "q151_pagerank",
+    (s, dir) => {
+      // session-scoped shared customer-supplier edge cache: both
+      // unionAll branches, PageRank's iterations, q152's BFS, and all
+      // bench executions read the ONE checkpointed distinct build
+      val e0 = custSuppEdges(s, dir)
+      val edges = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
+      graft.operators.PageRank.ranks(edges, iters = 2)
+        .select(decodeNode(col("node")).as("node"), col("r").as("rank_fp"))
+        .orderBy(col("rank_fp").desc, col("node"))
+        .limit(20)
+    },
+    Some("""WITH e0 AS (
+        SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) src,
+                        's' || CAST(l_suppkey AS VARCHAR) dst
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+      edges AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+      nodes AS (SELECT DISTINCT src AS node FROM (
+        SELECT src FROM edges UNION ALL SELECT dst FROM edges)),
+      deg AS (SELECT src, CAST(count(*) AS BIGINT) outdeg FROM edges GROUP BY 1),
+      n AS (SELECT CAST(count(*) AS BIGINT) n FROM nodes),
+      i1 AS (
+        SELECT nodes.node,
+          ((15 * (1000000000000 // n.n)) // 100)
+          + (85 * COALESCE(c.contrib, 0)) // 100 AS r
+        FROM nodes CROSS JOIN n
+        LEFT JOIN (
+          SELECT e.dst AS node, CAST(SUM((1000000000000 // n.n) // d.outdeg) AS BIGINT) contrib
+          FROM edges e JOIN deg d ON e.src = d.src CROSS JOIN n
+          GROUP BY 1) c ON nodes.node = c.node),
+      i2 AS (
+        SELECT nodes.node,
+          ((15 * (1000000000000 // n.n)) // 100)
+          + (85 * COALESCE(c.contrib, 0)) // 100 AS r
+        FROM nodes CROSS JOIN n
+        LEFT JOIN (
+          SELECT e.dst AS node, CAST(SUM(i1.r // d.outdeg) AS BIGINT) contrib
+          FROM edges e JOIN i1 ON e.src = i1.node JOIN deg d ON e.src = d.src
+          GROUP BY 1) c ON nodes.node = c.node)
+      SELECT node, CAST(r AS BIGINT) rank_fp FROM i2
+      ORDER BY r DESC, node LIMIT 20"""),
+    covers = Seq("G-pagerank"))
+
+  // ------------------------------------------------------------ bounded BFS
+  // Two-hop breadth-first reach from seed customers over the same
+  // trade graph (operators/Bfs): per hop one edges⋈distances join +
+  // min-agg, distances exact integers. Output is the reach histogram
+  // (how many nodes first reached at each hop).
+  private val q152 = QueryDef(
+    "q152_bfs_reach",
+    (s, dir) => {
+      val e0 = custSuppEdges(s, dir)
+      val edges = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
+      val seeds = t(s, dir, "orders").filter(col("o_custkey") % 100 === 0)
+        .select((col("o_custkey") * 2).as("node"))
+      graft.operators.Bfs.distances(edges, seeds, maxHops = 2)
+        .groupBy("dist").agg(count(lit(1)).as("n_nodes"))
+        .orderBy("dist")
+    },
+    Some("""WITH e0 AS (
+        SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) src,
+                        's' || CAST(l_suppkey AS VARCHAR) dst
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+      edges AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+      d0 AS (SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) node, 0 AS dist
+             FROM orders WHERE o_custkey % 100 = 0),
+      d1 AS (
+        SELECT node, CAST(min(dist) AS BIGINT) dist FROM (
+          SELECT node, dist FROM d0
+          UNION ALL
+          SELECT e.dst AS node, d0.dist + 1 FROM edges e JOIN d0 ON e.src = d0.node)
+        GROUP BY 1),
+      d2 AS (
+        SELECT node, CAST(min(dist) AS BIGINT) dist FROM (
+          SELECT node, dist FROM d1
+          UNION ALL
+          SELECT e.dst AS node, d1.dist + 1 FROM edges e JOIN d1 ON e.src = d1.node)
+        GROUP BY 1)
+      SELECT dist, CAST(count(*) AS BIGINT) n_nodes FROM d2
+      GROUP BY 1 ORDER BY 1"""),
+    covers = Seq("G-bfs"))
+
+  // ------------------------------------------------- triangle counting
+  // Triangle count over the part co-purchase graph (parts are adjacent
+  // when some order contains both), using the degree-ordered
+  // orientation: direct every undirected edge from the lower-degree
+  // endpoint to the higher (ties by id), so each triangle is counted
+  // EXACTLY once and — the scale insight — no wedge is ever generated
+  // at a high-degree hub's out-side. Orientation caps out-degree at
+  // O(√m), turning the naive Σdeg² wedge explosion (quadratic at a
+  // celebrity node) into the optimal O(m^1.5) — the difference between
+  // a web-scale graph finishing and one reducer dying. Two equi-joins
+  // (wedge build + closing-edge check), everything else is integer
+  // counts.
+  private val q161 = QueryDef(
+    "q161_triangle_count",
+    (s, dir) => {
+      val li = t(s, dir, "lineitem")
+        .filter(col("l_shipdate") >= lit("1999-01-01").cast("timestamp") &&
+          col("l_shipdate") < lit("2000-01-01").cast("timestamp"))
+        .select(col("l_orderkey"), col("l_partkey"))
+      val e0 = li.as("a").join(li.as("b"),
+          col("a.l_orderkey") === col("b.l_orderkey") &&
+            col("a.l_partkey") < col("b.l_partkey"))
+        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
+        .distinct()
+      val und = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
+      // the shared degree-ordered orientation — the O(√m) out-degree
+      // bound lives (and is spec-pinned) in DegreeOrientation
+      val orient = graft.operators.DegreeOrientation.orient(und)
+        .persist() // wedge build + closing-edge probe both read it
+      val wedges = orient.as("a").join(orient.as("b"), col("a.v") === col("b.u"))
+        .select(col("a.u").as("x"), col("a.v").as("y"), col("b.v").as("z"))
+      val triangles = wedges.join(orient.as("c"),
+        col("x") === col("c.u") && col("z") === col("c.v"))
+      orient.agg(count(lit(1)).as("n_edges")).crossJoin(
+          wedges.agg(count(lit(1)).as("n_wedges")))
+        .crossJoin(triangles.agg(count(lit(1)).as("n_triangles")))
+        .select(col("n_edges"), col("n_wedges"), col("n_triangles"),
+          (col("n_triangles").cast("double") / col("n_wedges")).as("closure_rate"))
+    },
+    Some("""WITH li AS (
+        SELECT l_orderkey, l_partkey FROM lineitem
+        WHERE l_shipdate >= TIMESTAMP '1999-01-01'
+          AND l_shipdate <  TIMESTAMP '2000-01-01'),
+      e0 AS (SELECT DISTINCT a.l_partkey u, b.l_partkey v
+             FROM li a JOIN li b
+             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+      und AS (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
+      deg AS (SELECT u, COUNT(*) AS d FROM und GROUP BY u),
+      orient AS (
+        SELECT und.u, und.v FROM und
+        JOIN deg du ON und.u = du.u
+        JOIN deg dv ON und.v = dv.u
+        WHERE du.d < dv.d OR (du.d = dv.d AND und.u < und.v)),
+      wedges AS (
+        SELECT a.u AS x, a.v AS y, b.v AS z
+        FROM orient a JOIN orient b ON a.v = b.u),
+      tri AS (
+        SELECT 1 FROM wedges JOIN orient c ON x = c.u AND z = c.v)
+      SELECT
+        (SELECT CAST(COUNT(*) AS BIGINT) FROM orient) AS n_edges,
+        (SELECT CAST(COUNT(*) AS BIGINT) FROM wedges) AS n_wedges,
+        (SELECT CAST(COUNT(*) AS BIGINT) FROM tri) AS n_triangles,
+        CAST((SELECT COUNT(*) FROM tri) AS DOUBLE)
+          / (SELECT COUNT(*) FROM wedges) AS closure_rate"""),
+    covers = Seq("GRAPH-triangles"))
+
+  // ------------------------------------- degree assortativity
+  // Do heavily-co-purchased parts pair with other heavy parts?
+  // Pearson correlation of endpoint degrees over the co-purchase
+  // graph's symmetrized edges — the graph-health diagnostic next to
+  // q151/q152/q161. Degrees and all five power sums are exact
+  // integers (DECIMAL(38,0) bilinears: m·Σxy overflows a BIGINT at
+  // fact scale), so r is one correctly-rounded double tree at the
+  // very end. Edges dedup across orders (degree = distinct
+  // neighbors); the in-row pair expansion is q200's — no self-join.
+  private val q211 = QueryDef(
+    "q211_degree_assortativity",
+    (s, dir) => {
+      // distinct co-purchase pairs (u < v) from the session-scoped
+      // shared cache — the same set the in-row pair expansion this
+      // replaced produced, at zero per-execution build cost
+      val edges = GraphGateSource.copurchaseW(s, dir).select("u", "v")
+      val deg = edges.select(col("u").as("node"))
+        .unionAll(edges.select(col("v").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("deg"))
+      // BROADCAST the degree fetches: deg is O(#nodes) (a dimension,
+      // not a fact), and the shuffled form re-exchanges the edge frame
+      // twice — measured −30% at sf1 AND the hot-at-max skew rung
+      // (7.8→5.4 s / 5.2→3.7 s, same-JVM min-of-3, round-10 A/B).
+      // Structurally it also removes the only place a hub at the id
+      // MAXIMUM could serialize: the id-canonical edges put such a hub
+      // ONLY on the v side, so the v-join's shuffle partition carries
+      // the hub's whole edge mass — with no exchange there is nothing
+      // to skew. At 10⁹ nodes (deg outgrows a broadcast) fall back to
+      // SkewJoin.saltedInnerJoin on the v fetch — measured WORSE here
+      // (7.7/7.1 s: replication cost without a straggler to pay it off)
+      // so it is the fallback, not the default.
+      val withDeg = edges
+        .join(broadcast(deg.select(col("node").as("u"), col("deg").as("du"))), "u")
+        .join(broadcast(deg.select(col("node").as("v"), col("deg").as("dv"))), "v")
+        .select("du", "dv")
+      val sym = withDeg.select(col("du").as("x"), col("dv").as("y"))
+        .unionAll(withDeg.select(col("dv").as("x"), col("du").as("y")))
+      val dec = "decimal(38,0)"
+      sym.agg(
+          count(lit(1)).as("m"),
+          sum(col("x")).as("sx"),
+          sum(col("x") * col("y")).as("sxy"),
+          sum(col("x") * col("x")).as("sx2"))
+        .select(col("m"), col("sx"), col("sxy"), col("sx2"),
+          (((col("m").cast(dec) * col("sxy").cast(dec)
+            - col("sx").cast(dec) * col("sx").cast(dec)).cast("double")) /
+            ((col("m").cast(dec) * col("sx2").cast(dec)
+              - col("sx").cast(dec) * col("sx").cast(dec)).cast("double")))
+            .as("assortativity"))
+    },
+    Some("""WITH baskets AS (
+        SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
+        FROM lineitem GROUP BY l_orderkey),
+      edges AS (
+        SELECT DISTINCT ps[i] AS u, ps[j] AS v
+        FROM baskets,
+          UNNEST(generate_series(1, len(ps))) AS ti(i),
+          UNNEST(generate_series(1, len(ps))) AS tj(j)
+        WHERE i < j),
+      deg AS (
+        SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
+          SELECT u AS node FROM edges UNION ALL SELECT v FROM edges)
+        GROUP BY node),
+      sym AS (
+        SELECT du.deg AS x, dv.deg AS y
+        FROM edges JOIN deg du ON u = du.node JOIN deg dv ON v = dv.node
+        UNION ALL
+        SELECT dv.deg, du.deg
+        FROM edges JOIN deg du ON u = du.node JOIN deg dv ON v = dv.node)
+      SELECT CAST(COUNT(*) AS BIGINT) AS m,
+        CAST(SUM(x) AS BIGINT) AS sx,
+        CAST(SUM(x * y) AS BIGINT) AS sxy,
+        CAST(SUM(x * x) AS BIGINT) AS sx2,
+        CAST(COUNT(*)::HUGEINT * SUM(x * y)::HUGEINT
+          - SUM(x)::HUGEINT * SUM(x)::HUGEINT AS DOUBLE)
+        / CAST(COUNT(*)::HUGEINT * SUM(x * x)::HUGEINT
+          - SUM(x)::HUGEINT * SUM(x)::HUGEINT AS DOUBLE) AS assortativity
+      FROM sym"""),
+    covers = Seq("GRAPH-assortativity"))
+
+  // ------------------------------------------------- clustering coeff
+  // Local clustering coefficient over the co-purchase graph: how
+  // interconnected is each part's neighborhood — 2·T_v/(deg·(deg−1)),
+  // the node-level companion to q161's global triangle count and
+  // q211's assortativity. Triangles enumerate EXACTLY once via the
+  // degree-ordered orientation (q161's construction, ported here by
+  // the round-9 skew rung): every undirected edge points from the
+  // lower (deg, id) endpoint to the higher, so wedges form only at a
+  // triangle's minimum-rank corner and a hub never fans out — under
+  // the id orientation this gate generated deg(hub)² ≈ 2·10¹⁰ wedge
+  // candidates on the 20%-hot-key rung (one task, 57 GB of shuffle)
+  // because the hot key 0 is the id-order MINIMUM; degree order caps
+  // out-degree at O(√m) regardless of where the hub sits. Corners
+  // explode to per-node tallies (orientation-invariant); degrees and
+  // triangle counts are exact longs, the coefficient ONE division.
+  // Top-50 hubs by (degree, node) — a total order.
+  private val q288 = QueryDef(
+    "q288_clustering_coeff",
+    (s, dir) => {
+      // the session-scoped shared co-purchase cache IS the
+      // materialize-once frame the consumers below need (degree
+      // count, orientation build, the undirected triangle close) —
+      // the projection reads checkpoint blocks, never re-runs the
+      // distinct self-join
+      val e = GraphGateSource.copurchaseW(s, dir).select("u", "v")
+      val deg = e.select(col("u").as("node"))
+        .unionAll(e.select(col("v").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("deg"))
+      val und = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
+      // the shared degree-ordered orientation (O(√m) out-degree bound,
+      // spec-pinned in DegreeOrientation) over the already-materialized
+      // degree frame the final coefficient join reads anyway
+      val orient = graft.operators.DegreeOrientation
+        .orient(und, deg, "node", "deg")
+        .localCheckpoint() // wedge build reads it twice
+      // wedge at the minimum-rank corner: two out-neighbors, pair
+      // dedup'd by id; the closing b—c edge may be oriented either
+      // way by ITS endpoints' degrees, so the probe goes against the
+      // id-canonical undirected set with computed equi-keys
+      // SHUFFLE_HASH on the edge sides: the wedge frame is tens of
+      // millions of rows and is the STREAM side of both joins — a
+      // sort-merge join would sort it (the dominant cost, measured
+      // −29% same-JVM when hinted away); the hash build sides are the
+      // m-row edge frames. Both sides stay partitioned on the join
+      // key — no broadcast, the same shape at 100 TB.
+      val wedge = orient.as("e1").join(orient.as("e2").hint("shuffle_hash"),
+          col("e1.u") === col("e2.u"))
+        .filter(col("e1.v") < col("e2.v"))
+        .select(col("e1.u").as("a"), col("e1.v").as("b"), col("e2.v").as("c"))
+      // the closing b—c edge: wedge pairs are id-ordered (b < c) and e
+      // is id-canonical (u < v), so the probe is a plain equi-join
+      val tri = wedge.join(e.hint("shuffle_hash"),
+        col("b") === col("u") && col("c") === col("v"))
+        .select(col("a"), col("b"), col("c"))
+      val triPerNode = tri
+        .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
+        .groupBy("node").agg(count(lit(1)).as("tri"))
+      deg.join(triPerNode, Seq("node"), "left")
+        .withColumn("tri", coalesce(col("tri"), lit(0L)))
+        .filter(col("deg") >= 2)
+        .select(col("node"), col("deg"), col("tri"),
+          ((lit(2L) * col("tri")).cast("double") /
+            (col("deg") * (col("deg") - 1L)).cast("double")).as("coeff"))
+        .orderBy(desc("deg"), asc("node"))
+        .limit(50)
+    },
+    Some("""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+               FROM lineitem),
+      e AS (SELECT DISTINCT a.p AS u, b.p AS v
+            FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+      deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
+          SELECT u AS node FROM e UNION ALL SELECT v FROM e)
+        GROUP BY 1),
+      tri AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
+        FROM e e1 JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
+        JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v),
+      tpn AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS tri FROM (
+          SELECT a AS node FROM tri
+          UNION ALL SELECT b FROM tri
+          UNION ALL SELECT c FROM tri)
+        GROUP BY 1)
+      SELECT d.node, d.deg, COALESCE(t.tri, 0) AS tri,
+        CAST(2 * COALESCE(t.tri, 0) AS DOUBLE)
+          / CAST(d.deg * (d.deg - 1) AS DOUBLE) AS coeff
+      FROM deg d LEFT JOIN tpn t USING (node)
+      WHERE d.deg >= 2
+      ORDER BY d.deg DESC, d.node ASC LIMIT 50"""),
+    covers = Seq("GRAPH-clustering-coeff"))
+
+  // ------------------------------------------------- harmonic centrality
+  // 2-hop-truncated harmonic centrality h(v) = n₁(v) + n₂(v)/2 on the
+  // co-purchase graph, for a DETERMINISTIC 2% probe set (partkey % 50
+  // = 0). Both bounds are load-bearing at scale: a dense co-purchase
+  // graph reaches nearly every node within 3 hops, so an unrestricted
+  // deeper frontier degenerates to all-pairs (measured 400+ s at
+  // sf0.1); probing from a fixed slice keeps every frontier join
+  // probe×degree-sized while the edge set stays complete. Top-20
+  // probe hubs.
+  private val q379 = QueryDef(
+    "q379_harmonic_centrality",
+    (s, dir) => {
+      // the DIRECTED distinct co-purchase edges (u ≠ v) are both
+      // orientations of the shared undirected (u < v) cache — the
+      // orientations are disjoint, so the union stays distinct; the
+      // cache's checkpoint is the materialize-once the 2-hop join and
+      // the except both need
+      val cw = GraphGateSource.copurchaseW(s, dir)
+      val e = cw.select(col("u"), col("v"))
+        .unionAll(cw.select(col("v").as("u"), col("u").as("v")))
+      val h1 = e.filter(col("u") % 50 === 0)
+      // EXCEPT h1 ≡ left_anti on (u, v) here (both sides already
+      // distinct), and h1 is probe-bounded → broadcast the anti side
+      // instead of shuffling the full 2-hop set through a set-op
+      val h2 = h1.as("x").join(e.as("y"), col("x.v") === col("y.u"))
+        .select(col("x.u").as("u"), col("y.v").as("v"))
+        .filter(col("u") =!= col("v")).distinct()
+        .join(broadcast(h1), Seq("u", "v"), "left_anti")
+      val c1 = h1.groupBy("u").agg(count(lit(1)).as("n1"))
+      val c2 = h2.groupBy("u").agg(count(lit(1)).as("n2"))
+      c1.join(c2, Seq("u"), "left")
+        .withColumn("n2", coalesce(col("n2"), lit(0L)))
+        .select(col("u").as("part"), col("n1"), col("n2"),
+          (col("n1").cast("double") +
+            col("n2").cast("double") / lit(2.0d)).as("harmonic"))
+        .orderBy(desc("harmonic"), asc("part")).limit(20)
+    },
+    Some("""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+          FROM lineitem),
+      e AS (SELECT DISTINCT a.p AS u, b.p AS v
+            FROM op a JOIN op b ON a.o = b.o AND a.p <> b.p),
+      h1 AS (SELECT u, v FROM e WHERE u % 50 = 0),
+      h2 AS (SELECT DISTINCT x.u, y.v FROM h1 x JOIN e y ON x.v = y.u
+             WHERE x.u <> y.v
+             EXCEPT SELECT u, v FROM h1),
+      c1 AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS n1 FROM h1 GROUP BY u),
+      c2 AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS n2 FROM h2 GROUP BY u)
+      SELECT c1.u AS part, n1, COALESCE(n2, 0) AS n2,
+        CAST(n1 AS DOUBLE) + CAST(COALESCE(n2, 0) AS DOUBLE)
+          / CAST(2 AS DOUBLE) AS harmonic
+      FROM c1 LEFT JOIN c2 ON c1.u = c2.u
+      ORDER BY harmonic DESC, part LIMIT 20"""),
+    covers = Seq("GRAPH-harmonic"))
+
+  // Iterative graph structure gated against unrolled DuckDB fixpoint
+  // re-derivations: the oracles are program-generated CTE chains — peeling
+  // and min-label propagation unrolled past their measured fixpoint (11
+  // rounds on the gate graph), so the iterative operators are hash-gated
+  // exactly, not rows-only.
+  /** Co-purchase part pairs (u < v) with their order-co-occurrence
+    * weight — the shared edge base of q452/q456.
+    */
+  // session-scoped shared weighted co-purchase cache — one
+  // order-part self-join per JVM for the whole graph-gate family
+  private def copurchase(s: SparkSession, dir: String): DataFrame =
+    GraphGateSource.copurchaseW(s, dir)
+
+  private val copurchaseSql: String =
+    """op AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+        FROM lineitem),
+      pw AS MATERIALIZED (SELECT a.p AS u, b.p AS v,
+        CAST(COUNT(*) AS BIGINT) AS w
+        FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
+        GROUP BY 1, 2)"""
+
+  // ------------------------------------------------- k-core
+  // 3-core of the repeat-co-purchase graph (weight ≥ 2): the dense
+  // nucleus of the catalog after peeling every weakly-attached part.
+  // Spark side iterates graft.operators.KCore to the true fixpoint;
+  // the oracle replays the same peel as a 14-round unrolled CTE
+  // chain (the gate graph fixpoints in 11) — an iterative operator
+  // under an exact hash gate.
+  private val q452 = QueryDef(
+    "q452_kcore",
+    (s, dir) => {
+      val e = copurchase(s, dir).filter(col("w") >= 2).select("u", "v")
+      KCore.core(e, 3)
+        .select(col("node").cast(LongType).as("node"), col("deg"))
+        .orderBy("node")
+    },
+    Some {
+      val peel = (0 until 14).map { i =>
+        s"""k$i AS MATERIALIZED (SELECT u FROM e$i GROUP BY u HAVING COUNT(*) >= 3),
+      e${i + 1} AS MATERIALIZED (SELECT e.u, e.v FROM e$i e
+        JOIN k$i a ON a.u = e.u JOIN k$i b ON b.u = e.v)"""
+      }.mkString(",\n      ")
+      s"""WITH $copurchaseSql,
+      ew AS MATERIALIZED (SELECT u, v FROM pw WHERE w >= 2),
+      e0 AS MATERIALIZED (SELECT u, v FROM ew UNION ALL SELECT v, u FROM ew),
+      $peel
+      SELECT CAST(u AS BIGINT) AS node, CAST(COUNT(*) AS BIGINT) AS deg
+      FROM e14 GROUP BY u ORDER BY node"""
+    },
+    covers = Seq("GRAPH-kcore"))
+
+  // ------------------------------------------------- percolation
+  // Component structure of the co-purchase graph as the edge-weight
+  // threshold rises — the percolation curve that locates where the
+  // giant component dissolves into islands. Components from
+  // graft.dedup.Dedup (union-find / label propagation); the oracle
+  // re-derives min-reachable labels by 14 unrolled rounds of
+  // min-label propagation per threshold.
+  private val q456 = QueryDef(
+    "q456_percolation",
+    (s, dir) => {
+      // one-pass incremental census: the three thresholded edge sets
+      // are nested, so Dedup.percolation collects the weighted edges
+      // ONCE and grows a single size-tracking union-find from thr=3
+      // down to thr=1 — replacing three independent collect + solve +
+      // aggregate rounds (co-purchase graphs stay ≤ a few M edges
+      // even at sf1, well under the cap; past it the same call falls
+      // back to per-threshold distributed label propagation)
+      Dedup.percolation(copurchase(s, dir), Seq(1L, 2L, 3L),
+          maxIters = 20, localEdgeCap = 1L << 23)
+        .select(col("threshold"), col("n_nodes"), col("n_components"),
+          col("giant"),
+          (col("giant").cast("double") / col("n_nodes").cast("double"))
+            .as("giant_share"))
+        .orderBy("threshold")
+    },
+    Some {
+      def perThreshold(thr: Int): String = {
+        val prop = (0 until 14).map { i =>
+          s"""l${thr}_${i + 1} AS MATERIALIZED (SELECT e.u AS node,
+          LEAST(MIN(l.lab), MIN(s.lab)) AS lab
+        FROM ed$thr e JOIN l${thr}_$i l ON l.node = e.v
+        JOIN l${thr}_$i s ON s.node = e.u GROUP BY e.u)"""
+        }.mkString(",\n      ")
+        s"""ew$thr AS MATERIALIZED (SELECT u, v FROM pw WHERE w >= $thr),
+      ed$thr AS MATERIALIZED (SELECT u, v FROM ew$thr
+        UNION ALL SELECT v, u FROM ew$thr),
+      l${thr}_0 AS MATERIALIZED (SELECT u AS node, u AS lab
+        FROM (SELECT DISTINCT u FROM ed$thr)),
+      $prop,
+      cs$thr AS (SELECT lab, CAST(COUNT(*) AS BIGINT) AS sz
+        FROM l${thr}_14 GROUP BY lab),
+      st$thr AS (SELECT CAST($thr AS BIGINT) AS threshold,
+        CAST(SUM(sz) AS BIGINT) AS n_nodes,
+        CAST(COUNT(*) AS BIGINT) AS n_components,
+        CAST(MAX(sz) AS BIGINT) AS giant,
+        CAST(MAX(sz) AS DOUBLE) / CAST(SUM(sz) AS DOUBLE)
+          AS giant_share
+        FROM cs$thr)"""
+      }
+      s"""WITH $copurchaseSql,
+      ${perThreshold(1)},
+      ${perThreshold(2)},
+      ${perThreshold(3)}
+      SELECT * FROM st1 UNION ALL SELECT * FROM st2
+      UNION ALL SELECT * FROM st3 ORDER BY threshold"""
+    },
+    covers = Seq("GRAPH-percolation"))
+
+  // ------------------------------------------------- HITS
+  // Hubs-and-authorities over the customer→part purchase bipartite
+  // graph, 6 alternating power steps: authority(p) = Σ hub(u) over
+  // buyers, hub(u) = Σ authority(p) over their parts, L2-normalized
+  // each half-step. FULLY DISTRIBUTED: the edge set (the corpus-
+  // sized frame, derived from lineitem) never leaves Spark — each
+  // half-step is one edges⋈scores equi-join plus a grouped ordered
+  // fold. The score side (O(nodes)) is broadcast-hinted, which is
+  // the right call while the score vector fits the broadcast budget;
+  // past that the hint comes off and the join falls back to a
+  // shuffle keyed like the cached edge layout — only the O(1) norm
+  // scalars are irreducibly driver-bound. Every Σ is
+  // a LEFT fold in neighbor-id order (the codegen'd KeyOrderedFold
+  // over `collect_list(struct(key, val))` ≡ the oracle's
+  // `list_reduce(list(x ORDER BY key))`; the 0.0 seed is exact
+  // because 0.0 + x == x for the strictly positive terms), so six
+  // rounds of float arithmetic stay bit-identical to the SQL oracle
+  // regardless of partitioning. The norm's single-group fold holds
+  // O(nodes) values in one array — bounded by the score-vector
+  // state, never by |E|; per-half-step localCheckpoint truncates the
+  // 12-step lineage. Top-10 authority parts — the "catalog anchors"
+  // bought by the broadest heavy buyers.
+  private val q472 = QueryDef(
+    "q472_hits",
+    // AQE OFF for the iteration loop (round-12 in-session A/B,
+    // OPTIMIZATION_r12.md "Graph family": 3.51→3.23 and 3.18→2.92 s,
+    // +8% twice): every join in the 12 half-steps is explicitly
+    // broadcast-hinted and every fold is exchange-free on the pinned
+    // edge layout, so adaptive
+    // re-planning has NO decision space here — it re-plans 12
+    // half-step chains for nothing, at any scale. The co-partitioned
+    // sibling q529, whose per-iteration exchanges AQE does optimize,
+    // measured the OPPOSITE (3.03→3.44 s with AQE off) and keeps it.
+    // Results are bit-identical by construction (ordered folds are
+    // partitioning-independent; oracle hash-gated).
+    (s, dir) => QueryDef.withConf(s, "spark.sql.adaptive.enabled", "false") {
+      // session-scoped shared edge cache (one build per JVM for both
+      // HITS gates × all bench executions — see GraphGateSource)
+      val edges = GraphGateSource.custPartEdges(s, dir)
+      // BOTH orientations cached, each hash-partitioned on its fold
+      // key (GraphX keeps the same dual layout): the score side
+      // broadcasts, the broadcast join preserves the cached edge
+      // partitioning, and each half-step's grouped fold is therefore
+      // EXCHANGE-FREE — the |E|-sized frame is scanned 12× but never
+      // re-shuffled after the two initial repartitions. Few fat
+      // partitions: a 6-round loop pays per-task scheduling 12×; at
+      // cluster scale this is the edge-partition count.
+      val eP = edges.repartition(8, col("p")).persist()
+      val eU = edges.repartition(8, col("u")).persist()
+      // ordered left fold of `v` in ascending `key` order (key is
+      // unique within each group, so the struct sort is total);
+      // KeyOrderedFold = one compiled sort+fold loop per group,
+      // bit-identical to the aggregate∘transform∘array_sort HOF
+      // stack it replaced (KeyOrderedFoldSpec pins the parity)
+      def foldSum(key: String, v: String): Column =
+        graft.functions.KeyOrderedFold.sum(
+          s, collect_list(struct(col(key), col(v))))
+      def foldSumSq(key: String, v: String): Column =
+        sqrt(graft.functions.KeyOrderedFold.sumSq(
+          s, collect_list(struct(col(key), col(v)))))
+      var h = eU.select("u").distinct()
+        .select(col("u"), lit(1.0).as("h")).localCheckpoint()
+      var a: DataFrame = null
+      // the expensive stage of a half-step is the edges⋈scores join +
+      // grouped fold (aRaw/hRaw) — checkpoint exactly THAT, so the
+      // norm subquery, the normalized projection, and the next
+      // half-step all read the materialized O(nodes) frame instead of
+      // re-running the corpus-sized join (unmaterialized, the embedded
+      // norm broadcast re-evaluates the join 3× per half-step)
+      // lazy checkpoints: the norm aggregation (first consumer) is
+      // the job that materializes each raw frame — an eager
+      // localCheckpoint would pay a 13th-24th scheduling round just
+      // to count rows nobody reads
+      for (_ <- 1 to 6) {
+        val aRaw = eP.join(broadcast(h), "u").groupBy("p")
+          .agg(foldSum("u", "h").as("araw"))
+          .localCheckpoint(eager = false)
+        val aNrm = aRaw.agg(foldSumSq("p", "araw").as("nrm"))
+        a = aRaw.crossJoin(broadcast(aNrm))
+          .select(col("p"), (col("araw") / col("nrm")).as("a"))
+        val hRaw = eU.join(broadcast(a), "p").groupBy("u")
+          .agg(foldSum("p", "a").as("hraw"))
+          .localCheckpoint(eager = false)
+        val hNrm = hRaw.agg(foldSumSq("u", "hraw").as("nrm"))
+        h = hRaw.crossJoin(broadcast(hNrm))
+          .select(col("u"), (col("hraw") / col("nrm")).as("h"))
+      }
+      // Materialize the final authority frame (eager checkpoint runs
+      // the whole lazy half-step chain in one job) WHILE the edge
+      // caches are still live — unpersisting first would drop them
+      // before the 12 half-step joins ever read them, re-shuffling
+      // the edges every iteration.
+      a = a.localCheckpoint()
+      eP.unpersist(); eU.unpersist()
+      val top = a.orderBy(col("a").desc, col("p")).limit(10)
+      top.select(
+          row_number().over(Window.orderBy(col("a").desc, col("p")))
+            .cast(LongType).as("rnk"),
+          col("p").cast(LongType).as("part"), col("a").as("authority"))
+        .orderBy("rnk")
+    },
+    Some(hitsOracleSql(withAuthority = true)),
+    covers = Seq("GRAPH-hits"))
+
+  /** q472's DuckDB HITS recursion (6 unrolled rounds of ordered
+    * list_reduce folds ≡ the gate's KeyOrderedFold semantics).
+    * `withAuthority = false` projects rank and part only — the
+    * float-free projection the co-partitioned gate (q529) hashes,
+    * since that variant matches the ordered-fold scores to ~1e-9
+    * but not to the bit.
+    */
+  private[queries] def hitsOracleSql(withAuthority: Boolean, iters: Int = 6): String = {
+    val rounds = (1 to iters).map { k =>
+      s"""ar$k AS MATERIALIZED (SELECT e.p,
+          list_reduce(list(h.h ORDER BY e.u), (a, b) -> a + b) AS a
+        FROM edges e JOIN h${k - 1} h ON h.u = e.u GROUP BY e.p),
+      an$k AS MATERIALIZED (SELECT sqrt(list_reduce(
+          list(a * a ORDER BY p), (x, y) -> x + y)) AS nrm FROM ar$k),
+      a$k AS MATERIALIZED (SELECT p,
+          a / (SELECT nrm FROM an$k) AS a FROM ar$k),
+      hr$k AS MATERIALIZED (SELECT e.u,
+          list_reduce(list(a.a ORDER BY e.p), (x, y) -> x + y) AS h
+        FROM edges e JOIN a$k a ON a.p = e.p GROUP BY e.u),
+      hn$k AS MATERIALIZED (SELECT sqrt(list_reduce(
+          list(h * h ORDER BY u), (x, y) -> x + y)) AS nrm FROM hr$k),
+      h$k AS MATERIALIZED (SELECT u,
+          h / (SELECT nrm FROM hn$k) AS h FROM hr$k)"""
+    }.mkString(",\n      ")
+    val proj =
+      if (withAuthority) "CAST(p AS BIGINT) AS part, a AS authority"
+      else "CAST(p AS BIGINT) AS part"
+    s"""WITH edges AS MATERIALIZED (SELECT DISTINCT o.o_custkey AS u,
+          l.l_partkey AS p
+        FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey),
+      h0 AS (SELECT DISTINCT u, CAST(1.0 AS DOUBLE) AS h FROM edges),
+      $rounds
+      SELECT CAST(row_number() OVER (ORDER BY a DESC, p) AS BIGINT)
+          AS rnk,
+        $proj
+      FROM a$iters ORDER BY a DESC, p LIMIT 10"""
+  }
+
+  /** Repeat-co-purchase simple graph (u < v, weight ≥ 2). */
+  // session-scoped shared weighted co-purchase cache (see
+  // GraphGateSource.copurchaseW); the w >= 2 cut is this family's own
+  private def edges2(s: SparkSession, dir: String): DataFrame =
+    GraphGateSource.copurchaseW(s, dir)
+      .filter(col("w") >= 2)
+      .select("u", "v")
+
+  private val edges2Sql: String =
+    """op AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o,
+        l_partkey AS p FROM lineitem),
+      ed AS MATERIALIZED (SELECT u, v FROM (
+        SELECT a.p AS u, b.p AS v, COUNT(*) AS w
+        FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
+        GROUP BY 1, 2) WHERE w >= 2)"""
+
+  // ------------------------------------------------- link prediction
+  // Temporal link prediction scored honestly: the pre-1999 repeat-
+  // co-purchase graph proposes new edges by common-neighbor count;
+  // the 1999+ NEW repeat edges are the ground truth. Precision@100
+  // with exact-integer scores and (cn, u, v)-ordered selection. The
+  // graph-completion eval loop next to q463's recommender hit-rate.
+  private val q492 = QueryDef(
+    "q492_link_prediction",
+    (s, dir) => {
+      // ONE pass builds both period graphs: the train/test split is a
+      // function of the order (od < cut), so tagging each (order,
+      // part) row with its period and grouping the self-join by
+      // (period, u, v) yields both edge sets from a single
+      // lineitem∙orders scan + one co-occurrence shuffle — the
+      // previous two-graphOf() form paid that pipeline twice.
+      val cut = lit("1999-01-01").cast(DateType)
+      // session-cached (the frame is q492-specific but rebuilt per
+      // bench execution; the wedge join below stays per-execution —
+      // it IS the measured operator)
+      val edges = GraphGateSource.cached(s, "period-copurchase:" + dir) {
+        val op = t(s, dir, "lineitem")
+          .join(t(s, dir, "orders").select(col("o_orderkey"),
+            to_date(col("o_orderdate")).as("od")),
+            col("l_orderkey") === col("o_orderkey"))
+          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"),
+            (col("od") < cut).as("is_train"))
+          .distinct()
+        op.as("a").join(op.as("b"), Seq("o"))
+          .filter(col("a.p") < col("b.p"))
+          .groupBy(col("a.is_train").as("is_train"),
+            col("a.p").as("u"), col("b.p").as("v"))
+          .agg(count(lit(1)).as("w"))
+          .filter(col("w") >= 2).select("is_train", "u", "v")
+      }
+      val train = edges.filter(col("is_train")).select("u", "v")
+      val test = edges.filter(!col("is_train")).select("u", "v")
+        .join(train, Seq("u", "v"), "left_anti")
+        .localCheckpoint()
+      val sym = train.unionAll(train.select(col("v").as("u"),
+        col("u").as("v")))
+      val cand = sym.as("e1").join(sym.as("e2"),
+          col("e1.v") === col("e2.u"))
+        .filter(col("e1.u") < col("e2.v"))
+        .groupBy(col("e1.u").as("u"), col("e2.v").as("v"))
+        .agg(count(lit(1)).as("cn"))
+        .join(train, Seq("u", "v"), "left_anti")
+      // (cn DESC, u, v) is a total order over unique (u, v) pairs, so
+      // top-100 via sort+limit ≡ the row_number()-window form — but
+      // plans as a distributed TakeOrderedAndProject instead of a
+      // single-partition global window over every candidate pair.
+      val top = cand.orderBy(col("cn").desc, col("u"), col("v")).limit(100)
+      val hits = top.join(test, Seq("u", "v")).agg(count(lit(1)).as("h"))
+      test.agg(count(lit(1)).as("n_test_new"))
+        .crossJoin(hits)
+        .select(col("n_test_new"), col("h").as("n_hits"),
+          (col("h").cast("double") / lit(100.0)).as("precision_at_100"))
+    },
+    Some("""WITH lo AS (SELECT l.l_orderkey AS o, l.l_partkey AS p,
+          CAST(o.o_orderdate AS DATE) AS od
+        FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey),
+      op_tr AS MATERIALIZED (SELECT DISTINCT o, p FROM lo
+        WHERE od < DATE '1999-01-01'),
+      train AS MATERIALIZED (SELECT u, v FROM (
+        SELECT a.p AS u, b.p AS v, COUNT(*) AS w
+        FROM op_tr a JOIN op_tr b ON a.o = b.o AND a.p < b.p
+        GROUP BY 1, 2) WHERE w >= 2),
+      op_te AS MATERIALIZED (SELECT DISTINCT o, p FROM lo
+        WHERE od >= DATE '1999-01-01'),
+      test AS MATERIALIZED (SELECT u, v FROM (
+        SELECT a.p AS u, b.p AS v, COUNT(*) AS w
+        FROM op_te a JOIN op_te b ON a.o = b.o AND a.p < b.p
+        GROUP BY 1, 2) x WHERE w >= 2
+        AND NOT EXISTS (SELECT 1 FROM train t
+          WHERE t.u = x.u AND t.v = x.v)),
+      sym AS MATERIALIZED (SELECT u, v FROM train
+        UNION ALL SELECT v, u FROM train),
+      cand AS MATERIALIZED (SELECT u, v, cn FROM (
+        SELECT e1.u AS u, e2.v AS v, CAST(COUNT(*) AS BIGINT) AS cn
+        FROM sym e1 JOIN sym e2 ON e2.u = e1.v
+        WHERE e1.u < e2.v GROUP BY 1, 2) c
+        WHERE NOT EXISTS (SELECT 1 FROM train t
+          WHERE t.u = c.u AND t.v = c.v)),
+      top AS (SELECT u, v FROM (SELECT u, v,
+          row_number() OVER (ORDER BY cn DESC, u, v) AS rk
+        FROM cand) WHERE rk <= 100),
+      hits AS (SELECT CAST(COUNT(*) AS BIGINT) AS h
+        FROM top JOIN test USING (u, v))
+      SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM test) AS n_test_new,
+        h.h AS n_hits, CAST(h.h AS DOUBLE) / 100.0 AS precision_at_100
+      FROM hits h"""),
+    covers = Seq("GRAPH-link-prediction"))
+
+  // ------------------------------------------------- modularity
+  // Newman modularity of the BRAND partition over the repeat-co-
+  // purchase graph: Q = Σ_i (e_ii/m − (d_i/2m)²) folded to the exact
+  // integer Σ(4m·e_ii − d_i²) over 4m² — does the catalog's brand
+  // structure explain who is bought with whom? One division.
+  private val q493 = QueryDef(
+    "q493_modularity",
+    (s, dir) => {
+      val brand = t(s, dir, "part")
+        .select(col("p_partkey"), col("p_brand"))
+      val e = edges2(s, dir)
+        .join(brand.select(col("p_partkey").as("u"),
+          col("p_brand").as("bu")), Seq("u"))
+        .join(brand.select(col("p_partkey").as("v"),
+          col("p_brand").as("bv")), Seq("v"))
+        .localCheckpoint()
+      val m = e.count()
+      val eii = e.filter(col("bu") === col("bv"))
+        .groupBy(col("bu").as("b")).agg(count(lit(1)).as("e_in"))
+      val degB = e.select(col("bu").as("b"))
+        .unionAll(e.select(col("bv").as("b")))
+        .groupBy("b").agg(count(lit(1)).as("d"))
+      val terms = degB.join(eii, Seq("b"), "left")
+        .withColumn("e_in", coalesce(col("e_in"), lit(0L)))
+        .agg(count(lit(1)).as("n_brands"),
+          sum(lit(4L) * lit(m) * col("e_in") - col("d") * col("d"))
+            .as("qnum"))
+      terms.select(lit(m).as("m_edges"), col("n_brands"),
+        (col("qnum").cast("double") /
+          (lit(4.0) * lit(m.toDouble) * lit(m.toDouble)))
+          .as("modularity"))
+    },
+    Some(s"""WITH $edges2Sql,
+      eb AS MATERIALIZED (SELECT e.u, e.v, pu.p_brand AS bu,
+          pv.p_brand AS bv
+        FROM ed e JOIN part pu ON pu.p_partkey = e.u
+        JOIN part pv ON pv.p_partkey = e.v),
+      m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM eb),
+      eii AS (SELECT bu AS b, CAST(COUNT(*) AS BIGINT) AS e_in
+        FROM eb WHERE bu = bv GROUP BY 1),
+      degb AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS d FROM (
+          SELECT bu AS b FROM eb UNION ALL SELECT bv FROM eb)
+        GROUP BY b),
+      terms AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_brands,
+          CAST(SUM(4 * m.m * COALESCE(e.e_in, 0) - d.d * d.d)
+            AS BIGINT) AS qnum
+        FROM degb d LEFT JOIN eii e ON e.b = d.b CROSS JOIN m)
+      SELECT m.m AS m_edges, t.n_brands,
+        CAST(t.qnum AS DOUBLE) /
+          (4.0 * CAST(m.m AS DOUBLE) * CAST(m.m AS DOUBLE))
+          AS modularity
+      FROM terms t CROSS JOIN m"""),
+    covers = Seq("GRAPH-modularity"))
+
+  // ------------------------------------------------- rich club
+  // Rich-club coefficient at degree thresholds 5/10/20/40: do the
+  // best-connected parts trade disproportionately with each other?
+  // φ(k) = 2·E_k / (N_k·(N_k−1)) over the induced high-degree
+  // subgraph — exact counts, one division per threshold.
+  private val q494 = QueryDef(
+    "q494_rich_club",
+    (s, dir) => {
+      val e = edges2(s, dir).localCheckpoint()
+      val deg = e.select(col("u").as("n"))
+        .unionAll(e.select(col("v").as("n")))
+        .groupBy("n").agg(count(lit(1)).as("deg"))
+        .localCheckpoint()
+      // the four thresholded subgraphs are nested, and an edge
+      // survives threshold k iff min(deg_u, deg_v) > k — so ONE
+      // degree-annotated pass over the edges plus one pass over the
+      // degree table yields every E_k and N_k as conditional sums
+      // (was: a count + induced-subgraph-join count per threshold,
+      // eight driver actions)
+      val md = e
+        .join(deg.select(col("n").as("u"), col("deg").as("du")), Seq("u"))
+        .join(deg.select(col("n").as("v"), col("deg").as("dv")), Seq("v"))
+        .select(least(col("du"), col("dv")).as("md"))
+      def over(c: Column, k: Long): Column =
+        sum(when(c > k, 1L).otherwise(0L))
+      val ks = Seq(5L, 10L, 20L, 40L)
+      val eAgg = md.agg(over(col("md"), ks.head).as("e5"),
+        over(col("md"), ks(1)).as("e10"), over(col("md"), ks(2)).as("e20"),
+        over(col("md"), ks(3)).as("e40"))
+      val nAgg = deg.agg(over(col("deg"), ks.head).as("n5"),
+        over(col("deg"), ks(1)).as("n10"), over(col("deg"), ks(2)).as("n20"),
+        over(col("deg"), ks(3)).as("n40"))
+      nAgg.crossJoin(eAgg)
+        .select(expr("stack(4, CAST(5 AS BIGINT), n5, e5, " +
+          "CAST(10 AS BIGINT), n10, e10, CAST(20 AS BIGINT), n20, e20, " +
+          "CAST(40 AS BIGINT), n40, e40)")
+          .as(Seq("k", "n_rich", "e_rich")))
+        .filter(col("n_rich") >= 2)
+        .withColumn("phi",
+          (lit(2.0) * col("e_rich").cast("double")) /
+            (col("n_rich").cast("double") *
+              (col("n_rich") - 1L).cast("double")))
+        .orderBy("k")
+    },
+    Some(s"""WITH $edges2Sql,
+      deg AS MATERIALIZED (SELECT n, CAST(COUNT(*) AS BIGINT) AS deg
+        FROM (SELECT u AS n FROM ed UNION ALL SELECT v FROM ed)
+        GROUP BY n),
+      ks AS (SELECT unnest([5, 10, 20, 40]) AS k),
+      stats AS (SELECT ks.k,
+          (SELECT CAST(COUNT(*) AS BIGINT) FROM deg
+            WHERE deg > ks.k) AS n_rich,
+          (SELECT CAST(COUNT(*) AS BIGINT) FROM ed e
+            JOIN deg du ON du.n = e.u AND du.deg > ks.k
+            JOIN deg dv ON dv.n = e.v AND dv.deg > ks.k) AS e_rich
+        FROM ks)
+      SELECT CAST(k AS BIGINT) AS k, n_rich, e_rich,
+        2.0 * CAST(e_rich AS DOUBLE) /
+          (CAST(n_rich AS DOUBLE) * CAST(n_rich - 1 AS DOUBLE)) AS phi
+      FROM stats WHERE n_rich >= 2 ORDER BY k"""),
+    covers = Seq("GRAPH-rich-club"))
+
+  // ------------------------------------------------- diameter
+  // Hop-distance profile of the repeat-co-purchase graph from its 5
+  // lowest-id nodes: per-seed BFS (graft.operators.Bfs, ≤6 hops)
+  // aggregated into a distance histogram — the effective-diameter
+  // evidence that the catalog is a small world. Oracle = 6 unrolled
+  // min-distance relaxation rounds per seed.
+  private val q496 = QueryDef(
+    "q496_bfs_diameter",
+    (s, dir) => {
+      val e = edges2(s, dir).localCheckpoint()
+      val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
+        .select(col("u").as("src"), col("v").as("dst"))
+      val seeds = e.select(col("u").as("node"))
+        .unionAll(e.select(col("v").as("node")))
+        .distinct().orderBy("node").limit(5)
+      val perSeed = Bfs.perSeedDistances(sym, seeds, maxHops = 6)
+      perSeed.groupBy("dist").agg(count(lit(1)).as("n_pairs"))
+        .orderBy("dist")
+    },
+    Some {
+      val rounds = (1 to 6).map { k =>
+        s"""r$k AS MATERIALIZED (SELECT seed, node,
+          CAST(MIN(dist) AS BIGINT) AS dist FROM (
+            SELECT seed, node, dist FROM r${k - 1}
+            UNION ALL
+            SELECT r.seed, e.v AS node, r.dist + 1 AS dist
+            FROM r${k - 1} r JOIN sym e ON e.u = r.node)
+          GROUP BY seed, node)"""
+      }.mkString(",\n      ")
+      s"""WITH $edges2Sql,
+      sym AS MATERIALIZED (SELECT u, v FROM ed
+        UNION ALL SELECT v, u FROM ed),
+      seeds AS (SELECT n AS seed FROM (
+          SELECT DISTINCT u AS n FROM sym ORDER BY n LIMIT 5)),
+      r0 AS (SELECT seed, seed AS node, 0 AS dist FROM seeds),
+      $rounds
+      SELECT dist, CAST(COUNT(*) AS BIGINT) AS n_pairs
+      FROM r6 GROUP BY dist ORDER BY dist"""
+    },
+    covers = Seq("GRAPH-diameter"))
+
+  // ----------------------------------- co-partitioned HITS, ranked
+  // The 100 TB-shape HITS variant ([[graft.operators.Hits]] with
+  // copartitioned = true: score repartition into the edge cache
+  // layout instead of whole-vector broadcast, partial-agg sums,
+  // two-level norm) under the SAME DuckDB recursion as q472 —
+  // projected to (rnk, part) only, because the variant trades
+  // bit-stable summation order for bounded shuffles and matches the
+  // ordered-fold scores to ~1e-9, not to the bit. Ranks are immune:
+  // adjacent top-10 authority separations measure ~1e-4 at gate SF
+  // (vs ~1e-12 accumulation noise), so the float-free projection is
+  // hash-deterministic. HitsVariantsSpec pins the per-node score
+  // agreement; this gate pins the variant end-to-end against SQL.
+  private val q529 = QueryDef(
+    "q529_hits_copartitioned",
+    (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      import org.apache.spark.sql.types.LongType
+      // session-scoped shared edge cache (one build per JVM for both
+      // HITS gates × all bench executions — see GraphGateSource)
+      val edges = GraphGateSource.custPartEdges(s, dir)
+      // 4 iterations, not q472's 6: the top-10 authority RANKING —
+      // all this float-free gate projects — settles at 4 rounds
+      // (measured: iters-4 ≡ iters-6 part order at gate SF), the
+      // oracle recursion below runs the matching 4 rounds, and
+      // HitsVariantsSpec's broadcast-vs-copartitioned tolerance check
+      // discriminates at any matched iteration count. q472 keeps 6 —
+      // its output hashes the authority FLOATS, which do move.
+      graft.operators.Hits
+        .authorities(edges, iters = 4, parts = 0, copartitioned = true)
+        .orderBy(col("authority").desc, col("p")).limit(10)
+        .select(
+          row_number().over(Window.orderBy(col("authority").desc, col("p")))
+            .cast(LongType).as("rnk"),
+          col("p").cast(LongType).as("part"))
+        .orderBy("rnk")
+    },
+    Some(hitsOracleSql(withAuthority = false, iters = 4)),
+    covers = Seq("GRAPH-hits-copartitioned"))
+
+  val all: Seq[QueryDef] = Seq(q151, q152, q161, q211, q288, q379, q452,
+    q456, q472, q492, q493, q494, q496, q529)
+}

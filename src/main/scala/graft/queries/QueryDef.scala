@@ -1,6 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, split}
+import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /** One verifiable operator query.
   *
@@ -27,20 +29,85 @@ final case class QueryDef(
     covers: Seq[String] = Nil,
     dynOracle: Option[(SparkSession, String) => String] = None)
 
+/** The helpers every gate family shares. Determinism rules they
+  * implement, for every gate:
+  *  - double outputs must derive from exact DECIMAL(18,2) sums (the
+  *    source doubles are 2-decimal) so partial aggregation order
+  *    cannot change the result;
+  *  - no `round()` on division results (Spark rounds the shortest
+  *    string repr, DuckDB the binary value — they disagree on
+  *    half-way points); identical IEEE expression trees are already
+  *    bitwise deterministic;
+  *  - no `ln()`/`pow()` or other transcendentals: their last-ulp
+  *    behaviour differs between Spark and DuckDB, while +,−,×,÷ and
+  *    sqrt are correctly rounded on both;
+  *  - a decision (threshold, class boundary, argmax) is an exact
+  *    integer/DECIMAL or cross-multiplied compare, never a compare of
+  *    computed floats;
+  *  - every query ends in a total ORDER BY;
+  *  - counts cast to BIGINT on the DuckDB side (its SUM(int) is
+  *    HUGEINT), ranks cast to BIGINT on the Spark side.
+  */
 object QueryDef {
-  /** Determinism rules shared by every query (see Scaladoc on each):
-    *  - double outputs must derive from exact DECIMAL(18,2) sums (the
-    *    source doubles are 2-decimal) so partial aggregation order
-    *    cannot change the result;
-    *  - no `round()` on division results (Spark rounds the shortest
-    *    string repr, DuckDB the binary value — they disagree on
-    *    half-way points); identical IEEE expression trees are already
-    *    bitwise deterministic;
-    *  - every query ends in a total ORDER BY;
-    *  - counts cast to BIGINT on the DuckDB side (its SUM(int) is
-    *    HUGEINT), ranks cast to BIGINT on the Spark side.
+
+  /** Exact 2-decimal view of a money/quantity double. The source data
+    * is generated at 2 decimals, so this cast is lossless; decimal
+    * sums are associative → safe under Spark partial aggregation AND
+    * identical to DuckDB's sequential sum.
     */
-  val determinismNotes: String = "see scaladoc"
+  def dec(c: Column): Column = c.cast(DecimalType(18, 2))
+
+  /** Exact integer view for products of fixed-point lattice values
+    * that exceed 2⁶³ (DuckDB's HUGEINT side).
+    */
+  def dec38(c: Column): Column = c.cast(DecimalType(38, 0))
+
+  /** `o_totalprice` in integer cents. */
+  def cents: Column = (dec(col("o_totalprice")) * 100).cast(LongType)
+
+  /** Line revenue price·(1−disc) as exact DECIMAL(18,4). */
+  def rev: Column =
+    (dec(col("l_extendedprice")) * (dec(lit(1)) - dec(col("l_discount"))))
+      .cast(DecimalType(18, 4))
+
+  /** Fixed-point scale 2²⁰: float inputs are quantized as
+    * `floor(x·Q)` longs so every sum is exact integer arithmetic
+    * independent of partial-aggregation order; doubles appear only as
+    * a final cast/division/sqrt over those exact integers, where Spark
+    * and DuckDB evaluate identical IEEE trees.
+    */
+  val Q = 1048576L
+
+  /** 2⁴⁰ = Q², the de-quantization of a product of two lattice values. */
+  val Q2 = 1099511627776d
+
+  /** DECIMAL(·,4) → DOUBLE the way DuckDB does it: the unscaled
+    * integer converts first (one rounding — these squared-price sums
+    * exceed 2^53), then divides by 10⁴. Spark's native cast rounds
+    * the rational once (correctly), which differs by 1 ulp on some
+    * sums; the oracle can't be changed, so the engine reproduces the
+    * two-step here. Scale-2 money sums stay under 2^53 unscaled and
+    * are immune.
+    */
+  def d4ToDouble(c: Column): Column =
+    (c * lit(10000L)).cast(DecimalType(38, 0)).cast("double") / lit(10000.0d)
+
+  /** Scale-6 twin of [[d4ToDouble]] (sum of price·(1−disc)·(1+tax)). */
+  def d6ToDouble(c: Column): Column =
+    (c * lit(1000000L)).cast(DecimalType(38, 0)).cast("double") / lit(1000000.0d)
+
+  /** documents/embeddings ship as one small parquet file → one input
+    * partition, which would serialize the md5/shingle-heavy compute on
+    * a single core. Spread rows across the cluster first; results are
+    * partitioning-independent (everything aggregates + totally
+    * orders). At real scale the scan has natural parallelism and this
+    * becomes a no-op-sized shuffle.
+    */
+  def spread(s: SparkSession, df: DataFrame): DataFrame =
+    df.repartition(s.sparkContext.defaultParallelism)
+
+  /** Word tokens (documents.text is single-space separated). */
+  def toksOf(c: Column): Column = split(c, " ")
 
   /** Run `body` with a session conf pinned, restoring the prior value
     * (or unsetting it) afterwards, also when `body` throws — for gates

@@ -7,7 +7,7 @@ package graft.queries
   * sample-then-iterate — a deterministic id-prefix of the embedding
   * lattice stands in for the corpus-scale path, which draws the pool
   * through the q100 weight-proportional systematic sampler (see
-  * Round4Queries.q100) before the iteration ever starts. Keeping the
+  * TextGates.q100) before the iteration ever starts. Keeping the
   * pool rule a plain `vec_id < cap` predicate (rather than the
   * sampler's window walk) keeps each gate's DuckDB oracle an
   * identical one-line WHERE clause; the constants here make the

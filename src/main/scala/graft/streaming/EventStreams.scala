@@ -190,31 +190,28 @@ object EventStreams {
     * pairing the streaming engine's replay-stable batch ids with the
     * AggTable ledger, committed with the state: a
     * replayed batch after a crash is recognized and skipped
-    * ([[maintainAggregateBatch]] is the testable body).
+    * ([[maintainAggregateBatch]] is the testable body). One AggTable
+    * serves the stream, so its ledger is read once, not per batch.
     */
   def maintainAggregate(
       events: DataFrame,
       store: TableStore,
       table: String,
       spec: graft.store.AggSpec,
-      checkpointDir: String): StreamingQuery =
+      checkpointDir: String): StreamingQuery = {
+    val agg = new graft.store.AggTable(store, table, spec)
     events.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maintainAggregateBatch(store, table, spec, batch, batchId)
+        maintainAggregateBatch(agg, batch, batchId)
       }
       .start()
+  }
 
   /** The foreachBatch body of [[maintainAggregate]]. */
-  def maintainAggregateBatch(
-      store: TableStore,
-      table: String,
-      spec: graft.store.AggSpec,
-      batch: DataFrame,
-      batchId: Long): Unit = {
-    new graft.store.AggTable(store, table, spec)
-      .accumulate(s"stream_$batchId", batch)
+  def maintainAggregateBatch(agg: graft.store.AggTable, batch: DataFrame, batchId: Long): Unit = {
+    agg.accumulate(s"stream_$batchId", batch)
     ()
   }
 

@@ -18,6 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - A gate that reads a system property or environment variable has
   *    a second behaviour no bench or oracle run exercises, so nothing
   *    under `queries/` reads one.
+  *  - Gates are filed by family, and every family loads tables through
+  *    `graft.Tables.load` and takes the exact-arithmetic helpers from
+  *    `QueryDef`'s companion, so neither policy is copied per file.
   */
 class EntryPointAuditSpec extends AnyFunSuite {
 
@@ -65,6 +68,21 @@ class EntryPointAuditSpec extends AnyFunSuite {
     }
     assert(found.isEmpty,
       "gate code reads a system property or environment variable:\n" +
+        found.mkString("\n"))
+  }
+
+  test("gate files share one loader and one helper set and are not filed by round") {
+    val files = scalaFiles(root.resolve("queries"))
+    val byRound = files.map(_.getFileName.toString).filter(_.matches("""Round\d+Queries\.scala"""))
+    val copy = """\bdef t\(|\bdef dec\(|\bdef dec38\(|\bdef cents\b|\bval Q2? =""".r
+    val found = violations(files.filterNot(_.endsWith("QueryDef.scala"))) {
+      code => copy.findFirstIn(code).isDefined
+    }
+    assert(byRound.isEmpty,
+      "gate files named by round (file gates by family):\n" + byRound.mkString("\n"))
+    assert(found.isEmpty,
+      "a private table loader or exact-arithmetic helper copy (import " +
+        "graft.Tables.{load => t} and the QueryDef helpers instead):\n" +
         found.mkString("\n"))
   }
 }

@@ -85,12 +85,10 @@ class DegreeOrientationSpec extends SparkSpec {
     // pin the SOURCE (the KeyOrderedFold pattern): an inline id-ordered
     // rewrite in either gate would pass every hash gate and re-open
     // the single-task wedge blowup unseen
-    for (f <- Seq("src/main/scala/graft/queries/Round6Queries.scala",
-                  "src/main/scala/graft/queries/Round44Queries.scala")) {
-      val src = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(f)), "UTF-8")
+    for (gate <- Seq("q161", "q288")) {
+      val src = graft.queries.GateSource(gate)
       assert(src.contains("DegreeOrientation"),
-        s"$f no longer routes through DegreeOrientation.orient")
+        s"$gate no longer routes through DegreeOrientation.orient")
     }
   }
 }

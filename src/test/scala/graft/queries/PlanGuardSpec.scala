@@ -120,7 +120,7 @@ class PlanGuardSpec extends SparkSpec {
     // co-purchase pair. Checked on the UNCACHED builder: the served
     // frame is a session-scoped localCheckpoint (GraphGateSource),
     // whose visible plan is a checkpoint scan.
-    val plan = Round89Queries.buildRecs(spark, dir)
+    val plan = MlGates.buildRecs(spark, dir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("TopKPerKey"),
       "recs model lost the TopKPerKey bounded-heap top-3")
@@ -134,9 +134,7 @@ class PlanGuardSpec extends SparkSpec {
     // here is the CPU regression KeyOrderedFold removed. The gate's
     // half-steps sit behind lazy localCheckpoints (plan truncated),
     // so this pins the source, like the collect audit does.
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(
-        "src/main/scala/graft/queries/Round91Queries.scala")), "UTF-8")
+    val src = GateSource("q472")
     assert(src.contains("KeyOrderedFold.sum") &&
       src.contains("KeyOrderedFold.sumSq"),
       "q472 lost the codegen'd ordered folds")

@@ -2,8 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.streaming.EventStreams.{Event, Session}
@@ -397,9 +401,60 @@ class EventStreamsSpec extends SparkSpec {
 
     // crash-replay: the engine re-runs a batch id it already committed;
     // the ledger recognizes it and the view is unchanged
-    EventStreams.maintainAggregateBatch(store, "ev_stats", spec,
+    EventStreams.maintainAggregateBatch(new graft.store.AggTable(store, "ev_stats", spec),
       Seq(("click", 2.50)).toDF("event_type", "value"), batchId = 1L)
     assert(result() == before)
+  }
+
+  test("maintainAggregate reads the ledger once per stream, not once per batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("agg_store").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("agg_ckpt").toString
+    val store = new graft.store.TableStore(spark, root)
+    val spec = graft.store.AggSpec(Seq("event_type"), Seq("value"))
+    val input = MemoryStream[Event]
+    val query = EventStreams.maintainAggregate(input.toDF(), store, "ev_stats", spec, ckpt)
+    try {
+      input.addData(Event(1L, ts(1), "click", 1.50))
+      query.processAllAvailable()
+      // the table and its ledger exist now: a fresh AggTable per batch
+      // would collect the ledger again before folding the second batch
+      val actions = actionsDuring {
+        input.addData(Event(2L, ts(2), "view", 4.00))
+        query.processAllAvailable()
+      }
+      assert(actions.nonEmpty, "the second batch ran no action")
+      val ledgerReads = actions.filter(_ == ("collect" -> Seq("batch_id")))
+      assert(ledgerReads.isEmpty, s"the second batch re-read the ledger: $actions")
+    } finally query.stop()
+    val res = new graft.store.AggTable(store, "ev_stats", spec).result.get
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(res == Map("click" -> 1L, "view" -> 1L))
+  }
+
+  /** (action, output columns) of every Dataset action run on `spark`
+    * while `f` runs, on any thread. Events reach a listener in the
+    * order they were posted, so once a sentinel action run after `f`
+    * has been seen, every action `f` ran has been seen too.
+    */
+  private def actionsDuring(f: => Unit): Seq[(String, Seq[String])] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(action -> qe.analyzed.output.map(_.name))
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      spark.range(1).toDF("sentinel").collect()
+      val sentinel = "collect" -> Seq("sentinel")
+      val deadline = System.currentTimeMillis() + 20000
+      while (!seen.contains(sentinel) && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(seen.contains(sentinel), "sentinel action never seen")
+      seen.asScala.toSeq.filterNot(_ == sentinel)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("native session_window sessions match the custom sessionize semantics") {
