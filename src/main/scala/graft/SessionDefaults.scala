@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.plans.GraftExtensions
+
 /** The engine's baseline session configuration, in ONE place so every
   * entry point — Bench, Verify, dev/Probe and the pipeline Main —
   * plans queries the same way. Round-11's review flagged that
@@ -26,6 +28,19 @@ import org.apache.spark.sql.SparkSession
   *    compilation mid-run (any long-lived session hits this, not just
   *    the bench).
   *  - UTC session timezone: the engine-wide determinism contract.
+  *  - `parquet.nanosAsLong`: INT64 `TIMESTAMP(NANOS)` columns read as
+  *    raw longs, which [[Tables]] converts to micros (`events.ts`).
+  *    A session-wide conf, so how a session decodes such a file never
+  *    depends on whether some earlier call loaded `events`.
+  *
+  * The engine's optimizer rules and planner strategy are installed
+  * here too, once per session: [[apply]] adds
+  * [[graft.plans.GraftExtensions]] (`RangeJoinRewrite`, inert unless
+  * `spark.graft.rangeJoin.enabled=true`; `MatViewRewrite`, inert while
+  * nothing is registered; `TopKPerKeyStrategy`, which plans only its
+  * own node). The `graft.functions` handles build their expressions
+  * directly and need no registration, so no gate or Column handle
+  * changes the session it runs on.
   */
 object SessionDefaults {
 
@@ -35,13 +50,16 @@ object SessionDefaults {
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     "spark.sql.join.preferSortMergeJoin" -> "false",
     "spark.sql.codegen.cache.maxEntries" -> "2000",
-    "spark.sql.session.timeZone" -> "UTC")
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
-  /** Apply [[sqlConfs]] to a builder the caller already shaped
-    * (master, app name, extra confs).
+  /** Apply [[sqlConfs]] and the engine extensions to a builder the
+    * caller already shaped (master, app name, extra confs).
     */
   def apply(builder: SparkSession.Builder): SparkSession.Builder =
-    sqlConfs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+    sqlConfs.foldLeft(builder.withExtensions(new GraftExtensions())) {
+      case (b, (k, v)) => b.config(k, v)
+    }
 
   /** The standard local entry-point builder: `local[cpus]` with the
     * shuffle fan-out sized to the core count (the driver's

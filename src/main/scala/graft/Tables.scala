@@ -47,14 +47,14 @@ object Tables {
 
   private def doLoad(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.parquet's ts has varied across driver testdata versions:
-    // INT64 TIMESTAMP(NANOS) (Spark reads it only as raw longs under
-    // nanosAsLong), or micros without isAdjustedToUTC (Spark 4 infers
+    // INT64 TIMESTAMP(NANOS) (Spark reads it only as raw longs, under
+    // the nanosAsLong conf SessionDefaults sets on every session), or
+    // micros without isAdjustedToUTC (Spark 4 infers
     // TIMESTAMP_NTZ, which unix_micros & friends reject). Normalize
     // both to a plain session-TZ TimestampType — the session is pinned
     // UTC, so the NTZ cast is value-identity, matching how the DuckDB
     // oracle reads the same file (naive TIMESTAMP).
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case LongType =>

@@ -53,7 +53,7 @@ object BucketedPairs {
     require(cap >= 2, "cap must allow pairs within a chunk")
     val spark = buckets.sparkSession
     def pairs(df: DataFrame, c: Column): DataFrame = df
-      .select(explode(graft.functions.OrderedPairs(spark, c)).as("p"))
+      .select(explode(graft.functions.OrderedPairs(c)).as("p"))
       .select(col("p.a").as("a_id"), col("p.b").as("b_id"))
     val light = pairs(buckets.filter(size(col(dsCol)) <= cap), col(dsCol))
     val chunks = chunkFrame(buckets, keyCol, dsCol, cap)

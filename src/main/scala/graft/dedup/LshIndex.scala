@@ -79,7 +79,7 @@ object LshIndex {
   def bands(docs: DataFrame, nHashes: Int = 8, bandSize: Int = 2): DataFrame = {
     val spark = docs.sparkSession
     bandsFromPostings(docs.select(col("doc_id"),
-      explode(graft.functions.WordShingles(spark, col("text"), 3)).as("s")),
+      explode(graft.functions.WordShingles(col("text"), 3)).as("s")),
       nHashes, bandSize)
   }
 
@@ -93,7 +93,7 @@ object LshIndex {
       sh: DataFrame, nHashes: Int = 8, bandSize: Int = 2): DataFrame = {
     require(nHashes % bandSize == 0, "nHashes must be a multiple of bandSize")
     val sig = sh.groupBy("doc_id")
-      .agg(graft.functions.MinHashSignature(sh.sparkSession, col("s"), nHashes).as("sig"))
+      .agg(graft.functions.MinHashSignature(col("s"), nHashes).as("sig"))
       .select(col("doc_id") +:
         (0 until nHashes).map(j => element_at(col("sig"), j + 1).as(s"h$j")): _*)
     val bandCols = (0 until nHashes / bandSize).map { b =>

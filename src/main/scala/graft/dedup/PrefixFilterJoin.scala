@@ -58,7 +58,7 @@ object PrefixFilterJoin {
       thetaNum: Int,
       thetaDen: Int): DataFrame =
     setSelfJoin(docs, idCol,
-      graft.functions.WordShingles(docs.sparkSession, col(textCol), n),
+      graft.functions.WordShingles(col(textCol), n),
       thetaNum, thetaDen)
 
   /** All unordered pairs (a_id < b_id) whose de-duplicated

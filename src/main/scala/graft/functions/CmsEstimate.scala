@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.CountMinSketch
@@ -65,14 +64,9 @@ case class CmsEstimate(left: Expression, right: Expression)
 }
 
 object CmsEstimate {
-  private val name = "graft_cms_estimate"
-
-  def register(spark: SparkSession): Unit =
-    Registry.once(spark, name)(exprs => CmsEstimate(exprs.head, exprs(1)))
 
   /** Column handle: estimated count of `item` in `sketch`. */
-  def apply(spark: SparkSession, sketch: Column, item: Column): Column = {
-    register(spark)
-    call_function(name, sketch, item)
-  }
+  def apply(sketch: Column, item: Column): Column =
+    GraftPlanBridge.column(CmsEstimate(
+      GraftPlanBridge.expression(sketch), GraftPlanBridge.expression(item)))
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native codegen'd cosine similarity over two float-vector columns.
@@ -86,16 +85,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  private val name = "graft_cosine_similarity"
 
-  /** Register in the session's function registry (idempotent) and
-    * return a Column-level handle.
-    */
-  def register(spark: SparkSession): Unit =
-    Registry.once(spark, name)(exprs => CosineSimilarity(exprs.head, exprs(1)))
-
-  def apply(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function(name, a, b)
-  }
+  /** Column handle: cosine similarity of the vectors `a` and `b`. */
+  def apply(a: Column, b: Column): Column =
+    GraftPlanBridge.column(CosineSimilarity(
+      GraftPlanBridge.expression(a), GraftPlanBridge.expression(b)))
 }

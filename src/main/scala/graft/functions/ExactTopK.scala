@@ -4,12 +4,11 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Exact top-`k` largest LONG values per group as ONE mergeable
@@ -72,7 +71,7 @@ case class ExactTopK(
 
   // evaluate from a clone: dequeueAll drains the queue, and eval must
   // leave the buffer intact for contexts that evaluate it repeatedly
-  // (e.g. a running window frame over the session-registered function)
+  // (e.g. a running window frame)
   override def eval(heap: mutable.PriorityQueue[Long]): Any =
     new GenericArrayData(heap.clone().dequeueAll.reverse.toArray)
 
@@ -103,22 +102,9 @@ case class ExactTopK(
 }
 
 object ExactTopK {
-  // k is part of the name: temp-function registration is
-  // session-global by name and the builder bakes k into its closure
-  // (the WordShingles lesson — see its scaladoc)
-  private def nameFor(k: Int) = s"graft_exact_topk_$k"
-
-  def register(spark: SparkSession, k: Int): Unit = {
-    val fn = org.apache.spark.sql.catalyst.FunctionIdentifier(nameFor(k))
-    if (!spark.sessionState.functionRegistry.functionExists(fn))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        nameFor(k), exprs => ExactTopK(exprs.head, k).toAggregateExpression(),
-        "built-in")
-  }
 
   /** Aggregate Column: the `k` largest values of `c`, descending. */
-  def apply(spark: SparkSession, c: Column, k: Int): Column = {
-    register(spark, k)
-    call_function(nameFor(k), c)
-  }
+  def apply(c: Column, k: Int): Column =
+    GraftPlanBridge.column(
+      ExactTopK(GraftPlanBridge.expression(c), k).toAggregateExpression())
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructType}
 
 /** Ordered left fold of an `array<struct<key: bigint, v: double>>`:
@@ -139,23 +138,11 @@ object KeyOrderedFold {
     val tv = vals(i); vals(i) = vals(j); vals(j) = tv
   }
 
-  private val sumName = "graft_key_ordered_sum"
-  private val sumSqName = "graft_key_ordered_sumsq"
-
-  def register(spark: SparkSession): Unit = {
-    Registry.once(spark, sumName)(exprs => KeyOrderedFold(exprs.head, squared = false))
-    Registry.once(spark, sumSqName)(exprs => KeyOrderedFold(exprs.head, squared = true))
-  }
-
   /** Σ v in ascending-key order over `array<struct<bigint, double>>`. */
-  def sum(spark: SparkSession, arr: Column): Column = {
-    register(spark)
-    call_function(sumName, arr)
-  }
+  def sum(arr: Column): Column =
+    GraftPlanBridge.column(KeyOrderedFold(GraftPlanBridge.expression(arr), squared = false))
 
   /** Σ v² in ascending-key order (caller applies sqrt for norms). */
-  def sumSq(spark: SparkSession, arr: Column): Column = {
-    register(spark)
-    call_function(sumSqName, arr)
-  }
+  def sumSq(arr: Column): Column =
+    GraftPlanBridge.column(KeyOrderedFold(GraftPlanBridge.expression(arr), squared = true))
 }

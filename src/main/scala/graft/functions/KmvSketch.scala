@@ -4,7 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -116,25 +116,12 @@ object Kmv {
   def hash60(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast(LongType)
 
-  // k is part of the registered name: registration is session-global
-  // and the builder bakes k into its closure (the WordShingles lesson)
-  private def nameFor(k: Int) = s"graft_kmv_mink_$k"
-
-  def register(spark: SparkSession, k: Int): Unit = {
-    val fn = org.apache.spark.sql.catalyst.FunctionIdentifier(nameFor(k))
-    if (!spark.sessionState.functionRegistry.functionExists(fn))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        nameFor(k), exprs => KmvMinK(exprs.head, k).toAggregateExpression(),
-        "built-in")
-  }
-
   /** Aggregate Column: the `k` smallest distinct hashes of `hashed`
     * (a [[hash60]] column), ascending.
     */
-  def sketch(spark: SparkSession, hashed: Column, k: Int): Column = {
-    register(spark, k)
-    call_function(nameFor(k), hashed)
-  }
+  def sketch(hashed: Column, k: Int): Column =
+    GraftPlanBridge.column(
+      KmvMinK(GraftPlanBridge.expression(hashed), k).toAggregateExpression())
 
   /** Distinct-count estimate from a sketch array: exact size below
     * `k` (the sketch IS the distinct set), else (k−1)·2^60/h_k.

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType, StringType}
 
 /** MinHash signature as a single declarative aggregate: one buffer
@@ -76,19 +75,9 @@ case class MinHashSignature(child: Expression, nHashes: Int)
 }
 
 object MinHashSignature {
-  // nHashes is baked into the builder closure, so the registered name
-  // must carry it — a fixed name + once-per-session guard would pin
-  // the FIRST caller's nHashes for every later caller (the
-  // WordShingles/KmvSketch lesson).
-  private def nameFor(nHashes: Int) = s"graft_minhash_signature_$nHashes"
-
-  def register(spark: SparkSession, nHashes: Int): Unit =
-    Registry.once(spark, nameFor(nHashes))(
-      exprs => MinHashSignature(exprs.head, nHashes).toAggregateExpression())
 
   /** Aggregate Column: array of `nHashes` minhash hex strings. */
-  def apply(spark: SparkSession, c: Column, nHashes: Int): Column = {
-    register(spark, nHashes)
-    call_function(nameFor(nHashes), c)
-  }
+  def apply(c: Column, nHashes: Int): Column =
+    GraftPlanBridge.column(
+      MinHashSignature(GraftPlanBridge.expression(c), nHashes).toAggregateExpression())
 }

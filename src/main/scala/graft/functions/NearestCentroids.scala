@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, typedLit}
+import org.apache.spark.sql.functions.typedLit
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** Native codegen'd per-subspace nearest-centroid assignment — the
@@ -162,20 +162,12 @@ case class NearestCentroids(left: Expression, right: Expression)
 }
 
 object NearestCentroids {
-  private val name = "graft_nearest_centroids"
-
-  /** Register in the session's function registry (idempotent; the
-    * codebook travels as a literal ARGUMENT, so one registration
-    * serves every model).
-    */
-  def register(spark: SparkSession): Unit =
-    Registry.once(spark, name)(exprs => NearestCentroids(exprs.head, exprs(1)))
 
   /** Column handle: 0-based per-subspace nearest-centroid indices of
-    * `vec` against `book` (m × k × subDim).
+    * `vec` against `book` (m × k × subDim), which travels as a literal
+    * argument.
     */
-  def apply(spark: SparkSession, vec: Column, book: Seq[Seq[Seq[Double]]]): Column = {
-    register(spark)
-    call_function(name, vec, typedLit(book))
-  }
+  def apply(vec: Column, book: Seq[Seq[Seq[Double]]]): Column =
+    GraftPlanBridge.column(NearestCentroids(
+      GraftPlanBridge.expression(vec), GraftPlanBridge.expression(typedLit(book))))
 }

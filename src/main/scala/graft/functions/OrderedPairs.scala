@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native codegen'd ordered-pair expansion of a posting list — the
@@ -91,8 +90,6 @@ case class OrderedPairs(child: Expression) extends UnaryExpression {
 }
 
 object OrderedPairs {
-  private val name = "graft_ordered_pairs"
-
   /** Pair count n·(n-1)/2 computed in Long arithmetic — `Int`
     * arithmetic overflows (negative allocation size) from n ≈ 46 341,
     * and caller-side posting-list caps are a convention, not a bound.
@@ -106,13 +103,7 @@ object OrderedPairs {
     pairs.toInt
   }
 
-  /** Register in the session's function registry (once per session). */
-  def register(spark: SparkSession): Unit =
-    Registry.once(spark, name)(exprs => OrderedPairs(exprs.head))
-
   /** Column handle: array<struct<a, b>> of all ordered (i < j) pairs. */
-  def apply(spark: SparkSession, ds: Column): Column = {
-    register(spark)
-    call_function(name, ds)
-  }
+  def apply(ds: Column): Column =
+    GraftPlanBridge.column(OrderedPairs(GraftPlanBridge.expression(ds)))
 }

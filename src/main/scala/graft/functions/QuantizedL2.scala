@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** Native codegen'd quantized squared L2 distance over two
@@ -95,13 +94,8 @@ object QuantizedL2 {
   /** 2²⁰ — the shared quantization lattice. */
   val Q: Double = 1048576.0d
 
-  private val name = "graft_quantized_l2sq"
-
-  def register(spark: SparkSession): Unit =
-    Registry.once(spark, name)(exprs => QuantizedL2(exprs.head, exprs(1)))
-
-  def apply(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function(name, a, b)
-  }
+  /** Column handle: squared L2 distance of `a` and `b` on the lattice. */
+  def apply(a: Column, b: Column): Column =
+    GraftPlanBridge.column(QuantizedL2(
+      GraftPlanBridge.expression(a), GraftPlanBridge.expression(b)))
 }

@@ -2,11 +2,10 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -51,8 +50,6 @@ case class StripAccents(child: Expression) extends UnaryExpression {
 }
 
 object StripAccents {
-  private val name = "graft_strip_accents"
-
   /** Kernel, also called from generated code. */
   def compute(s: UTF8String): UTF8String = {
     // ASCII fast path: no byte has the high bit set → nothing to strip
@@ -72,16 +69,7 @@ object StripAccents {
     UTF8String.fromString(sb.toString)
   }
 
-  def register(spark: SparkSession): Unit = {
-    val fn = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-    if (!spark.sessionState.functionRegistry.functionExists(fn))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => StripAccents(exprs.head), "built-in")
-  }
-
   /** Column handle: `c` with diacritics removed. */
-  def apply(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function(name, c)
-  }
+  def apply(c: Column): Column =
+    GraftPlanBridge.column(StripAccents(GraftPlanBridge.expression(c)))
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -49,11 +48,6 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object WordShingles {
-  // n is baked into the registered builder's closure, and temp-function
-  // registration is session-global by NAME — so the name must encode n,
-  // or apply(_, _, 4) after apply(_, _, 3) would silently re-point
-  // already-built (lazily analyzed) Columns at the wrong shingle size.
-  private def nameFor(n: Int) = s"graft_word_shingles_$n"
 
   /** Shingling kernel, also called from generated code. Space is
     * ASCII, so byte offsets of ' ' are always character boundaries in
@@ -88,16 +82,7 @@ object WordShingles {
     new GenericArrayData(out)
   }
 
-  def register(spark: SparkSession, n: Int): Unit = {
-    val fn = org.apache.spark.sql.catalyst.FunctionIdentifier(nameFor(n))
-    if (!spark.sessionState.functionRegistry.functionExists(fn))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        nameFor(n), exprs => WordShingles(exprs.head, n), "built-in")
-  }
-
   /** Column handle: array of word `n`-grams of `c`. */
-  def apply(spark: SparkSession, c: Column, n: Int): Column = {
-    register(spark, n)
-    call_function(nameFor(n), c)
-  }
+  def apply(c: Column, n: Int): Column =
+    GraftPlanBridge.column(WordShingles(GraftPlanBridge.expression(c), n))
 }

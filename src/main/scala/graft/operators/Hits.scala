@@ -124,15 +124,12 @@ object Hits {
     */
   private def broadcastAuthorities(
       edges: DataFrame, iters: Int, parts: Int): DataFrame = {
-    val s = edges.sparkSession
     val eP = edges.repartition(parts, col("p")).persist()
     val eU = edges.repartition(parts, col("u")).persist()
     def foldSum(key: String, v: String): Column =
-      graft.functions.KeyOrderedFold.sum(
-        s, collect_list(struct(col(key), col(v))))
+      graft.functions.KeyOrderedFold.sum(collect_list(struct(col(key), col(v))))
     def foldSumSq(key: String, v: String): Column =
-      sqrt(graft.functions.KeyOrderedFold.sumSq(
-        s, collect_list(struct(col(key), col(v)))))
+      sqrt(graft.functions.KeyOrderedFold.sumSq(collect_list(struct(col(key), col(v)))))
     var h = eU.select("u").distinct()
       .select(col("u"), lit(1.0).as("h")).localCheckpoint()
     var a: DataFrame = null

@@ -182,7 +182,7 @@ object CorpusCuration {
     // corpus-row-sized with one string per doc, and its recompute is
     // the expensive normalization itself, not a cheap re-aggregate.)
     val norm = docs.select(col("doc_id"),
-      trim(regexp_replace(StripAccents(spark, lower(col("text"))), " +", " "))
+      trim(regexp_replace(StripAccents(lower(col("text"))), " +", " "))
         .as("ntext"))
       .localCheckpoint()
 
@@ -224,7 +224,7 @@ object CorpusCuration {
     val surv = exact.filter(!col("is_exact_dup")).select("doc_id")
     val sh = norm.join(surv, "doc_id")
       .select(col("doc_id"),
-        explode(array_distinct(WordShingles(spark, col("ntext"), 3))).as("s"))
+        explode(array_distinct(WordShingles(col("ntext"), 3))).as("s"))
       .localCheckpoint()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val pairs = NearDupCandidates.resolve(cfg.candidates, sh, cfg.maxPostingLen) match {
@@ -313,7 +313,7 @@ object CorpusCuration {
     val spark = docs.sparkSession
     docs.join(audit(docs, cfg).filter(col("kept")).select("doc_id"), "doc_id")
       .select(col("doc_id"),
-        trim(regexp_replace(StripAccents(spark, lower(col("text"))), " +", " "))
+        trim(regexp_replace(StripAccents(lower(col("text"))), " +", " "))
           .as("text"))
   }
 }

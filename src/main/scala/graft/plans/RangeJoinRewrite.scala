@@ -25,9 +25,12 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * original predicate non-true (row never matches), and here makes
   * the bin array null so `Generate` emits nothing — same result.
   *
-  * Activate per session via `spark.experimental.extraOptimizations
-  * +:= RangeJoinRewrite` or cluster-wide with
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. Bin width:
+  * Opt-in by key: every session built through [[graft.SessionDefaults]]
+  * carries the rule (via [[GraftExtensions]]), and it rewrites only
+  * while `spark.graft.rangeJoin.enabled=true` (default false). Left on
+  * in every session it would rewrite the paper's own Q6 overlap join
+  * (`NsQueries.overlapping`), where one interval longer than the
+  * fan-out bound below would fail the query. Bin width:
   * `spark.graft.rangeJoin.binMinutes` (default 360).
   *
   * Fan-out bound: each row may explode into at most
@@ -90,7 +93,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString(enabledKey, "true") != "true") return plan
+    if (conf.getConfString(enabledKey, "false") != "true") return plan
     val binMicros =
       conf.getConfString(binMinutesKey, "360").toLong * 60000000L
     val maxBins = conf.getConfString(maxBinsKey, "2048").toLong
@@ -149,8 +152,11 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
   }
 }
 
-/** `spark.sql.extensions` entry point registering the overlap-join
-  * rewrite rule and the per-key top-k planner strategy.
+/** The engine's session extensions: the overlap-join rewrite and the
+  * materialized-view rewrite (optimizer rules) and the per-key top-k
+  * planner strategy. [[graft.SessionDefaults]] installs them in every
+  * session it builds; elsewhere bind them with
+  * `spark.sql.extensions=graft.plans.GraftExtensions` at submit time.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -49,7 +49,6 @@ object TopKPerKey {
       rankName: String = "rk"): DataFrame = {
     require(k > 0, "k must be positive")
     val spark = df.sparkSession
-    GraftPlanBridge.addStrategy(spark, TopKPerKeyStrategy)
     val analyzed = df.queryExecution.analyzed
 
     def resolve(e: Expression): Expression = e.transformUp {
@@ -84,7 +83,8 @@ case class TopKPerKeyPlan(
 }
 
 /** Plans the logical node as partial-then-final, mirroring the
-  * two-phase shape of hash aggregation.
+  * two-phase shape of hash aggregation. Installed in every engine
+  * session by [[GraftExtensions]] (through [[graft.SessionDefaults]]).
   */
 object TopKPerKeyStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

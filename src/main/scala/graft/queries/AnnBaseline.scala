@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The ANN gates' shared exact-search half.
@@ -44,13 +44,12 @@ object AnnBaseline {
     * (q_id, n_id, cos_bf, `rankName`).
     */
   def bruteForceTopK(
-      s: SparkSession,
       emb: DataFrame,
       queries: DataFrame,
       k: Int,
       rankName: String): DataFrame = {
     val cos: Column =
-      graft.functions.CosineSimilarity(s, col("q_emb"), col("embedding"))
+      graft.functions.CosineSimilarity(col("q_emb"), col("embedding"))
     val scoredAll = emb.crossJoin(broadcast(queries))
       .filter(col("q_id") =!= col("vec_id"))
       .withColumn("cos_bf", cos)

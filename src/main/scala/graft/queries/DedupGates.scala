@@ -49,7 +49,7 @@ object DedupGates {
     d.select(
       col("doc_id"),
       explode(array_distinct(
-        graft.functions.WordShingles(d.sparkSession, col("text"), 3))).as("s"))
+        graft.functions.WordShingles(col("text"), 3))).as("s"))
 
   /** DuckDB twin of [[shingles]] as a CTE body. */
   private val shinglesSql: String =
@@ -109,7 +109,7 @@ object DedupGates {
       val pairs = sh.groupBy("s")
         .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
         .filter(size(ds).between(2, 1000))
-        .select(explode(graft.functions.OrderedPairs(sh.sparkSession, ds)).as("p"))
+        .select(explode(graft.functions.OrderedPairs(ds)).as("p"))
         .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(count(lit(1)).as("common"))
@@ -160,12 +160,12 @@ object DedupGates {
   private val bandSize = 2
 
   /** q23's banded-LSH candidate pipeline over prebuilt postings. */
-  private[queries] def lshCandidatesFrom(s: SparkSession, sh: DataFrame): DataFrame = {
+  private[queries] def lshCandidatesFrom(sh: DataFrame): DataFrame = {
       // Whole signature in ONE custom DeclarativeAggregate buffer
       // (graft.functions.MinHashSignature) — the oracle below proves
       // it equals nHashes independent min(md5) aggregates.
       val sig = sh.groupBy("doc_id")
-        .agg(graft.functions.MinHashSignature(s, col("s"), nHashes).as("sig"))
+        .agg(graft.functions.MinHashSignature(col("s"), nHashes).as("sig"))
         .select(col("doc_id") +:
           (0 until nHashes).map(j => element_at(col("sig"), j + 1).as(s"h$j")): _*)
       val bandCols = (0 until nHashes / bandSize).map { b =>
@@ -183,7 +183,7 @@ object DedupGates {
 
   private val q23 = QueryDef(
     "q23_minhash_lsh",
-    (s, dir) => lshCandidatesFrom(s, shinglePostings(s, dir)),
+    (s, dir) => lshCandidatesFrom(shinglePostings(s, dir)),
     Some {
       val hs = (0 until nHashes)
         .map(j => s"min(substr(md5('$j:' || s), 1, 15)) AS h$j").mkString(", ")
@@ -263,7 +263,7 @@ object DedupGates {
       val sh = shingles(spread(s, t(s, dir, "documents"))).persist()
       // candidates via banded MinHash (as q23)
       val sig = sh.groupBy("doc_id")
-        .agg(graft.functions.MinHashSignature(s, col("s"), nHashes).as("sig"))
+        .agg(graft.functions.MinHashSignature(col("s"), nHashes).as("sig"))
         .select(col("doc_id") +:
           (0 until nHashes).map(j => element_at(col("sig"), j + 1).as(s"h$j")): _*)
       val bandCols = (0 until nHashes / bandSize).map { b =>
@@ -503,7 +503,7 @@ object DedupGates {
           when(element_at(emb, d) >= 0, "1").otherwise("0")): _*)
       val b = e.select(col("vec_id"), col("embedding"),
         bucketOf(col("embedding")).as("bucket"))
-      val cos = graft.functions.CosineSimilarity(s, col("a_emb"), col("b_emb"))
+      val cos = graft.functions.CosineSimilarity(col("a_emb"), col("b_emb"))
       b.select(col("vec_id").as("id_a"), col("embedding").as("a_emb"), col("bucket"))
         .join(b.select(col("vec_id").as("id_b"), col("embedding").as("b_emb"), col("bucket")),
           Seq("bucket"))
@@ -578,7 +578,7 @@ object DedupGates {
       // replaced (a (doc, shingle) dup can only arise within one doc)
       val sh = GraphGateSource.cached(s, "shingle-distinct:" + dir)(
         t(s, dir, "documents").select(col("doc_id"),
-          explode(graft.functions.WordShingles(s, col("text"), 3))
+          explode(graft.functions.WordShingles(col("text"), 3))
             .as("s")).distinct())
         .withColumnRenamed("s", "sh")
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
@@ -586,7 +586,7 @@ object DedupGates {
       val half = sh.groupBy("sh")
         .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
         .filter(size(ds).between(2, 100000))
-        .select(explode(graft.functions.OrderedPairs(s, ds)).as("p"))
+        .select(explode(graft.functions.OrderedPairs(ds)).as("p"))
         .groupBy(col("p.a").as("a_id"), col("p.b").as("b_id"))
         .agg(count(lit(1)).as("shared"))
       val pairs = half.unionAll(half.select(
@@ -682,9 +682,9 @@ object DedupGates {
       ORDER BY a_id, b_id"""),
     covers = Seq("T-dedup-prefix", "J2"))
 
-  private def shingles5(s: SparkSession, d: DataFrame): DataFrame =
+  private def shingles5(d: DataFrame): DataFrame =
     d.select(col("doc_id"),
-        explode(graft.functions.WordShingles(s, col("text"), 5)).as("s"))
+        explode(graft.functions.WordShingles(col("text"), 5)).as("s"))
       .distinct()
 
   private val sh5Sql =
@@ -705,7 +705,7 @@ object DedupGates {
   private val q157 = QueryDef(
     "q157_dup_spans",
     (s, dir) => {
-      val sh = shingles5(s, t(s, dir, "documents"))
+      val sh = shingles5(t(s, dir, "documents"))
       // a shingle is shared if its posting list has ≥2 docs; count per
       // doc how many of ITS shingles are shared. One aggregate over
       // the postings (carrying each shingle's doc count back to its
@@ -749,7 +749,7 @@ object DedupGates {
         posexplode(col("tk")).as(Seq("pos0", "term")))
       val grams = docs
         .select(col("doc_id"),
-          posexplode(graft.functions.WordShingles(s, col("text"), 5))
+          posexplode(graft.functions.WordShingles(col("text"), 5))
             .as(Seq("gpos0", "g")))
       val shared = grams.groupBy("g")
         .agg(countDistinct(col("doc_id")).as("nd"))
@@ -926,10 +926,10 @@ object DedupGates {
       // blocks store + re-read, r11 A/B.)
       val sh = d.select(col("doc_id"),
           explode(array_distinct(
-            graft.functions.WordShingles(s, col("text"), 3))).as("sh"))
+            graft.functions.WordShingles(col("text"), 3))).as("sh"))
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
       val sig = sh.groupBy("doc_id")
-        .agg(graft.functions.MinHashSignature(s, col("sh"), nH).as("sig"))
+        .agg(graft.functions.MinHashSignature(col("sh"), nH).as("sig"))
       val a = sig.filter(col("doc_id") % 10 === 0)
         .select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))
       val b = sig.select((col("doc_id") - 1).as("doc_a"),
@@ -1082,7 +1082,7 @@ object DedupGates {
       val truth = GraphGateSource.cached(s, "q22-pairs:" + dir)(
           q22.run(s, dir))
         .select(col("doc_a"), col("doc_b"), lit(1L).as("is_truth"))
-      val cand = lshCandidatesFrom(s, sh)
+      val cand = lshCandidatesFrom(sh)
         .select(col("doc_a"), col("doc_b"), lit(1L).as("is_cand"))
       val merged = truth.join(cand, Seq("doc_a", "doc_b"), "full_outer")
         .select(coalesce(col("is_truth"), lit(0L)).as("is_truth"),
@@ -1191,7 +1191,7 @@ object DedupGates {
     (s, dir) => {
       val d = t(s, dir, "documents")
       val sh = d.select(col("doc_id"),
-        explode(graft.functions.WordShingles(d.sparkSession, col("text"), 3)).as("s"))
+        explode(graft.functions.WordShingles(col("text"), 3)).as("s"))
       val sig = sh.groupBy("doc_id")
         .agg((0 until 8).map(j =>
           min(substring(md5(concat(lit(s"$j:"), col("s"))), 1, 15)).as(s"h$j")).head,
@@ -1632,7 +1632,7 @@ object DedupGates {
       // their own (their bench timings stay honest)
       val sh = GraphGateSource.cached(s, "shingle-distinct:" + dir)(
         t(s, dir, "documents").select(col("doc_id"),
-          explode(graft.functions.WordShingles(s, col("text"), 3))
+          explode(graft.functions.WordShingles(col("text"), 3))
             .as("s")).distinct())
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
       val common = sh.as("a").join(sh.as("b"),
@@ -1692,7 +1692,7 @@ object DedupGates {
           Seq(col("doc_id")), "decile")
         .withColumn("decile", col("decile").cast(LongType))
       val sh = d.select(col("doc_id"),
-        explode(graft.functions.WordShingles(d.sparkSession, col("text"), 3))
+        explode(graft.functions.WordShingles(col("text"), 3))
           .as("s")).distinct()
       val firstOwner = sh.groupBy("s").agg(min(col("doc_id")).as("first_doc"))
       val inst = sh.join(firstOwner, Seq("s"))

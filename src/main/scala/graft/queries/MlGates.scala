@@ -1150,8 +1150,7 @@ object MlGates {
       val d2 = vecs.as("a")
         .join(broadcast(vecs.as("b")), col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
-          graft.functions.QuantizedL2(s, col("a.embedding"),
-            col("b.embedding")).as("d2"))
+          graft.functions.QuantizedL2(col("a.embedding"), col("b.embedding")).as("d2"))
         .localCheckpoint()
       val eps = d2.agg(
         expr("percentile_disc(0.05) WITHIN GROUP (ORDER BY d2)")

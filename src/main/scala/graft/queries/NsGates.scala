@@ -502,16 +502,15 @@ object NsGates {
   // --------------------------------------------- Q6 via the optimizer rule
   // Same query and oracle as q36, but the Spark side writes the NAIVE
   // overlap theta self-join and lets [[graft.plans.RangeJoinRewrite]]
-  // — installed the way a live session gets it (extraOptimizations,
-  // the runtime form of `spark.sql.extensions=graft.plans.
-  // GraftExtensions`; GraftExtensionsSpec covers the builder-time
-  // injection of the same rule object) — rewrite it into the binned
-  // equi-join. The gate fails loudly if the rewrite did NOT fire (no
-  // bin Generate in the optimized plan, or a nested-loop join
-  // survived physical planning), then hash-matches q36's oracle: the
-  // extension path provably delivers the same pairs as the explicit
-  // [[graft.operators.RangeJoin]] call. Executed eagerly so the rule
-  // and conf are uninstalled before any neighbor gate plans.
+  // — installed in every session by SessionDefaults, and switched on
+  // here by its `enabled` key — rewrite it into the binned equi-join.
+  // The gate fails loudly if the rewrite did NOT fire (no bin Generate
+  // in the optimized plan, or a nested-loop join survived physical
+  // planning), then hash-matches q36's oracle: the extension path
+  // provably delivers the same pairs as the explicit
+  // [[graft.operators.RangeJoin]] call. Executed eagerly so the
+  // rewrite's keys are back at their session values before any
+  // neighbor gate plans.
   private val q531 = QueryDef(
     "q531_overlap_via_extension",
     (s, dir) => {
@@ -525,10 +524,8 @@ object NsGates {
         col("type").as(s"${p}_type"),
         col("start_time").as(s"${p}_start_time"),
         col("end_time").as(s"${p}_end_time"))
-      QueryDef.withConf(s, RangeJoinRewrite.binMinutesKey, "120") {
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ RangeJoinRewrite
-        try {
+      QueryDef.withConf(s, RangeJoinRewrite.enabledKey, "true") {
+        QueryDef.withConf(s, RangeJoinRewrite.binMinutesKey, "120") {
           val joined = side("a").join(side("b"),
             col("a_disruption_id") < col("b_disruption_id") &&
               col("a_start_time") < col("b_end_time") &&
@@ -558,12 +555,11 @@ object NsGates {
             !phys.contains("CartesianProduct"),
             "rewritten overlap join still plans a nested-loop join")
           // bounded-collect: LIMIT 50 rows — executed eagerly so the
-          // optimizer rule can be uninstalled before any neighbor plans
+          // rewrite is switched off again before any neighbor plans
           val rows = q.collect().toSeq
           s.createDataFrame(s.sparkContext.parallelize(rows, 1), q.schema)
             .orderBy(desc("overlap_minutes"), asc("disruption_a"), asc("disruption_b"))
-        } finally s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations.filterNot(_ == RangeJoinRewrite)
+        }
       }
     },
     Some(s"""WITH $disruptionsSql

@@ -3833,7 +3833,7 @@ object RelationalGates {
         .select(col("o_orderpriority"), cents.as("cents"))
         .groupBy("o_orderpriority")
         .agg(
-          graft.functions.ExactTopK(s, col("cents"), 3).as("topk"),
+          graft.functions.ExactTopK(col("cents"), 3).as("topk"),
           count(lit(1)).as("n"))
         .select(col("o_orderpriority"),
           array_join(transform(col("topk"), _.cast("string")), ",").as("top3"),

@@ -37,7 +37,7 @@ object SimilarityGates {
       val c = e.select(
         col("vec_id").as("n_id"), col("label").as("n_label"),
         col("embedding").as("n_emb"))
-      val cos = graft.functions.CosineSimilarity(s, col("q_emb"), col("n_emb"))
+      val cos = graft.functions.CosineSimilarity(col("q_emb"), col("n_emb"))
       val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("n_id"))
       c.crossJoin(broadcast(q))
         .filter(col("q_id") =!= col("n_id"))
@@ -91,7 +91,7 @@ object SimilarityGates {
           col("bucket"))
       val c = b.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
         col("bucket"))
-      val cos = graft.functions.CosineSimilarity(s, col("q_emb"), col("n_emb"))
+      val cos = graft.functions.CosineSimilarity(col("q_emb"), col("n_emb"))
       // per-query top-3 via the custom bounded-heap operator (see
       // q58/graft.plans.TopKPerKey) — no full sort of each bucket's
       // candidate list
@@ -162,7 +162,7 @@ object SimilarityGates {
         .search(index, cents, queries, "vec_id", "embedding", nprobe = 4, topK = 3)
         .localCheckpoint() // O(queries·k) rows; read by recall AND output
       val bf = AnnBaseline
-        .bruteForceTopK(s, emb, queries, k = 3, rankName = "bf_rk")
+        .bruteForceTopK(emb, queries, k = 3, rankName = "bf_rk")
         .localCheckpoint() // O(queries·k) rows
       val recall = ivf
         .join(bf.select(col("q_id"), col("n_id"), lit(1L).as("hit")),
@@ -284,8 +284,7 @@ object SimilarityGates {
       val pq = PqIndex.searchRefined(codes, emb, queries, book,
         "vec_id", "embedding", topK = 5, refine = 40)
         .localCheckpoint() // O(queries·k) rows; read by recall AND output
-      val cosBf = graft.functions.CosineSimilarity(
-        s, col("q_emb"), col("embedding"))
+      val cosBf = graft.functions.CosineSimilarity(col("q_emb"), col("embedding"))
       val scoredAll = emb.crossJoin(broadcast(queries))
         .filter(col("q_id") =!= col("vec_id"))
         .withColumn("cos_bf", cosBf)
@@ -554,7 +553,7 @@ object SimilarityGates {
       val c = e.filter(col("vec_id") % 10 =!= 0)
         .select(col("vec_id").as("n_id"), col("label").as("n_label"),
           col("embedding").as("n_emb"))
-      graft.similarity.KnnVote.classify(s, q, c, 7)
+      graft.similarity.KnnVote.classify(q, c, 7)
         .withColumnRenamed("q_label", "true_label")
         .orderBy("q_id")
     },
@@ -602,7 +601,7 @@ object SimilarityGates {
           col("embedding").as("q_emb"))
       val c = e.select(col("vec_id").as("n_id"), col("label").as("n_label"),
         col("embedding").as("n_emb"))
-      graft.similarity.KnnVote.auditLabels(s, a, c, 5, suspectMax = 2L)
+      graft.similarity.KnnVote.auditLabels(a, c, 5, suspectMax = 2L)
         .withColumnRenamed("q_id", "a_id")
         .withColumnRenamed("q_label", "a_label")
         .orderBy("a_id")
@@ -1624,7 +1623,7 @@ object SimilarityGates {
       val emb = t(s, dir, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
       val queries = AnnBaseline.queryPool(emb, stride = 50L)
-      AnnBaseline.bruteForceTopK(s, emb, queries, k = 3, rankName = "bf_rk")
+      AnnBaseline.bruteForceTopK(emb, queries, k = 3, rankName = "bf_rk")
         .orderBy("q_id", "bf_rk")
     },
     Some(AnnBaseline.oracleSql(stride = 50L, k = 3, rankName = "bf_rk")),
@@ -1637,7 +1636,7 @@ object SimilarityGates {
       val emb = t(s, dir, "embeddings")
         .repartition(s.sparkContext.defaultParallelism)
       val queries = AnnBaseline.queryPool(emb, stride = 100L)
-      AnnBaseline.bruteForceTopK(s, emb, queries, k = 5, rankName = "bf_rk")
+      AnnBaseline.bruteForceTopK(emb, queries, k = 5, rankName = "bf_rk")
         .orderBy("q_id", "bf_rk")
     },
     Some(AnnBaseline.oracleSql(stride = 100L, k = 5, rankName = "bf_rk")),

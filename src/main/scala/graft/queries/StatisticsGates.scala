@@ -289,7 +289,7 @@ object StatisticsGates {
         .orderBy(desc("exact_n"), col("w")).limit(20)
       top.crossJoin(broadcast(sketch))
         .select(col("w"), col("exact_n"),
-          graft.functions.CmsEstimate(s, col("sk"), col("w")).as("cms_n"),
+          graft.functions.CmsEstimate(col("sk"), col("w")).as("cms_n"),
           col("n_total"))
         .select(col("w"), col("exact_n"),
           (col("cms_n") >= col("exact_n")).cast("long").as("cms_ge_exact"),
@@ -3799,7 +3799,7 @@ object StatisticsGates {
     (s, dir) => {
       val e = t(s, dir, "events")
       val sk = e.groupBy("event_type")
-        .agg(Kmv.sketch(s, Kmv.hash60(col("user_id")), K).as("sk"),
+        .agg(Kmv.sketch(Kmv.hash60(col("user_id")), K).as("sk"),
           countDistinct(col("user_id")).as("n_exact"))
       sk.select(col("event_type"), col("n_exact"),
           Kmv.estimate(col("sk"), K).as("n_est"))
@@ -3833,7 +3833,7 @@ object StatisticsGates {
     (s, dir) => {
       val e = t(s, dir, "events")
       val sk = e.groupBy("event_type")
-        .agg(Kmv.sketch(s, Kmv.hash60(col("user_id")), K).as("sk"))
+        .agg(Kmv.sketch(Kmv.hash60(col("user_id")), K).as("sk"))
       val a = sk.select(col("event_type").as("type_a"), col("sk").as("ska"))
       val b = sk.select(col("event_type").as("type_b"), col("sk").as("skb"))
       val pairs = a.join(b, col("type_a") < col("type_b"))
@@ -3897,7 +3897,7 @@ object StatisticsGates {
     (s, dir) => {
       val e = t(s, dir, "events")
       val merged = e.groupBy("event_type")
-        .agg(Kmv.sketch(s, Kmv.hash60(col("user_id")), K).as("sk"))
+        .agg(Kmv.sketch(Kmv.hash60(col("user_id")), K).as("sk"))
         .agg(flatten(collect_list(col("sk"))).as("all_h"),
           count(lit(1)).as("n_types"))
         .select(col("n_types"),
@@ -3937,7 +3937,7 @@ object StatisticsGates {
       val K = 64
       val e = t(s, dir, "events")
       val sk = e.groupBy("event_type")
-        .agg(Kmv.sketch(s, Kmv.hash60(col("user_id")), K).as("sk"))
+        .agg(Kmv.sketch(Kmv.hash60(col("user_id")), K).as("sk"))
       val a = sk.select(col("event_type").as("type_a"), col("sk").as("ska"))
       val b = sk.select(col("event_type").as("type_b"), col("sk").as("skb"))
       val tu = e.select(col("event_type"), col("user_id")).distinct()
@@ -4031,7 +4031,7 @@ object StatisticsGates {
     (s, dir) => {
       val e = t(s, dir, "events")
       val sk = e.agg(
-        Kmv.sketch(s, Kmv.hash60(col("user_id")), 128).as("sk"),
+        Kmv.sketch(Kmv.hash60(col("user_id")), 128).as("sk"),
         countDistinct(col("user_id")).as("n_exact"))
       val ks = Seq(16, 32, 64, 128)
       val rows = ks.map(k => struct(lit(k.toLong).as("k"),

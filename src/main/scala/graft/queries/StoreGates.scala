@@ -414,9 +414,10 @@ object StoreGates {
   // answers from the O(groups) state. The oracle aggregates the base
   // table directly in DuckDB, so hash-equality proves the rewritten
   // answer is bit-identical to a fresh corpus scan (the rule's
-  // contract). Executed eagerly so the rule and registry can be
-  // uninstalled before any other gate query plans — the rewrite must
-  // never leak into a neighbor's plan.
+  // contract). The rule is installed in every session by
+  // SessionDefaults and inert while nothing is registered; executed
+  // eagerly so the registration is cleared before any other gate
+  // query plans — the rewrite must never leak into a neighbor's plan.
   private val q244 = QueryDef(
     "q244_matview_parity",
     (s, dir) => {
@@ -431,8 +432,6 @@ object StoreGates {
       (0 to 2).foreach(b =>
         aggTable.accumulate(s"b$b", base.filter(col("l_orderkey") % 3 === b)))
       MatViewRewrite.register(basePath, aggTable)
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MatViewRewrite
       try {
         val q = base.groupBy("l_returnflag", "l_linestatus")
           .agg(count(lit(1)).as("n"),
@@ -458,11 +457,7 @@ object StoreGates {
             col("sum_qty").cast("double").as("sum_qty"),
             col("min_qty"), col("max_qty"))
           .orderBy("l_returnflag", "l_linestatus")
-      } finally {
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations.filterNot(_ == MatViewRewrite)
-        MatViewRewrite.clear()
-      }
+      } finally MatViewRewrite.clear()
     },
     Some("""SELECT l_returnflag, l_linestatus,
         CAST(COUNT(*) AS BIGINT) AS n,

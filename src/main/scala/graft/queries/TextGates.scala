@@ -375,7 +375,7 @@ object TextGates {
       val messy = t(s, dir, "documents").select(col("doc_id"),
         concat(translate(upper(substring(col("text"), 1, 60)), "AEO", "ÁÉÖ"),
           lit("  ")).as("raw"))
-      val norm = trim(regexp_replace(StripAccents(s, lower(col("raw"))), " +", " "))
+      val norm = trim(regexp_replace(StripAccents(lower(col("raw"))), " +", " "))
       messy.select(col("doc_id"), col("raw"), norm.as("norm"),
           (length(col("raw")) - length(norm)).cast(LongType).as("removed"))
         .orderBy("doc_id")
@@ -554,7 +554,7 @@ object TextGates {
     (s, dir) => {
       val d = t(s, dir, "documents")
       def grams(df: DataFrame) = df.select(col("doc_id"),
-        explode(array_distinct(WordShingles(s, col("text"), 7))).as("g"))
+        explode(array_distinct(WordShingles(col("text"), 7))).as("g"))
       val evalGrams = grams(d.filter(col("doc_id") % 97 === 0))
         .select("g").distinct()
       grams(d.filter(col("doc_id") % 97 =!= 0))
@@ -731,9 +731,9 @@ object TextGates {
   /** Distinct word-3-gram postings (doc_id, s) via the native
     * [[graft.functions.WordShingles]] expression.
     */
-  private def shingles3(s: SparkSession, d: DataFrame): DataFrame =
+  private def shingles3(d: DataFrame): DataFrame =
     d.select(col("doc_id"),
-        explode(graft.functions.WordShingles(s, col("text"), 3)).as("s"))
+        explode(graft.functions.WordShingles(col("text"), 3)).as("s"))
       .distinct()
 
   /** DuckDB twins of the shingle postings as CTE bodies. */
@@ -755,7 +755,7 @@ object TextGates {
   private val q156 = QueryDef(
     "q156_boilerplate_rm",
     (s, dir) => {
-      val sh = shingles3(s, t(s, dir, "documents"))
+      val sh = shingles3(t(s, dir, "documents"))
       val boiler = sh.groupBy("s").agg(count(lit(1)).as("nd"))
         .filter(col("nd") >= 5)
         .select(col("s"), lit(1).as("b"))
@@ -994,7 +994,7 @@ object TextGates {
     (s, dir) => {
       val post = t(s, dir, "documents")
         .select(col("doc_id"),
-          explode(graft.functions.WordShingles(s, col("text"), 5)).as("g"))
+          explode(graft.functions.WordShingles(col("text"), 5)).as("g"))
         .distinct()
       val first = post.groupBy("g").agg(min(col("doc_id")).as("first_doc"))
       post.join(first, "g")
@@ -1444,7 +1444,7 @@ object TextGates {
     (s, dir) => {
       val sh = t(s, dir, "documents")
         .select(col("doc_id"),
-          explode(graft.functions.WordShingles(s, col("text"), 3)).as("sh"))
+          explode(graft.functions.WordShingles(col("text"), 3)).as("sh"))
       val firstDoc = sh.groupBy("sh").agg(min(col("doc_id")).as("first_doc"))
       val buckets = firstDoc
         .groupBy(expr("first_doc div 25").as("bucket"))
@@ -1900,7 +1900,7 @@ object TextGates {
     (s, dir) => {
       val d = t(s, dir, "documents")
       val sh = d.select(col("doc_id"),
-        explode(graft.functions.WordShingles(d.sparkSession, col("text"), 3))
+        explode(graft.functions.WordShingles(col("text"), 3))
           .as("s")).distinct()
       val df = sh.groupBy("s").agg(count(lit(1)).as("df"))
         .withColumn("band", least(col("df"), lit(10L)))

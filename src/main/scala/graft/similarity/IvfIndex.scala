@@ -45,13 +45,10 @@ object IvfIndex {
     * first minimum = lowest cid on ties — and a literal lookup maps
     * position back to the (possibly non-dense) cluster id.
     */
-  private def nearestCid(
-      s: org.apache.spark.sql.SparkSession,
-      v: Column,
-      model: Seq[(Int, Seq[Double])]): Column = {
+  private def nearestCid(v: Column, model: Seq[(Int, Seq[Double])]): Column = {
     val cents = model.sortBy(_._1)
     val cidArr = typedLit(cents.map(_._1))
-    val pos = graft.functions.NearestCentroids(s, v, Seq(cents.map(_._2)))
+    val pos = graft.functions.NearestCentroids(v, Seq(cents.map(_._2)))
     element_at(cidArr, element_at(pos, lit(1)) + 1)
   }
 
@@ -83,7 +80,7 @@ object IvfIndex {
       // bounded-collect: grouped agg over cid — at most k centroid
       // rows (O(model)), never corpus rows
       centroids = emb
-        .select(col(vecCol), nearestCid(spark, col(vecCol), centroids).as("cid"))
+        .select(col(vecCol), nearestCid(col(vecCol), centroids).as("cid"))
         .groupBy("cid")
         .agg(means.head, means.tail: _*)
         .collect()
@@ -102,7 +99,7 @@ object IvfIndex {
     // construction (trainCentroids emits ≤ k)
     val model = centroids.collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1)).toSeq
-    emb.withColumn("cid", nearestCid(emb.sparkSession, col(vecCol), model))
+    emb.withColumn("cid", nearestCid(col(vecCol), model))
   }
 
   /** Top-`topK` cosine neighbours per query, scanning only each
@@ -123,8 +120,7 @@ object IvfIndex {
       .filter(col("pr") <= nprobe)
       .select(col("q_id"), col("q_emb"), col("cid"))
 
-    val cos = graft.functions.CosineSimilarity(
-      index.sparkSession, col("q_emb"), col(vecCol))
+    val cos = graft.functions.CosineSimilarity(col("q_emb"), col(vecCol))
     val scored = probes.join(index, Seq("cid"))
       .filter(col("q_id") =!= col(idCol))
       .withColumn("cos", cos)

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,12 +33,8 @@ object KnnVote {
     *         query's own label, 0 if none), vr (1 = modal label under
     *         the total order)
     */
-  def labelVotes(
-      s: SparkSession,
-      queries: DataFrame,
-      candidates: DataFrame,
-      k: Int): DataFrame = {
-    val cos = graft.functions.CosineSimilarity(s, col("q_emb"), col("n_emb"))
+  def labelVotes(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
+    val cos = graft.functions.CosineSimilarity(col("q_emb"), col("n_emb"))
     val wNn = Window.partitionBy("q_id").orderBy(desc("cos"), asc("n_id"))
     val votes = candidates.crossJoin(broadcast(queries))
       .filter(col("q_id") =!= col("n_id"))
@@ -58,12 +54,8 @@ object KnnVote {
   }
 
   /** Modal neighbor label per query — the k-NN classification. */
-  def classify(
-      s: SparkSession,
-      queries: DataFrame,
-      candidates: DataFrame,
-      k: Int): DataFrame =
-    labelVotes(s, queries, candidates, k)
+  def classify(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame =
+    labelVotes(queries, candidates, k)
       .filter(col("vr") === 1)
       .select(col("q_id"), col("q_label"),
         col("n_label").as("predicted"), col("votes"),
@@ -74,12 +66,11 @@ object KnnVote {
     * agreement count still considered suspect.
     */
   def auditLabels(
-      s: SparkSession,
       sample: DataFrame,
       corpus: DataFrame,
       k: Int,
       suspectMax: Long): DataFrame =
-    labelVotes(s, sample, corpus, k)
+    labelVotes(sample, corpus, k)
       .filter(col("vr") === 1)
       .select(col("q_id"), col("q_label"), col("agree_n"),
         col("n_label").as("modal_label"),

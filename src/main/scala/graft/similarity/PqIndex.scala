@@ -48,11 +48,8 @@ object PqIndex {
     * encode/train hot loop, bit-identical to the interpreted
     * HOF form it replaced but fused into whole-stage codegen.
     */
-  private def allCodes(
-      s: org.apache.spark.sql.SparkSession,
-      vec: Column,
-      book: Codebook): Column =
-    graft.functions.NearestCentroids(s, vec, book)
+  private def allCodes(vec: Column, book: Codebook): Column =
+    graft.functions.NearestCentroids(vec, book)
 
   /** Train `k` centroids per subspace with `iters` Lloyd iterations —
     * every iteration is ONE corpus scan (subspaces in parallel via
@@ -80,7 +77,7 @@ object PqIndex {
       // (j, cid, subvector) rows for every subspace of every vector —
       // codes for ALL subspaces come from one fused expression pass
       val assigned = emb
-        .select(col(vecCol), allCodes(emb.sparkSession, col(vecCol), book).as("__codes"))
+        .select(col(vecCol), allCodes(col(vecCol), book).as("__codes"))
         .select(posexplode(array(
           (0 until m).map { j =>
             struct(element_at(col("__codes"), j + 1).as("cid"),
@@ -109,7 +106,7 @@ object PqIndex {
     * search scans.
     */
   def encode(emb: DataFrame, idCol: String, vecCol: String, book: Codebook): DataFrame = {
-    val codes = allCodes(emb.sparkSession, col(vecCol), book)
+    val codes = allCodes(col(vecCol), book)
     // |reconstruction|² = Σ_j |centroid_{j,code_j}|² (norms per cell
     // are a model-side literal; the lookup is m element_ats)
     val cellNormSq = typedLit(book.map(_.map(c => c.map(x => x * x).sum)))
@@ -184,8 +181,7 @@ object PqIndex {
       .join(emb.select(col(idCol).as("n_id"), col(vecCol).as("__v")), "n_id")
       .join(broadcast(queries), "q_id")
       .select(col("q_id"), col("n_id"),
-        graft.functions.CosineSimilarity(codes.sparkSession,
-          col("q_emb"), col("__v")).as("cos"))
+        graft.functions.CosineSimilarity(col("q_emb"), col("__v")).as("cos"))
     graft.plans.TopKPerKey.perKey(exact, Seq("q_id"),
       Seq(desc("cos"), asc("n_id")), topK, rankName = "rk")
   }
@@ -262,8 +258,7 @@ object IvfPq {
       .join(emb.select(col(idCol).as("n_id"), col(vecCol).as("__v")), "n_id")
       .join(broadcast(queries), "q_id")
       .select(col("q_id"), col("n_id"),
-        graft.functions.CosineSimilarity(codes.sparkSession,
-          col("q_emb"), col("__v")).as("cos"))
+        graft.functions.CosineSimilarity(col("q_emb"), col("__v")).as("cos"))
     graft.plans.TopKPerKey.perKey(exact, Seq("q_id"),
       Seq(desc("cos"), asc("n_id")), topK, rankName = "rk")
   }

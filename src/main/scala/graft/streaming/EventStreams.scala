@@ -390,7 +390,9 @@ object EventStreams {
       user_id: Long, n_events: Long, total_value: Double,
       start: Timestamp, end: Timestamp)
 
-  private case class SessState(n: Long, total: Double, loMs: Long, hiMs: Long)
+  // public like StatsState: the state encoder's generated projections
+  // cannot reach a private case class and fall back to interpreted ones
+  case class SessState(n: Long, total: Double, loMs: Long, hiMs: Long)
 
   /** Timer-driven sessionization on `transformWithState`: input rows
     * only ACCUMULATE per-key state and (re)arm an EVENT-TIME timer at

@@ -2,7 +2,6 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.SparkStrategy
 
 /** Bridge into Spark's `private[sql]` plan-construction surface, the
   * standard pattern for extension libraries that add their own logical
@@ -33,14 +32,4 @@ object GraftPlanBridge {
     */
   def column(e: Expression): Column =
     classic.ExpressionUtils.column(e)
-
-  /** Idempotently register an extra planner strategy on a live session
-    * (the `spark.sql.extensions` path covers new sessions; this covers
-    * sessions already running).
-    */
-  def addStrategy(spark: SparkSession, strategy: SparkStrategy): Unit = {
-    val exp = spark.asInstanceOf[classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(strategy))
-      exp.extraStrategies = exp.extraStrategies :+ strategy
-  }
 }

@@ -21,10 +21,16 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - Gates are filed by family, and every family loads tables through
   *    `graft.Tables.load` and takes the exact-arithmetic helpers from
   *    `QueryDef`'s companion, so neither policy is copied per file.
+  *  - The engine's rules, strategy and confs are installed once, at
+  *    session build ([[SessionDefaults]]). Nothing in the engine adds
+  *    rules or strategies to a live session or registers functions in
+  *    it, gates and the loader change confs only through the scoped
+  *    `QueryDef.withConf`, and the test session is the engine's.
   */
 class EntryPointAuditSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
+  private val testRoot = Paths.get("src/test/scala")
 
   private def scalaFiles(dir: Path): Seq[Path] =
     scala.util.Using.resource(Files.walk(dir)) { walk =>
@@ -84,5 +90,46 @@ class EntryPointAuditSpec extends AnyFunSuite {
       "a private table loader or exact-arithmetic helper copy (import " +
         "graft.Tables.{load => t} and the QueryDef helpers instead):\n" +
         found.mkString("\n"))
+  }
+
+  test("no gate, function handle or loader installs anything on the session") {
+    val install = """\bexperimental\b|extraOptimizations|extraStrategies|functionRegistry|""" +
+      """createOrReplaceTempFunction|call_function\("""
+    val installs = violations(scalaFiles(root))(code => install.r.findFirstIn(code).isDefined)
+
+    // conf.set( under queries/ and in Tables, except inside withConf
+    val queryDef = root.resolve("queries/QueryDef.scala")
+    val withConf: Set[Int] = {
+      val lines = Files.readAllLines(queryDef).asScala.toIndexedSeq
+      val start = lines.indexWhere(_.contains("def withConf["))
+      if (start < 0) Set.empty
+      else {
+        val indent = lines(start).takeWhile(_ == ' ')
+        val end = lines.indexWhere(_ == indent + "}", start)
+        (start + 1 to (if (end < 0) start else end) + 1).toSet
+      }
+    }
+    val confFiles = scalaFiles(root.resolve("queries")) :+ root.resolve("Tables.scala")
+    val confSets = confFiles.flatMap(p => codeLines(p).collect {
+      case (code, n) if code.contains("conf.set(") && !(p == queryDef && withConf(n)) =>
+        s"$p:$n: ${code.trim}"
+    })
+
+    val builder = """SparkSession\s*\.builder\b""".r
+    val testBuilders = violations(
+        scalaFiles(testRoot).filterNot(_.endsWith("EntryPointAuditSpec.scala"))) {
+      code => builder.findFirstIn(code).isDefined &&
+        !code.contains("SessionDefaults(SparkSession.builder()")
+    }
+
+    assert(installs.isEmpty,
+      "engine code installs a rule, strategy or function on a live session " +
+        "(add it to GraftExtensions, or build the expression in its handle):\n" +
+        installs.mkString("\n"))
+    assert(confSets.isEmpty,
+      "a conf set outside QueryDef.withConf (session-wide confs belong in " +
+        "SessionDefaults.sqlConfs):\n" + confSets.mkString("\n"))
+    assert(testBuilders.isEmpty,
+      "a test session not built through SessionDefaults:\n" + testBuilders.mkString("\n"))
   }
 }

@@ -4,7 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (UTC, small shuffle fan-out). */
+/** Shared local SparkSession for specs: the engine's session
+  * ([[SessionDefaults]]: confs, optimizer rules, planner strategy), so
+  * plan pins check the planner Bench and Verify run, with a small
+  * shuffle fan-out.
+  */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -12,11 +16,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
+  lazy val session: SparkSession = SessionDefaults(SparkSession.builder()
     .master("local[4]")
     .appName("graft-tests")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+    .config("spark.ui.enabled", "false"))
     .getOrCreate()
 }

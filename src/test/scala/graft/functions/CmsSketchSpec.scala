@@ -27,7 +27,7 @@ class CmsSketchSpec extends SparkSpec {
     val probed = df.groupBy("w").agg(count(lit(1)).as("exact"))
       .crossJoin(broadcast(sketch))
       .select(col("w"), col("exact"),
-        CmsEstimate(spark, col("sk"), col("w")).as("est"))
+        CmsEstimate(col("sk"), col("w")).as("est"))
       .collect()
     assert(probed.length == 7)
     probed.foreach { r =>
@@ -43,7 +43,7 @@ class CmsSketchSpec extends SparkSpec {
       val df = tokens.repartition(parts)
       val sketch = df.agg(expr(s"count_min_sketch(w, ${eps}d, 0.99d, 7)").as("sk"))
       df.distinct().crossJoin(broadcast(sketch))
-        .select(col("w"), CmsEstimate(spark, col("sk"), col("w")).as("est"))
+        .select(col("w"), CmsEstimate(col("sk"), col("w")).as("est"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
     assert(estimates(1) == estimates(13))

@@ -26,7 +26,7 @@ class CosineSimilaritySpec extends SparkSpec {
 
   test("bit-identical to the zip_with/aggregate HOF form") {
     val df = vectors.select(
-      CosineSimilarity(spark, col("a"), col("b")).as("native"),
+      CosineSimilarity(col("a"), col("b")).as("native"),
       hofCosine.as("hof"))
     df.collect().foreach { r =>
       assert(r.getDouble(0) == r.getDouble(1)) // exact, not approx
@@ -38,7 +38,7 @@ class CosineSimilaritySpec extends SparkSpec {
     val pairs = e.select(col("vec_id"), col("embedding").as("a"))
       .crossJoin(e.limit(5).select(col("embedding").as("b")))
     val out = pairs.select(
-      CosineSimilarity(spark, col("a"), col("b")).as("native"),
+      CosineSimilarity(col("a"), col("b")).as("native"),
       hofCosine.as("hof")).collect()
     assert(out.length == 2500)
     out.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
@@ -47,10 +47,10 @@ class CosineSimilaritySpec extends SparkSpec {
   test("identical vectors → 1.0; null input → null") {
     import spark.implicits._
     val one = Seq((Seq(0.5f, 0.25f), Seq(0.5f, 0.25f))).toDF("a", "b")
-      .select(CosineSimilarity(spark, col("a"), col("b"))).collect()(0).getDouble(0)
+      .select(CosineSimilarity(col("a"), col("b"))).collect()(0).getDouble(0)
     assert(math.abs(one - 1.0) < 1e-15)
     val n = Seq((Some(Seq(1f)), Option.empty[Seq[Float]])).toDF("a", "b")
-      .select(CosineSimilarity(spark, col("a"), col("b"))).collect()(0)
+      .select(CosineSimilarity(col("a"), col("b"))).collect()(0)
     assert(n.isNullAt(0))
   }
 }

@@ -40,8 +40,8 @@ class KeyOrderedFoldSpec extends SparkSpec {
   test("grouped fold is bit-identical to the HOF stack (sum and sumsq)") {
     val df = rows(groups = 50, maxPerGroup = 40).toDF("g", "k", "v")
     for (squared <- Seq(false, true)) {
-      val fused = if (squared) KeyOrderedFold.sumSq(spark, collect_list(struct(col("k"), col("v"))))
-                  else KeyOrderedFold.sum(spark, collect_list(struct(col("k"), col("v"))))
+      val fused = if (squared) KeyOrderedFold.sumSq(collect_list(struct(col("k"), col("v"))))
+                  else KeyOrderedFold.sum(collect_list(struct(col("k"), col("v"))))
       val got = df.groupBy("g").agg(fused.as("f")).orderBy("g")
         .collect().map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
       val want = df.groupBy("g").agg(hofSum(squared).as("f")).orderBy("g")
@@ -58,8 +58,7 @@ class KeyOrderedFoldSpec extends SparkSpec {
         (0L, k.toLong, (rnd.nextDouble() - 0.5) * math.pow(10.0, k % 20 - 10))
       }
     }.toDF("g", "k", "v")
-    val got = df.agg(KeyOrderedFold.sum(spark,
-        collect_list(struct(col("k"), col("v")))).as("f"))
+    val got = df.agg(KeyOrderedFold.sum(collect_list(struct(col("k"), col("v")))).as("f"))
       .collect().map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(0)))
     val want = df.agg(hofSum(squared = false).as("f"))
       .collect().map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(0)))
@@ -69,15 +68,14 @@ class KeyOrderedFoldSpec extends SparkSpec {
   test("empty array folds to the 0.0 seed; sorted input hits the median-of-three guard") {
     val empty = Seq((1L, Array.empty[(Long, Double)])).toDF("g", "arr")
       .select(col("g"), col("arr").cast("array<struct<k: bigint, v: double>>").as("arr"))
-    val r = empty.select(KeyOrderedFold.sum(spark, col("arr"))).head.getDouble(0)
+    val r = empty.select(KeyOrderedFold.sum(col("arr"))).head.getDouble(0)
     assert(r == 0.0)
     // pre-sorted and reverse-sorted 1k-element arrays (quicksort
     // worst cases without the pivot guard)
     for (rev <- Seq(false, true)) {
       val ks = if (rev) (999 to 0 by -1) else (0 to 999)
       val df = ks.map(k => (0L, k.toLong, k * 1.5e-7 + 1e9)).toDF("g", "k", "v")
-      val got = df.agg(KeyOrderedFold.sum(spark,
-          collect_list(struct(col("k"), col("v")))).as("f"))
+      val got = df.agg(KeyOrderedFold.sum(collect_list(struct(col("k"), col("v")))).as("f"))
         .head.getDouble(0)
       val want = df.agg(hofSum(squared = false).as("f")).head.getDouble(0)
       assert(java.lang.Double.doubleToRawLongBits(got) ==

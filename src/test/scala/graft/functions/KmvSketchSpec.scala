@@ -10,7 +10,7 @@ class KmvSketchSpec extends SparkSpec {
 
   private def sketchOf(ids: Seq[Long], k: Int, parts: Int = 4): Seq[Long] = {
     val df = ids.toDF("id").repartition(parts)
-    df.agg(Kmv.sketch(spark, Kmv.hash60(col("id")), k).as("sk"))
+    df.agg(Kmv.sketch(Kmv.hash60(col("id")), k).as("sk"))
       .select(col("sk")).head().getSeq[Long](0)
   }
 
@@ -26,7 +26,7 @@ class KmvSketchSpec extends SparkSpec {
   test("estimate lands within 20% of a 20k-distinct ground truth") {
     val n = 20000L
     val df = spark.range(n).select(Kmv.hash60(col("id")).as("h"))
-    val est = df.agg(Kmv.sketch(spark, col("h"), 256).as("sk"))
+    val est = df.agg(Kmv.sketch(col("h"), 256).as("sk"))
       .select(Kmv.estimate(col("sk"), 256).as("e")).head().getDouble(0)
     assert(math.abs(est - n) / n < 0.2, s"estimate $est vs exact $n")
   }
@@ -39,9 +39,9 @@ class KmvSketchSpec extends SparkSpec {
   test("union and intersection estimates recover set algebra") {
     val a = (1L to 12000L)
     val b = (8001L to 20000L) // |a ∪ b| = 20000, |a ∩ b| = 4000
-    val ha = a.toDF("id").agg(Kmv.sketch(spark, Kmv.hash60(col("id")), 256)
+    val ha = a.toDF("id").agg(Kmv.sketch(Kmv.hash60(col("id")), 256)
       .as("sk")).head().getSeq[Long](0)
-    val hb = b.toDF("id").agg(Kmv.sketch(spark, Kmv.hash60(col("id")), 256)
+    val hb = b.toDF("id").agg(Kmv.sketch(Kmv.hash60(col("id")), 256)
       .as("sk")).head().getSeq[Long](0)
     val row = Seq(1).toDF("x").select(
       Kmv.unionEstimate(typedLit(ha), typedLit(hb), 256).as("u"),
@@ -56,10 +56,10 @@ class KmvSketchSpec extends SparkSpec {
 
   test("small-side intersection and difference are exact (below k)") {
     val ha = (1L to 30L).toDF("id")
-      .agg(Kmv.sketch(spark, Kmv.hash60(col("id")), 64).as("sk"))
+      .agg(Kmv.sketch(Kmv.hash60(col("id")), 64).as("sk"))
       .head().getSeq[Long](0)
     val hb = (21L to 40L).toDF("id")
-      .agg(Kmv.sketch(spark, Kmv.hash60(col("id")), 64).as("sk"))
+      .agg(Kmv.sketch(Kmv.hash60(col("id")), 64).as("sk"))
       .head().getSeq[Long](0)
     val row = Seq(1).toDF("x").select(
       Kmv.intersectEstimate(typedLit(ha), typedLit(hb), 64).as("i"),

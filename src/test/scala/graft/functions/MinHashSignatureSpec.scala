@@ -11,7 +11,7 @@ class MinHashSignatureSpec extends SparkSpec {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("s"))
 
     val viaAgg = d.groupBy("doc_id")
-      .agg(MinHashSignature(spark, col("s"), 4).as("sig"))
+      .agg(MinHashSignature(col("s"), 4).as("sig"))
       .select(col("doc_id"), col("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
 
@@ -28,7 +28,7 @@ class MinHashSignatureSpec extends SparkSpec {
     val d = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("s"))
     val plan = d.groupBy("doc_id")
-      .agg(MinHashSignature(spark, col("s"), 8).as("sig"))
+      .agg(MinHashSignature(col("s"), 8).as("sig"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("HashAggregate"),
       "long minima must keep the aggregation hashable")
@@ -40,7 +40,7 @@ class MinHashSignatureSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, Some("a")), (1L, None), (2L, None))
       .toDF("k", "s")
-    val out = df.groupBy("k").agg(MinHashSignature(spark, col("s"), 2).as("sig"))
+    val out = df.groupBy("k").agg(MinHashSignature(col("s"), 2).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(out(1L).forall(_ != null))
     assert(out(2L).forall(_ == null))

@@ -42,7 +42,7 @@ class NearestCentroidsSpec extends SparkSpec {
       Seq(-0.9f, 1.9f, 0.3f, -0.8f),
       Seq(0.5f, 0.5f, 0.0f, 0.0f)).toDF("v")
     val got = vecs.select(
-      NearestCentroids(spark, col("v"), book).as("fast"),
+      NearestCentroids(col("v"), book).as("fast"),
       hofCodes(col("v"), book).as("slow")).collect()
     got.foreach { r =>
       assert(r.getSeq[Int](0) == r.getSeq[Int](1),
@@ -54,14 +54,14 @@ class NearestCentroidsSpec extends SparkSpec {
     // duplicate centroids: distance ties exactly; first wins
     val dupBook = Seq(Seq(Seq(1.0, 1.0), Seq(1.0, 1.0), Seq(9.0, 9.0)))
     val out = Seq(Seq(1.0f, 1.0f)).toDF("v")
-      .select(NearestCentroids(spark, col("v"), dupBook).as("c"))
+      .select(NearestCentroids(col("v"), dupBook).as("c"))
       .head().getSeq[Int](0)
     assert(out == Seq(0))
   }
 
   test("a vector shorter than m·subDim yields NULL") {
     val out = Seq(Seq(1.0f, 2.0f, 3.0f)).toDF("v")
-      .select(NearestCentroids(spark, col("v"), book).as("c"))
+      .select(NearestCentroids(col("v"), book).as("c"))
       .head()
     assert(out.isNullAt(0))
   }
@@ -70,7 +70,7 @@ class NearestCentroidsSpec extends SparkSpec {
     val emb = graft.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val realBook = graft.similarity.PqIndex.train(
       emb, "vec_id", "embedding", m = 8, k = 4, iters = 1)
-    val fast = NearestCentroids(spark, col("embedding"), realBook)
+    val fast = NearestCentroids(col("embedding"), realBook)
     val rows = emb.select(col("vec_id"), fast.as("fast"),
         hofCodes(col("embedding"), realBook).as("slow"))
       .collect()

@@ -29,7 +29,7 @@ class OrderedPairsSpec extends SparkSpec {
       Seq(10L, 20L),
       (1L to 25L).toSeq).toDF("ds")
     val rows = lists.select(
-      OrderedPairs(spark, col("ds")).as("fast"),
+      OrderedPairs(col("ds")).as("fast"),
       hofPairs(col("ds")).as("slow")).collect()
     rows.foreach { r =>
       val fast = r.getSeq[org.apache.spark.sql.Row](0).map(p => (p.getLong(0), p.getLong(1)))
@@ -40,7 +40,7 @@ class OrderedPairsSpec extends SparkSpec {
 
   test("degenerate lists yield no pairs (better than the HOF form)") {
     val out = Seq(Seq(7L), Seq.empty[Long]).toDF("ds")
-      .select(size(OrderedPairs(spark, col("ds"))).as("n"))
+      .select(size(OrderedPairs(col("ds"))).as("n"))
       .collect()
     assert(out.map(_.getInt(0)).toSeq == Seq(0, 0))
   }
@@ -60,7 +60,7 @@ class OrderedPairsSpec extends SparkSpec {
       })
     } ++ Seq(Seq(0L, 0L), Seq(-1L, -1L, -1L)) // all-duplicate lists
     val rows = lists.toDF("ds").select(
-      OrderedPairs(spark, col("ds")).as("fast"),
+      OrderedPairs(col("ds")).as("fast"),
       hofPairs(col("ds")).as("slow")).collect()
     rows.foreach { r =>
       val fast = r.getSeq[org.apache.spark.sql.Row](0).map(p => (p.getLong(0), p.getLong(1)))
@@ -81,7 +81,7 @@ class OrderedPairsSpec extends SparkSpec {
   test("pair count is n(n-1)/2 and null input stays null") {
     val out = Seq(Tuple1(Option(Seq(1L, 2L, 3L))), Tuple1(None: Option[Seq[Long]]))
       .toDF("ds")
-      .select(size(OrderedPairs(spark, col("ds"))).as("n"))
+      .select(size(OrderedPairs(col("ds"))).as("n"))
       .collect()
     assert(out(0).getInt(0) == 3)
     assert(out(1).isNullAt(0)) // the null propagated (size(NULL) is NULL)

@@ -33,7 +33,7 @@ class QuantizedL2Spec extends SparkSpec {
 
   test("bit-identical to the floor-lattice HOF form") {
     vectors.select(
-        QuantizedL2(spark, col("a"), col("b")).as("native"),
+        QuantizedL2(col("a"), col("b")).as("native"),
         explodeForm.as("hof"))
       .collect().foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
@@ -43,7 +43,7 @@ class QuantizedL2Spec extends SparkSpec {
     val pairs = e.select(col("vec_id"), col("embedding").as("a"))
       .crossJoin(e.limit(5).select(col("embedding").as("b")))
     val out = pairs.select(
-      QuantizedL2(spark, col("a"), col("b")).as("native"),
+      QuantizedL2(col("a"), col("b")).as("native"),
       explodeForm.as("hof")).collect()
     assert(out.nonEmpty)
     out.foreach(r => assert(r.getLong(0) == r.getLong(1)))
@@ -66,7 +66,7 @@ class QuantizedL2Spec extends SparkSpec {
       (vec(n), vec(n))
     } ++ Seq((Seq.empty[Float], Seq.empty[Float]), (vec(1), vec(1)))
     val out = data.toDF("a", "b").select(
-      QuantizedL2(spark, col("a"), col("b")).as("native"),
+      QuantizedL2(col("a"), col("b")).as("native"),
       explodeForm.as("hof")).collect()
     out.foreach(r => assert(r.getLong(0) == r.getLong(1),
       s"fuzz diverged: ${r.getLong(0)} != ${r.getLong(1)}"))
@@ -88,7 +88,7 @@ class QuantizedL2Spec extends SparkSpec {
       (Seq(Float.NegativeInfinity), Seq(Float.PositiveInfinity)),
       (Seq(1e30f, -1e30f), Seq(-1e30f, 1e30f)))                 // huge finite
     val out = cases.toDF("a", "b")
-      .select(QuantizedL2(spark, col("a"), col("b"))).collect()
+      .select(QuantizedL2(col("a"), col("b"))).collect()
     cases.zip(out).foreach { case ((a, b), r) =>
       assert(r.getLong(0) == expected(a, b), s"($a, $b)")
     }
@@ -100,16 +100,16 @@ class QuantizedL2Spec extends SparkSpec {
   test("identical vectors → 0; null input → null; negative floors") {
     import spark.implicits._
     val z = Seq((Seq(0.5f, -0.25f), Seq(0.5f, -0.25f))).toDF("a", "b")
-      .select(QuantizedL2(spark, col("a"), col("b"))).collect()(0).getLong(0)
+      .select(QuantizedL2(col("a"), col("b"))).collect()(0).getLong(0)
     assert(z == 0L)
     // ⌊−0.3·Q⌋ = −314573 (floor, not truncation): d = ⌊0.3Q⌋ − ⌊−0.3Q⌋
     val m = Seq((Seq(0.3f), Seq(-0.3f))).toDF("a", "b")
-      .select(QuantizedL2(spark, col("a"), col("b"))).collect()(0).getLong(0)
+      .select(QuantizedL2(col("a"), col("b"))).collect()(0).getLong(0)
     val qa = math.floor(0.3f.toDouble * QuantizedL2.Q).toLong
     val qb = math.floor(-0.3f.toDouble * QuantizedL2.Q).toLong
     assert(m == (qa - qb) * (qa - qb))
     val n = Seq((Some(Seq(1f)), Option.empty[Seq[Float]])).toDF("a", "b")
-      .select(QuantizedL2(spark, col("a"), col("b"))).collect()(0)
+      .select(QuantizedL2(col("a"), col("b"))).collect()(0)
     assert(n.isNullAt(0))
   }
 }

@@ -16,18 +16,18 @@ class StripAccentsSpec extends SparkSpec {
       ""             -> "",
       "ñ Ñ ž Š đ"    -> "n N z S đ")     // đ has no combining mark — kept
     val got = cases.map(_._1).toDF("s")
-      .select(StripAccents(spark, col("s"))).collect().map(_.getString(0))
+      .select(StripAccents(col("s"))).collect().map(_.getString(0))
     assert(got.toSeq == cases.map(_._2))
   }
 
   test("null-safe and codegen-fused") {
     import spark.implicits._
     val df = Seq(Some("café"), None).toDF("s")
-    val got = df.select(StripAccents(spark, col("s"))).collect().map(r =>
+    val got = df.select(StripAccents(col("s"))).collect().map(r =>
       if (r.isNullAt(0)) null else r.getString(0))
     assert(got.toSeq == Seq("cafe", null))
     val d = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val plan = d.select(StripAccents(spark, col("text")))
+    val plan = d.select(StripAccents(col("text")))
       .queryExecution.executedPlan.toString
     assert(plan.contains("*(1)"), plan) // fused into WholeStageCodegen
   }
@@ -45,8 +45,8 @@ class StripAccentsSpec extends SparkSpec {
       .apply(org.scalacheck.Gen.Parameters.default,
         org.scalacheck.rng.Seed(42L)).get
     val rows = samples.toDF("s").select(col("s"),
-        StripAccents(spark, col("s")).as("once"),
-        StripAccents(spark, StripAccents(spark, col("s"))).as("twice"))
+        StripAccents(col("s")).as("once"),
+        StripAccents(StripAccents(col("s"))).as("twice"))
       .collect()
     rows.foreach { r =>
       val (s, once, twice) = (r.getString(0), r.getString(1), r.getString(2))
@@ -62,7 +62,7 @@ class StripAccentsSpec extends SparkSpec {
     // composed NFC chars decompose then lose only the marks — byte-for-
     // byte what utf8proc's strip_accents yields on the same input
     val got = Seq("Ĉrème brûlée №5").toDF("s")
-      .select(StripAccents(spark, col("s"))).head().getString(0)
+      .select(StripAccents(col("s"))).head().getString(0)
     assert(got == "Creme brulee №5")
   }
 }

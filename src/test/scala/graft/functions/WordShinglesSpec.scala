@@ -28,7 +28,7 @@ class WordShinglesSpec extends SparkSpec {
     val df = cases.toDF("text")
     Seq(2, 3, 5).foreach { n =>
       val rows = df.select(
-          WordShingles(spark, col("text"), n).as("native"),
+          WordShingles(col("text"), n).as("native"),
           hofShingles(col("text"), n).as("hof"))
         .collect()
       rows.zip(cases).foreach { case (r, c) =>
@@ -38,14 +38,13 @@ class WordShinglesSpec extends SparkSpec {
     }
   }
 
-  test("different n coexist in one query (registered name encodes n)") {
+  test("different n coexist in one query") {
     import spark.implicits._
-    // call_function resolves at analysis time; if the temp function were
-    // keyed by bare name, building an n=2 column then an n=3 column
-    // would silently re-point BOTH at n=3
+    // each handle carries its own n in the expression it builds: an
+    // n=2 column built before an n=3 column keeps n=2
     val df = Seq("a b c d").toDF("text")
-    val s2 = WordShingles(spark, col("text"), 2)
-    val s3 = WordShingles(spark, col("text"), 3)
+    val s2 = WordShingles(col("text"), 2)
+    val s3 = WordShingles(col("text"), 3)
     val r = df.select(s2.as("a"), s3.as("b")).head()
     assert(r.getSeq[String](0) == Seq("a b", "b c", "c d"))
     assert(r.getSeq[String](1) == Seq("a b c", "b c d"))
@@ -54,7 +53,7 @@ class WordShinglesSpec extends SparkSpec {
   test("matches on the full documents corpus (explode-count parity)") {
     val d = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val native = d.select(col("doc_id"),
-        explode(WordShingles(spark, col("text"), 3)).as("s"))
+        explode(WordShingles(col("text"), 3)).as("s"))
       .groupBy("doc_id").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val hof = d.select(col("doc_id"),
@@ -66,7 +65,7 @@ class WordShinglesSpec extends SparkSpec {
 
   test("participates in whole-stage codegen") {
     val d = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val plan = d.select(explode(WordShingles(spark, col("text"), 3)))
+    val plan = d.select(explode(WordShingles(col("text"), 3)))
       .queryExecution.executedPlan.toString
     // the "*(n)" prefix marks operators fused into WholeStageCodegen
     assert(plan.contains("*(1) Generate explode(word_shingles"), plan)

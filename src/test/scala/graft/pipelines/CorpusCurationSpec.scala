@@ -29,7 +29,7 @@ class CorpusCurationSpec extends SparkSpec {
     // pairs over the kept corpus with the independent q22-style join
     val sh = kept.select(col("doc_id"),
       explode(array_distinct(
-        graft.functions.WordShingles(spark, col("text"), 3))).as("s"))
+        graft.functions.WordShingles(col("text"), 3))).as("s"))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val offending = sh.as("a").join(sh.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))

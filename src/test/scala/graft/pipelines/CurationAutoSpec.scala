@@ -23,7 +23,7 @@ class CurationAutoSpec extends SparkSpec {
   private def postings(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       explode(array_distinct(
-        graft.functions.WordShingles(spark, lower(col("text")), 3))).as("s"))
+        graft.functions.WordShingles(lower(col("text")), 3))).as("s"))
 
   // 60 docs over a combinatorially large vocabulary: shingle i of doc
   // d is "w<d> w<d+i> w<i>" — essentially no cross-doc repetition

@@ -38,7 +38,7 @@ class CurationHotBucketSpec extends SparkSpec {
   private def postings(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       explode(array_distinct(
-        graft.functions.WordShingles(spark, lower(col("text")), 3))).as("s"))
+        graft.functions.WordShingles(lower(col("text")), 3))).as("s"))
 
   private def nearDupFlags(cfg: Config): Map[Long, Boolean] =
     CorpusCuration.audit(boilerplate, cfg).collect()

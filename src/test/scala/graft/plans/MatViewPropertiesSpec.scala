@@ -31,8 +31,6 @@ class MatViewPropertiesSpec extends SparkSpec {
 
   test("state-answered aggregates equal one-shot aggregates for random batchings") {
     import spark.implicits._
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ MatViewRewrite
     try {
       for (seed <- Seq(11L, 57L, 123L)) {
         val rows = samples(genRow, 120, seed)
@@ -79,10 +77,6 @@ class MatViewPropertiesSpec extends SparkSpec {
           .orderBy("k").collect().toSeq
         assert(viaState == direct, s"seed=$seed")
       }
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == MatViewRewrite)
-      MatViewRewrite.clear()
-    }
+    } finally MatViewRewrite.clear()
   }
 }

@@ -11,16 +11,10 @@ import graft.store.{AggSpec, AggTable, TableStore}
 
 class MatViewRewriteSpec extends SparkSpec {
 
-  private def withRule[A](body: => A): A = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ MatViewRewrite
-    try body
-    finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == MatViewRewrite)
-      MatViewRewrite.clear()
-    }
-  }
+  // the rule is in every engine session; a case's registrations are
+  // cleared when it ends
+  private def withRule[A](body: => A): A =
+    try body finally MatViewRewrite.clear()
 
   /** Root paths of every parquet scan in the optimized plan. */
   private def scannedPaths(df: DataFrame): Seq[String] =

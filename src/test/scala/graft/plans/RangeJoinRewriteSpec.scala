@@ -9,16 +9,14 @@ import graft.SparkSpec
 
 /** The optimizer rule must (a) turn the nested-loop overlap join into
   * an equi-join physically, (b) keep results pair-identical, (c) leave
-  * joins that already have equi keys untouched.
+  * joins that already have equi keys untouched. The rule is in every
+  * engine session; these cases switch it on by its key.
   */
 class RangeJoinRewriteSpec extends SparkSpec {
 
   private def withRule[A](f: => A): A = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RangeJoinRewrite
-    try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == RangeJoinRewrite)
+    spark.conf.set(RangeJoinRewrite.enabledKey, "true")
+    try f finally spark.conf.unset(RangeJoinRewrite.enabledKey)
   }
 
   private def intervals: DataFrame = {
@@ -127,10 +125,10 @@ class RangeJoinRewriteSpec extends SparkSpec {
   }
 
   test("respects the enabled flag") {
+    def rewritten = overlapJoin(intervals).queryExecution.optimizedPlan
+      .toString.contains("__graft_bin")
+    assert(!rewritten, "the rewrite is off while the key is unset")
     spark.conf.set(RangeJoinRewrite.enabledKey, "false")
-    try withRule {
-      val j = overlapJoin(intervals)
-      assert(!j.queryExecution.optimizedPlan.toString.contains("__graft_bin"))
-    } finally spark.conf.unset(RangeJoinRewrite.enabledKey)
+    try assert(!rewritten) finally spark.conf.unset(RangeJoinRewrite.enabledKey)
   }
 }

@@ -34,7 +34,7 @@ class Round40QueriesSpec extends SparkSpec {
     assert(out.filter(col("new_shingles") <= 0).isEmpty)
     // running sum is monotone increasing and ends at the distinct total
     val total = graft.Tables.load(spark, dir, "documents")
-      .select(explode(graft.functions.WordShingles(spark, col("text"), 3))
+      .select(explode(graft.functions.WordShingles(col("text"), 3))
         .as("sh")).select("sh").distinct().count()
     assert(out.agg(max("cum_vocab")).head().getLong(0) === total)
     assert(out.agg(sum("new_shingles")).head().getLong(0) === total,

@@ -15,8 +15,7 @@ class IvfIndexSpec extends SparkSpec {
     .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
 
   private def bruteTop5: Map[Long, Set[Long]] = {
-    val cos = graft.functions.CosineSimilarity(
-      spark, col("q_emb"), col("embedding"))
+    val cos = graft.functions.CosineSimilarity(col("q_emb"), col("embedding"))
     val w = Window.partitionBy("q_id").orderBy(desc("cos"), col("vec_id"))
     emb.crossJoin(queries)
       .filter(col("q_id") =!= col("vec_id"))

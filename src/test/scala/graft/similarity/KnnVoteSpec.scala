@@ -28,7 +28,7 @@ class KnnVoteSpec extends SparkSpec {
   test("classify: separable clusters vote unanimously and correctly") {
     val q = corpus.select(col("n_id").as("q_id"), col("n_label").as("q_label"),
       col("n_emb").as("q_emb"))
-    val out = KnnVote.classify(spark, q, corpus, k = 3).cache()
+    val out = KnnVote.classify(q, corpus, k = 3).cache()
     assert(out.count() === 10)
     assert(out.filter(!col("correct")).isEmpty,
       "orthogonal clusters never cross-contaminate the vote")
@@ -41,7 +41,7 @@ class KnnVoteSpec extends SparkSpec {
       when(col("n_id") === 0L, lit(1L)).otherwise(col("n_label")))
     val sample = planted.select(col("n_id").as("q_id"),
       col("n_label").as("q_label"), col("n_emb").as("q_emb"))
-    val out = KnnVote.auditLabels(spark, sample, planted, k = 3, suspectMax = 1L)
+    val out = KnnVote.auditLabels(sample, planted, k = 3, suspectMax = 1L)
       .cache()
     val bad = out.filter(col("q_id") === 0L).head()
     assert(bad.getAs[Long]("agree_n") === 0L,

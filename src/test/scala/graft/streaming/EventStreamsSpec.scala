@@ -211,6 +211,35 @@ class EventStreamsSpec extends SparkSpec {
     }
   }
 
+  test("sessionFlush state encoder runs on generated code (CODEGEN_ONLY)") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // CODEGEN_ONLY turns a projection that Janino cannot compile into a
+    // failed query instead of a silent interpreted fallback
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      val input = MemoryStream[Event]
+      val query = EventStreams.sessionFlush(input.toDS(), gapMinutes = 10L)
+        .writeStream.format("memory").queryName("sess_flush_codegen")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        input.addData(Event(1L, ts(0), "click", 1.5), Event(1L, ts(5), "view", 2.5))
+        query.processAllAvailable()
+        input.addData(Event(2L, ts(30), "click", 7.0))
+        query.processAllAvailable()
+      } finally query.stop()
+      val rows = spark.table("sess_flush_codegen").collect()
+        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"),
+          r.getAs[Double]("total_value")))
+      assert(rows.toSeq == Seq((1L, 2L, 4.0)), s"got ${rows.toSeq}")
+    } finally {
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
+  }
+
   test("transformWithState quota admits the first N per user across batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
