@@ -2,7 +2,7 @@ package graft
 
 import java.time.Instant
 
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.{Column, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analytics.NsQueries
@@ -74,63 +74,43 @@ object Main {
       .filter(col("disruption_id").isNotNull)
     val bronzeInserted = store.appendIfAbsent("raw_disruptions", bronze, "disruption_id")
 
-    // Transform: the zero-UDF cleaning plan.
-    val cleaned = DisruptionCleaner.clean(raw, clock)
-
-    // Days whose gold stats this batch invalidates: the incoming rows'
-    // days plus the days of any stored versions they replace (an
-    // upsert can move a disruption across days), in one query.
-    // Collected BEFORE the upsert's commit retires the files the
-    // stored-side plan reads; the set is small (days per batch), so a
-    // driver-side collect is free. Quality counters (observe/
-    // CollectMetrics) ride this job, which reads every cleaned row once
-    // per run — the reference's per-run record accounting without a
-    // second scan; a QueryExecutionListener (or StreamingQueryListener)
-    // drains them.
-    val observed = graft.etl.Metrics.observeQuality(cleaned, "silver_load",
+    // Transform: the zero-UDF cleaning plan. Quality counters
+    // (observe/CollectMetrics) ride the silver upsert's probe job (its
+    // write job on a first load), which reads every cleaned row once
+    // per run: the reference's per-run record accounting without a
+    // second scan.
+    val quality = Observation("silver_load")
+    val cleaned = graft.etl.Metrics.observeQuality(DisruptionCleaner.clean(raw, clock), quality,
       nullCols = Seq("end_time", "duration_minutes"),
       checks = Map("impact_range" -> col("impact_level").between(1, 5)))
-    def day(df: org.apache.spark.sql.DataFrame) =
-      df.select(to_date(col("start_time")).as("d"))
-    val dayRows = store.read("disruptions").foldLeft(day(observed)) { (acc, ex) =>
-      acc.union(day(ex.join(cleaned.select("disruption_id"), Seq("disruption_id"), "left_semi")))
-    }
-    // bounded-collect: distinct() calendar dates — O(days touched by
-    // one batch), not rows
-    val touched = dayRows.distinct().collect().map(r => Option(r.getDate(0))).toSeq
-    val touchedDays = touched.flatten
-    // a NULL start_time is its own refreshable "day": the stats table
-    // carries a null-date group and it must stay in sync too
-    val touchedNull = touched.contains(None)
-
-    // Gold: materialize the daily_stats table the reference declared
-    // but never populated — refreshed ONLY for the touched days (the
-    // reference recomputes from the full table every run, which at
-    // 100 TB rescans the corpus; per-day stats depend only on that
-    // day's rows, so a partition-grain replaceWhere is exact).
-    def touchedCond(day: org.apache.spark.sql.Column): Option[org.apache.spark.sql.Column] = {
-      val inDays = if (touchedDays.nonEmpty) Some(day.isInCollection(touchedDays)) else None
-      val isNull = if (touchedNull) Some(day.isNull) else None
-      (inDays.toSeq ++ isNull.toSeq).reduceOption(_ || _)
-    }
-    def refreshGold(silver: org.apache.spark.sql.DataFrame): Long =
-      touchedCond(to_date(col("start_time"))) match {
-        case Some(silverCond) =>
-          store.replaceWhere("daily_stats",
-            NsQueries.dailyStats(silver.filter(silverCond), clock),
-            touchedCond(col("date")).get)
-        case None => store.read("daily_stats").map(_.count()).getOrElse(0L)
-      }
-    var dailyStatsRows = 0L
 
     // Load 2 (silver): latest-wins upsert — re-running the same batch
-    // writes nothing, later batches update ongoing disruptions. Gold is
-    // refreshed from the upserted rows before they commit, so a crash
-    // between the two commits leaves the upsert undone, and its re-run
-    // (same touched days) refreshes gold again; the refresh runs even
-    // when silver does not change.
-    store.upsert("disruptions", cleaned, Seq("disruption_id"), "updated_at",
-      before = silver => dailyStatsRows = refreshGold(silver))
+    // commits nothing, later batches update ongoing disruptions.
+    // Gold: materialize the daily_stats table the reference declared
+    // but never populated, refreshed ONLY for the days the upsert's
+    // change set touches: those of the rows it writes and of the stored
+    // rows they replace (an upsert can move a disruption across days).
+    // The reference recomputes from the full table every run, which at
+    // 100 TB rescans the corpus; per-day stats depend only on that
+    // day's rows, so a partition-grain replaceWhere is exact. A day's
+    // `calculated_at` is the clock of the last run that changed it.
+    // Gold commits inside the upsert, before silver, so a crash between
+    // the two commits leaves the upsert undone, and its re-run (same
+    // change set) refreshes gold again.
+    var dailyStatsRows: Option[Long] = None
+    store.upsert("disruptions", cleaned, Seq("disruption_id"), "updated_at", before = (silver, changes) => {
+      // bounded-collect: distinct() calendar dates — O(days touched by
+      // one batch), not rows
+      val touched = changes.select(to_date(col("start_time"))).distinct().collect()
+        .map(r => Option(r.getDate(0))).toSeq
+      // a NULL start_time is its own refreshable "day": the stats table
+      // carries a null-date group and it must stay in sync too
+      def touchedCond(day: Column): Column =
+        day.isInCollection(touched.flatten) || (if (touched.contains(None)) day.isNull else lit(false))
+      dailyStatsRows = Option.when(touched.nonEmpty)(store.replaceWhere("daily_stats",
+        NsQueries.dailyStats(silver.filter(touchedCond(to_date(col("start_time")))), clock),
+        touchedCond(col("date"))))
+    })
 
     // Dimension seed (ON CONFLICT DO NOTHING ≡ append-if-absent).
     val stations = spark.createDataFrame(NsSchemas.stationSeed)
@@ -149,7 +129,10 @@ object Main {
       "extracted" -> extracted,
       "bronze_inserted" -> bronzeInserted,
       "silver_rows" -> silverRows.get("n").asInstanceOf[Long],
-      "daily_stats_rows" -> dailyStatsRows,
-      "report_total_today" -> report.getAs[Long]("total"))
+      // no row changed, no refresh: the stored table's count
+      "daily_stats_rows" ->
+        dailyStatsRows.getOrElse(store.read("daily_stats").fold(0L)(_.count())),
+      "report_total_today" -> report.getAs[Long]("total")) ++
+      quality.get.toSeq.sortBy(_._1).map { case (k, v) => s"quality_$k" -> v.asInstanceOf[Long] }
   }
 }

@@ -247,6 +247,10 @@ object NsQueries {
     * `mode(…, deterministic = true)` picks the modal
     * value with ties to the smallest. The null-date group has no modal
     * station, as a join on the date key never matched it.
+    *
+    * `calculated_at` is `clock`: `Main` recomputes only the days whose
+    * rows a run changes, so a day carries the clock of the last run
+    * that changed it, not of the last run whose batch held its rows.
     */
   def dailyStats(d: DataFrame, clock: Clock): DataFrame = {
     val rows = d.select(

@@ -1,6 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, Observation}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 
 /** Pipeline observability via `Dataset.observe` (CollectMetrics):
@@ -13,14 +15,14 @@ import org.apache.spark.sql.functions._
   */
 object Metrics {
 
-  /** Attach row/null/violation counters to `df` under metric `name`.
+  /** Attach row/null/violation counters to `df` through `obs`.
     * `checks` are predicate columns counted when FALSE (violations).
-    * Read the results from a `QueryExecutionListener` after any action
+    * `obs.get` returns them once the first action over the result ends
     * (see PipelineMetricsSpec).
     */
   def observeQuality(
       df: DataFrame,
-      name: String,
+      obs: Observation,
       nullCols: Seq[String],
       checks: Map[String, Column] = Map.empty): DataFrame = {
     val nullCounters = nullCols.map(c =>
@@ -28,6 +30,16 @@ object Metrics {
     val checkCounters = checks.toSeq.sortBy(_._1).map { case (n, pred) =>
       sum(when(pred, 0L).otherwise(1L)).as(s"n_bad_$n")
     }
-    df.observe(name, count(lit(1)).as("n_rows"), nullCounters ++ checkCounters: _*)
+    // the optimizer folds `df`'s constant columns through projections
+    // and filters, not through the observation: re-state them above it,
+    // so plans over the result still fold them (an upsert then prunes
+    // the stored side of its probe by a constant batch version)
+    def constants(p: LogicalPlan): Map[String, Column] = p match {
+      case Filter(_, child) => constants(child)
+      case Project(list, _) => list.collect { case a: Alias if a.child.foldable => a.name -> GraftPlanBridge.column(a.child) }.toMap
+      case _ => Map.empty
+    }
+    df.observe(obs, count(lit(1)).as("n_rows"), nullCounters ++ checkCounters: _*)
+      .withColumns(constants(df.queryExecution.analyzed))
   }
 }

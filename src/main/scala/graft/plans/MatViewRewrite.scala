@@ -96,13 +96,12 @@ object MatViewRewrite extends Rule[LogicalPlan] {
         (for {
           (lr, filters) <- strip(child)
           view <- registered(lr)
-          rewritten <- tryRewrite(agg, groupExprs, aggExprs, filters, view)
+          rewritten <- tryRewrite(groupExprs, aggExprs, filters, view)
         } yield rewritten).getOrElse(agg)
     }
   }
 
   private def tryRewrite(
-      agg: Aggregate,
       groupExprs: Seq[Expression],
       aggExprs: Seq[NamedExpression],
       filters: Seq[Expression],

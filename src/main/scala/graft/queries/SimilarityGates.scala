@@ -151,7 +151,7 @@ object SimilarityGates {
         .persist()
       val cents = graft.similarity.TrainedModels
         .ivfCentroids(s, dir, k = 16, iters = 3)
-      val index = graft.similarity.IvfIndex.assign(emb, cents, "vec_id", "embedding")
+      val index = graft.similarity.IvfIndex.assign(emb, cents, "embedding")
       // query pool + brute-force top-3: the AnnBaseline shared path —
       // pool capped at SamplePools.AnnQueryPool (keeps the baseline
       // O(pool · corpus), linear in the corpus) and HASH-GATED as its

@@ -94,7 +94,7 @@ object IvfIndex {
     * "index build"; a narrow projection (persist/partition the result
     * by `cid` at scale).
     */
-  def assign(emb: DataFrame, centroids: DataFrame, idCol: String, vecCol: String): DataFrame = {
+  def assign(emb: DataFrame, centroids: DataFrame, vecCol: String): DataFrame = {
     // bounded-collect: the centroid table is O(k) model rows by
     // construction (trainCentroids emits ≤ k)
     val model = centroids.collect()

@@ -211,7 +211,7 @@ object IvfPq {
       k: Int,
       pqIters: Int): (DataFrame, DataFrame, PqIndex.Codebook) = {
     val cents = IvfIndex.trainCentroids(emb, idCol, vecCol, nClusters, ivfIters)
-    val assigned = IvfIndex.assign(emb, cents, idCol, vecCol)
+    val assigned = IvfIndex.assign(emb, cents, vecCol)
     val book = PqIndex.train(emb, idCol, vecCol, m, k, pqIters)
     val codes = PqIndex.encode(emb, idCol, vecCol, book)
       .join(assigned.select(col(idCol), col("cid")), idCol)

@@ -230,7 +230,7 @@ final class TableStore(spark: SparkSession, root: String) {
     next
   }
 
-  private def lose(base: Snapshot, rival: Snapshot, added: Seq[Path] = Nil): Nothing = {
+  private def lose(base: Snapshot, rival: Snapshot, added: Seq[Path]): Nothing = {
     added.foreach(fs.delete(_, false))
     throw new ConcurrentModificationException(
       s"commit to ${base.table} on version ${base.version} by writer $token lost: writer " +
@@ -309,43 +309,41 @@ final class TableStore(spark: SparkSession, root: String) {
   }
 
   /** Latest-wins upsert: rows in `df` replace existing rows with the
-    * same key; among duplicates the highest `versionCol` (then the
-    * incoming batch over the stored copy) wins. Returns the number of
-    * rows that changed the table.
-    */
-  def upsert(table: String, df: DataFrame, key: String, versionCol: String): Long =
-    upsert(table, df, Seq(key), versionCol)
-
-  /** Composite-key latest-wins upsert (same semantics as the
-    * single-key form; the key is the tuple of `keys`, compared
-    * null-safely, so a null key is one key like any other).
+    * same key, the tuple of `keys` compared null-safely (a null key is
+    * one key like any other); among duplicates the highest `versionCol`
+    * (then the incoming batch over the stored copy) wins. Returns the
+    * number of rows that changed the table.
     *
     * One pass over the batch finds the rows that change the table: after
     * in-batch latest-wins dedup, a row changes the table unless the
     * stored row with its key has a higher version (nulls lowest) or is
-    * identical in every column. Nothing changes → nothing is committed:
-    * a replayed batch, or the empty final micro-batch a streaming query
-    * delivers to foreachBatch, costs one probe job over the batch and
-    * no rewrite. Otherwise the stored rows of the changed keys are
-    * anti-joined away and the changed rows appended: the table is
-    * streamed through a join against the (small) changed keys instead
-    * of the table-wide `row_number` shuffle a union-and-rank merge
-    * needs. Broadcast choices are left to the planner's threshold.
+    * identical in every column. The probe job counts the changed rows
+    * and keeps them (a local checkpoint), so nothing after it probes
+    * again. Nothing changes → nothing is committed: a replayed batch,
+    * or the empty final micro-batch a streaming query delivers to
+    * foreachBatch, costs one probe job over the batch and no rewrite.
+    * Otherwise the stored rows of the changed keys are anti-joined away
+    * and the changed rows appended: the table is streamed through a
+    * join against the (small) changed keys instead of the table-wide
+    * `row_number` shuffle a union-and-rank merge needs. Broadcast
+    * choices are left to the planner's threshold.
     *
-    * `before` runs on the table as the upsert leaves it, once its new
-    * files are written and before they commit (on the unchanged table
-    * when nothing changes): a table derived from this one commits
-    * first, so a crash between the two commits leaves the upsert to be
-    * re-done, and its re-run derives again.
+    * `before` runs only when the upsert commits (a first write, or a
+    * batch that changes a row), between writing the new files and
+    * committing them, on the table as the upsert leaves it and the
+    * change set: the rows written plus the stored rows of their keys.
+    * A table derived from this one commits first, so a crash between
+    * the two commits leaves the upsert, and the same change set, to be
+    * re-done. The commit retires the change set's stored files: read it
+    * in `before` only.
     */
   def upsert(
       table: String, df: DataFrame, keys: Seq[String], versionCol: String,
-      before: DataFrame => Unit = _ => ()): Long = {
+      before: (DataFrame, DataFrame) => Unit = (_, _) => ()): Long = {
     val latest = dedupLatest(df.withColumn("__src", lit(1)), keys, versionCol)
     val base = snapshot(table)
-    val onStaged = (s: Snapshot) => before(read(s, "").get)
     read(base, "") match {
-      case None => replace(base, latest, onStaged)
+      case None => replace(base, latest, s => { val t = read(s, "").get; before(t, t) })
       case Some(existing) =>
         val stored = existing.select(existing.columns.map(c => col(c).as(s"__s_$c")): _*)
         def s(c: String) = col(s"__s_$c")
@@ -353,14 +351,17 @@ final class TableStore(spark: SparkSession, root: String) {
         val storedHigher = coalesce(s(versionCol) > col(versionCol),
           s(versionCol).isNotNull && col(versionCol).isNull)
         val identical = latest.columns.map(c => col(c) <=> s(c)).reduce(_ && _)
+        val probed = Observation()
         val changed = latest.join(stored, sameKey && (storedHigher || identical), "left_anti")
-        val n = changed.count()
+          .observe(probed, count(lit(1)).as("n")).localCheckpoint()
+        val n = probed.get("n").asInstanceOf[Long]
         if (n > 0) {
           val changedKeys = changed.select(keys.map(k => col(k).as(s"__c_$k")): _*)
-          commit(base, Seq(Write("", existing
-            .join(changedKeys, keys.map(k => col(k) <=> col(s"__c_$k")).reduce(_ && _), "left_anti")
-            .unionByName(changed))), before = onStaged)
-        } else before(existing)
+          val ofChanged = keys.map(k => col(k) <=> col(s"__c_$k")).reduce(_ && _)
+          commit(base, Seq(Write("", existing.join(changedKeys, ofChanged, "left_anti").unionByName(changed))),
+            before = s => before(read(s, "").get,
+              changed.unionByName(existing.join(changedKeys, ofChanged, "left_semi"))))
+        }
         n
     }
   }
@@ -563,9 +564,6 @@ final class TableStore(spark: SparkSession, root: String) {
   def readVersion(table: String, version: Int): DataFrame =
     load(table, version).flatMap(read(_, "")).getOrElse(throw new IllegalArgumentException(
       s"version $version of $table does not exist or was never committed"))
-
-  /** The latest committed version, if any. */
-  def readLatest(table: String): Option[DataFrame] = read(table)
 
   /** Drop all but the newest `keep` versions, their files and any
     * uncommitted debris — the retention pass that bounds storage growth.

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.etl.Clock
 
 /** Full-pipeline runs: extract → bronze append → silver upsert → gold
@@ -41,13 +43,26 @@ class MainSpec extends SparkSpec {
       org.apache.spark.sql.functions.col("start_time"))).distinct().count()
     def cleaned(path: String, clock: Clock) = graft.etl.DisruptionCleaner
       .clean(graft.sources.RawSource.readRawJsonArray(spark, path), clock).collect().toSeq
+    // the quality counters, counted over the collected cleaned batch
+    def quality(path: String, clock: Clock) = {
+      val c = cleaned(path, clock)
+      def nulls(field: String) = c.count(_.isNullAt(c.head.fieldIndex(field))).toLong
+      Map("quality_n_rows" -> c.size.toLong,
+        "quality_n_null_end_time" -> nulls("end_time"),
+        "quality_n_null_duration_minutes" -> nulls("duration_minutes"),
+        "quality_n_bad_impact_range" -> c.count(r =>
+          Option(r.getAs[Integer]("impact_level")).forall(i => i < 1 || i > 5)).toLong)
+    }
 
     val first = Main.run(spark, histPath, root, clock1).toMap
     assert(first == Map("extracted" -> 40L, "bronze_inserted" -> 39L,
-      "silver_rows" -> 39L, "daily_stats_rows" -> days(), "report_total_today" -> 39L))
+      "silver_rows" -> 39L, "daily_stats_rows" -> days(), "report_total_today" -> 39L) ++
+      quality(histPath, clock1))
+    assert(first("quality_n_null_duration_minutes") > 0L)
     val second = Main.run(spark, updPath, root, clock2).toMap
     assert(second == Map("extracted" -> 13L, "bronze_inserted" -> 10L,
-      "silver_rows" -> 49L, "daily_stats_rows" -> days(), "report_total_today" -> 13L))
+      "silver_rows" -> 49L, "daily_stats_rows" -> days(), "report_total_today" -> 13L) ++
+      quality(updPath, clock2))
 
     // silver ≡ a driver-side latest-wins fold (the later batch has the
     // later updated_at, so its rows win)
@@ -64,15 +79,36 @@ class MainSpec extends SparkSpec {
     val stats = gold(silver, clock2)
     assert(rows(store.read("daily_stats").get.drop("calculated_at")) == stats)
 
-    // replay: same counts, bronze inserts nothing, and the disruptions
-    // part files are not rewritten
-    def parts() = new java.io.File(store.path("disruptions")).listFiles()
-      .filter(_.getName.startsWith("part-")).map(f => f.getName -> f.lastModified()).toSet
-    val before = parts()
+    // replay: same counts, bronze inserts nothing, and nothing is
+    // committed: every table keeps its manifest and data files
+    def files() = {
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => f.toString.drop(root.length) -> Files.getLastModifiedTime(f)).toSet
+      finally walk.close()
+    }
+    val before = files()
+    assert(Seq("raw_disruptions", "disruptions", "stations", "daily_stats").forall(t =>
+      before.exists(_._1.startsWith(s"/$t/_manifest/"))))
     val replay = Main.run(spark, updPath, root, clock2).toMap
     assert(replay == second.updated("bronze_inserted", 0L))
-    assert(parts() == before)
+    assert(files() == before)
     assert(rows(store.read("daily_stats").get.drop("calculated_at")) == stats)
+  }
+
+  test("a snapshot without ids loads nothing and still returns its quality counters") {
+    // the cleaner drops every record: the counters ride an empty probe
+    val dir = Files.createTempDirectory("graft-main-noids")
+    val noIds = snapshot(dir, "noids.json", update.map(_.copy(id = None)))
+    val root = dir.resolve("store").toString
+    val want = Map("extracted" -> 13L, "bronze_inserted" -> 0L, "silver_rows" -> 0L,
+      "daily_stats_rows" -> 0L, "report_total_today" -> 0L, "quality_n_rows" -> 0L,
+      "quality_n_null_end_time" -> 0L, "quality_n_null_duration_minutes" -> 0L,
+      "quality_n_bad_impact_range" -> 0L)
+    assert(Main.run(spark, noIds, root, clockOn(26)).toMap == want)
+    val hist = Main.run(spark, snapshot(dir, "history.json", history), root, clockOn(25)).toMap
+    assert(Main.run(spark, noIds, root, clockOn(26)).toMap ==
+      want ++ Seq("silver_rows", "daily_stats_rows").map(k => k -> hist(k)))
   }
 
   test("api: extract source converges with the file path on a synthetic snapshot") {

@@ -31,7 +31,7 @@ class IvfIndexSpec extends SparkSpec {
   test("IVF search recalls most brute-force neighbours at nprobe=4/16") {
     val cents = IvfIndex.trainCentroids(emb, "vec_id", "embedding", k = 16, iters = 4)
     assert(cents.count() == 16)
-    val index = IvfIndex.assign(emb, cents, "vec_id", "embedding")
+    val index = IvfIndex.assign(emb, cents, "embedding")
     val got = IvfIndex
       .search(index, cents, queries, "vec_id", "embedding", nprobe = 4, topK = 5)
       .collect().groupBy(_.getLong(0)).map { case (q, rs) =>

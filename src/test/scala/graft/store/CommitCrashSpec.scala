@@ -129,8 +129,8 @@ class CommitCrashSpec extends SparkSpec {
     // manifest, a commits version 2
     val manifest: FaultFs.Op => Boolean = op => op._1 == "create" && op._2.contains("/_manifest/")
     val err = intercept[ConcurrentModificationException] {
-      FaultFs.armed(0, manifest)(a.upsert("t", Seq(("y", 2, 2L)).toDF("k", "v", "ver"), "k", "ver")) {
-        b.upsert("t", Seq(("z", 3, 3L)).toDF("k", "v", "ver"), "k", "ver")
+      FaultFs.armed(0, manifest)(a.upsert("t", Seq(("y", 2, 2L)).toDF("k", "v", "ver"), Seq("k"), "ver")) {
+        b.upsert("t", Seq(("z", 3, 3L)).toDF("k", "v", "ver"), Seq("k"), "ver")
       }
     }
     assert(err.getMessage.contains(a.token) && err.getMessage.contains(b.token), err.getMessage)

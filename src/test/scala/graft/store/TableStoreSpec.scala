@@ -54,12 +54,12 @@ class TableStoreSpec extends SparkSpec {
   test("upsert replaces matched keys, keeps unmatched, latest version wins") {
     import spark.implicits._
     val store = newStore()
-    store.upsert("u", Seq(("a", 1, 10L), ("b", 2, 10L)).toDF("k", "v", "ver"), "k", "ver")
-    store.upsert("u", Seq(("b", 20, 11L), ("c", 3, 11L)).toDF("k", "v", "ver"), "k", "ver")
+    store.upsert("u", Seq(("a", 1, 10L), ("b", 2, 10L)).toDF("k", "v", "ver"), Seq("k"), "ver")
+    store.upsert("u", Seq(("b", 20, 11L), ("c", 3, 11L)).toDF("k", "v", "ver"), Seq("k"), "ver")
     val rows = store.read("u").get.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(rows == Map("a" -> 1, "b" -> 20, "c" -> 3))
     // Idempotent: re-applying the second batch changes nothing.
-    store.upsert("u", Seq(("b", 20, 11L), ("c", 3, 11L)).toDF("k", "v", "ver"), "k", "ver")
+    store.upsert("u", Seq(("b", 20, 11L), ("c", 3, 11L)).toDF("k", "v", "ver"), Seq("k"), "ver")
     val again = store.read("u").get.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(again == Map("a" -> 1, "b" -> 20, "c" -> 3))
   }
@@ -97,8 +97,8 @@ class TableStoreSpec extends SparkSpec {
   test("upsert with stale incoming version keeps the stored row") {
     import spark.implicits._
     val store = newStore()
-    store.upsert("w", Seq(("a", 5, 20L)).toDF("k", "v", "ver"), "k", "ver")
-    store.upsert("w", Seq(("a", 1, 10L)).toDF("k", "v", "ver"), "k", "ver")
+    store.upsert("w", Seq(("a", 5, 20L)).toDF("k", "v", "ver"), Seq("k"), "ver")
+    store.upsert("w", Seq(("a", 1, 10L)).toDF("k", "v", "ver"), Seq("k"), "ver")
     assert(store.read("w").get.collect()(0).getInt(1) == 5)
   }
 
@@ -155,13 +155,13 @@ class TableStoreSpec extends SparkSpec {
     assert(store.writeVersion("t", Seq((1, "a"), (2, "b")).toDF("k", "v")) == 2)
     // old version is untouched by the new commit (snapshot isolation)
     assert(store.readVersion("t", 1).count() == 1)
-    assert(store.readLatest("t").get.count() == 2)
+    assert(store.read("t").get.count() == 2)
     // a crashed write = data files no manifest lists, and a manifest
     // cut short → readers ignore both
     new java.io.File(s"$root/t/part-junk.parquet").createNewFile()
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/t/_manifest/3.json"), "{\"wri")
     assert(store.versions("t") == Seq(1, 2))
-    assert(store.readLatest("t").get.count() == 2)
+    assert(store.read("t").get.count() == 2)
     // the next commit claims a number past the debris and is the latest
     val v = store.writeVersion("t", Seq((9, "z")).toDF("k", "v"))
     assert(v > 2 && store.versions("t").last == v)
@@ -237,8 +237,8 @@ class TableStoreSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-store-schema").toString
     val writer = new TableStore(spark, root)
     writer.write("w", Seq((1L, "a")).toDF("k", "v"))
-    writer.upsert("u", Seq((1L, "a", 10L)).toDF("k", "v", "ver"), "k", "ver")
-    writer.upsert("u", Seq((2L, "b", 11L)).toDF("k", "v", "ver"), "k", "ver") // second version
+    writer.upsert("u", Seq((1L, "a", 10L)).toDF("k", "v", "ver"), Seq("k"), "ver")
+    writer.upsert("u", Seq((2L, "b", 11L)).toDF("k", "v", "ver"), Seq("k"), "ver") // second version
     writer.appendIfAbsent("a", Seq((1L, "a")).toDF("k", "v"), "k")
     val agg = new AggTable(writer, "agg", AggSpec(Seq("k"), Seq("x")))
     agg.accumulate("b1", Seq(("a", 1.0)).toDF("k", "x"))
@@ -284,7 +284,7 @@ class TableStoreSpec extends SparkSpec {
     assert(store.appendIfAbsent("legacy", Seq((3L, "c", 11L)).toDF("k", "v", "ver"), "k") == 1)
     assert(new java.io.File(store.path("legacy"), "_manifest/2.json").isFile)
     assert(new TableStore(spark, root).read("legacy").get.count() == 3)
-    store.upsert("legacy", Seq((4L, "d", 11L)).toDF("k", "v", "ver"), "k", "ver")
+    store.upsert("legacy", Seq((4L, "d", 11L)).toDF("k", "v", "ver"), Seq("k"), "ver")
     assert(store.read("legacy").get.count() == 4)
   }
 
@@ -313,18 +313,18 @@ class TableStoreSpec extends SparkSpec {
     import spark.implicits._
     val store = newStore()
     val batch = Seq(("a", 1, 10L), ("b", 2, 10L)).toDF("k", "v", "ver")
-    assert(store.upsert("r", batch, "k", "ver") == 2)
+    assert(store.upsert("r", batch, Seq("k"), "ver") == 2)
     def parts() = new java.io.File(store.path("r")).listFiles()
       .filter(_.getName.startsWith("part-")).map(f => f.getName -> f.lastModified()).toSet
     val before = parts()
     // a replay, a stale row and an empty batch change nothing
-    assert(store.upsert("r", batch, "k", "ver") == 0)
-    assert(store.upsert("r", Seq(("a", 9, 9L)).toDF("k", "v", "ver"), "k", "ver") == 0)
-    assert(store.upsert("r", batch.limit(0), "k", "ver") == 0)
+    assert(store.upsert("r", batch, Seq("k"), "ver") == 0)
+    assert(store.upsert("r", Seq(("a", 9, 9L)).toDF("k", "v", "ver"), Seq("k"), "ver") == 0)
+    assert(store.upsert("r", batch.limit(0), Seq("k"), "ver") == 0)
     assert(parts() == before)
     // a tie on version with new content, and a new key, do change it
     assert(store.upsert("r", Seq(("a", 5, 10L), ("c", 3, 1L)).toDF("k", "v", "ver"),
-      "k", "ver") == 2)
+      Seq("k"), "ver") == 2)
     assert(store.read("r").get.collect().map(r => r.getString(0) -> r.getInt(1)).toMap ==
       Map("a" -> 5, "b" -> 2, "c" -> 3))
   }

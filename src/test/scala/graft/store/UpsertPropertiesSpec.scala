@@ -36,17 +36,20 @@ class UpsertPropertiesSpec extends SparkSpec {
   private def dedupBatch(b: Seq[(Long, Long, String)]): Seq[(Long, Long, String)] =
     b.groupBy(e => (e._1, e._2)).map(_._2.head).toSeq
 
+  private def refStep(
+      state: Map[Long, (Long, String)], batch: Seq[(Long, Long, String)]): Map[Long, (Long, String)] = {
+    val bestInBatch = batch.groupBy(_._1).view.mapValues(
+      _.maxBy(_._2)).toMap
+    state ++ bestInBatch.collect {
+      case (k, (_, ver, payload))
+          if state.get(k).forall(_._1 <= ver) => // tie -> incoming wins
+        k -> (ver, payload)
+    }
+  }
+
   private def refFold(
       batches: Seq[Seq[(Long, Long, String)]]): Map[Long, (Long, String)] =
-    batches.foldLeft(Map.empty[Long, (Long, String)]) { (state, batch) =>
-      val bestInBatch = batch.groupBy(_._1).view.mapValues(
-        _.maxBy(_._2)).toMap
-      state ++ bestInBatch.collect {
-        case (k, (_, ver, payload))
-            if state.get(k).forall(_._1 <= ver) => // tie -> incoming wins
-          k -> (ver, payload)
-      }
-    }
+    batches.foldLeft(Map.empty[Long, (Long, String)])(refStep)
 
   test("any batch split folds to the reference latest-wins state; replay is a no-op") {
     samples(genEvents, 3, seed = 10800L).zipWithIndex.foreach {
@@ -64,8 +67,20 @@ class UpsertPropertiesSpec extends SparkSpec {
             case ((acc, from), to) =>
               (acc :+ dedupBatch(events.slice(from, to)), to)
           }._1.filter(_.nonEmpty)
-        batches.foreach { b =>
-          store.upsert("t", b.toDF("k", "ver", "payload"), "k", "ver")
+        // each batch hands `before` the reference fold's diff: the new
+        // version of every key whose state changed, plus its previous one
+        batches.foldLeft(Map.empty[Long, (Long, String)]) { (state, b) =>
+          val next = refStep(state, b)
+          val diff = next.toSeq.filterNot { case (k, v) => state.get(k).contains(v) }
+            .flatMap { case (k, v) => (k -> v) +: state.get(k).map(k -> _).toSeq }
+            .map { case (k, (ver, payload)) => (k, ver, payload) }
+          var changes = Option.empty[Seq[(Long, Long, String)]]
+          store.upsert("t", b.toDF("k", "ver", "payload"), Seq("k"), "ver",
+            before = (_, c) => changes = Some(c.select("k", "ver", "payload")
+              .as[(Long, Long, String)].collect().toSeq))
+          assert(changes.map(_.sorted) == Some(diff.sorted),
+            s"sample $i: change set of batch $b")
+          next
         }
         def snapshot(): Map[Long, (Long, String)] =
           store.read("t").get.select("k", "ver", "payload").collect()
@@ -74,7 +89,11 @@ class UpsertPropertiesSpec extends SparkSpec {
         assert(got == refFold(batches),
           s"sample $i diverged from reference fold: batches=$batches")
         // idempotent re-run: replaying the last batch changes nothing
-        store.upsert("t", batches.last.toDF("k", "ver", "payload"), "k", "ver")
+        // and commits nothing, so `before` is not called
+        var called = false
+        store.upsert("t", batches.last.toDF("k", "ver", "payload"), Seq("k"), "ver",
+          before = (_, _) => called = true)
+        assert(!called, s"sample $i: a replay called before")
         assert(snapshot() == got, s"sample $i: replaying a batch changed state")
     }
   }
@@ -121,13 +140,13 @@ class UpsertPropertiesSpec extends SparkSpec {
         .as[(Option[Long], Option[Long], String)].collect().toSet
       batches.foldLeft(Seq.empty[(Option[Long], Option[Long], String)]) { (want, b) =>
         val next = windowMerge(want, b)
-        val changed = store.upsert("t", b.toDF("k", "ver", "payload"), "k", "ver")
+        val changed = store.upsert("t", b.toDF("k", "ver", "payload"), Seq("k"), "ver")
         val got = snapshot()
         assert(got == next.toSet, s"sample $i diverged from the window merge: batch=$b")
         assert(got.size == next.size, s"sample $i: duplicate keys stored")
         assert(changed == (next.toSet -- want).size, s"sample $i: changed-row count")
         // replaying the batch is a no-op
-        assert(store.upsert("t", b.toDF("k", "ver", "payload"), "k", "ver") == 0)
+        assert(store.upsert("t", b.toDF("k", "ver", "payload"), Seq("k"), "ver") == 0)
         assert(snapshot() == got, s"sample $i: replay changed state")
         next
       }
