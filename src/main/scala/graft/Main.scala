@@ -1,6 +1,8 @@
 package graft
 
 import java.time.Instant
+import java.util.concurrent.{CompletableFuture, ConcurrentLinkedQueue, ExecutionException, Future,
+  LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
 import org.apache.spark.sql.{Column, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,6 +17,20 @@ import graft.store.TableStore
   * plan) → load (idempotent bronze append + silver upsert) → gold
   * daily_stats → report. One logical-plan chain per stage; the only
   * wide operations are the load-path dedups and the report aggregates.
+  *
+  * A run is a small stage graph. The extract count runs first (and
+  * ends an empty run). Then three stages that write unrelated tables
+  * run at once, each writing only its own: the bronze append, the
+  * silver upsert with its gold refresh, and the stations seed. Each
+  * SQL execution carries a fixed cost (analysis, planning, dispatch)
+  * that serial stages would add up. Two orders hold:
+  *  - gold commits before the silver manifest (inside the upsert), so a
+  *    crash between the two leaves the same change set to re-do;
+  *  - the report starts once the silver upsert has returned, so it
+  *    reads the committed silver table; with nothing changed, the
+  *    stored `daily_stats` count runs beside it.
+  * `run` waits for every stage it started before it returns or
+  * throws; a failed stage fails the run with its own exception.
   */
 object Main {
 
@@ -36,6 +52,54 @@ object Main {
     val counts = run(spark, args(0), args(1), clock)
     counts.foreach { case (k, v) => println(s"[pipeline] $k=$v") }
     spark.stop()
+  }
+
+  /** Stages that run at once: bronze, silver with gold, stations. */
+  private val Stages = 3
+
+  /** Name prefix of the threads that run a pipeline's stages. */
+  private[graft] val StageThread = "graft-pipeline-stage"
+
+  /** One run's stage threads: a fixed pool whose threads are all
+    * created up front, from the calling thread, so each inherits the
+    * caller's Spark local properties (job tags, an op id a caller set)
+    * and active session. A pool shared across runs would carry a past
+    * caller's. The first stage to fail is the run's failure: once one
+    * has failed, [[result]] waits for every started stage and throws
+    * that stage's own exception, the later failures suppressed in it.
+    */
+  private final class StagePool {
+    private val threads = new ConcurrentLinkedQueue[Thread]()
+    private val pool = new ThreadPoolExecutor(Stages, Stages, 0L, TimeUnit.MILLISECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, s"$StageThread-${threads.size + 1}")
+        threads.add(t)
+        t
+      })
+    pool.prestartAllCoreThreads()
+    private val failures = new ConcurrentLinkedQueue[Throwable]()
+
+    /** Starts `body` as a stage. */
+    def apply[A](body: => A): Future[A] =
+      pool.submit[A](() => try body catch { case e: Throwable => failures.add(e); throw e })
+
+    /** The stage's result, unless a stage has failed. */
+    def result[A](f: Future[A]): A = {
+      val a = try Some(f.get()) catch { case _: ExecutionException => None }
+      if (!failures.isEmpty) {
+        close()
+        val first = failures.poll()
+        failures.forEach(first.addSuppressed(_))
+        throw first
+      }
+      a.get
+    }
+
+    /** Lets every started stage finish, then ends the threads. */
+    def close(): Unit = {
+      pool.shutdown()
+      threads.forEach(_.join())
+    }
   }
 
   /** Runs the full pipeline; returns stage counts for reporting. */
@@ -72,7 +136,6 @@ object Main {
       to_json(struct(raw.columns.map(col): _*)).as("raw_json"),
       clock.ts.as("fetched_at"))
       .filter(col("disruption_id").isNotNull)
-    val bronzeInserted = store.appendIfAbsent("raw_disruptions", bronze, "disruption_id")
 
     // Transform: the zero-UDF cleaning plan. Quality counters
     // (observe/CollectMetrics) ride the silver upsert's probe job (its
@@ -84,55 +147,70 @@ object Main {
       nullCols = Seq("end_time", "duration_minutes"),
       checks = Map("impact_range" -> col("impact_level").between(1, 5)))
 
-    // Load 2 (silver): latest-wins upsert — re-running the same batch
-    // commits nothing, later batches update ongoing disruptions.
-    // Gold: materialize the daily_stats table the reference declared
-    // but never populated, refreshed ONLY for the days the upsert's
-    // change set touches: those of the rows it writes and of the stored
-    // rows they replace (an upsert can move a disruption across days).
-    // The reference recomputes from the full table every run, which at
-    // 100 TB rescans the corpus; per-day stats depend only on that
-    // day's rows, so a partition-grain replaceWhere is exact. A day's
-    // `calculated_at` is the clock of the last run that changed it.
-    // Gold commits inside the upsert, before silver, so a crash between
-    // the two commits leaves the upsert undone, and its re-run (same
-    // change set) refreshes gold again.
-    var dailyStatsRows: Option[Long] = None
-    store.upsert("disruptions", cleaned, Seq("disruption_id"), "updated_at", before = (silver, changes) => {
-      // bounded-collect: distinct() calendar dates — O(days touched by
-      // one batch), not rows
-      val touched = changes.select(to_date(col("start_time"))).distinct().collect()
-        .map(r => Option(r.getDate(0))).toSeq
-      // a NULL start_time is its own refreshable "day": the stats table
-      // carries a null-date group and it must stay in sync too
-      def touchedCond(day: Column): Column =
-        day.isInCollection(touched.flatten) || (if (touched.contains(None)) day.isNull else lit(false))
-      dailyStatsRows = Option.when(touched.nonEmpty)(store.replaceWhere("daily_stats",
-        NsQueries.dailyStats(silver.filter(touchedCond(to_date(col("start_time")))), clock),
-        touchedCond(col("date"))))
-    })
-
     // Dimension seed (ON CONFLICT DO NOTHING ≡ append-if-absent).
     val stations = spark.createDataFrame(NsSchemas.stationSeed)
       .toDF("station_code", "station_name", "latitude", "longitude", "country")
       .withColumn("last_updated", clock.ts)
-    store.appendIfAbsent("stations", stations, "station_code")
 
-    // Report (pipeline.py:304-342); the silver row count is observed on
-    // the report's own scan.
-    val silver = store.read("disruptions").get
-    val silverRows = Observation()
-    // bounded-collect: todaysReport is a global O(1)-row aggregate
-    val report = NsQueries.todaysReport(
-      silver.observe(silverRows, count(lit(1)).as("n")), clock).collect()(0)
-    Seq(
-      "extracted" -> extracted,
-      "bronze_inserted" -> bronzeInserted,
-      "silver_rows" -> silverRows.get("n").asInstanceOf[Long],
-      // no row changed, no refresh: the stored table's count
-      "daily_stats_rows" ->
-        dailyStatsRows.getOrElse(store.read("daily_stats").fold(0L)(_.count())),
-      "report_total_today" -> report.getAs[Long]("total")) ++
-      quality.get.toSeq.sortBy(_._1).map { case (k, v) => s"quality_$k" -> v.asInstanceOf[Long] }
+    val stages = new StagePool
+    try {
+      val bronzeLoad = stages(store.appendIfAbsent("raw_disruptions", bronze, "disruption_id"))
+      // Load 2 (silver): latest-wins upsert — re-running the same batch
+      // commits nothing, later batches update ongoing disruptions.
+      // Gold: materialize the daily_stats table the reference declared
+      // but never populated, refreshed ONLY for the days the upsert's
+      // change set touches: those of the rows it writes and of the
+      // stored rows they replace (an upsert can move a disruption across
+      // days). The reference recomputes from the full table every run,
+      // which at 100 TB rescans the corpus; per-day stats depend only on
+      // that day's rows, so a partition-grain replaceWhere is exact. A
+      // day's `calculated_at` is the clock of the last run that changed
+      // it. Gold commits inside the upsert, before silver, so a crash
+      // between the two commits leaves the upsert undone, and its re-run
+      // (same change set) refreshes gold again. Returns gold's rows
+      // after a refresh.
+      val silverLoad = stages {
+        var dailyStatsRows: Option[Long] = None
+        store.upsert("disruptions", cleaned, Seq("disruption_id"), "updated_at", before = (silver, changes) => {
+          // bounded-collect: distinct() calendar dates — O(days touched
+          // by one batch), not rows
+          val touched = changes.select(to_date(col("start_time"))).distinct().collect()
+            .map(r => Option(r.getDate(0))).toSeq
+          // a NULL start_time is its own refreshable "day": the stats
+          // table carries a null-date group and it must stay in sync too
+          def touchedCond(day: Column): Column =
+            day.isInCollection(touched.flatten) || (if (touched.contains(None)) day.isNull else lit(false))
+          dailyStatsRows = Option.when(touched.nonEmpty)(store.replaceWhere("daily_stats",
+            NsQueries.dailyStats(silver.filter(touchedCond(to_date(col("start_time")))), clock),
+            touchedCond(col("date"))))
+        })
+        dailyStatsRows
+      }
+      val stationsLoad = stages(store.appendIfAbsent("stations", stations, "station_code"))
+
+      // Report (pipeline.py:304-342) on the committed silver table; its
+      // row count is observed on the report's own scan.
+      val refreshed = stages.result(silverLoad)
+      val report = stages {
+        val silverRows = Observation()
+        // bounded-collect: todaysReport is a global O(1)-row aggregate
+        val total = NsQueries.todaysReport(
+          store.read("disruptions").get.observe(silverRows, count(lit(1)).as("n")), clock)
+          .collect()(0).getAs[Long]("total")
+        (silverRows.get("n").asInstanceOf[Long], total)
+      }
+      // no row changed, no refresh: the stored table's row count
+      val dailyStatsRows = refreshed.fold(stages(store.rowCount("daily_stats")))(
+        CompletableFuture.completedFuture(_))
+      val (silverRows, reportTotal) = stages.result(report)
+      stages.result(stationsLoad)
+      Seq(
+        "extracted" -> extracted,
+        "bronze_inserted" -> stages.result(bronzeLoad),
+        "silver_rows" -> silverRows,
+        "daily_stats_rows" -> stages.result(dailyStatsRows),
+        "report_total_today" -> reportTotal) ++
+        quality.get.toSeq.sortBy(_._1).map { case (k, v) => s"quality_$k" -> v.asInstanceOf[Long] }
+    } finally stages.close()
   }
 }

@@ -37,7 +37,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * `<table>/_manifest/<n>.json`, holding the committing writer's token
   * and, per named part (a plain table has the one part `""`; multi-part
   * tables address theirs as `<table>/<part>`), the schema and the file
-  * list with sizes. Readers take the highest complete manifest and scan
+  * list with sizes and, from the write job's own count, its rows.
+  * Readers take the highest complete manifest and scan
   * exactly its files: no listing, no footer-inference job. Every write
   * is one [[commit]]. At rest a table directory holds its current
   * files (a versioned table also its retained versions') and
@@ -100,7 +101,7 @@ final class TableStore(spark: SparkSession, root: String) {
       val JObject(parts) = (json \ "parts"): @unchecked
       Some(Snapshot(table, v, (json \ "writer").extract[String], parts.map { case (name, p) =>
         name -> Part(DataType.fromJson(JsonMethods.compact(p \ "schema")).asInstanceOf[StructType],
-          (p \ "files").extract[Map[String, Long]])
+          (p \ "files").extract[Map[String, Long]], (p \ "rows").extractOpt[Long])
       }.toMap))
     } catch {
       case _: FileNotFoundException | _: JsonProcessingException | _: MappingException |
@@ -109,7 +110,8 @@ final class TableStore(spark: SparkSession, root: String) {
 
   private def encode(s: Snapshot): Array[Byte] =
     JsonMethods.compact(("writer" -> s.writer) ~ ("parts" -> JObject(s.parts.toList.map {
-      case (name, p) => name -> (("schema" -> JsonMethods.parse(p.schema.json)) ~ ("files" -> p.files))
+      case (name, p) =>
+        name -> (("schema" -> JsonMethods.parse(p.schema.json)) ~ ("files" -> p.files) ~ ("rows" -> p.rows))
     }))).getBytes(UTF_8)
 
   /** The current version of `table`: its highest complete manifest,
@@ -123,7 +125,7 @@ final class TableStore(spark: SparkSession, root: String) {
       val parts = ("" +: listed(dir(table)).filter(s => s.isDirectory && !s.getPath.getName.contains("="))
         .map(_.getPath.getName)).map(p => p -> dataFiles(dir(table, p))).collect {
           case (p, files) if files.nonEmpty =>
-            p -> Part(asRead(spark.read.parquet(dir(table, p).toString).schema), files)
+            p -> Part(asRead(spark.read.parquet(dir(table, p).toString).schema), files, None)
         }
       Snapshot(table, 0, "", parts.toMap, legacy = parts.nonEmpty)
   }
@@ -205,15 +207,15 @@ final class TableStore(spark: SparkSession, root: String) {
     val written = writes.map { w =>
       val d = dir(table, w.part)
       val prior = dataFiles(d)
-      w.df.write.mode(SaveMode.Append).partitionBy(w.partitionBy: _*).parquet(d.toString)
+      val (_, rows) = counted(w.df)(_.write.mode(SaveMode.Append).partitionBy(w.partitionBy: _*).parquet(d.toString))
       val now = dataFiles(d)
       val added = now -- prior.keySet
       // one write job's files share its id: another id is a second writer
       if (added.keys.flatMap(WriteJob.findFirstMatchIn(_).map(_.group(1))).toSet.size > 1)
         throw new ConcurrentModificationException(s"another writer is writing $table/${w.part}")
-      val kept = if (w.append) on.parts.get(w.part).fold(Map.empty[String, Long])(_.files)
-        else Map.empty[String, Long]
-      (w.part, Part(asRead(w.df.schema), kept ++ added), now, added)
+      val kept = if (w.append) on.parts.get(w.part) else None
+      (w.part, Part(asRead(w.df.schema), kept.fold(Map.empty[String, Long])(_.files) ++ added,
+        kept.fold(Option(rows))(_.rows.map(_ + rows))), now, added)
     }
     val staged = Snapshot(table, on.version + 1, token, on.parts ++ written.map(w => w._1 -> w._2))
     before(staged)
@@ -268,17 +270,20 @@ final class TableStore(spark: SparkSession, root: String) {
     next
   }
 
-  private def counted(df: DataFrame)(save: DataFrame => Unit): Long = {
+  /** Runs `action` on `df`; returns its result and the rows `df`
+    * yielded, counted by an observation on the action's own job.
+    */
+  private def counted[A](df: DataFrame)(action: DataFrame => A): (A, Long) = {
     val rows = Observation()
-    save(df.observe(rows, count(lit(1)).as("n")))
-    rows.get("n").asInstanceOf[Long]
+    val a = action(df.observe(rows, count(lit(1)).as("n")))
+    (a, rows.get("n").asInstanceOf[Long])
   }
 
   /** Replace the rows of `base`'s table with `df`; returns the rows
-    * written, counted by an observation on the write job itself.
+    * written.
     */
   private def replace(base: Snapshot, df: DataFrame, before: Snapshot => Unit = _ => ()): Long =
-    counted(df)(d => commit(base, Seq(Write("", d)), before = before))
+    commit(base, Seq(Write("", df)), before = before).parts("").rows.get
 
   // ------------------------------------------------------------ writes
 
@@ -301,8 +306,9 @@ final class TableStore(spark: SparkSession, root: String) {
     read(base, "") match {
       case None => replace(base, df)
       case Some(existing) =>
-        val novel = df.join(existing.select(key), Seq(key), "left_anti")
-        val n = novel.count()
+        // one anti-join: its job counts the novel rows and keeps them,
+        // and the append writes the kept rows
+        val (novel, n) = counted(df.join(existing.select(key), Seq(key), "left_anti"))(_.localCheckpoint())
         if (n > 0) commit(base, Seq(Write("", novel, append = true)))
         n
     }
@@ -351,10 +357,8 @@ final class TableStore(spark: SparkSession, root: String) {
         val storedHigher = coalesce(s(versionCol) > col(versionCol),
           s(versionCol).isNotNull && col(versionCol).isNull)
         val identical = latest.columns.map(c => col(c) <=> s(c)).reduce(_ && _)
-        val probed = Observation()
-        val changed = latest.join(stored, sameKey && (storedHigher || identical), "left_anti")
-          .observe(probed, count(lit(1)).as("n")).localCheckpoint()
-        val n = probed.get("n").asInstanceOf[Long]
+        val (changed, n) = counted(
+          latest.join(stored, sameKey && (storedHigher || identical), "left_anti"))(_.localCheckpoint())
         if (n > 0) {
           val changedKeys = changed.select(keys.map(k => col(k).as(s"__c_$k")): _*)
           val ofChanged = keys.map(k => col(k) <=> col(s"__c_$k")).reduce(_ && _)
@@ -524,6 +528,16 @@ final class TableStore(spark: SparkSession, root: String) {
     }
   }
 
+  /** Rows in the current version of a table: its manifest's count, or
+    * a count of its files for a version committed before manifests
+    * recorded one; 0 for an absent table.
+    */
+  def rowCount(table: String): Long = {
+    val (t, part) = split(table)
+    val s = snapshot(t)
+    s.parts.get(part).fold(0L)(p => p.rows.getOrElse(read(s, part).get.count()))
+  }
+
   /** Number of data files in the current version of a table. */
   def fileCount(table: String): Int = {
     val (t, part) = split(table)
@@ -587,10 +601,11 @@ object TableStore {
   /** A data file's name carries the id of the write job that wrote it. */
   private val WriteJob = "part-\\d+-([0-9a-f]{8}-[0-9a-f-]{27})".r
 
-  /** One named part of a table version: its schema and data files
-    * (path relative to the part directory → size in bytes).
+  /** One named part of a table version: its schema, data files (path
+    * relative to the part directory → size in bytes) and rows (None in
+    * a manifest that predates row counts, and in a legacy table).
     */
-  private[store] final case class Part(schema: StructType, files: Map[String, Long])
+  private[store] final case class Part(schema: StructType, files: Map[String, Long], rows: Option[Long])
 
   /** One committed version of a table; version 0 has no manifest
     * (absent, or `legacy`: written before manifests).

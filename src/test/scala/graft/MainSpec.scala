@@ -1,10 +1,19 @@
 package graft
 
+import java.io.IOException
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.etl.Clock
+import graft.store.{FaultFs, TableStore}
 
 /** Full-pipeline runs: extract → bronze append → silver upsert → gold
   * daily_stats → report, plus the idempotency contract (re-run ≡
@@ -90,10 +99,47 @@ class MainSpec extends SparkSpec {
     val before = files()
     assert(Seq("raw_disruptions", "disruptions", "stations", "daily_stats").forall(t =>
       before.exists(_._1.startsWith(s"/$t/_manifest/"))))
-    val replay = Main.run(spark, updPath, root, clock2).toMap
+    val (replay, replayed) = executions(spark)(Main.run(spark, updPath, root, clock2).toMap)
     assert(replay == second.updated("bronze_inserted", 0L))
     assert(files() == before)
+    // gold's row count comes from its manifest: the replay scans no gold
+    assert(!replayed.exists(e => reads(e._2.analyzed, "daily_stats")), replayed.map(_._1))
     assert(rows(store.read("daily_stats").get.drop("calculated_at")) == stats)
+  }
+
+  test("a failing stage fails the run with its own exception, after every other stage has ended") {
+    spark.sparkContext.hadoopConfiguration.set("fs.faultfs.impl", classOf[FaultFs].getName)
+    val dir = Files.createTempDirectory("graft-main-stagefail")
+    val hist = snapshot(dir, "history.json", history)
+    val clean = Main.run(spark, hist, dir.resolve("clean").toString, clockOn(25)).toMap
+    val root = "faultfs://" + dir.resolve("crashed")
+    def firstStep(table: String): FaultFs.Op => Boolean =
+      op => op._1 == "create" && op._2.contains(s"/$table/") && !op._2.contains("/_temporary")
+    // the silver stage fails at its first store-level step, while the
+    // bronze stage is held for two seconds before its commit
+    val err = intercept[IOException](
+      FaultFs.armed(0, firstStep("raw_disruptions"))(Thread.sleep(2000)) {
+        FaultFs.armed(0, firstStep("disruptions"))()(Main.run(spark, hist, root, clockOn(25)))
+      })
+    assert(err.getMessage == "injected crash")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith(Main.StageThread)).isEmpty)
+    // the other stages ran to their commits before run returned
+    val store = new TableStore(spark, root)
+    assert(Seq("raw_disruptions", "stations").map(store.rowCount) ==
+      Seq(clean("bronze_inserted"), new TableStore(spark, dir.resolve("clean").toString).rowCount("stations")))
+    assert(!store.exists("disruptions") && !store.exists("daily_stats"))
+    def manifests() = {
+      val walk = Files.walk(dir.resolve("crashed"))
+      try walk.iterator().asScala.filter(_.toString.contains("/_manifest/"))
+        .map(f => f.toString -> Files.getLastModifiedTime(f)).toSet
+      finally walk.close()
+    }
+    val after = manifests()
+    Thread.sleep(1000)
+    assert(manifests() == after)
+    // the re-run loads silver and gold; bronze is in
+    assert(Main.run(spark, hist, root, clockOn(25)).toMap == clean.updated("bronze_inserted", 0L))
   }
 
   test("a snapshot without ids loads nothing and still returns its quality counters") {
@@ -194,6 +240,40 @@ class MainSpec extends SparkSpec {
 }
 
 object MainSpec {
+  /** `f`'s result and the (action, query execution) of every Dataset
+    * action run on `spark` while `f` runs, on any thread. Events reach
+    * a listener in the order they were posted, so once a sentinel
+    * action run after `f` has been seen, every action `f` ran has been
+    * seen too.
+    */
+  private[graft] def executions[A](spark: SparkSession)(f: => A): (A, Seq[(String, QueryExecution)]) = {
+    val seen = new ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit = seen.add(action -> qe)
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val a = f
+      spark.range(1).toDF("sentinel").collect()
+      def sentinel(e: (String, QueryExecution)) = e._2.analyzed.output.map(_.name) == Seq("sentinel")
+      val deadline = System.currentTimeMillis() + 20000
+      while (!seen.asScala.exists(sentinel) && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(seen.asScala.exists(sentinel), "sentinel action never seen")
+      (a, seen.asScala.toSeq.filterNot(sentinel))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Whether `plan` scans a table stored under a directory named `table`. */
+  private[graft] def reads(plan: LogicalPlan, table: String): Boolean =
+    plan.collectLeaves().exists {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.rootPaths.exists(_.getName == table)
+        case _ => false
+      }
+      case _ => false
+    }
+
   private def ts(day: Int, hour: Int): String = f"2026-02-$day%02dT$hour%02d:15:00+0100"
 
   private val types = Seq("storing", "werkzaamheden", "CALAMITY", "cancellation", "verstoring")

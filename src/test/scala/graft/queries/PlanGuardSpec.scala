@@ -1,6 +1,13 @@
 package graft.queries
 
-import graft.SparkSpec
+import java.nio.file.Files
+
+import org.apache.spark.sql.catalyst.expressions.{Attribute, GreaterThan, Literal}
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
+import org.apache.spark.sql.types.TimestampType
+
+import graft.{Main, MainSpec, SparkSpec}
 
 /** Plan-shape regression guard: the join-heavy gate queries must never
   * plan a BroadcastNestedLoopJoin or CartesianProduct — the O(n²)
@@ -140,6 +147,29 @@ class PlanGuardSpec extends SparkSpec {
       "q472 lost the codegen'd ordered folds")
     assert(!src.contains("array_sort(collect_list"),
       "q472 fell back to the interpreted array_sort fold stack")
+  }
+
+  test("the pipeline's silver probe prunes stored rows by the batch's folded updated_at") {
+    // the probe's cost rests on the cleaned batch's constant updated_at
+    // folding into the join condition, so the stored side is filtered
+    // before the join; a plan node that stops the folding (an
+    // Observation on the cleaned batch once did) broadcasts the whole
+    // stored table instead
+    val dir = Files.createTempDirectory("graft-probe-plan")
+    val root = dir.resolve("store").toString
+    Main.run(spark, MainSpec.snapshot(dir, "history.json", MainSpec.history), root, MainSpec.clockOn(25))
+    val update = MainSpec.snapshot(dir, "update.json", MainSpec.update)
+    val probes = MainSpec.executions(spark)(Main.run(spark, update, root, MainSpec.clockOn(26)))._2
+      .collect { case ("localCheckpoint", qe) => qe.optimizedPlan }
+      .flatMap(_.collect { case j: Join if j.joinType == LeftAnti && MainSpec.reads(j.right, "disruptions") => j })
+    assert(probes.size == 1, probes)
+    // stored.updated_at > <the batch's updated_at, folded to a literal>,
+    // in a filter under the join's stored side
+    val pruned = probes.head.right.collect { case f: Filter => f.condition }.exists(_.exists {
+      case GreaterThan(a: Attribute, l: Literal) => a.name == "updated_at" && l.dataType == TimestampType
+      case _ => false
+    })
+    assert(pruned, s"the stored side is not pruned before the join:\n${probes.head.treeString}")
   }
 
   /** Subtree lines (excluding the node's own line) of every plan node

@@ -10,12 +10,16 @@ import graft.{Main, MainSpec, SparkSpec}
 /** Crash and stale-writer behaviour of the store's one commit path.
   *
   * Crashes come from [[FaultFs]]: a run is recorded once, then repeated
-  * with a crash at each store-level filesystem step — every create,
-  * rename and delete outside Spark's `_temporary` task staging: the
-  * last step of writing a table's data, the creation of its manifest,
-  * the first retirement of superseded files — and re-run on a fresh
-  * store from the operation that crashed. Every crash must end in the
-  * tables of the uninterrupted run.
+  * with a crash at each store-level filesystem step of each table —
+  * every create, rename and delete under the table's directory outside
+  * Spark's `_temporary` task staging: the last step of writing a
+  * table's data, the creation of its manifest, the first retirement of
+  * superseded files — and re-run on a fresh store from the operation
+  * that crashed. A crash kills the whole operation: every later
+  * store-level step, of any table, fails too. Steps are counted per
+  * table, since the tables of one operation may be written
+  * concurrently, and every crash must end in the tables of the
+  * uninterrupted run.
   */
 class CommitCrashSpec extends SparkSpec {
 
@@ -29,15 +33,22 @@ class CommitCrashSpec extends SparkSpec {
 
   private val storeLevel: FaultFs.Op => Boolean = op => !op._2.contains("/_temporary")
 
-  /** Store-level step indices to crash at; of a run of deletes only the
-    * first (retiring one superseded file is the same boundary as
-    * retiring the next).
-    */
-  private def crashPoints(ops: Seq[FaultFs.Op]): Seq[(Int, FaultFs.Op)] = {
-    val steps = ops.filter(storeLevel)
-    steps.indices.filterNot(i => i > 0 && steps(i)._1 == "delete" && steps(i - 1)._1 == "delete")
-      .map(i => i -> steps(i))
+  /** The table directory under `root` that an op touches. */
+  private def tableOf(root: String)(op: FaultFs.Op): String = {
+    val under = root.stripPrefix("faultfs://") + "/"
+    val at = op._2.indexOf(under)
+    if (at < 0) "" else op._2.drop(at + under.length).takeWhile(_ != '/')
   }
+
+  /** Per table, the indices of its store-level steps to crash at; of a
+    * run of deletes only the first (retiring one superseded file is the
+    * same boundary as retiring the next).
+    */
+  private def crashPoints(root: String, ops: Seq[FaultFs.Op]): Seq[(String, Int, FaultFs.Op)] =
+    ops.filter(storeLevel).groupBy(tableOf(root)).toSeq.sortBy(_._1).flatMap { case (table, steps) =>
+      steps.indices.filterNot(i => i > 0 && steps(i)._1 == "delete" && steps(i - 1)._1 == "delete")
+        .map(i => (table, i, steps(i)))
+    }
 
   /** Table contents through a fresh store, doubles rounded (an
     * incremental and a recomputed aggregate may sum in other orders).
@@ -57,7 +68,8 @@ class CommitCrashSpec extends SparkSpec {
 
   /** Runs `ops(root)` once uninterrupted, keeping the store before each
     * op. Then, for each op and each store-level step it takes: from a
-    * copy of the store before the op, run it with a crash at that step,
+    * copy of the store before the op, run it with a crash at that step
+    * (the k-th step under that table, counted in the uninterrupted run),
     * re-run it on a fresh store, and compare the tables with the
     * uninterrupted run's after the op.
     */
@@ -66,15 +78,16 @@ class CommitCrashSpec extends SparkSpec {
     val stages = ops(ref).zipWithIndex.map { case (op, i) =>
       val before = faultRoot(s"before$i")
       copy(ref, before)
-      (before, crashPoints(FaultFs.record(op())), tables(ref, names))
+      (before, crashPoints(ref, FaultFs.record(op())), tables(ref, names))
     }
     assert(stages.map(_._2.size).sum >= minPoints, stages.map(_._2))
     stages.zipWithIndex.foreach { case ((before, points, want), i) =>
-      points.foreach { case (k, step) =>
-        val root = faultRoot(s"op${i}k$k")
+      points.foreach { case (table, k, step) =>
+        val root = faultRoot(s"op$i-$table-k$k")
         copy(before, root)
         val op = ops(root)(i)
-        assert(FaultFs.armed(k, storeLevel)()(Try(op())).isFailure, s"nothing crashed at $step")
+        val inTable: FaultFs.Op => Boolean = s => storeLevel(s) && tableOf(root)(s) == table
+        assert(FaultFs.killedAt(k, inTable, storeLevel)(Try(op())).isFailure, s"nothing crashed at $step")
         op()
         val got = tables(root, names)
         val wrong = names.filter(t => got(t) != want(t)).map(t =>

@@ -9,8 +9,8 @@ import org.apache.hadoop.util.Progressable
 
 /** The local filesystem under the `faultfs` scheme, for crash tests:
   * every create, rename and delete is logged (a rename by its source),
-  * and an armed trigger fires at the k-th call matching its predicate —
-  * by default it throws, as a crash at that point would. State is
+  * and each armed trigger fires at the k-th call matching its predicate
+  * — by default it throws, as a crash at that point would. State is
   * JVM-wide, so write tasks (local mode) see the same trigger as the
   * driver. Register with `fs.faultfs.impl = graft.store.FaultFs`.
   */
@@ -41,17 +41,24 @@ object FaultFs {
 
   type Op = (String, String)
 
+  private final class Trigger(var k: Int, val matches: Op => Boolean, val action: () => Unit, val kills: Op => Boolean)
+
   private var log = Vector.empty[Op]
-  private var trigger: Option[(Int, Op => Boolean, () => Unit)] = None
+  private var triggers = List.empty[Trigger]
+  // once a kill has fired: the ops that fail from then on
+  private var killed: Op => Boolean = _ => false
+
+  private def crash(): Unit = throw new IOException("injected crash")
 
   private def step(kind: String, p: Path): Unit = {
     val op = kind -> p.toString
     val fire = synchronized {
       log :+= op
-      trigger match {
-        case Some((0, matches, action)) if matches(op) => trigger = None; Some(action)
-        case Some((k, matches, action)) if matches(op) => trigger = Some((k - 1, matches, action)); None
-        case _ => None
+      if (killed(op)) List(() => crash())
+      else triggers.filter(_.matches(op)).flatMap { t =>
+        t.k -= 1
+        if (t.k >= 0) Nil
+        else { triggers = triggers.filterNot(_ eq t); killed = t.kills; List(t.action) }
       }
     }
     fire.foreach(_())
@@ -64,12 +71,21 @@ object FaultFs {
     synchronized(log)
   }
 
+  private def arm[A](t: Trigger)(f: => A): A = {
+    synchronized { triggers ::= t }
+    try f finally synchronized { triggers = triggers.filterNot(_ eq t); killed = _ => false }
+  }
+
   /** Runs `f` with `action` armed at the `k`-th (from 0) op that
     * `matches`; the default action throws.
     */
-  def armed[A](k: Int, matches: Op => Boolean)(
-      action: => Unit = throw new IOException("injected crash"))(f: => A): A = {
-    synchronized { trigger = Some((k, matches, () => action)) }
-    try f finally synchronized { trigger = None }
-  }
+  def armed[A](k: Int, matches: Op => Boolean)(action: => Unit = crash())(f: => A): A =
+    arm(new Trigger(k, matches, () => action, _ => false))(f)
+
+  /** Runs `f` with a crash at the `k`-th (from 0) op that `matches`,
+    * after which every op that `dead` matches throws too, on any
+    * thread, as in a killed process.
+    */
+  def killedAt[A](k: Int, matches: Op => Boolean, dead: Op => Boolean)(f: => A): A =
+    arm(new Trigger(k, matches, () => crash(), dead))(f)
 }
