@@ -1,10 +1,12 @@
 package graft
 
 import java.time.Instant
-import java.util.concurrent.{CompletableFuture, ConcurrentLinkedQueue, ExecutionException, Future,
-  LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, Future, LinkedBlockingQueue,
+  ThreadPoolExecutor, TimeUnit}
 
-import org.apache.spark.sql.{Column, Observation, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analytics.NsQueries
@@ -23,14 +25,29 @@ import graft.store.TableStore
   * run at once, each writing only its own: the bronze append, the
   * silver upsert with its gold refresh, and the stations seed. Each
   * SQL execution carries a fixed cost (analysis, planning, dispatch)
-  * that serial stages would add up. Two orders hold:
+  * that serial stages would add up, so the silver stage fans out too:
+  *
+  * {{{
+  * probe → silver files → report       → silver manifest
+  *                        ↘
+  * probe → touched days  → gold refresh → silver manifest
+  * }}}
+  *
+  *  - the touched-days query reads only the probe's change set, so it
+  *    runs beside the silver file write;
+  *  - the gold refresh and the report both read the staged silver
+  *    files, and neither reads the other's output, so they run side by
+  *    side;
   *  - gold commits before the silver manifest (inside the upsert), so a
   *    crash between the two leaves the same change set to re-do;
-  *  - the report starts once the silver upsert has returned, so it
-  *    reads the committed silver table; with nothing changed, the
-  *    stored `daily_stats` count runs beside it.
-  * `run` waits for every stage it started before it returns or
-  * throws; a failed stage fails the run with its own exception.
+  *  - every reader of the change set or the staged files finishes
+  *    before the silver commit, which retires the stored files (and,
+  *    losing to a rival writer, deletes the staged ones).
+  * With nothing changed nothing is committed: the report reads the
+  * stored silver table once the upsert has returned, and the stored
+  * `daily_stats` count runs beside it. `run` waits for every stage it
+  * started before it returns or throws; a failed stage fails the run
+  * with its own exception.
   */
 object Main {
 
@@ -54,8 +71,10 @@ object Main {
     spark.stop()
   }
 
-  /** Stages that run at once: bronze, silver with gold, stations. */
-  private val Stages = 3
+  /** Stages that run at once: bronze, silver with gold, stations, and
+    * the silver stage's touched-days query and report.
+    */
+  private val Stages = 5
 
   /** Name prefix of the threads that run a pipeline's stages. */
   private[graft] val StageThread = "graft-pipeline-stage"
@@ -88,12 +107,19 @@ object Main {
       val a = try Some(f.get()) catch { case _: ExecutionException => None }
       if (!failures.isEmpty) {
         close()
-        val first = failures.poll()
-        failures.forEach(first.addSuppressed(_))
+        // a stage that awaited a failed one fails with the same exception
+        val first +: rest = failures.asScala.toSeq.distinct: @unchecked
+        rest.foreach(first.addSuppressed)
         throw first
       }
       a.get
     }
+
+    /** Within a stage: the result of a stage it started, or that
+      * stage's own exception.
+      */
+    def await[A](f: Future[A]): A =
+      try f.get() catch { case e: ExecutionException => throw e.getCause }
 
     /** Lets every started stage finish, then ends the threads. */
     def close(): Unit = {
@@ -152,6 +178,16 @@ object Main {
       .toDF("station_code", "station_name", "latitude", "longitude", "country")
       .withColumn("last_updated", clock.ts)
 
+    // Report (pipeline.py:304-342) on silver as the upsert leaves it;
+    // its row count is observed on the report's own scan.
+    def report(silver: DataFrame): (Long, Long) = {
+      val silverRows = Observation()
+      // bounded-collect: todaysReport is a global O(1)-row aggregate
+      val total = NsQueries.todaysReport(silver.observe(silverRows, count(lit(1)).as("n")), clock)
+        .collect()(0).getAs[Long]("total")
+      (silverRows.get("n").asInstanceOf[Long], total)
+    }
+
     val stages = new StagePool
     try {
       val bronzeLoad = stages(store.appendIfAbsent("raw_disruptions", bronze, "disruption_id"))
@@ -167,48 +203,47 @@ object Main {
       // day's `calculated_at` is the clock of the last run that changed
       // it. Gold commits inside the upsert, before silver, so a crash
       // between the two commits leaves the upsert undone, and its re-run
-      // (same change set) refreshes gold again. Returns gold's rows
-      // after a refresh.
+      // (same change set) refreshes gold again. Returns, when the upsert
+      // commits, gold's rows after the refresh and the report.
       val silverLoad = stages {
-        var dailyStatsRows: Option[Long] = None
-        store.upsert("disruptions", cleaned, Seq("disruption_id"), "updated_at", before = (silver, changes) => {
+        var touchedDays: Future[Seq[Option[java.sql.Date]]] = null
+        var refreshed = Option.empty[(Long, (Long, Long))]
+        store.upsert("disruptions", cleaned, Seq("disruption_id"), "updated_at",
           // bounded-collect: distinct() calendar dates — O(days touched
           // by one batch), not rows
-          val touched = changes.select(to_date(col("start_time"))).distinct().collect()
-            .map(r => Option(r.getDate(0))).toSeq
-          // a NULL start_time is its own refreshable "day": the stats
-          // table carries a null-date group and it must stay in sync too
-          def touchedCond(day: Column): Column =
-            day.isInCollection(touched.flatten) || (if (touched.contains(None)) day.isNull else lit(false))
-          dailyStatsRows = Option.when(touched.nonEmpty)(store.replaceWhere("daily_stats",
-            NsQueries.dailyStats(silver.filter(touchedCond(to_date(col("start_time")))), clock),
-            touchedCond(col("date"))))
-        })
-        dailyStatsRows
+          changes = changed => touchedDays = stages(changed.select(to_date(col("start_time"))).distinct()
+            .collect().map(r => Option(r.getDate(0))).toSeq),
+          before = silver => {
+            val todays = stages(report(silver))
+            val touched = stages.await(touchedDays)
+            // a NULL start_time is its own refreshable "day": the stats
+            // table carries a null-date group and it must stay in sync too
+            def touchedCond(day: Column): Column =
+              day.isInCollection(touched.flatten) || (if (touched.contains(None)) day.isNull else lit(false))
+            val goldRows =
+              if (touched.isEmpty) store.rowCount("daily_stats")
+              else store.replaceWhere("daily_stats",
+                NsQueries.dailyStats(silver.filter(touchedCond(to_date(col("start_time")))), clock),
+                touchedCond(col("date")))
+            refreshed = Some((goldRows, stages.await(todays)))
+          })
+        refreshed
       }
       val stationsLoad = stages(store.appendIfAbsent("stations", stations, "station_code"))
 
-      // Report (pipeline.py:304-342) on the committed silver table; its
-      // row count is observed on the report's own scan.
-      val refreshed = stages.result(silverLoad)
-      val report = stages {
-        val silverRows = Observation()
-        // bounded-collect: todaysReport is a global O(1)-row aggregate
-        val total = NsQueries.todaysReport(
-          store.read("disruptions").get.observe(silverRows, count(lit(1)).as("n")), clock)
-          .collect()(0).getAs[Long]("total")
-        (silverRows.get("n").asInstanceOf[Long], total)
+      // no row changed, nothing committed: the report on the stored
+      // silver table, and the stored daily_stats table's row count
+      val (dailyStatsRows, (silverRows, reportTotal)) = stages.result(silverLoad).getOrElse {
+        val todays = stages(report(store.read("disruptions").get))
+        val goldRows = stages(store.rowCount("daily_stats"))
+        (stages.result(goldRows), stages.result(todays))
       }
-      // no row changed, no refresh: the stored table's row count
-      val dailyStatsRows = refreshed.fold(stages(store.rowCount("daily_stats")))(
-        CompletableFuture.completedFuture(_))
-      val (silverRows, reportTotal) = stages.result(report)
       stages.result(stationsLoad)
       Seq(
         "extracted" -> extracted,
         "bronze_inserted" -> stages.result(bronzeLoad),
         "silver_rows" -> silverRows,
-        "daily_stats_rows" -> stages.result(dailyStatsRows),
+        "daily_stats_rows" -> dailyStatsRows,
         "report_total_today" -> reportTotal) ++
         quality.get.toSeq.sortBy(_._1).map { case (k, v) => s"quality_$k" -> v.asInstanceOf[Long] }
     } finally stages.close()

@@ -251,6 +251,8 @@ object NsQueries {
     * `calculated_at` is `clock`: `Main` recomputes only the days whose
     * rows a run changes, so a day carries the clock of the last run
     * that changed it, not of the last run whose batch held its rows.
+    * The rows come unordered: a table has no row order, and a global
+    * sort would cost the gold write a range-sampling job and a shuffle.
     */
   def dailyStats(d: DataFrame, clock: Clock): DataFrame = {
     val rows = d.select(
@@ -270,7 +272,6 @@ object NsQueries {
         mode(when(first, date_format(col("start_time"), "HH")), deterministic = true)
           .as("peak_hour"))
       .withColumn("calculated_at", clock.ts)
-      .orderBy("date")
   }
 
   /** Today's-stats report (`src/pipeline.py:304-342`). */

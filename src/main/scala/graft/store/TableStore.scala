@@ -334,22 +334,29 @@ final class TableStore(spark: SparkSession, root: String) {
     * `row_number` shuffle a union-and-rank merge needs. Broadcast
     * choices are left to the planner's threshold.
     *
-    * `before` runs only when the upsert commits (a first write, or a
-    * batch that changes a row), between writing the new files and
-    * committing them, on the table as the upsert leaves it and the
-    * change set: the rows written plus the stored rows of their keys.
-    * A table derived from this one commits first, so a crash between
-    * the two commits leaves the upsert, and the same change set, to be
-    * re-done. The commit retires the change set's stored files: read it
-    * in `before` only.
+    * The two hooks run only when the upsert commits (a first write, or
+    * a batch that changes a row), on the thread that called `upsert`:
+    *  - `changes` gets the change set, the rows written plus the stored
+    *    rows of their keys, as soon as it is known: once the probe
+    *    returns, before the new files are written (on a first write,
+    *    once they are written, the change set being the whole table);
+    *  - `before` gets the table as the upsert leaves it, staged: after
+    *    the new files are written, before they are committed.
+    * A caller may start readers of either on threads of its own. A
+    * table derived from this one commits in `before`, so a crash
+    * between the two commits leaves the upsert, and the same change
+    * set, to be re-done. The commit retires the change set's stored
+    * files, and a losing commit deletes the staged ones: every reader
+    * of either must finish before `before` returns.
     */
   def upsert(
       table: String, df: DataFrame, keys: Seq[String], versionCol: String,
-      before: (DataFrame, DataFrame) => Unit = (_, _) => ()): Long = {
+      changes: DataFrame => Unit = _ => (),
+      before: DataFrame => Unit = _ => ()): Long = {
     val latest = dedupLatest(df.withColumn("__src", lit(1)), keys, versionCol)
     val base = snapshot(table)
     read(base, "") match {
-      case None => replace(base, latest, s => { val t = read(s, "").get; before(t, t) })
+      case None => replace(base, latest, s => { val t = read(s, "").get; changes(t); before(t) })
       case Some(existing) =>
         val stored = existing.select(existing.columns.map(c => col(c).as(s"__s_$c")): _*)
         def s(c: String) = col(s"__s_$c")
@@ -362,9 +369,9 @@ final class TableStore(spark: SparkSession, root: String) {
         if (n > 0) {
           val changedKeys = changed.select(keys.map(k => col(k).as(s"__c_$k")): _*)
           val ofChanged = keys.map(k => col(k) <=> col(s"__c_$k")).reduce(_ && _)
+          changes(changed.unionByName(existing.join(changedKeys, ofChanged, "left_semi")))
           commit(base, Seq(Write("", existing.join(changedKeys, ofChanged, "left_anti").unionByName(changed))),
-            before = s => before(read(s, "").get,
-              changed.unionByName(existing.join(changedKeys, ofChanged, "left_semi"))))
+            before = s => before(read(s, "").get))
         }
         n
     }

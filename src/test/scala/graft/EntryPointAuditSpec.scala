@@ -26,6 +26,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    rules or strategies to a live session or registers functions in
   *    it, gates and the loader change confs only through the scoped
   *    `QueryDef.withConf`, and the test session is the engine's.
+  *  - The pipeline's layers (store, etl, analytics, sources) start no
+  *    threads: its stage threads come only from `Main`'s stage pool,
+  *    made per run from the calling thread, so every job carries the
+  *    caller's Spark local properties (an op id, job tags).
   */
 class EntryPointAuditSpec extends AnyFunSuite {
 
@@ -131,5 +135,15 @@ class EntryPointAuditSpec extends AnyFunSuite {
         "SessionDefaults.sqlConfs):\n" + confSets.mkString("\n"))
     assert(testBuilders.isEmpty,
       "a test session not built through SessionDefaults:\n" + testBuilders.mkString("\n"))
+  }
+
+  test("the pipeline's layers start no threads of their own") {
+    val threads = """\bnew\s+Thread\b|\bExecutors\s*\.|\bExecutionContext\b""".r
+    val layers = Seq("store", "etl", "analytics", "sources").map(root.resolve)
+    layers.foreach(d => assert(Files.isDirectory(d), s"missing $d"))
+    val found = violations(layers.flatMap(scalaFiles))(code => threads.findFirstIn(code).isDefined)
+    assert(found.isEmpty,
+      "a thread, executor or execution context outside Main's stage pool " +
+        "(run concurrent work as a Main stage):\n" + found.mkString("\n"))
   }
 }

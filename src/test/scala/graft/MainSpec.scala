@@ -1,7 +1,8 @@
 package graft
 
-import java.io.IOException
+import java.io.{FileNotFoundException, IOException}
 import java.nio.file.{Files, Paths}
+import java.util.ConcurrentModificationException
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
@@ -68,10 +69,21 @@ class MainSpec extends SparkSpec {
       "silver_rows" -> 39L, "daily_stats_rows" -> days(), "report_total_today" -> 39L) ++
       quality(histPath, clock1))
     assert(first("quality_n_null_duration_minutes") > 0L)
-    val second = Main.run(spark, updPath, root, clock2).toMap
+    val stored = silver.inputFiles.toSet
+    val (second, updated) = executions(spark)(Main.run(spark, updPath, root, clock2).toMap)
     assert(second == Map("extracted" -> 13L, "bronze_inserted" -> 10L,
       "silver_rows" -> 49L, "daily_stats_rows" -> days(), "report_total_today" -> 13L) ++
       quality(updPath, clock2))
+    // an update op runs no more executions than its nine: the extract
+    // count, bronze's probe and write, silver's probe and write, the
+    // touched days, the gold write, the stations probe and the report
+    assert(updated.size <= 9, updated.map(_._1))
+    // the report reads the staged silver files: exactly the new
+    // manifest's, none of the version the upsert replaced
+    val reports = updated.collect { case ("collect", qe) if qe.analyzed.output.exists(_.name == "total") =>
+      fileRelations(qe.analyzed).flatMap(_.location.inputFiles).toSet }
+    assert(reports.size == 1, updated.map(_._1))
+    assert(reports.head == silver.inputFiles.toSet && (reports.head & stored).isEmpty, reports.head)
 
     // silver ≡ a driver-side latest-wins fold (the later batch has the
     // later updated_at, so its rows win)
@@ -140,6 +152,38 @@ class MainSpec extends SparkSpec {
     assert(manifests() == after)
     // the re-run loads silver and gold; bronze is in
     assert(Main.run(spark, hist, root, clockOn(25)).toMap == clean.updated("bronze_inserted", 0L))
+  }
+
+  test("a rival silver commit between the op's silver write and its commit fails the run as a stale writer") {
+    spark.sparkContext.hadoopConfiguration.set("fs.faultfs.impl", classOf[FaultFs].getName)
+    val dir = Files.createTempDirectory("graft-main-rival")
+    val (hist, upd) = (snapshot(dir, "history.json", history), snapshot(dir, "update.json", update))
+    val clean = dir.resolve("clean").toString
+    Main.run(spark, hist, clean, clockOn(25))
+    val want = Main.run(spark, upd, clean, clockOn(26)).toMap
+    val root = "faultfs://" + dir.resolve("raced")
+    Main.run(spark, hist, root, clockOn(25))
+    // the op has written its silver files, and its touched days, gold
+    // refresh and report have read them; just before the op creates its
+    // silver manifest, a rival store rewrites silver as it stands, which
+    // retires every file its manifest does not list, the op's staged
+    // ones included
+    val rival = new TableStore(spark, root)
+    val publish: FaultFs.Op => Boolean = op => op._1 == "create" && op._2.contains("/disruptions/_manifest/")
+    val err = intercept[ConcurrentModificationException](
+      FaultFs.armed(0, publish)(rival.write("disruptions", rival.read("disruptions").get)) {
+        Main.run(spark, upd, root, clockOn(26))
+      })
+    val writers = """by writer ([0-9a-f-]{36}) lost: writer ([0-9a-f-]{36})""".r.findFirstMatchIn(err.getMessage)
+    assert(writers.exists(m => m.group(2) == rival.token && m.group(1) != rival.token), err.getMessage)
+    // no stage read a file the losing commit deleted
+    def causes(t: Throwable): Seq[Throwable] = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    val missing = (err +: err.getSuppressed.toSeq).flatMap(causes).filter(_.isInstanceOf[FileNotFoundException])
+    assert(missing.isEmpty, missing)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith(Main.StageThread)).isEmpty)
+    // the re-run applies the update; bronze is in
+    assert(Main.run(spark, upd, root, clockOn(26)).toMap == want.updated("bronze_inserted", 0L))
   }
 
   test("a snapshot without ids loads nothing and still returns its quality counters") {
@@ -264,15 +308,13 @@ object MainSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  /** The file relations `plan` scans. */
+  private[graft] def fileRelations(plan: LogicalPlan): Seq[HadoopFsRelation] =
+    plan.collectLeaves().collect { case l: LogicalRelation => l.relation }.collect { case h: HadoopFsRelation => h }
+
   /** Whether `plan` scans a table stored under a directory named `table`. */
   private[graft] def reads(plan: LogicalPlan, table: String): Boolean =
-    plan.collectLeaves().exists {
-      case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation => h.location.rootPaths.exists(_.getName == table)
-        case _ => false
-      }
-      case _ => false
-    }
+    fileRelations(plan).exists(_.location.rootPaths.exists(_.getName == table))
 
   private def ts(day: Int, hour: Int): String = f"2026-02-$day%02dT$hour%02d:15:00+0100"
 

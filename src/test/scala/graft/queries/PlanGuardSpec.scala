@@ -5,6 +5,11 @@ import java.nio.file.Files
 import org.apache.spark.sql.catalyst.expressions.{Attribute, GreaterThan, Literal}
 import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.types.TimestampType
 
 import graft.{Main, MainSpec, SparkSpec}
@@ -170,6 +175,26 @@ class PlanGuardSpec extends SparkSpec {
       case _ => false
     })
     assert(pruned, s"the stored side is not pruned before the join:\n${probes.head.treeString}")
+  }
+
+  test("the pipeline's gold write plans no sort and no range-partitioning exchange") {
+    // a table has no row order: a global sort in the daily_stats refresh
+    // costs the op a range-sampling job and a sort shuffle for nothing
+    val dir = Files.createTempDirectory("graft-gold-plan")
+    val root = dir.resolve("store").toString
+    Main.run(spark, MainSpec.snapshot(dir, "history.json", MainSpec.history), root, MainSpec.clockOn(25))
+    val update = MainSpec.snapshot(dir, "update.json", MainSpec.update)
+    val golds = MainSpec.executions(spark)(Main.run(spark, update, root, MainSpec.clockOn(26)))._2
+      .map(_._2).filter(_.analyzed match {
+        case i: InsertIntoHadoopFsRelationCommand => i.outputPath.getName == "daily_stats"
+        case _ => false
+      }).map(_.executedPlan)
+    assert(golds.size == 1, golds)
+    val sorts = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(golds.head) {
+      case s: SortExec => s
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(sorts.isEmpty, s"the gold write sorts:\n${golds.head.treeString}")
   }
 
   /** Subtree lines (excluding the node's own line) of every plan node

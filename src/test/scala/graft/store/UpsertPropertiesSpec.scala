@@ -67,18 +67,18 @@ class UpsertPropertiesSpec extends SparkSpec {
             case ((acc, from), to) =>
               (acc :+ dedupBatch(events.slice(from, to)), to)
           }._1.filter(_.nonEmpty)
-        // each batch hands `before` the reference fold's diff: the new
+        // each batch hands `changes` the reference fold's diff: the new
         // version of every key whose state changed, plus its previous one
         batches.foldLeft(Map.empty[Long, (Long, String)]) { (state, b) =>
           val next = refStep(state, b)
           val diff = next.toSeq.filterNot { case (k, v) => state.get(k).contains(v) }
             .flatMap { case (k, v) => (k -> v) +: state.get(k).map(k -> _).toSeq }
             .map { case (k, (ver, payload)) => (k, ver, payload) }
-          var changes = Option.empty[Seq[(Long, Long, String)]]
+          var seen = Option.empty[Seq[(Long, Long, String)]]
           store.upsert("t", b.toDF("k", "ver", "payload"), Seq("k"), "ver",
-            before = (_, c) => changes = Some(c.select("k", "ver", "payload")
+            changes = c => seen = Some(c.select("k", "ver", "payload")
               .as[(Long, Long, String)].collect().toSeq))
-          assert(changes.map(_.sorted) == Some(diff.sorted),
+          assert(seen.map(_.sorted) == Some(diff.sorted),
             s"sample $i: change set of batch $b")
           next
         }
@@ -89,11 +89,11 @@ class UpsertPropertiesSpec extends SparkSpec {
         assert(got == refFold(batches),
           s"sample $i diverged from reference fold: batches=$batches")
         // idempotent re-run: replaying the last batch changes nothing
-        // and commits nothing, so `before` is not called
+        // and commits nothing, so neither hook is called
         var called = false
         store.upsert("t", batches.last.toDF("k", "ver", "payload"), Seq("k"), "ver",
-          before = (_, _) => called = true)
-        assert(!called, s"sample $i: a replay called before")
+          changes = _ => called = true, before = _ => called = true)
+        assert(!called, s"sample $i: a replay called a hook")
         assert(snapshot() == got, s"sample $i: replaying a batch changed state")
     }
   }
