@@ -243,18 +243,4 @@ object Dedup extends Logging {
       }.reduce(_ unionAll _)
     }
   }
-
-  /** Remove near-duplicates: given the corpus and its near-dup pairs,
-    * keep the lowest-id document of every cluster (plus all unpaired
-    * docs untouched).
-    */
-  def dropNearDuplicates(
-      corpus: DataFrame,
-      pairs: DataFrame,
-      idCol: String): DataFrame = {
-    val cl = clusters(pairs)
-    val losers = cl.filter(col("doc_id") =!= col("cluster_id"))
-      .select(col("doc_id").as(idCol))
-    corpus.join(losers, Seq(idCol), "left_anti")
-  }
 }

@@ -103,39 +103,6 @@ object LshIndex {
     sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bkey"))
   }
 
-  /** One-row band-bucket census: how hot the band join's keys are. */
-  final case class BandCensus(
-      pairedBuckets: Long, maxBucket: Long, p99Bucket: Double) {
-    /** Candidate rows the hottest single key must emit — the
-      * single-task exposure a plain band self-join would pay.
-      */
-    def maxBucketPairs: Long = maxBucket * (maxBucket - 1) / 2
-  }
-
-  /** The band-bucket census over a (doc_id, bkey) band frame — the LSH
-    * twin of `CorpusCuration`'s posting-density probe: one bounded
-    * aggregate (a groupBy the candidate stage pays anyway, then a
-    * single global row) measuring the hot-key exposure of the band
-    * join BEFORE paying for it. The 500 k-doc rung measured p99 = 4
-    * and max = 765 on generated corpora (SCALING.md round 10); a
-    * boilerplate-heavy corpus blows max/p99 up, and past the
-    * expansion cap the chunked path ([[BucketedPairs]], always-on in
-    * `CorpusCuration`'s MinHashLsh branch) spreads exactly those
-    * buckets. Exposed for pre-flight observability and specs.
-    */
-  def bucketCensus(bands: DataFrame): BandCensus = {
-    val sizes = bands.groupBy("bkey").agg(count(lit(1)).as("b"))
-      .filter(col("b") >= 2)
-    val r = sizes.agg(
-      count(lit(1)).as("buckets"),
-      max(col("b")).as("max_b"),
-      expr("approx_percentile(b, 0.99)").as("p99_b"))
-      // bounded-collect: O(1) — one global aggregate row
-      .collect()(0)
-    if (r.isNullAt(1)) BandCensus(0L, 0L, 0.0)
-    else BandCensus(r.getLong(0), r.getLong(1), r.getLong(2).toDouble)
-  }
-
   /** Stateless incremental-candidate core: pairs for new-batch bands
     * `nb` against an optional corpus band index, batch-internal plus
     * batch-vs-index, normalized to doc_a < doc_b with a shared-band

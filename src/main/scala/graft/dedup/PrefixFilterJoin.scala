@@ -32,18 +32,6 @@ import org.apache.spark.sql.types.LongType
   */
 object PrefixFilterJoin {
 
-  /** Pairs with whitespace-token-set Jaccard ≥ θ. Pruning power
-    * depends on token diversity — for natural text prefer
-    * [[shingleSelfJoin]], whose shingle vocabulary is far larger.
-    */
-  def jaccardSelfJoin(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      thetaNum: Int,
-      thetaDen: Int): DataFrame =
-    setSelfJoin(docs, idCol, split(col(textCol), " "), thetaNum, thetaDen)
-
   /** Pairs whose word n-gram (shingle) sets have Jaccard ≥ θ — the
     * standard near-duplicate formulation: shingles keep word ORDER
     * information and draw from a combinatorially large vocabulary,

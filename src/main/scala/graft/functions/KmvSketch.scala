@@ -131,14 +131,6 @@ object Kmv {
       .otherwise(lit((k - 1).toDouble) * lit(Domain)
         / element_at(sk, k).cast("double"))
 
-  /** Union distinct-count estimate of two sketch arrays: merge,
-    * dedupe, keep the k smallest, estimate.
-    */
-  def unionEstimate(a: Column, b: Column, k: Int): Column = {
-    val merged = slice(array_sort(array_union(a, b)), 1, k)
-    estimate(merged, k)
-  }
-
   private def theta(sk: Column, k: Int): Column =
     when(size(sk) < k, lit(Domain))
       .otherwise(element_at(sk, k).cast("double"))

@@ -27,10 +27,4 @@ final class BucketedStore(spark: SparkSession) {
       .saveAsTable(table)
 
   def read(table: String): DataFrame = spark.table(table)
-
-  /** True when the physical plan of `df` contains no shuffle — the
-    * co-location check used by specs and plan audits.
-    */
-  def isShuffleFree(df: DataFrame): Boolean =
-    !df.queryExecution.executedPlan.toString.contains("Exchange")
 }

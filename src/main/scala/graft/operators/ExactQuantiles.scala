@@ -65,11 +65,8 @@ import org.apache.spark.sql.functions._
   * in the rank-select forms (numerically equal and adjacent in sort
   * order, so rank selection picks the same position either way);
   * Spark's raw built-in keeps the two bit patterns as separate
-  * OpenHashMap keys and can return `-0.0`, so [[autoDisc]] /
-  * [[autoCont]]'s built-in branches normalize their outputs to the
-  * same `+0.0` — every entry point of this object is bit-identical
-  * to every other, negative zeros included (fuzz-pinned in
-  * ExactQuantilesSpec).
+  * OpenHashMap keys and can return `-0.0`, so a caller that
+  * hash-compares against the built-in must normalize its zeros.
   */
 object ExactQuantiles {
 
@@ -95,93 +92,6 @@ object ExactQuantiles {
   /** Value at 1-based rank `k` within the group, as the original type. */
   private def atRank(value: String, k: Column): Column =
     min(when(col("__cum") >= k, col(value)))
-
-  // ------------------------------------------------------------------
-  // Regime auto-selection — the third instance of the engine's Auto
-  // doctrine (NearDupCandidates.Auto, Hits.authoritiesAuto): the
-  // regime is MEASURED per input, not known up front by the caller.
-  // ------------------------------------------------------------------
-
-  /** Average non-null group size from one bounded aggregate: total
-    * non-null values over an HLL estimate (±2%) of the group count —
-    * plenty for a regime boundary three orders of magnitude wide.
-    */
-  def probeAvgGroupSize(df: DataFrame, keys: Seq[String],
-                        value: String): Double = {
-    val r = df.agg(
-      count(col(value)).as("rows"),
-      approx_count_distinct(struct(keys.map(col): _*)).as("groups"))
-      // bounded-collect: O(1) — one global aggregate row
-      .collect()(0)
-    if (r.getLong(1) == 0L) 0.0 else r.getLong(0).toDouble / r.getLong(1)
-  }
-
-  /** [[autoDisc]]/[[autoCont]]'s default cutoff — PROVENANCE: measured
-    * on a 32-core/128 GiB single JVM (SCALING.md rounds 9-10): the two
-    * forms WASH at ~30 rows/group at every rung (±9%), the rank-select
-    * wins +30% at sf1 growing to ×15 at sf10 at ~2·10⁷ rows/group.
-    * 10⁴ sits three orders above the wash rung and three below the
-    * win rung, so the exact value is insensitive on this box; the
-    * regime driver is the built-in's single-threaded per-group buffer
-    * merge, which a cluster with different per-task memory should
-    * re-probe (SCALING.md "Round 10: the graph family's own decade",
-    * postscript 2) rather than inherit blindly.
-    */
-  val DefaultLargeGroupCutoff: Double = 10000.0
-
-  /** `when(c === 0.0, 0.0)` — collapses `-0.0` to `+0.0` on a double
-    * output column, making every entry point of this object agree
-    * bit-exactly: the rank-select forms already return `+0.0` (the
-    * groupBy normalization, header caveat), so the built-in branches
-    * normalize their outputs to the same contract. IEEE `===` treats
-    * the two zeros as equal; nulls fall through untouched.
-    */
-  private def normZero(c: Column): Column =
-    when(c === lit(0.0d), lit(0.0d)).otherwise(c)
-
-  /** [[disc]] / the built-in `percentile_disc`, picked by the probe.
-    * Measured regimes (same-JVM interleaved A/B, SCALING.md rounds
-    * 9-10): at ~30 rows/group (q361/q419's shape) the two forms WASH
-    * at every rung (±9%), at ~2·10⁷ rows/group (q190's shape) the
-    * rank-select wins +30% at sf1 growing to ×15 at sf10 — so any
-    * cutoff between the rungs is safe, and
-    * [[DefaultLargeGroupCutoff]] leaves the wash side three orders of
-    * margin. Output schema and values are identical either way: the
-    * rank-select replicates the built-in bit-exactly (fuzz-pinned in
-    * ExactQuantilesSpec) and zeros come back as `+0.0` on BOTH routes
-    * — the built-in branch normalizes `-0.0` to match the rank-select
-    * forms' groupBy normalization (header caveat), so Auto routing
-    * can never change a bit-exact hash comparison, negative zeros
-    * included.
-    */
-  def autoDisc(df: DataFrame, keys: Seq[String], value: String,
-               ps: Seq[(String, Double)],
-               largeGroupCutoff: Double = DefaultLargeGroupCutoff): DataFrame =
-    if (probeAvgGroupSize(df, keys, value) > largeGroupCutoff)
-      disc(df, keys, value, ps)
-    else {
-      val aggs = ps.map { case (name, p) =>
-        normZero(expr(s"percentile_disc($p) WITHIN GROUP (ORDER BY $value)")
-          .cast("double")).as(name)
-      } :+ count(col(value)).as("__group_n")
-      df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    }
-
-  /** [[cont]] / the built-in `percentile`, picked by the same probe.
-    * Bit-stable across routes like [[autoDisc]] (zeros normalized to
-    * `+0.0` on the built-in branch).
-    */
-  def autoCont(df: DataFrame, keys: Seq[String], value: String,
-               ps: Seq[(String, Double)],
-               largeGroupCutoff: Double = DefaultLargeGroupCutoff): DataFrame =
-    if (probeAvgGroupSize(df, keys, value) > largeGroupCutoff)
-      cont(df, keys, value, ps)
-    else {
-      val aggs = ps.map { case (name, p) =>
-        normZero(expr(s"percentile($value, $p)")).as(name)
-      } :+ count(col(value)).as("__group_n")
-      df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    }
 
   /** `percentile_disc(p) WITHIN GROUP (ORDER BY value)` per group, one
     * output column per `(name, p)`, plus `__group_n` (non-null count).

@@ -149,31 +149,6 @@ object GlobalOrder {
       .drop("__grn", "__n")
   }
 
-  /** Global running SUM of `value` over `order`
-    * (UNBOUNDED PRECEDING .. CURRENT ROW). Sum type follows Spark's
-    * `sum` widening of the input column.
-    */
-  def runningSum(
-      df: DataFrame, leadKey: Column, leadDesc: Boolean,
-      order: Seq[Column], value: Column, name: String): DataFrame = {
-    val b = bucketed(df, leadKey, leadDesc).withColumn("__v", value)
-    val per = b.groupBy("__bkt").agg(sum("__v").as("__s"))
-      .withColumn("__soff",
-        sum("__s").over(Window.orderBy("__bkt")
-          .rowsBetween(Window.unboundedPreceding, -1)))
-      .select(col("__bkt"), col("__soff"))
-    b.withColumn("__lsum",
-        sum("__v").over(Window.partitionBy("__bkt").orderBy(order: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .join(broadcast(per), "__bkt")
-      // either part may be null (no earlier bucket, or a prefix of
-      // null values): like the built-in frame, a sum ignores null
-      // parts and is null only when every part is
-      .withColumn(name, coalesce(
-        col("__soff") + col("__lsum"), col("__lsum"), col("__soff")))
-      .drop("__bkt", "__v", "__lsum", "__soff")
-  }
-
   /** Global running MAX of `value` over `order`, EXCLUSIVE of the
     * current row (UNBOUNDED PRECEDING .. -1) — null for the global
     * first row, exactly like the built-in frame.

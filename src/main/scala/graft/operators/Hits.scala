@@ -61,64 +61,6 @@ object Hits {
     else broadcastAuthorities(edges, iters, parts)
   }
 
-  /** [[authorities]] with the form picked PER GRAPH by a pre-flight
-    * node-count probe — the same doctrine as
-    * `CorpusCuration.NearDupCandidates.Auto`: the 100 TB user should
-    * not have to know the regime, the operator measures it. The
-    * broadcast form's breaking costs are both keyed by the score
-    * vector (per-half-step full-vector broadcasts and a single-task
-    * O(nodes) ordered norm fold), so the probe is
-    * max(approx |U|, approx |P|) — an HLL estimate (±2%) is plenty
-    * for a regime boundary set an order of magnitude wide. The
-    * default cutoff 5·10⁵ is the geometric mean of the measured
-    * rungs: ~2·10⁵ nodes where broadcast wins 3× (20.2 vs 60.4 s)
-    * and ~2·10⁶ where it loses 7× (461 vs 64 s) — SCALING.md
-    * §Round 10 graph decade.
-    *
-    * The two forms agree per node to ~1e-9 (HitsVariantsSpec), but
-    * only the broadcast form is BIT-stable under partitioning: a
-    * caller that hash-compares against a SQL oracle must pin
-    * `copartitioned = false` explicitly rather than use Auto.
-    * When the probe picks the co-partitioned form, `parts` is
-    * overridden to 0 (the session shuffle fan-out) per that form's
-    * co-location contract.
-    */
-  def authoritiesAuto(
-      edges: DataFrame,
-      iters: Int = 6,
-      parts: Int = 8,
-      maxBroadcastNodes: Long = DefaultMaxBroadcastNodes): DataFrame = {
-    val big = probeMaxNodes(edges) > maxBroadcastNodes
-    authorities(edges, iters, parts = if (big) 0 else parts,
-      copartitioned = big)
-  }
-
-  /** [[authoritiesAuto]]'s default cutoff — PROVENANCE: measured on a
-    * 32-core/128 GiB single JVM (SCALING.md §Round 10 graph decade),
-    * as the geometric mean of the two rungs where each form wins by
-    * 3-7× (broadcast at ~2·10⁵ nodes, co-partitioned at ~2·10⁶).
-    * Order-of-magnitude margin on BOTH sides, so modest hardware
-    * differences cannot flip a rung onto the wrong form — but the
-    * breaking costs are driver-broadcast and single-task-fold bound,
-    * so a cluster with a different driver/executor memory ratio should
-    * re-probe its own rungs (SCALING.md "Round 10: the graph family's
-    * own decade" has the protocol) rather than inherit this box's
-    * constant blindly.
-    */
-  val DefaultMaxBroadcastNodes: Long = 500000L
-
-  /** The probe behind [[authoritiesAuto]], exposed for specs and
-    * harnesses: the larger of the two sides' HLL node-count estimates.
-    */
-  def probeMaxNodes(edges: DataFrame): Long = {
-    val r = edges.agg(
-      approx_count_distinct(col("u")).as("nu"),
-      approx_count_distinct(col("p")).as("np"))
-      // bounded-collect: O(1) — one global aggregate row (two HLLs)
-      .collect()(0)
-    math.max(r.getLong(0), r.getLong(1))
-  }
-
   /** The q472 gate shape (see GraphGates for the hash-gated
     * original and its in-file commentary).
     */

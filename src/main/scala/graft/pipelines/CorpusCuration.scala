@@ -78,9 +78,7 @@ object CorpusCuration {
       * ≤ cap²/2-pair rows) because the two structural guards upstream
       * (exact dedup before LSH; band-exact agreement decaying with
       * corpus diversity) keep real buckets tiny — the 500 k-doc rung
-      * measured p99 bucket 4, max 765. Pre-flight observability for
-      * the exposure is [[graft.dedup.LshIndex.bucketCensus]], the
-      * band frame's one-row census.
+      * measured p99 bucket 4, max 765.
       */
     final case class MinHashLsh(
         nHashes: Int = 8, bandSize: Int = 2, bucketCap: Int = 1024)
@@ -306,14 +304,5 @@ object CorpusCuration {
       .withColumn("kept",
         col("q_keep") && !col("is_exact_dup") && !col("is_near_dup"))
       .orderBy("doc_id")
-  }
-
-  /** The curated corpus itself: normalized text of every kept doc. */
-  def curate(docs: DataFrame, cfg: Config = Config()): DataFrame = {
-    val spark = docs.sparkSession
-    docs.join(audit(docs, cfg).filter(col("kept")).select("doc_id"), "doc_id")
-      .select(col("doc_id"),
-        trim(regexp_replace(StripAccents(lower(col("text"))), " +", " "))
-          .as("text"))
   }
 }

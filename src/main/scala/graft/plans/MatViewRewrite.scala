@@ -57,8 +57,6 @@ object MatViewRewrite extends Rule[LogicalPlan] {
   def register(basePath: String, view: AggTable): Unit =
     registry.put(canon(basePath), view)
 
-  def unregister(basePath: String): Unit = registry.remove(canon(basePath))
-
   def clear(): Unit = registry.clear()
 
   /** The registration whose base path backs this scan, if any. */

@@ -204,8 +204,7 @@ object StoreGates {
   // bit (2i+j) must be bit i of dimension j, for every row. Aggregated
   // sums/extrema over the full fact table make the hash cover each
   // row's z-value without dumping 600k rows. The projection is pure
-  // column arithmetic — codegen-friendly, no UDF, exactly what runs
-  // inside ZOrder.writeZOrdered's sort key at layout time.
+  // column arithmetic — codegen-friendly, no UDF.
   private val q203 = QueryDef(
     "q203_zorder_interleave",
     (s, dir) => {

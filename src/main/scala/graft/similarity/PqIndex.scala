@@ -186,80 +186,3 @@ object PqIndex {
       Seq(desc("cos"), asc("n_id")), topK, rankName = "rk")
   }
 }
-
-/** IVF-PQ: the two ANN scale levers composed — IVF cluster pruning
-  * decides WHICH partitions a query reads (`nprobe/k` of the corpus),
-  * PQ code compression decides WHAT is read there (codes, 32× smaller
-  * than vectors), and the exact refine re-scores only the short
-  * candidate list at full precision. This is the standard
-  * billion-scale ANN layout: partition the code table by `cid` on
-  * disk, and a query touches a few partitions of a table that fits in
-  * page cache.
-  */
-object IvfPq {
-
-  /** Build: IVF centroids + cluster assignment + PQ codes, returned as
-    * (assignment with codes, centroids, codebook).
-    */
-  def build(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nClusters: Int,
-      ivfIters: Int,
-      m: Int,
-      k: Int,
-      pqIters: Int): (DataFrame, DataFrame, PqIndex.Codebook) = {
-    val cents = IvfIndex.trainCentroids(emb, idCol, vecCol, nClusters, ivfIters)
-    val assigned = IvfIndex.assign(emb, cents, vecCol)
-    val book = PqIndex.train(emb, idCol, vecCol, m, k, pqIters)
-    val codes = PqIndex.encode(emb, idCol, vecCol, book)
-      .join(assigned.select(col(idCol), col("cid")), idCol)
-    (codes, cents, book)
-  }
-
-  /** Search: probe each query's `nprobe` nearest clusters, ADC-score
-    * only those clusters' codes, exact-refine the top `refine` to
-    * `topK`.
-    */
-  def search(
-      codes: DataFrame,      // (idCol, codes, recon_norm, cid) from build
-      cents: DataFrame,
-      emb: DataFrame,
-      book: PqIndex.Codebook,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nprobe: Int,
-      topK: Int,
-      refine: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // nearest nprobe clusters per query (tiny crossJoin vs centroids)
-    val sq = (v: Column, c: Column) => aggregate(
-      zip_with(v, c, (x, y) => { val d = x.cast("double") - y; d * d }),
-      lit(0.0), (acc, x) => acc + x)
-    val probes = queries.crossJoin(broadcast(cents))
-      .withColumn("d", sq(col("q_emb"), col("centroid")))
-      .withColumn("pr", org.apache.spark.sql.functions.row_number()
-        .over(Window.partitionBy("q_id").orderBy("d", "cid")))
-      .filter(col("pr") <= nprobe)
-      .select("q_id", "cid")
-    // ADC over the probed clusters only: a code row is scored once per
-    // query probing its cluster (cid is unique per doc, so no
-    // duplicate (q, doc) pairs), with the query LUTs broadcast
-    val scored = codes.join(broadcast(probes), Seq("cid"))
-      .join(broadcast(PqIndex.queryLut(queries, book)), Seq("q_id"))
-      .filter(col("q_id") =!= col(idCol))
-      .select(col("q_id"), col(idCol).as("n_id"), PqIndex.adcCos.as("pq_cos"))
-    val cand = graft.plans.TopKPerKey.perKey(scored, Seq("q_id"),
-        Seq(desc("pq_cos"), asc("n_id")), refine, rankName = "rk")
-      .select("q_id", "n_id")
-    val exact = cand
-      .join(emb.select(col(idCol).as("n_id"), col(vecCol).as("__v")), "n_id")
-      .join(broadcast(queries), "q_id")
-      .select(col("q_id"), col("n_id"),
-        graft.functions.CosineSimilarity(col("q_emb"), col("__v")).as("cos"))
-    graft.plans.TopKPerKey.perKey(exact, Seq("q_id"),
-      Seq(desc("cos"), asc("n_id")), topK, rankName = "rk")
-  }
-}

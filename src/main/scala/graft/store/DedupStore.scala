@@ -30,8 +30,8 @@ import graft.dedup.BloomDedup
   * only the verify-join fraction grows, never correctness.
   *
   * The streaming form is `foreachBatch` over this method with the
-  * engine's replay-stable batch ids, exactly like
-  * [[graft.streaming.EventStreams.maintainAggregate]].
+  * engine's replay-stable batch ids: a replayed micro-batch is already
+  * in the ledger and admits nothing.
   */
 final class DedupStore(
     store: TableStore,

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.{ConcurrentModificationException, UUID}
 
 import scala.annotation.tailrec
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.core.JsonProcessingException
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, Path}
@@ -41,8 +42,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * Readers take the highest complete manifest and scan
   * exactly its files: no listing, no footer-inference job. Every write
   * is one [[commit]]. At rest a table directory holds its current
-  * files (a versioned table also its retained versions') and
-  * `_`-prefixed metadata, which Spark's file index skips, so
+  * files and `_`-prefixed metadata, which Spark's file index skips, so
   * `spark.read.parquet(path(table))` reads the current table. A
   * directory without `_manifest`, written before manifests, reads by
   * footer inference; its files become version 1 at its first commit.
@@ -133,7 +133,7 @@ final class TableStore(spark: SparkSession, root: String) {
   /** `part` of a snapshot as a DataFrame over exactly its files: the
     * file index is served from the manifest, so building the scan lists
     * nothing and infers nothing, however many files there are. Hive-style
-    * `k=v` directories ([[writePartitioned]]) still yield their columns.
+    * `k=v` directories still yield their columns.
     */
   private[store] def read(s: Snapshot, part: String): Option[DataFrame] =
     s.parts.get(part).map { p =>
@@ -185,18 +185,20 @@ final class TableStore(spark: SparkSession, root: String) {
     *     commit point. If another writer has committed past `base`,
     *     this commit deletes its files and fails with a
     *     [[ConcurrentModificationException]] naming both writers;
-    *  3. the files of the written parts that no retained manifest
-    *     lists (the superseded version's, a crashed writer's debris)
-    *     and the older manifests are deleted.
+    *  3. the files of the written parts that the new manifest does
+    *     not list (the superseded version's, a crashed writer's
+    *     debris) and the older manifests are deleted.
     * A crash before 2 leaves the previous version current; after it,
     * the new one, with stale files until the table's next commit.
     * Unwritten parts carry over; an `append` part keeps its files.
-    * `keepHistory` retains older manifests and their files
-    * ([[writeVersion]]); `before` sees the staged version before 2.
+    * `before` sees the staged version before 2. If it throws and a
+    * rival has committed meanwhile (its step 3 may have deleted the
+    * staged files under `before`'s readers), the commit fails as lost,
+    * with a [[ConcurrentModificationException]] naming both writers
+    * that carries `before`'s exception as suppressed.
     */
   private[store] def commit(
-      base: Snapshot, writes: Seq[Write], keepHistory: Boolean = false,
-      before: Snapshot => Unit = _ => ()): Snapshot = {
+      base: Snapshot, writes: Seq[Write], before: Snapshot => Unit = _ => ()): Snapshot = {
     val table = base.table
     // a legacy table's files become version 1 first; a new table is
     // marked before any data lands, so its crashed first write is
@@ -207,7 +209,7 @@ final class TableStore(spark: SparkSession, root: String) {
     val written = writes.map { w =>
       val d = dir(table, w.part)
       val prior = dataFiles(d)
-      val (_, rows) = counted(w.df)(_.write.mode(SaveMode.Append).partitionBy(w.partitionBy: _*).parquet(d.toString))
+      val (_, rows) = counted(w.df)(_.write.mode(SaveMode.Append).parquet(d.toString))
       val now = dataFiles(d)
       val added = now -- prior.keySet
       // one write job's files share its id: another id is a second writer
@@ -218,16 +220,22 @@ final class TableStore(spark: SparkSession, root: String) {
         kept.fold(Option(rows))(_.rows.map(_ + rows))), now, added)
     }
     val staged = Snapshot(table, on.version + 1, token, on.parts ++ written.map(w => w._1 -> w._2))
-    before(staged)
-    val next = publish(on, staged, written.flatMap { case (part, _, _, added) =>
-      added.keys.map(new Path(dir(table, part), _)) })
-    val retained =
-      if (keepHistory) manifests(table).getOrElse(Nil).flatMap(load(table, _)) else Seq(next)
+    val added = written.flatMap { case (part, _, _, files) =>
+      files.keys.map(new Path(dir(table, part), _)) }
+    try before(staged)
+    catch {
+      case NonFatal(e) =>
+        // a lost race shows as the rival, not as its sweep under our readers
+        try requireLatest(on, added)
+        catch { case lost: ConcurrentModificationException => lost.addSuppressed(e); throw lost }
+        throw e
+    }
+    val next = publish(on, staged, added)
     written.foreach { case (part, _, now, _) =>
-      val live = retained.flatMap(_.parts.get(part)).flatMap(_.files.keys).toSet
+      val live = next.parts.get(part).fold(Set.empty[String])(_.files.keySet)
       now.keys.filterNot(live).foreach(f => fs.delete(new Path(dir(table, part), f), false))
     }
-    if (!keepHistory) manifests(table).getOrElse(Nil).filter(_ < next.version)
+    manifests(table).getOrElse(Nil).filter(_ < next.version)
       .foreach(v => fs.delete(manifestPath(table, v), false))
     next
   }
@@ -497,31 +505,6 @@ final class TableStore(spark: SparkSession, root: String) {
     replace(base, read(base, "").fold(df)(_.filter(!coalesce(cond, lit(false))).unionByName(df)))
   }
 
-  /** Write `df` hive-partitioned on `partitionCols` (directory per
-    * value combination): queries filtering on a partition column prune
-    * whole directories at plan time — no file is even listed, the
-    * parquet twin of the raw archive's `year=/month=/day=` JSONL
-    * layout. Use for the coarse, always-filtered dimension (e.g. day);
-    * combine with [[writeZOrdered]] within partitions for finer ones.
-    */
-  def writePartitioned(table: String, df: DataFrame, partitionCols: Seq[String]): Unit =
-    commit(snapshot(table), Seq(Write("", df, partitionBy = partitionCols)))
-
-  /** Write `df` clustered by the Z-order (Morton) interleave of
-    * `zCols` into `nFiles` files: range-partition on the z-value, then
-    * sort within partitions, so parquet min/max stats stay tight on
-    * EVERY z-ordered column and selective filters on any of them skip
-    * most files/row-groups (see [[ZOrder]]).
-    */
-  def writeZOrdered(table: String, df: DataFrame, zCols: Seq[String], nFiles: Int): Unit = {
-    val z = ZOrder.zValue(df, zCols)
-    val clustered = df.withColumn("__z", z)
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-    write(table, clustered)
-  }
-
   /** Rewrite a table into ~`targetFileMB`-sized files. Repeated
     * incremental appends (S7) accumulate small files whose per-file
     * open/footer cost dominates scans at scale; periodic compaction
@@ -550,53 +533,6 @@ final class TableStore(spark: SparkSession, root: String) {
     val (t, part) = split(table)
     snapshot(t).parts.get(part).fold(0)(_.files.size)
   }
-
-  /** Register every stored table as a temp view (SURVEY §7.1's
-    * temp-view registry) so the whole store is queryable through
-    * `spark.sql`. A named part is exposed as `<table>_<part>` (AggTable
-    * and DedupStore state, CDC tombstones as `<table>__tombstones`).
-    * Returns the registered view names.
-    */
-  def registerViews(): Seq[String] =
-    listed(fs.makeQualified(new Path(root))).filter(_.isDirectory).flatMap { d =>
-      val s = snapshot(d.getPath.getName)
-      s.parts.keys.toSeq.sorted.map { part =>
-        val view = (if (part.isEmpty) s.table else s"${s.table}_$part").replaceAll("[^A-Za-z0-9_]", "_")
-        read(s, part).get.createOrReplaceTempView(view)
-        view
-      }
-    }
-
-  // ------------------------------------------------------- time travel
-
-  /** Commit `df` as the next version of a versioned table; returns the
-    * new version number. Older versions keep their manifests and files
-    * until [[vacuum]], so a reader of v3 is unaffected by the commit of
-    * v4 (snapshot isolation).
-    */
-  def writeVersion(table: String, df: DataFrame): Int =
-    commit(snapshot(table), Seq(Write("", df)), keepHistory = true).version
-
-  /** Committed versions, ascending. */
-  def versions(table: String): Seq[Int] =
-    manifests(table).getOrElse(Nil).filter(load(table, _).isDefined)
-
-  /** Time travel: read an exact committed version. */
-  def readVersion(table: String, version: Int): DataFrame =
-    load(table, version).flatMap(read(_, "")).getOrElse(throw new IllegalArgumentException(
-      s"version $version of $table does not exist or was never committed"))
-
-  /** Drop all but the newest `keep` versions, their files and any
-    * uncommitted debris — the retention pass that bounds storage growth.
-    */
-  def vacuum(table: String, keep: Int): Unit = {
-    val all = manifests(table).getOrElse(Nil)
-    val retained = all.flatMap(load(table, _)).takeRight(keep)
-    all.filterNot(retained.map(_.version).contains)
-      .foreach(v => fs.delete(manifestPath(table, v), false))
-    val live = retained.flatMap(_.parts.get("")).flatMap(_.files.keys).toSet
-    dataFiles(dir(table)).keys.filterNot(live).foreach(f => fs.delete(new Path(dir(table), f), false))
-  }
 }
 
 object TableStore {
@@ -622,6 +558,5 @@ object TableStore {
       legacy: Boolean = false)
 
   /** One part's new content in a [[TableStore.commit]]. */
-  private[store] final case class Write(
-      part: String, df: DataFrame, append: Boolean = false, partitionBy: Seq[String] = Nil)
+  private[store] final case class Write(part: String, df: DataFrame, append: Boolean = false)
 }

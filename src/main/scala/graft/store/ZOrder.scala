@@ -1,22 +1,17 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Z-order (Morton) multi-dimensional clustering for parquet layout.
-  *
-  * A table sorted on one column prunes scans filtered on that column
-  * only; filters on any other column hit every file. Interleaving the
-  * bits of several columns into one sort key keeps rows that are close
-  * in ANY dimension close on disk, so parquet footer min/max stats
-  * (and, on lakehouse formats, file-level stats) skip most
-  * files/row-groups for selective filters on EACH z-ordered column.
-  * Same layout idea the reference leans on Athena partition projection
-  * for (terraform/modules/athena/main.tf:36-49), generalized from one
-  * date dimension to N arbitrary ones.
-  *
-  * All pure column expressions (codegen-friendly); normalization uses
-  * one tiny min/max aggregate per write.
+/** Z-order (Morton) bit interleave: one sort key that keeps rows close
+  * in ANY of several dimensions close in key order, so parquet footer
+  * min/max stats would skip most files for selective filters on each
+  * interleaved column. The same layout idea the reference leans on
+  * Athena partition projection for
+  * (terraform/modules/athena/main.tf:36-49), generalized from one date
+  * dimension to N. The store writes no z-ordered layout; gate q203
+  * pins the bit math against an oracle that rebuilds it from shifts
+  * and masks.
   */
 object ZOrder {
 
@@ -32,36 +27,5 @@ object ZOrder {
       for (i <- 0 until bits; (c, j) <- cols.zipWithIndex)
         yield shiftleft(shiftright(c, i).bitwiseAND(lit(1L)), i * n + j)
     terms.reduce(_ + _)
-  }
-
-  /** Z-value for `df` over `cols`: each column is min/max scaled to a
-    * `bits`-bit integer rank, then bit-interleaved. Two passes over
-    * the input (one tiny agg for the ranges, then the projection).
-    */
-  def zValue(df: DataFrame, cols: Seq[String], bits: Int = 15): Column = {
-    // try_cast: a non-numeric dimension yields null min/max (→ rank 0
-    // below) instead of an ANSI cast error / NPE failing the write
-    val aggs = cols.flatMap(c => Seq(
-      min(col(c).try_cast("double")).as(s"__min_$c"),
-      max(col(c).try_cast("double")).as(s"__max_$c")))
-    val stats = df.agg(aggs.head, aggs.tail: _*).head()
-    val top = (1L << bits) - 1
-    val scaled = cols.zipWithIndex.map { case (c, i) =>
-      // an all-null (or empty) column has null min/max — its dimension
-      // degenerates to rank 0 like any other zero-width range
-      if (stats.isNullAt(2 * i) || stats.isNullAt(2 * i + 1)) lit(0L)
-      else {
-      val lo = stats.getDouble(2 * i)
-      val hi = stats.getDouble(2 * i + 1)
-      if (hi <= lo) lit(0L)
-      else coalesce( // nulls sort as rank 0
-        least(
-          lit(top),
-          floor((col(c).try_cast("double") - lit(lo)) / lit(hi - lo) * lit(top.toDouble + 1))
-            .cast("long")),
-        lit(0L))
-      }
-    }
-    interleave(scaled, bits)
   }
 }

@@ -111,27 +111,6 @@ object EventStreams {
         col("purchase_ts"), col("purchase_value"))
   }
 
-  /** Native session windows in streaming: the built-in operator for
-    * gap-based sessions when only windowed aggregates are needed —
-    * state merging, watermark eviction and late-data handling come
-    * for free. [[sessionize]] (flatMapGroupsWithState) remains the
-    * escape hatch for session logic the aggregate form can't express
-    * (per-event ordering, custom close conditions). Batch twin:
-    * gate query q84.
-    */
-  def sessionCounts(
-      events: DataFrame,
-      gap: String = "30 minutes",
-      lateness: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(col("user_id"), session_window(col("ts"), gap))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"), col("total_value"))
-
   /** Continuously maintain a queryable per-(window, event_type) counts
     * table from a stream: Update-mode windowed aggregation delivered
     * through `foreachBatch` into a [[TableStore]] latest-wins upsert.
@@ -182,105 +161,6 @@ object EventStreams {
     */
   def enrich(events: DataFrame, dim: DataFrame, keys: Seq[String]): DataFrame =
     events.join(broadcast(dim), keys, "left")
-
-  /** Maintain a [[graft.store.AggTable]] from a stream: every
-    * micro-batch folds its mergeable partial into the persisted
-    * aggregate state (O(batch + touched groups) per trigger — the
-    * stored view is never recomputed). Exactly-once comes from
-    * pairing the streaming engine's replay-stable batch ids with the
-    * AggTable ledger, committed with the state: a
-    * replayed batch after a crash is recognized and skipped
-    * ([[maintainAggregateBatch]] is the testable body). One AggTable
-    * serves the stream, so its ledger is read once, not per batch.
-    */
-  def maintainAggregate(
-      events: DataFrame,
-      store: TableStore,
-      table: String,
-      spec: graft.store.AggSpec,
-      checkpointDir: String): StreamingQuery = {
-    val agg = new graft.store.AggTable(store, table, spec)
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maintainAggregateBatch(agg, batch, batchId)
-      }
-      .start()
-  }
-
-  /** The foreachBatch body of [[maintainAggregate]]. */
-  def maintainAggregateBatch(agg: graft.store.AggTable, batch: DataFrame, batchId: Long): Unit = {
-    agg.accumulate(s"stream_$batchId", batch)
-    ()
-  }
-
-  case class StatsState(n: Long, mean: Double, m2: Double)
-
-  case class Anomaly(
-      user_id: Long, ts: Timestamp, value: Double, zscore: Double)
-
-  /** Streaming anomaly detection with custom per-key state: each
-    * user's value stream maintains Welford running mean/variance (O(1)
-    * state per key — no window buffer), and an event more than
-    * `zThreshold` standard deviations from the mean SO FAR is emitted
-    * as an anomaly. The state is updated with the anomalous value too,
-    * so level shifts eventually re-baseline instead of alerting
-    * forever — the standard production behavior. Warm-up: the first
-    * `minSamples` events per key only train the baseline.
-    */
-  def anomalies(
-      events: Dataset[Event],
-      zThreshold: Double = 3.0,
-      minSamples: Int = 5): Dataset[Anomaly] = {
-    import events.sparkSession.implicits._
-
-    def update(
-        userId: Long,
-        rows: Iterator[Event],
-        state: GroupState[StatsState]): Iterator[Anomaly] = {
-      var st = state.getOption.getOrElse(StatsState(0L, 0.0, 0.0))
-      var out = List.empty[Anomaly]
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.value)).foreach { e =>
-        if (st.n >= minSamples) {
-          val variance = st.m2 / st.n
-          val sd = math.sqrt(variance)
-          if (sd > 0 && math.abs(e.value - st.mean) > zThreshold * sd)
-            out ::= Anomaly(userId, e.ts, e.value,
-              (e.value - st.mean) / sd)
-        }
-        // Welford update (numerically stable running mean/variance)
-        val n1 = st.n + 1
-        val d = e.value - st.mean
-        val mean1 = st.mean + d / n1
-        st = StatsState(n1, mean1, st.m2 + d * (e.value - mean1))
-      }
-      state.update(st)
-      out.reverseIterator
-    }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(update)
-  }
-
-  /** Stream documents into a [[graft.store.DedupStore]]: every
-    * micro-batch admits only never-seen keys (bloom prefilter + exact
-    * verify), and the engine's replay-stable batch ids paired with the
-    * store's ledger make admission exactly-once across crashes — the
-    * streaming front door of the corpus-curation pipeline.
-    */
-  def admitDocuments(
-      docs: DataFrame,
-      store: graft.store.DedupStore,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.admit(s"stream_$batchId", batch)
-        ()
-      }
-      .start()
 
   /** Gap-based sessionization via flatMapGroupsWithState: a session
     * closes when `gapMinutes` pass without an event for that user
@@ -383,79 +263,6 @@ object EventStreams {
       .groupByKey(_.user_id)
       .transformWithState(new QuotaProcessor(limit),
         TimeMode.None(), OutputMode.Append())
-  }
-
-  /** One flushed session per quiet period. */
-  case class SessionSummary(
-      user_id: Long, n_events: Long, total_value: Double,
-      start: Timestamp, end: Timestamp)
-
-  // public like StatsState: the state encoder's generated projections
-  // cannot reach a private case class and fall back to interpreted ones
-  case class SessState(n: Long, total: Double, loMs: Long, hiMs: Long)
-
-  /** Timer-driven sessionization on `transformWithState`: input rows
-    * only ACCUMULATE per-key state and (re)arm an EVENT-TIME timer at
-    * `last event + gap`; the session summary is emitted from
-    * [[StatefulProcessor.handleExpiredTimer]] when the watermark
-    * passes that instant — i.e. when the stream has PROVEN the quiet
-    * period, not when a batch happens to run. This is the
-    * timers-and-TTL half of the state API v2 that
-    * [[EventStreams.admitQuota]]'s counter doesn't touch: the timer
-    * registry is per-key engine state (checkpointed, replay-safe),
-    * re-arming deletes the stale timer so each key holds at most ONE,
-    * and state size stays O(active keys) at any stream length.
-    */
-  private final class SessionFlushProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, Event, SessionSummary] {
-    @transient private var st: ValueState[SessState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SessState]("sess",
-        org.apache.spark.sql.Encoders.product[SessState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: Long,
-        rows: Iterator[Event],
-        timers: TimerValues): Iterator[SessionSummary] = {
-      var s = if (st.exists()) st.get() else SessState(0L, 0.0, Long.MaxValue, Long.MinValue)
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.event_type)).foreach { e =>
-        s = SessState(s.n + 1, s.total + e.value,
-          math.min(s.loMs, e.ts.getTime), math.max(s.hiMs, e.ts.getTime))
-      }
-      st.update(s)
-      // one live timer per key: re-arming replaces the stale deadline
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(s.hiMs + gapMs)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(
-        key: Long,
-        timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[SessionSummary] = {
-      if (!st.exists()) return Iterator.empty
-      val s = st.get()
-      st.clear()
-      Iterator.single(SessionSummary(key, s.n, s.total,
-        new Timestamp(s.loMs), new Timestamp(s.hiMs)))
-    }
-  }
-
-  /** Sessions flushed by event-time timers (Append mode; requires the
-    * RocksDB state store like every transformWithState query).
-    */
-  def sessionFlush(
-      events: Dataset[Event],
-      gapMinutes: Long = 10L,
-      lateness: String = "0 seconds"): Dataset[SessionSummary] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionFlushProcessor(gapMinutes * 60000L),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** State rows per store instance per micro-batch at which one

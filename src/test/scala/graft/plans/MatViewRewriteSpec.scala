@@ -165,7 +165,6 @@ class MatViewRewriteSpec extends SparkSpec {
       import org.apache.spark.sql.types.DecimalType
       import spark.implicits._
       implicit val sqlCtx = spark.sqlContext
-      import graft.streaming.EventStreams
       import graft.streaming.EventStreams.Event
 
       // production shape: raw events land in the lake (base parquet)
@@ -180,8 +179,14 @@ class MatViewRewriteSpec extends SparkSpec {
       def ts(m: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 10:$m%02d:00")
 
       val input = MemoryStream[Event]
-      val query = EventStreams.maintainAggregate(
-        input.toDF(), store, "ev_stats", spec, ckpt)
+      val agg = new AggTable(store, "ev_stats", spec)
+      val query = input.toDF().writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+          agg.accumulate(s"stream_$batchId", batch)
+          ()
+        }
+        .start()
       val b1 = Seq(Event(1L, ts(1), "click", 1.50), Event(2L, ts(2), "view", 4.00))
       val b2 = Seq(Event(3L, ts(3), "click", 2.50), Event(4L, ts(4), "click", -1.00))
       input.addData(b1: _*)

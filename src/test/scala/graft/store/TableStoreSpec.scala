@@ -1,6 +1,8 @@
 package graft.store
 
+import java.io.FileNotFoundException
 import java.nio.file.Files
+import java.util.ConcurrentModificationException
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -134,41 +136,23 @@ class TableStoreSpec extends SparkSpec {
     assert(cur == Map("a" -> 5, "b" -> 2, "c" -> 3))
   }
 
-  test("registerViews exposes the whole store (incl. multi-part tables) to spark.sql") {
+  test("uncommitted debris is invisible; the next commit claims past it and sweeps it") {
     import spark.implicits._
-    val store = newStore()
-    store.write("plain", Seq((1, "a")).toDF("k", "v"))
-    val agg = new AggTable(store, "stats", AggSpec(Seq("k"), Seq("x")))
-    agg.accumulate("b1", Seq(("a", 1.0)).toDF("k", "x"))
-    val views = store.registerViews()
-    assert(views.contains("plain") && views.contains("stats_state") &&
-      views.contains("stats_ledger"))
-    assert(spark.sql("SELECT v FROM plain").head().getString(0) == "a")
-    assert(spark.sql("SELECT batch_id FROM stats_ledger").head().getString(0) == "b1")
-  }
-
-  test("versioned writes time-travel; uncommitted debris is invisible; vacuum retains") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("store_tt").toString
+    val root = Files.createTempDirectory("store_debris").toString
     val store = new TableStore(spark, root)
-    assert(store.writeVersion("t", Seq((1, "a")).toDF("k", "v")) == 1)
-    assert(store.writeVersion("t", Seq((1, "a"), (2, "b")).toDF("k", "v")) == 2)
-    // old version is untouched by the new commit (snapshot isolation)
-    assert(store.readVersion("t", 1).count() == 1)
-    assert(store.read("t").get.count() == 2)
+    store.write("t", Seq((1, "a")).toDF("k", "v"))
+    store.write("t", Seq((1, "a"), (2, "b")).toDF("k", "v"))
     // a crashed write = data files no manifest lists, and a manifest
     // cut short → readers ignore both
     new java.io.File(s"$root/t/part-junk.parquet").createNewFile()
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/t/_manifest/3.json"), "{\"wri")
-    assert(store.versions("t") == Seq(1, 2))
+    Files.writeString(java.nio.file.Paths.get(s"$root/t/_manifest/3.json"), "{\"wri")
     assert(store.read("t").get.count() == 2)
+    assert(new TableStore(spark, root).read("t").get.count() == 2)
     // the next commit claims a number past the debris and is the latest
-    val v = store.writeVersion("t", Seq((9, "z")).toDF("k", "v"))
-    assert(v > 2 && store.versions("t").last == v)
-    intercept[IllegalArgumentException](store.readVersion("t", 99))
-    store.vacuum("t", keep = 1)
-    assert(store.versions("t") == Seq(v))
-    // only the retained version's files are left
+    store.write("t", Seq((9, "z")).toDF("k", "v"))
+    assert(new java.io.File(s"$root/t/_manifest").listFiles().map(_.getName)
+      .filterNot(_.startsWith(".")).toSeq == Seq("4.json"))
+    // only the current version's files are left
     assert(spark.read.parquet(store.path("t")).collect().map(_.getInt(0)).toSeq == Seq(9))
     assert(!new java.io.File(s"$root/t/part-junk.parquet").exists())
   }
@@ -267,7 +251,7 @@ class TableStoreSpec extends SparkSpec {
     val parquet = spark.read.parquet(store.path("t"))
     assert(parquet.columns.toSeq == Seq("k", "v") && parquet.count() == 3)
     assert(store.fileCount("t") == dir.listFiles().count(_.getName.startsWith("part-")))
-    assert(store.registerViews() == Seq("t"))
+    parquet.createOrReplaceTempView("t")
     assert(spark.sql("SELECT count(*) FROM t").head().getLong(0) == 3L)
   }
 
@@ -294,14 +278,10 @@ class TableStoreSpec extends SparkSpec {
     val writer = new TableStore(spark, root)
     writer.write("t", spark.sparkContext.parallelize((1 to 41).map(i => (i.toLong, s"v$i")), 41)
       .toDF("k", "v"))
-    writer.writePartitioned("p", Seq((1L, 1), (2L, 2)).toDF("k", "day"), Seq("day"))
     assert(writer.fileCount("t") == 41)
     val reader = new TableStore(spark, root)
-    assert(jobsDuring(Seq("t", "p").foreach(t => reader.read(t).get)) == 0)
+    assert(jobsDuring(reader.read("t").get) == 0)
     assert(reader.read("t").get.count() == 41)
-    // a partitioned table keeps its partition column
-    assert(reader.read("p").get.schema.fieldNames.toSeq == Seq("k", "day"))
-    assert(reader.read("p").get.filter("day = 2").collect().map(_.getLong(0)).toSeq == Seq(2L))
     // the probe is not vacuous: 41 paths past the parallel-listing
     // threshold start a listing job even with the schema given
     val files = new java.io.File(reader.path("t")).listFiles()
@@ -327,5 +307,25 @@ class TableStoreSpec extends SparkSpec {
       Seq("k"), "ver") == 2)
     assert(store.read("r").get.collect().map(r => r.getString(0) -> r.getInt(1)).toMap ==
       Map("a" -> 5, "b" -> 2, "c" -> 3))
+  }
+
+  test("a rival commit under before's readers fails the upsert as lost, not as a missing file") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-store-rival").toString
+    val (store, rival) = (new TableStore(spark, root), new TableStore(spark, root))
+    store.upsert("t", Seq(("a", 1, 1L)).toDF("k", "v", "ver"), Seq("k"), "ver")
+    // while the upsert's staged files are being read, the rival rewrites
+    // the table as it stands: its sweep deletes every file its manifest
+    // does not list, the staged ones included
+    val err = intercept[ConcurrentModificationException] {
+      store.upsert("t", Seq(("b", 2, 2L)).toDF("k", "v", "ver"), Seq("k"), "ver",
+        before = staged => { rival.write("t", rival.read("t").get); staged.count(); () })
+    }
+    assert(err.getMessage.contains(s"writer ${store.token} lost: writer ${rival.token}"), err.getMessage)
+    // the reader's failure rides along, suppressed
+    def causes(t: Throwable): Seq[Throwable] = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    assert(err.getSuppressed.toSeq.flatMap(causes).exists(_.isInstanceOf[FileNotFoundException]),
+      err.getSuppressed.toSeq)
+    assert(new TableStore(spark, root).read("t").get.collect().map(_.getString(0)).toSeq == Seq("a"))
   }
 }

@@ -1,6 +1,5 @@
 package graft.store
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -15,97 +14,5 @@ class ZOrderSpec extends SparkSpec {
       .select(ZOrder.interleave(Seq(col("a"), col("b")), 3).as("z"))
       .head().getLong(0)
     assert(z == 27L)
-  }
-
-  test("zValue tolerates an all-null or non-numeric dimension") {
-    import spark.implicits._
-    val df = Seq((1L, Option.empty[Long], "x"), (7L, None, "y"))
-      .toDF("x", "y", "s")
-    // null min/max (all-null y; non-castable s) degenerate to rank 0
-    // instead of throwing; x still orders the z-value
-    val z = df.select(ZOrder.zValue(df, Seq("x", "y", "s")).as("z"))
-      .collect().map(_.getLong(0))
-    assert(z.length == 2 && z(0) < z(1))
-  }
-
-  // per-file column ranges, as the parquet footer (and any file-stats
-  // catalog) would record them
-  private def fileRanges(path: String): Array[(Long, Long, Long, Long)] = {
-    val df = spark.read.parquet(path)
-    df.groupBy(input_file_name())
-      .agg(min("x").as("min_x"), max("x").as("max_x"),
-        min("y").as("min_y"), max("y").as("max_y"))
-      .collect()
-      .map(r => (r.getAs[Long]("min_x"), r.getAs[Long]("max_x"),
-        r.getAs[Long]("min_y"), r.getAs[Long]("max_y")))
-  }
-
-  private def candidates(
-      ranges: Array[(Long, Long, Long, Long)],
-      lo: Long, hi: Long, onY: Boolean): Int =
-    ranges.count { case (minX, maxX, minY, maxY) =>
-      if (onY) minY <= hi && maxY >= lo else minX <= hi && maxX >= lo
-    }
-
-  test("z-ordered layout prunes selective filters on BOTH dimensions") {
-    val root = java.nio.file.Files.createTempDirectory("zorder").toString
-    val store = new TableStore(spark, root)
-    // two independent uniform dimensions (deterministic, no rand())
-    val data: DataFrame = spark.range(20000)
-      .withColumn("x", col("id") % 10000)
-      .withColumn("y", (col("id") * 2654435761L) % 10000)
-      .drop("id")
-
-    // baseline: linear layout sorted on x only
-    store.write("lin", data.repartitionByRange(16, col("x"))
-      .sortWithinPartitions("x"))
-    store.writeZOrdered("zo", data, Seq("x", "y"), nFiles = 16)
-
-    val lin = fileRanges(store.path("lin"))
-    val zo = fileRanges(store.path("zo"))
-    // repartitionByRange SAMPLES its boundaries (seeded by RDD id, so
-    // in-suite runs split differently than solo runs): a boundary
-    // partition can come up empty or skewed. Assert the STRUCTURE —
-    // many files, pruning on the right dimensions — not exact splits.
-    val nLin = lin.length
-    val nZo = zo.length
-    assert(nLin >= 12 && nLin <= 16, s"linear layout wrote $nLin files")
-    assert(nZo >= 12 && nZo <= 16, s"z-order layout wrote $nZo files")
-
-    // 2%-selectivity predicates on each dimension
-    val xLin = candidates(lin, 4000, 4199, onY = false)
-    val yLin = candidates(lin, 4000, 4199, onY = true)
-    val xZo = candidates(zo, 4000, 4199, onY = false)
-    val yZo = candidates(zo, 4000, 4199, onY = true)
-
-    // linear: great on x, useless on y (every file spans all of y —
-    // structural, sampling cannot change it)
-    assert(xLin <= 3, s"x candidates on linear layout: $xLin of $nLin")
-    assert(yLin == nLin, s"y candidates on linear layout: $yLin of $nLin")
-    // z-order: skips a material share of files on BOTH dimensions
-    assert(xZo <= (2 * nZo) / 3, s"x candidates on z-order layout: $xZo of $nZo")
-    assert(yZo <= (2 * nZo) / 3, s"y candidates on z-order layout: $yZo of $nZo")
-
-    // layout is row-preserving
-    assert(spark.read.parquet(store.path("zo")).count() == 20000)
-  }
-
-  test("hive-partitioned writes prune whole partitions at plan time") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val root = java.nio.file.Files.createTempDirectory("hivepart").toString
-    val store = new TableStore(spark, root)
-    val data = spark.range(1000)
-      .withColumn("day", col("id") % 10)
-      .withColumn("v", col("id") * 2)
-    store.writePartitioned("by_day", data, Seq("day"))
-
-    val q = spark.read.parquet(store.path("by_day")).filter(col("day") === 3)
-    val scan = q.queryExecution.executedPlan.collect {
-      case f: FileSourceScanExec => f
-    }.head
-    // 1 of 10 partition directories survives planning
-    assert(scan.selectedPartitions.partitionCount == 1,
-      s"expected 1 pruned partition, got ${scan.selectedPartitions.partitionCount}")
-    assert(q.count() == 100)
   }
 }

@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
@@ -172,74 +173,6 @@ class EventStreamsSpec extends SparkSpec {
     assert(rows.count(_ == (2L, None)) == 1, "unmatched click did not emit null row")
   }
 
-  test("event-time timers flush sessions when the watermark proves the gap") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[Event]
-      val query = EventStreams.sessionFlush(input.toDS(), gapMinutes = 10L)
-        .writeStream.format("memory").queryName("sess_flush")
-        .outputMode(OutputMode.Append()).start()
-
-      // session A for user 1 (10:00, 10:05); nothing can flush yet —
-      // the watermark hasn't proven the 10-minute quiet period
-      input.addData(Event(1L, ts(0), "click", 1.5), Event(1L, ts(5), "view", 2.5))
-      query.processAllAvailable()
-      assert(spark.table("sess_flush").isEmpty,
-        "session flushed before the gap was proven")
-
-      // user 2 at 10:30 pushes the watermark past 10:05 + 10min →
-      // user 1's timer fires and ONLY their session flushes
-      input.addData(Event(2L, ts(30), "click", 7.0))
-      query.processAllAvailable()
-      val first = spark.table("sess_flush").collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"),
-          r.getAs[Double]("total_value")))
-      assert(first.toSeq == Seq((1L, 2L, 4.0)), s"got ${first.toSeq}")
-
-      // a third batch far ahead expires user 2's timer as well
-      input.addData(Event(3L, Timestamp.valueOf("2026-01-01 12:00:00"), "view", 0.0))
-      query.processAllAvailable()
-      query.stop()
-      val all = spark.table("sess_flush").collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events")))
-      assert(all.toSet.contains((2L, 1L)), s"user 2 session never flushed: ${all.toSeq}")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("sessionFlush state encoder runs on generated code (CODEGEN_ONLY)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // CODEGEN_ONLY turns a projection that Janino cannot compile into a
-    // failed query instead of a silent interpreted fallback
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[Event]
-      val query = EventStreams.sessionFlush(input.toDS(), gapMinutes = 10L)
-        .writeStream.format("memory").queryName("sess_flush_codegen")
-        .outputMode(OutputMode.Append()).start()
-      try {
-        input.addData(Event(1L, ts(0), "click", 1.5), Event(1L, ts(5), "view", 2.5))
-        query.processAllAvailable()
-        input.addData(Event(2L, ts(30), "click", 7.0))
-        query.processAllAvailable()
-      } finally query.stop()
-      val rows = spark.table("sess_flush_codegen").collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"),
-          r.getAs[Double]("total_value")))
-      assert(rows.toSeq == Seq((1L, 2L, 4.0)), s"got ${rows.toSeq}")
-    } finally {
-      spark.conf.unset("spark.sql.codegen.factoryMode")
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("transformWithState quota admits the first N per user across batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -307,29 +240,6 @@ class EventStreamsSpec extends SparkSpec {
     assert(counts() == before)
   }
 
-  test("anomalies flags z-score outliers per key and re-baselines after them") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val query = EventStreams.anomalies(input.toDS(), zThreshold = 3.0, minSamples = 5)
-      .writeStream.format("memory").queryName("anoms")
-      .outputMode(OutputMode.Append()).start()
-
-    // user 1: stable baseline around 10 ± 1, then a spike; user 2 all
-    // stable — no alerts
-    val base = Seq(9.0, 10.0, 11.0, 10.0, 9.5, 10.5, 10.0)
-    input.addData(base.zipWithIndex.map { case (v, i) => Event(1L, ts(i), "m", v) }: _*)
-    input.addData(base.zipWithIndex.map { case (v, i) => Event(2L, ts(i), "m", v) }: _*)
-    query.processAllAvailable()
-    input.addData(Event(1L, ts(10), "m", 30.0)) // the spike
-    query.processAllAvailable()
-    val got = spark.sql("SELECT user_id, value, zscore FROM anoms").collect()
-    query.stop()
-    assert(got.length == 1)
-    assert(got.head.getLong(0) == 1L && got.head.getDouble(1) == 30.0)
-    assert(got.head.getDouble(2) > 3.0)
-  }
-
   test("countsToStore restarts from the checkpoint without duplication") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -381,32 +291,21 @@ class EventStreamsSpec extends SparkSpec {
     assert(rows == Map("click" -> Some("engagement"), "purchase" -> None))
   }
 
-  test("admitDocuments streams never-seen docs into a DedupStore exactly once") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("admit_store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("admit_ckpt").toString
-    val store = new graft.store.DedupStore(
-      new graft.store.TableStore(spark, root), "corpus", "text", 10000)
-    val input = MemoryStream[(Long, String)]
-    val query = EventStreams.admitDocuments(
-      input.toDF().toDF("doc_id", "text"), store, ckpt)
+  /** A stream that folds each micro-batch into `agg` under the
+    * engine's replay-stable batch id, so the AggTable ledger makes the
+    * fold exactly-once across restarts.
+    */
+  private def foldInto(agg: graft.store.AggTable, events: DataFrame, ckpt: String): StreamingQuery =
+    events.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        agg.accumulate(s"stream_$batchId", batch)
+        ()
+      }
+      .start()
 
-    input.addData((1L, "alpha"), (2L, "beta"))
-    query.processAllAvailable()
-    input.addData((3L, "beta"), (4L, "gamma"), (5L, "gamma"))
-    query.processAllAvailable()
-    query.stop()
-
-    val kept = store.corpus.get.collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toSet
-    assert(kept == Set(1L -> "alpha", 2L -> "beta", 4L -> "gamma"))
-    // crash-replay of an already-committed engine batch id is a no-op
-    assert(store.admit("stream_1",
-      Seq((9L, "gamma"), (10L, "new")).toDF("doc_id", "text")) == 0L)
-  }
-
-  test("maintainAggregate folds micro-batches into the stored view exactly once") {
+  test("a stream folds its micro-batches into an AggTable exactly once") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("agg_store").toString
@@ -414,7 +313,7 @@ class EventStreamsSpec extends SparkSpec {
     val store = new graft.store.TableStore(spark, root)
     val spec = graft.store.AggSpec(Seq("event_type"), Seq("value"))
     val input = MemoryStream[Event]
-    val query = EventStreams.maintainAggregate(input.toDF(), store, "ev_stats", spec, ckpt)
+    val query = foldInto(new graft.store.AggTable(store, "ev_stats", spec), input.toDF(), ckpt)
 
     input.addData(Event(1L, ts(1), "click", 1.50), Event(2L, ts(2), "view", 4.00))
     query.processAllAvailable()
@@ -430,12 +329,12 @@ class EventStreamsSpec extends SparkSpec {
 
     // crash-replay: the engine re-runs a batch id it already committed;
     // the ledger recognizes it and the view is unchanged
-    EventStreams.maintainAggregateBatch(new graft.store.AggTable(store, "ev_stats", spec),
-      Seq(("click", 2.50)).toDF("event_type", "value"), batchId = 1L)
+    new graft.store.AggTable(store, "ev_stats", spec)
+      .accumulate("stream_1", Seq(("click", 2.50)).toDF("event_type", "value"))
     assert(result() == before)
   }
 
-  test("maintainAggregate reads the ledger once per stream, not once per batch") {
+  test("one AggTable folding a stream reads its ledger once, not once per batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("agg_store").toString
@@ -443,7 +342,7 @@ class EventStreamsSpec extends SparkSpec {
     val store = new graft.store.TableStore(spark, root)
     val spec = graft.store.AggSpec(Seq("event_type"), Seq("value"))
     val input = MemoryStream[Event]
-    val query = EventStreams.maintainAggregate(input.toDF(), store, "ev_stats", spec, ckpt)
+    val query = foldInto(new graft.store.AggTable(store, "ev_stats", spec), input.toDF(), ckpt)
     try {
       input.addData(Event(1L, ts(1), "click", 1.50))
       query.processAllAvailable()
@@ -484,38 +383,6 @@ class EventStreamsSpec extends SparkSpec {
       assert(seen.contains(sentinel), "sentinel action never seen")
       seen.asScala.toSeq.filterNot(_ == sentinel)
     } finally spark.listenerManager.unregister(listener)
-  }
-
-  test("native session_window sessions match the custom sessionize semantics") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val query = EventStreams.sessionCounts(input.toDF(),
-        gap = "10 minutes", lateness = "0 seconds")
-      .writeStream.format("memory").queryName("sw_sessions")
-      .outputMode(OutputMode.Append()).start()
-
-    // one session (10:00, 10:05), then a new one at 10:30
-    input.addData(
-      Event(1L, ts(0), "click", 1.0),
-      Event(1L, ts(5), "view", 2.0),
-      Event(1L, ts(30), "click", 5.0))
-    query.processAllAvailable()
-    // advance the watermark so both sessions close in Append mode
-    input.addData(Event(2L, Timestamp.valueOf("2026-01-01 12:00:00"), "view", 0.0))
-    query.processAllAvailable()
-    query.stop()
-
-    val sessions = spark.table("sw_sessions").collect()
-      .filter(_.getAs[Long]("user_id") == 1L)
-      .map(r => (r.getAs[Timestamp]("session_start"),
-        r.getAs[Timestamp]("session_end"), r.getAs[Long]("n_events"),
-        r.getAs[Double]("total_value")))
-      .sortBy(_._1.getTime)
-    assert(sessions.length == 2)
-    // session_end = last event + gap (unlike sessionize's last event)
-    assert(sessions(0) == (ts(0), ts(15), 2L, 3.0))
-    assert(sessions(1) == (ts(30), ts(40), 1L, 5.0))
   }
 
   test("streaming state runs on the RocksDB state store backend") {
