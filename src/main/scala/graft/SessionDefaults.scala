@@ -36,11 +36,14 @@ import graft.plans.GraftExtensions
   * The engine's optimizer rules and planner strategy are installed
   * here too, once per session: [[apply]] adds
   * [[graft.plans.GraftExtensions]] (`RangeJoinRewrite`, inert unless
-  * `spark.graft.rangeJoin.enabled=true`; `MatViewRewrite`, inert while
-  * nothing is registered; `TopKPerKeyStrategy`, which plans only its
-  * own node). The `graft.functions` handles build their expressions
-  * directly and need no registration, so no gate or Column handle
-  * changes the session it runs on.
+  * `spark.graft.rangeJoin.enabled=true`; `MatViewRewrite`, inert in a
+  * session that holds no registration; `TopKPerKeyStrategy`, which
+  * plans only its own node). The `graft.functions` handles build
+  * their expressions directly and need no registration, so no gate or
+  * Column handle changes the session it runs on. A gate that needs
+  * other confs declares them (`QueryDef.confs`) and runs in a clone
+  * of the caller's session that carries them (`QueryDef.session`);
+  * the clone keeps these confs and extensions.
   */
 object SessionDefaults {
 

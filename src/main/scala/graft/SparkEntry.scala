@@ -28,9 +28,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q11_join_dims")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. A gate
+    * that declares confs runs in its own session
+    * ([[QueryDef.session]]); the others run on the caller's.
+    */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    byName.map { case (n, d) => n -> d.run }
+    byName.map { case (n, d) =>
+      n -> (if (d.confs.isEmpty) d.run else (s: SparkSession, dir: String) =>
+        d.run(QueryDef.session(s, d.confs), dir))
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -21,29 +21,20 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * is immutable for the life of a context (the driver's testdata and
   * the dev rung dirs are write-once; mutable state lives in
   * [[graft.store.TableStore]], which never routes through here).
-  * Context-keyed + swept like [[graft.queries.GraphGateSource]] so a
-  * stopped context's frames are never served to a fresh one.
+  * Memoized per context by [[ContextMemo]], so a stopped context's
+  * frames are never served to a fresh one; another session of the
+  * context gets the frame rebound to itself, so a gate's declared
+  * confs apply to what it derives from the table.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), DataFrame]()
+  private val resolved = new ContextMemo[(String, String), DataFrame]
 
-  private def ctxKey(s: SparkSession): String =
-    s.sparkContext.applicationId + ":" + s.sparkContext.startTime
-
-  private def sweepStopped(): Unit =
-    cache.entrySet.removeIf(e =>
-      e.getValue.sparkSession.sparkContext.isStopped)
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    sweepStopped()
-    cache.computeIfAbsent((ctxKey(spark), dir, name),
-      _ => doLoad(spark, dir, name))
-  }
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    ContextMemo.rebind(spark, resolved(spark, (dir, name))(doLoad(spark, dir, name)))
 
   private def doLoad(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.parquet's ts has varied across driver testdata versions:

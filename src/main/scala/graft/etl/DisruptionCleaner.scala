@@ -32,11 +32,6 @@ object DisruptionCleaner {
     "yyyy-MM-dd'T'HH:mm:ssXXX",   // +01:00
     "yyyy-MM-dd'T'HH:mm:ss")      // naive
 
-  val outputColumns: Seq[String] = Seq(
-    "disruption_id", "type", "title", "description", "start_time",
-    "end_time", "duration_minutes", "impact_level", "affected_stations",
-    "is_resolved", "created_at", "updated_at")
-
   /** True if `path` (dot-separated, descending through structs and
     * array-of-struct elements) resolves in the schema — the Spark
     * analog of the reference's `if 'col' in df.columns` guards.

@@ -3,7 +3,6 @@ package graft.multimodal
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: image/audio/video travel as opaque
   * `binary` columns with typed metadata, processed per-partition in
@@ -29,16 +28,9 @@ import org.apache.spark.sql.types._
   */
 object MediaFeatures {
 
-  /** Input contract: one row per media object. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media_type", StringType),   // image | audio | video
-    StructField("uri", StringType),
-    StructField("content", BinaryType),
-    StructField("meta_width", IntegerType),
-    StructField("meta_height", IntegerType),
-    StructField("meta_sample_rate", IntegerType)))
-
+  /** Input contract: one row per media object (`media_type` is
+    * image | audio | video).
+    */
   case class MediaRow(
       media_id: Long,
       media_type: String,

@@ -1,10 +1,12 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.UUID
 
+import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LeafNode, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType, ShortType}
@@ -45,27 +47,27 @@ import graft.store.AggTable
   * Output attribute ids are preserved (each rewritten column is
   * re-aliased under its original `exprId`), so parent operators —
   * sorts, joins, further projections — resolve unchanged.
+  *
+  * Registrations are held by the session: [[MatViewRewrite.register]]
+  * records one in the session's catalog, as a temp view, and the rule
+  * (built per session by [[GraftExtensions]]) reads only the catalog
+  * of the session it optimizes for. A registration is therefore seen
+  * by no other session, ends with its session, and the rule is inert
+  * in a session that has none.
   */
-object MatViewRewrite extends Rule[LogicalPlan] {
+final class MatViewRewrite(session: SparkSession) extends Rule[LogicalPlan] {
 
-  private val registry = new ConcurrentHashMap[String, AggTable]()
-
-  private def canon(p: String): String =
-    p.stripSuffix("/").replaceFirst("^file:", "")
-
-  /** Route aggregates over `basePath` to the state of `view`. */
-  def register(basePath: String, view: AggTable): Unit =
-    registry.put(canon(basePath), view)
-
-  def clear(): Unit = registry.clear()
+  import MatViewRewrite._
 
   /** The registration whose base path backs this scan, if any. */
   private def registered(lr: LogicalRelation): Option[AggTable] =
     lr.relation match {
       case fs: HadoopFsRelation =>
+        val catalog = session.sessionState.catalog
         fs.location.rootPaths.iterator
-          .map(p => registry.get(canon(p.toString)))
-          .collectFirst { case r if r != null => r }
+          .flatMap(p => catalog.getRawTempView(viewName(p.toString)))
+          .flatMap(_.plan.flatMap(_.collectFirst { case Registration(view) => view }))
+          .nextOption()
       case _ => None
     }
 
@@ -87,8 +89,7 @@ object MatViewRewrite extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (registry.isEmpty) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       case agg @ Aggregate(groupExprs, aggExprs, child, _) =>
         (for {
@@ -97,7 +98,6 @@ object MatViewRewrite extends Rule[LogicalPlan] {
           rewritten <- tryRewrite(groupExprs, aggExprs, filters, view)
         } yield rewritten).getOrElse(agg)
     }
-  }
 
   private def tryRewrite(
       groupExprs: Seq[Expression],
@@ -115,65 +115,88 @@ object MatViewRewrite extends Rule[LogicalPlan] {
       stateAttr.get(name).collect { case a: AttributeReference => a }
 
     // grouping: bare key columns only
-    val groupKeys = groupExprs.map {
-      case a: AttributeReference if keys.contains(a.name) => a
+    val newGroup = groupExprs.map {
+      case a: AttributeReference if keys.contains(a.name) => s(a.name).getOrElse(return None)
       case _ => return None
     }
-    // filters may reference group keys only; remap them onto the state
-    val attrByExpr = scala.collection.mutable.HashMap[ExprId, AttributeReference]()
-    groupKeys.foreach(a => attrByExpr(a.exprId) = a)
-    def remapKeyExpr(e: Expression): Option[Expression] = {
-      var ok = true
-      val out = e.transform {
-        case a: AttributeReference =>
-          if (keys.contains(a.name)) s(a.name).getOrElse { ok = false; a }
-          else { ok = false; a }
-      }
-      if (ok) Some(out) else None
-    }
-    val stateFilters = filters.map(f => remapKeyExpr(f).getOrElse(return None))
-
     def agged(fn: AggregateFunction): Expression =
       fn.toAggregateExpression()
 
-    // each output column re-aliased under its original exprId
-    val newAggs: Seq[NamedExpression] = aggExprs.map {
-      case a: AttributeReference if keys.contains(a.name) =>
-        Alias(s(a.name).getOrElse(return None), a.name)(exprId = a.exprId)
+    // one aggregate of the base as one over the state; None if the
+    // state cannot answer it
+    def stateAgg(ae: AggregateExpression): Option[Expression] = ae match {
       // filter position must be None: an aggregate with a FILTER
       // (WHERE ...) clause counts a predicate-dependent subset the
       // state never kept, so it must stay on the base scan
-      case al @ Alias(AggregateExpression(fn, _, false, None, _), name) =>
-        val rewrittenFn: Expression = fn match {
-          // non-nullable constants only: count(NULL) is always 0,
-          // not the group row count the state's cnt would report
-          case Count(exprs) if exprs.forall(e => e.foldable && !e.nullable) =>
-            Cast(agged(Sum(s("cnt").getOrElse(return None))), LongType)
-          case Sum(m: AttributeReference, _) if measures.contains(m.name) &&
-              exactSumType(m.dataType) =>
-            val src = s(s"sum_${m.name}").getOrElse(return None)
-            Cast(agged(Sum(src)), al.dataType)
-          // sum(cast(m AS DECIMAL(18,2))) is the state's OWN sum
-          // definition (AggSpec.partial casts every measure to exactly
-          // this type), so re-summing the state is bit-identical for
-          // ANY base type — including floats the bare-attribute arm
-          // must refuse
-          case Sum(Cast(m: AttributeReference, d: DecimalType, _, _), _)
-              if measures.contains(m.name) && d.precision == 18 && d.scale == 2 =>
-            val src = s(s"sum_${m.name}").getOrElse(return None)
-            Cast(agged(Sum(src)), al.dataType)
-          case Min(m: AttributeReference) if measures.contains(m.name) =>
-            agged(Min(s(s"min_${m.name}").getOrElse(return None)))
-          case Max(m: AttributeReference) if measures.contains(m.name) =>
-            agged(Max(s(s"max_${m.name}").getOrElse(return None)))
-          case _ => return None
-        }
-        Alias(rewrittenFn, name)(exprId = al.exprId)
+      case AggregateExpression(fn, _, false, None, _) => fn match {
+        // non-nullable constants only: count(NULL) is always 0,
+        // not the group row count the state's cnt would report
+        case Count(exprs) if exprs.forall(e => e.foldable && !e.nullable) =>
+          s("cnt").map(c => Cast(agged(Sum(c)), LongType))
+        case Sum(m: AttributeReference, _) if measures.contains(m.name) &&
+            exactSumType(m.dataType) =>
+          s(s"sum_${m.name}").map(src => Cast(agged(Sum(src)), ae.dataType))
+        // sum(cast(m AS DECIMAL(18,2))) is the state's OWN sum
+        // definition (AggSpec.partial casts every measure to exactly
+        // this type), so re-summing the state is bit-identical for
+        // ANY base type — including floats the bare-attribute arm
+        // must refuse
+        case Sum(Cast(m: AttributeReference, d: DecimalType, _, _), _)
+            if measures.contains(m.name) && d.precision == 18 && d.scale == 2 =>
+          s(s"sum_${m.name}").map(src => Cast(agged(Sum(src)), ae.dataType))
+        case Min(m: AttributeReference) if measures.contains(m.name) =>
+          s(s"min_${m.name}").map(src => agged(Min(src)))
+        case Max(m: AttributeReference) if measures.contains(m.name) =>
+          s(s"max_${m.name}").map(src => agged(Max(src)))
+        case _ => None
+      }
+      case _ => None
+    }
+    // an expression over aggregates and group keys (a filter on keys,
+    // or a cast or an arithmetic the optimizer folded into the
+    // Aggregate) keeps its shape, with each aggregate and key taken
+    // from the state; any other column fails it
+    def overState(e: Expression): Option[Expression] = e match {
+      case ae: AggregateExpression => stateAgg(ae)
+      case a: AttributeReference if keys.contains(a.name) => s(a.name)
+      case _: AttributeReference => None
+      case other =>
+        val kids = other.children.map(overState)
+        if (kids.forall(_.isDefined)) Some(other.withNewChildren(kids.flatten)) else None
+    }
+    val stateFilters = filters.map(f => overState(f).getOrElse(return None))
+
+    // each output column keeps its original exprId
+    val newAggs: Seq[NamedExpression] = aggExprs.map {
+      case a: AttributeReference => Alias(overState(a).getOrElse(return None), a.name)(exprId = a.exprId)
+      case al: Alias =>
+        al.withNewChildren(Seq(overState(al.child).getOrElse(return None))).asInstanceOf[NamedExpression]
       case _ => return None
     }
 
     val filtered = stateFilters.foldLeft(state)((p, f) => Filter(f, p))
-    val newGroup = groupKeys.map(a => s(a.name).getOrElse(return None))
     Some(Aggregate(newGroup, newAggs, filtered))
   }
+}
+
+object MatViewRewrite {
+
+  /** A registration as the session catalog holds it: the plan of its
+    * temp view. It is never planned; [[MatViewRewrite]] reads it.
+    */
+  private final case class Registration(view: AggTable) extends LeafNode {
+    override def output: Seq[Attribute] = Nil
+  }
+
+  /** The temp view name of the registration for `basePath`. */
+  private def viewName(basePath: String): String = {
+    val canon = basePath.stripSuffix("/").replaceFirst("^file:", "")
+    "graft_matview_" + UUID.nameUUIDFromBytes(canon.getBytes(UTF_8)).toString.replace("-", "")
+  }
+
+  /** Route aggregates over `basePath`, in session `s` only, to the
+    * state of `view`, read afresh at each optimization.
+    */
+  def register(s: SparkSession, basePath: String, view: AggTable): Unit =
+    GraftPlanBridge.ofRows(s, Registration(view)).createOrReplaceTempView(viewName(basePath))
 }

@@ -27,32 +27,31 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   *
   * Opt-in by key: every session built through [[graft.SessionDefaults]]
   * carries the rule (via [[GraftExtensions]]), and it rewrites only
-  * while `spark.graft.rangeJoin.enabled=true` (default false). Left on
-  * in every session it would rewrite the paper's own Q6 overlap join
-  * (`NsQueries.overlapping`), where one interval longer than the
-  * fan-out bound below would fail the query. Bin width:
-  * `spark.graft.rangeJoin.binMinutes` (default 360).
+  * in a session where `spark.graft.rangeJoin.enabled=true` (default
+  * false; the gate q531 declares it, so it runs in a session of its
+  * own). Left on in every session it would rewrite the paper's own Q6
+  * overlap join (`NsQueries.overlapping`), where one interval longer
+  * than the fan-out bound below would fail the query.
   *
-  * Fan-out bound: each row may explode into at most
-  * `spark.graft.rangeJoin.maxBins` (default 2048) bins, so one
-  * corrupt or open-ended interval (an end_time years after start)
-  * cannot generate millions of rows. An optimizer rule must never
-  * silently change results, so by default an interval that EXCEEDS
-  * the bound fails the query with a clear runtime error naming the
-  * confs (`spark.graft.rangeJoin.onClamp=error`); within the bound
-  * the rewrite is pair-exact. Users who prefer the old
-  * drop-the-far-match clamp set `onClamp=silent` (the original
-  * overlap predicate is still kept, so false POSITIVES are impossible
-  * either way — a truncated interval can only lose pairs whose other
-  * interval starts beyond the clamp horizon, ≈512 days at defaults);
-  * `maxBins=0` removes the bound entirely.
+  * Bins are [[BinMinutes]] (120) minutes wide, and each row may
+  * explode into at most [[MaxBins]] (2048) bins, so one corrupt or
+  * open-ended interval (an end_time years after start) cannot
+  * generate millions of rows. An optimizer rule must never silently
+  * change results, so an interval that EXCEEDS the bound (about 170
+  * days) fails the query with a runtime error that says so; within
+  * the bound the rewrite is pair-exact.
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  val binMinutesKey = "spark.graft.rangeJoin.binMinutes"
-  val maxBinsKey = "spark.graft.rangeJoin.maxBins"
   val enabledKey = "spark.graft.rangeJoin.enabled"
-  val onClampKey = "spark.graft.rangeJoin.onClamp"
+
+  /** Bin width. */
+  val BinMinutes = 120L
+
+  /** Fan-out bound: the most bins one row's interval may span. */
+  val MaxBins = 2048L
+
+  private val binMicros = BinMinutes * 60000000L
 
   /** (aStart, aEnd, bStart, bEnd): a.start < b.end && a.end > b.start
     * with `a` side referencing only `left` and `b` only `right`.
@@ -94,15 +93,6 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (conf.getConfString(enabledKey, "false") != "true") return plan
-    val binMicros =
-      conf.getConfString(binMinutesKey, "360").toLong * 60000000L
-    val maxBins = conf.getConfString(maxBinsKey, "2048").toLong
-    val onClamp = conf.getConfString(onClampKey, "error")
-    if (maxBins > 0 && onClamp == "silent")
-      logWarning(s"$onClampKey=silent: overlap-join pairs whose intervals span " +
-        s"more than $maxBins bins may be silently dropped (set $onClampKey=error " +
-        s"to fail instead, or $maxBinsKey=0 to unbound the explode)")
-
     plan.transform {
       case j @ Join(left, right, Inner | Cross, Some(cond), hint) =>
         val conjuncts = splitConjunctivePredicates(cond)
@@ -114,27 +104,17 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
               new IntegralDivide(UnixMicros(e), Literal(binMicros))
             def binned(child: LogicalPlan, s: Expression, e: Expression) = {
               val attr = AttributeReference("__graft_bin", LongType)()
-              // Bound the explode to maxBins bins per row so corrupt
-              // intervals stay bounded (doc above). onClamp=error
-              // (default) fails loudly when the bound would actually
-              // truncate — an optimizer rule must not silently drop
-              // matches; onClamp=silent keeps the old clamp; maxBins=0
-              // means unbounded. Sequence is TimeZoneAwareExpression;
-              // the analyzer that normally fills timeZoneId has
-              // already run, so set it.
+              // Bound the explode to MaxBins bins per row, failing
+              // loudly where the bound would truncate (doc above).
+              // Sequence is TimeZoneAwareExpression; the analyzer
+              // that normally fills timeZoneId has already run, so
+              // set it.
               val rawEnd = binOf(e)
-              val limit = Add(binOf(s), Literal(maxBins))
-              val endBin =
-                if (maxBins <= 0) rawEnd
-                else if (onClamp == "silent") Least(Seq(rawEnd, limit))
-                else If(GreaterThan(rawEnd, limit),
-                  Cast(new RaiseError(Literal(
-                    s"graft range-join rewrite: interval spans more than $maxBins " +
-                      s"bins of ${binMicros / 60000000L} minutes; raise $maxBinsKey " +
-                      s"or $binMinutesKey, set $onClampKey=silent to drop such " +
-                      s"matches, or $maxBinsKey=0 to unbound the explode")),
-                    LongType),
-                  rawEnd)
+              val endBin = If(GreaterThan(rawEnd, Add(binOf(s), Literal(MaxBins))),
+                Cast(new RaiseError(Literal(
+                  s"graft range-join rewrite: interval spans more than $MaxBins " +
+                    s"bins of $BinMinutes minutes")), LongType),
+                rawEnd)
               val gen = Explode(Sequence(binOf(s), endBin, None,
                 Some(conf.sessionLocalTimeZone)))
               (Generate(gen, Nil, outer = false, None, Seq(attr), child), attr)
@@ -161,7 +141,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => RangeJoinRewrite)
-    ext.injectOptimizerRule(_ => MatViewRewrite)
+    ext.injectOptimizerRule(new MatViewRewrite(_))
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
   }
 }

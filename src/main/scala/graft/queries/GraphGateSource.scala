@@ -1,11 +1,9 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{ContextMemo, Tables}
 
 /** Session-scoped cache of the customer→part purchase edge list the
   * two HITS gates (q472 broadcast form, q529 co-partitioned form)
@@ -23,45 +21,23 @@ import graft.Tables
   */
 object GraphGateSource {
 
-  private val cache = new ConcurrentHashMap[(String, String), DataFrame]()
-
-  /** Stable per-context key: applicationId alone can repeat across
-    * JVM restarts and identityHashCode can collide after GC, so the
-    * pair with startTime pins exactly one live context.
-    */
-  private def ctxKey(s: SparkSession): String =
-    s.sparkContext.applicationId + ":" + s.sparkContext.startTime
-
-  /** Drop frames bound to stopped contexts: they are unusable (action
-    * on them throws "SparkContext has been shut down") and would
-    * otherwise be retained for the JVM lifetime. Called on every
-    * accessor — O(entries), entries are a handful per context.
-    */
-  private def sweepStopped(): Unit =
-    cache.entrySet.removeIf(e =>
-      e.getValue.sparkSession.sparkContext.isStopped)
+  private val frames = new ContextMemo[String, DataFrame]
 
   /** Measurement tools only (dev/Probe slopes): drop every cached
     * frame so a timed pass pays the full build again — otherwise the
     * ladder's byte slopes silently exclude the shared-build work that
     * production pays once per job.
     */
-  private[graft] def invalidate(): Unit = cache.clear()
+  private[graft] def invalidate(): Unit = frames.clear()
 
   /** Generic session-scoped cached frame: evaluates `build` and
     * eagerly localCheckpoints it once per (SparkContext, key); later
-    * lookups return the checkpointed frame. For model-sized shared
-    * frames only — checkpoint blocks live until the context dies.
-    *
-    * `build` must NOT call another GraphGateSource accessor: that
-    * would nest computeIfAbsent on the one map (a recursive update —
-    * ConcurrentHashMap may throw or corrupt, detection best-effort).
-    * Resolve dependencies before the lookup, as [[copurchaseW]] does.
+    * lookups return the checkpointed frame, rebound to the caller's
+    * session ([[ContextMemo.rebind]]). For model-sized shared frames
+    * only — checkpoint blocks live until the context dies.
     */
-  def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    sweepStopped()
-    cache.computeIfAbsent((ctxKey(s), key), _ => build.localCheckpoint())
-  }
+  def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    ContextMemo.rebind(s, frames(s, key)(build.localCheckpoint()))
 
   /** DISTINCT (u = o_custkey, p = l_partkey) purchase edges for
     * `dir`, built once per (context, dir) and localCheckpointed.
@@ -87,17 +63,14 @@ object GraphGateSource {
     * consumers' DuckDB oracles re-derive it independently from
     * lineitem, so sharing the Spark-side build cannot mask a defect.
     */
-  def copurchaseW(s: SparkSession, dir: String): DataFrame = {
-    // resolve the base frame BEFORE entering computeIfAbsent: a
-    // nested computeIfAbsent on the same map is a recursive update
-    // (ConcurrentHashMap may throw or corrupt, detection best-effort)
-    val op = orderPartDistinct(s, dir)
-    cached(s, "copurchase-w:" + dir)(
+  def copurchaseW(s: SparkSession, dir: String): DataFrame =
+    cached(s, "copurchase-w:" + dir) {
+      val op = orderPartDistinct(s, dir)
       op.as("a").join(op.as("b"), Seq("o"))
         .filter(col("a.p") < col("b.p"))
         .groupBy(col("a.p").as("u"), col("b.p").as("v"))
-        .agg(count(lit(1)).as("w")))
-  }
+        .agg(count(lit(1)).as("w"))
+    }
 
   /** DISTINCT (o = l_orderkey, p = l_partkey) — the base frame of
     * [[copurchaseW]], also read directly by the association-rule gate

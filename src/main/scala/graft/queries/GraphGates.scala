@@ -550,7 +550,8 @@ object GraphGates {
   // bought by the broadest heavy buyers.
   private val q472 = QueryDef(
     "q472_hits",
-    // AQE OFF for the iteration loop (round-12 in-session A/B,
+    // AQE OFF for the whole gate, declared in `confs` below, so the
+    // gate runs in its own session (round-12 in-session A/B,
     // OPTIMIZATION_r12.md "Graph family": 3.51→3.23 and 3.18→2.92 s,
     // +8% twice): every join in the 12 half-steps is explicitly
     // broadcast-hinted and every fold is exchange-free on the pinned
@@ -560,8 +561,10 @@ object GraphGates {
     // sibling q529, whose per-iteration exchanges AQE does optimize,
     // measured the OPPOSITE (3.03→3.44 s with AQE off) and keeps it.
     // Results are bit-identical by construction (ordered folds are
-    // partitioning-independent; oracle hash-gated).
-    (s, dir) => QueryDef.withConf(s, "spark.sql.adaptive.enabled", "false") {
+    // partitioning-independent; oracle hash-gated). The final
+    // evaluation of the returned frame runs without AQE too, so its
+    // plan has no adaptive root.
+    (s, dir) => {
       // session-scoped shared edge cache (one build per JVM for both
       // HITS gates × all bench executions — see GraphGateSource)
       val edges = GraphGateSource.custPartEdges(s, dir)
@@ -626,7 +629,8 @@ object GraphGates {
         .orderBy("rnk")
     },
     Some(hitsOracleSql(withAuthority = true)),
-    covers = Seq("GRAPH-hits"))
+    covers = Seq("GRAPH-hits"),
+    confs = Seq("spark.sql.adaptive.enabled" -> "false"))
 
   /** q472's DuckDB HITS recursion (6 unrolled rounds of ordered
     * list_reduce folds ≡ the gate's KeyOrderedFold semantics).

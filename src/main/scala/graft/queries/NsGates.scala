@@ -503,18 +503,17 @@ object NsGates {
   // Same query and oracle as q36, but the Spark side writes the NAIVE
   // overlap theta self-join and lets [[graft.plans.RangeJoinRewrite]]
   // — installed in every session by SessionDefaults, and switched on
-  // here by its `enabled` key — rewrite it into the binned equi-join.
+  // by its `enabled` key in the gate's declared `confs`, so the gate
+  // runs in its own session — rewrite it into the binned equi-join.
   // The gate fails loudly if the rewrite did NOT fire (no bin Generate
   // in the optimized plan, or a nested-loop join survived physical
   // planning), then hash-matches q36's oracle: the extension path
   // provably delivers the same pairs as the explicit
-  // [[graft.operators.RangeJoin]] call. Executed eagerly so the
-  // rewrite's keys are back at their session values before any
-  // neighbor gate plans.
+  // [[graft.operators.RangeJoin]] call. It returns the query it
+  // checked, so a plan dump shows the rewrite.
   private val q531 = QueryDef(
     "q531_overlap_via_extension",
     (s, dir) => {
-      import graft.plans.RangeJoinRewrite
       val cutoff = date_sub(lit(clockDate), 7)
       val d = disruptions(s, dir)
         .select("disruption_id", "type", "start_time", "end_time")
@@ -524,43 +523,35 @@ object NsGates {
         col("type").as(s"${p}_type"),
         col("start_time").as(s"${p}_start_time"),
         col("end_time").as(s"${p}_end_time"))
-      QueryDef.withConf(s, RangeJoinRewrite.enabledKey, "true") {
-        QueryDef.withConf(s, RangeJoinRewrite.binMinutesKey, "120") {
-          val joined = side("a").join(side("b"),
-            col("a_disruption_id") < col("b_disruption_id") &&
-              col("a_start_time") < col("b_end_time") &&
-              col("a_end_time") > col("b_start_time"))
-          val overlapMin = floor(
-            (unix_micros(least(col("a_end_time"), col("b_end_time"))) -
-              unix_micros(greatest(col("a_start_time"), col("b_start_time"))))
-              .cast("double") / 60000000d).cast(IntegerType)
-          val q = joined
-            .filter(col("a_start_time") >= cutoff)
-            .select(
-              col("a_disruption_id").as("disruption_a"),
-              col("b_disruption_id").as("disruption_b"),
-              col("a_type").as("type_a"), col("b_type").as("type_b"),
-              col("a_start_time").as("a_start"), col("a_end_time").as("a_end"),
-              col("b_start_time").as("b_start"), col("b_end_time").as("b_end"),
-              overlapMin.as("overlap_minutes"))
-            .orderBy(desc("overlap_minutes"), asc("disruption_a"), asc("disruption_b"))
-            .limit(50)
-          val binGenerates = q.queryExecution.optimizedPlan.collect {
-            case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
-          }
-          require(binGenerates.size == 2,
-            s"range-join rewrite did not fire (bin Generates: ${binGenerates.size})")
-          val phys = q.queryExecution.executedPlan.toString
-          require(!phys.contains("BroadcastNestedLoop") &&
-            !phys.contains("CartesianProduct"),
-            "rewritten overlap join still plans a nested-loop join")
-          // bounded-collect: LIMIT 50 rows — executed eagerly so the
-          // rewrite is switched off again before any neighbor plans
-          val rows = q.collect().toSeq
-          s.createDataFrame(s.sparkContext.parallelize(rows, 1), q.schema)
-            .orderBy(desc("overlap_minutes"), asc("disruption_a"), asc("disruption_b"))
-        }
+      val joined = side("a").join(side("b"),
+        col("a_disruption_id") < col("b_disruption_id") &&
+          col("a_start_time") < col("b_end_time") &&
+          col("a_end_time") > col("b_start_time"))
+      val overlapMin = floor(
+        (unix_micros(least(col("a_end_time"), col("b_end_time"))) -
+          unix_micros(greatest(col("a_start_time"), col("b_start_time"))))
+          .cast("double") / 60000000d).cast(IntegerType)
+      val q = joined
+        .filter(col("a_start_time") >= cutoff)
+        .select(
+          col("a_disruption_id").as("disruption_a"),
+          col("b_disruption_id").as("disruption_b"),
+          col("a_type").as("type_a"), col("b_type").as("type_b"),
+          col("a_start_time").as("a_start"), col("a_end_time").as("a_end"),
+          col("b_start_time").as("b_start"), col("b_end_time").as("b_end"),
+          overlapMin.as("overlap_minutes"))
+        .orderBy(desc("overlap_minutes"), asc("disruption_a"), asc("disruption_b"))
+        .limit(50)
+      val binGenerates = q.queryExecution.optimizedPlan.collect {
+        case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
       }
+      require(binGenerates.size == 2,
+        s"range-join rewrite did not fire (bin Generates: ${binGenerates.size})")
+      val phys = q.queryExecution.executedPlan.toString
+      require(!phys.contains("BroadcastNestedLoop") &&
+        !phys.contains("CartesianProduct"),
+        "rewritten overlap join still plans a nested-loop join")
+      q
     },
     Some(s"""WITH $disruptionsSql
       SELECT a.disruption_id AS disruption_a, b.disruption_id AS disruption_b,
@@ -576,7 +567,8 @@ object NsGates {
        AND a.end_time > b.start_time
       WHERE a.start_time >= DATE '2024-01-31' - 7
       ORDER BY overlap_minutes DESC, disruption_a, disruption_b LIMIT 50"""),
-    covers = Seq("NSQ6", "J2", "EXT-rangejoin"))
+    covers = Seq("NSQ6", "J2", "EXT-rangejoin"),
+    confs = Seq(graft.plans.RangeJoinRewrite.enabledKey -> "true"))
 
   // The cleaning pipeline itself under the DuckDB hash gate. Both engines
   // derive identical NS-shaped raw records (id / type / title / start / end

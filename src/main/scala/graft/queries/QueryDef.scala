@@ -1,8 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, split}
 import org.apache.spark.sql.types.{DecimalType, LongType}
+
+import graft.ContextMemo
 
 /** One verifiable operator query.
   *
@@ -21,13 +23,17 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   *               [[AnnModelOracle]]). Mutually exclusive with
   *               `oracle`; Verify merges these into oracle_sql.json
   *               after the query dump.
+  * @param confs  session confs the gate runs under; `SparkEntry.queries`
+  *               runs a gate that declares any in [[QueryDef.session]],
+  *               never on the caller's session
   */
 final case class QueryDef(
     name: String,
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String],
     covers: Seq[String] = Nil,
-    dynOracle: Option[(SparkSession, String) => String] = None)
+    dynOracle: Option[(SparkSession, String) => String] = None,
+    confs: Seq[(String, String)] = Nil)
 
 /** The helpers every gate family shares. Determinism rules they
   * implement, for every gate:
@@ -109,16 +115,21 @@ object QueryDef {
   /** Word tokens (documents.text is single-space separated). */
   def toksOf(c: Column): Column = split(c, " ")
 
-  /** Run `body` with a session conf pinned, restoring the prior value
-    * (or unsetting it) afterwards, also when `body` throws — for gates
-    * that need a conf only while they plan or run.
+  private val sessions =
+    new ContextMemo[(SparkSession, Map[String, String], Seq[(String, String)]), SparkSession]
+
+  /** The session a gate declaring `confs` runs in: a clone of `s`
+    * with them set once, when it is built, so no gate sees another's
+    * confs and nothing is restored. With no `confs`, a plain clone for
+    * a gate that registers state of its own (q244). One per (session,
+    * its confs, `confs`), not per execution: a session that runs a
+    * stream, or whose parent has query listeners, adds a listener bus
+    * to the context for as long as it lives.
     */
-  def withConf[T](s: SparkSession, k: String, v: String)(body: => T): T = {
-    val prior = s.conf.getOption(k)
-    s.conf.set(k, v)
-    try body finally prior match {
-      case Some(p) => s.conf.set(k, p)
-      case None    => s.conf.unset(k)
+  private[graft] def session(s: SparkSession, confs: Seq[(String, String)]): SparkSession =
+    sessions(s, (s, s.conf.getAll, confs)) {
+      val gate = GraftPlanBridge.cloneSession(s)
+      confs.foreach { case (k, v) => gate.conf.set(k, v) }
+      gate
     }
-  }
 }

@@ -61,6 +61,13 @@ object StoreGates {
       ORDER BY k"""),
     covers = Seq("S-diff", "J-full-outer"))
 
+  /** Input fixtures written once per (context, key): single-flight, so
+    * two concurrent executions never race overlapping writes to one
+    * shared path, which would corrupt the fixture for every later read
+    * in the context.
+    */
+  private val fixtures = new graft.ContextMemo[String, Unit]
+
   private def tmpStore(s: SparkSession, prefix: String): graft.store.TableStore =
     new graft.store.TableStore(s,
       java.nio.file.Files.createTempDirectory(prefix).toString)
@@ -151,16 +158,13 @@ object StoreGates {
   // once per (context, dir) and later executions exercise only the
   // gate's actual semantic, the exchange-free co-bucketed join. The
   // oracle joins the raw tables, so the shared fixture cannot mask a
-  // defect; sequential gate execution makes the reference race-free.
-  private val bucketedFixture =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)]()
+  // defect. [[fixtures]] makes the write single-flight.
 
   private val q189 = QueryDef(
     "q189_bucketed_join",
     (s, dir) => {
       val bs = new graft.operators.BucketedStore(s)
-      val ctx = s.sparkContext.applicationId + ":" + s.sparkContext.startTime
-      if (bucketedFixture.get != ((ctx, dir))) {
+      fixtures(s, "bucketed:" + dir) {
         // a fresh in-memory catalog does not know about tables a prior
         // session left in the warehouse dir — drop the entry AND the
         // location, or CREATE TABLE fails on the orphaned directory
@@ -176,7 +180,6 @@ object StoreGates {
         bs.writeBucketed(
           t(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
           "g12_ord", "o_orderkey", 8)
-        bucketedFixture.set((ctx, dir))
       }
       // the merge hint keeps the tiny test tables off the broadcast
       // path: a sort-merge join over co-bucketed scans is the shape
@@ -290,26 +293,15 @@ object StoreGates {
   // row lost/duplicated or a partition value mangled by the write
   // still hash-mismatches every execution in the context because the
   // oracle reads the raw table
-  private val prunedFixture =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)]()
 
   private val q205 = QueryDef(
     "q205_partition_prune",
     (s, dir) => {
       val path = "/tmp/graft_gate_partitioned_orders"
-      val ctx = s.sparkContext.applicationId + ":" + s.sparkContext.startTime
-      // single-flight: the naive check-then-act let two concurrent
-      // executions both pass the guard and race overlapping
-      // mode-overwrite writes to the shared path, corrupting the
-      // fixture for every later read in the context. The write is
-      // rare (once per context×dir), so a coarse lock costs nothing.
-      prunedFixture.synchronized {
-        if (prunedFixture.get != ((ctx, dir))) {
-          t(s, dir, "orders")
-            .withColumn("ym", substring(col("o_orderdate"), 1, 7))
-            .write.mode("overwrite").partitionBy("ym").parquet(path)
-          prunedFixture.set((ctx, dir))
-        }
+      fixtures(s, "pruned:" + dir) {
+        t(s, dir, "orders")
+          .withColumn("ym", substring(col("o_orderdate"), 1, 7))
+          .write.mode("overwrite").partitionBy("ym").parquet(path)
       }
       s.read.parquet(path)
         .filter(col("ym") === "1995-03")
@@ -414,9 +406,15 @@ object StoreGates {
   // table directly in DuckDB, so hash-equality proves the rewritten
   // answer is bit-identical to a fresh corpus scan (the rule's
   // contract). The rule is installed in every session by
-  // SessionDefaults and inert while nothing is registered; executed
-  // eagerly so the registration is cleared before any other gate
-  // query plans — the rewrite must never leak into a neighbor's plan.
+  // SessionDefaults and reads only the registrations of the session
+  // it optimizes for; the gate registers in its own clone of the
+  // caller's session ([[QueryDef.session]] with no confs: one clone
+  // per caller, each execution replacing the registration) and runs
+  // its query there, so the rewrite never reaches a neighbor's plan
+  // and the returned frame is the query the rule rewrote. Not a clone
+  // per execution: a clone copies its parent's query listeners, and a
+  // session with listeners adds a listener bus to the context, so each
+  // execution would have left one behind.
   private val q244 = QueryDef(
     "q244_matview_parity",
     (s, dir) => {
@@ -430,33 +428,22 @@ object StoreGates {
       val base = t(s, dir, "lineitem")
       (0 to 2).foreach(b =>
         aggTable.accumulate(s"b$b", base.filter(col("l_orderkey") % 3 === b)))
-      MatViewRewrite.register(basePath, aggTable)
-      try {
-        val q = base.groupBy("l_returnflag", "l_linestatus")
-          .agg(count(lit(1)).as("n"),
-            sum(dec(col("l_quantity"))).as("sum_qty"),
-            min(col("l_quantity")).as("min_qty"),
-            max(col("l_quantity")).as("max_qty"))
-        // the gate must actually exercise the rewrite — fail loudly if
-        // the base scan survived optimization
-        val scans = q.queryExecution.optimizedPlan.collect {
-          case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            lr.relation match {
-              case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-                fs.location.rootPaths.map(_.toString)
-              case _ => Nil
-            }
-        }.flatten
-        require(scans.exists(_.contains("li_stats/state")),
-          s"matview rewrite did not fire; scans=$scans")
-        // bounded-collect: grouped q1 result — O(flag x status) rows
-        val rows = q.collect().toSeq
-        s.createDataFrame(s.sparkContext.parallelize(rows, 1), q.schema)
-          .select(col("l_returnflag"), col("l_linestatus"), col("n"),
-            col("sum_qty").cast("double").as("sum_qty"),
-            col("min_qty"), col("max_qty"))
-          .orderBy("l_returnflag", "l_linestatus")
-      } finally MatViewRewrite.clear()
+      val mv = QueryDef.session(s, Nil)
+      MatViewRewrite.register(mv, basePath, aggTable)
+      val q = t(mv, dir, "lineitem").groupBy("l_returnflag", "l_linestatus")
+        .agg(count(lit(1)).as("n"),
+          sum(dec(col("l_quantity"))).as("sum_qty"),
+          min(col("l_quantity")).as("min_qty"),
+          max(col("l_quantity")).as("max_qty"))
+        .select(col("l_returnflag"), col("l_linestatus"), col("n"),
+          col("sum_qty").cast("double").as("sum_qty"),
+          col("min_qty"), col("max_qty"))
+        .orderBy("l_returnflag", "l_linestatus")
+      // the gate must actually exercise the rewrite — fail loudly if
+      // the base scan survived optimization
+      require(q.inputFiles.exists(_.contains("li_stats/state")),
+        s"matview rewrite did not fire; scans=${q.inputFiles.mkString(", ")}")
+      q
     },
     Some("""SELECT l_returnflag, l_linestatus,
         CAST(COUNT(*) AS BIGINT) AS n,

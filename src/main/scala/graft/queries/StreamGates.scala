@@ -253,39 +253,40 @@ object StreamGates {
     rm(p.toFile)
   }
 
-  /** Shuffle-partition count for the streaming gates' micro-batches.
-    * For stateful streaming, `spark.sql.shuffle.partitions` (pinned
-    * into the checkpoint at first start) fixes the number of STATE
-    * STORE instances per stateful operator — and every micro-batch
-    * pays per-instance commit/maintenance cost whether or not a
-    * partition holds data. At gate scale (tens of rows per
-    * partition, 4–8 micro-batches, each gate run 3× per bench) the
-    * session's 32 instances are pure fixed overhead; the landed
-    * result is partition-count invariant, so the same hashes pass at
-    * any value. Production keeps the session default — this is the
-    * gate-harness twin of sizing shuffle partitions to the data,
-    * the exact tuning a real deployment applies per stream.
+  /** The confs every `withGateDir` gate declares: its micro-batches'
+    * shuffle-partition count. For stateful streaming,
+    * `spark.sql.shuffle.partitions` (pinned into the checkpoint at
+    * first start) fixes the number of STATE STORE instances per
+    * stateful operator — and every micro-batch pays per-instance
+    * commit/maintenance cost whether or not a partition holds data. At
+    * gate scale (tens of rows per partition, 4–8 micro-batches, each
+    * gate run 3× per bench) the session's 32 instances are pure fixed
+    * overhead; the landed result is partition-count invariant, so the
+    * same hashes pass at any value. Production keeps the session
+    * default — this is the gate-harness twin of sizing shuffle
+    * partitions to the data, the exact tuning a real deployment
+    * applies per stream. Declared, so the gate runs in its own
+    * session (`SparkEntry.queries`) and the caller's keeps its count.
     */
-  private val StreamGateShufflePartitions = 4
+  private val StreamGateConfs = Seq("spark.sql.shuffle.partitions" -> "4")
 
-  /** Run a streaming gate body in its own temp dir — with the gate
-    * shuffle fan-out above — and delete the dir EAGERLY once the
-    * result is materialized: the returned frame reads lazily from
-    * parquet inside the dir, so the body's result is pinned off-disk
-    * with an eager localCheckpoint (gate outputs are
+  /** Run a streaming gate body in its own temp dir and delete the dir
+    * EAGERLY once the result is materialized: the returned frame reads
+    * lazily from parquet inside the dir, so the body's result is
+    * pinned off-disk with an eager localCheckpoint (gate outputs are
     * aggregate/result-sized, O(windows) or O(matches), never the raw
     * corpus copy) before the finally removes the files. The shutdown
     * hook is a backstop for abnormal exits (a killed run mid-gate)
     * and is deregistered on the normal path so hooks don't
-    * accumulate across the bench's ~27 gate executions.
+    * accumulate across the bench's ~27 gate executions. Its gates
+    * declare [[StreamGateConfs]].
     */
-  private def withGateDir(s: SparkSession, prefix: String)(
+  private def withGateDir(prefix: String)(
       body: java.nio.file.Path => DataFrame): DataFrame = {
     val tmp = Files.createTempDirectory(prefix)
     val hook = new Thread(() => rmTree(tmp))
     Runtime.getRuntime.addShutdownHook(hook)
-    try QueryDef.withConf(s, "spark.sql.shuffle.partitions",
-      StreamGateShufflePartitions.toString)(body(tmp).localCheckpoint())
+    try body(tmp).localCheckpoint()
     finally {
       rmTree(tmp)
       // throws IllegalStateException if shutdown already started —
@@ -425,7 +426,7 @@ object StreamGates {
   // cast to double only at the end — the engine-wide float rule.
   private val q520 = QueryDef(
     "q520_stream_windowed_fold",
-    (s, dir) => withGateDir(s, "graft-stream-gate") { tmp =>
+    (s, dir) => withGateDir("graft-stream-gate") { tmp =>
       val ev = t(s, dir, "events")
         .select(col("ts"), col("event_type"),
           dec(col("value")).as("value"))
@@ -458,7 +459,7 @@ object StreamGates {
         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
       FROM events
       GROUP BY 1, 2 ORDER BY window_start_us, event_type"""),
-    covers = Seq("STREAM-windowed-fold", "§2.10a", "§2.10b"))
+    covers = Seq("STREAM-windowed-fold", "§2.10a", "§2.10b"), confs = StreamGateConfs)
 
   // ------------------------------------------------- sessionize fold
   // The CUSTOM-STATE streaming operator (flatMapGroupsWithState)
@@ -479,7 +480,7 @@ object StreamGates {
   // epoch-ms state); the oracle truncates its micros to match.
   private val q521 = QueryDef(
     "q521_stream_sessionize_fold",
-    (s, dir) => withGateDir(s, "graft-sess-gate") { tmp =>
+    (s, dir) => withGateDir("graft-sess-gate") { tmp =>
       import s.implicits._
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_type"),
@@ -547,7 +548,7 @@ object StreamGates {
       WHERE sid < (SELECT MAX(sid) FROM sessions s2
         WHERE s2.user_id = sessions.user_id)
       ORDER BY user_id, session_start_us"""),
-    covers = Seq("STREAM-sessionize-fold", "§2.10c"))
+    covers = Seq("STREAM-sessionize-fold", "§2.10c"), confs = StreamGateConfs)
 
   // ------------------------------------------- stream-stream join fold
   // Stream-stream inner interval join under the oracle gate: clicks
@@ -561,7 +562,7 @@ object StreamGates {
   // oracle is the plain SQL interval join.
   private val q522 = QueryDef(
     "q522_stream_interval_join",
-    (s, dir) => withGateDir(s, "graft-ssj-gate") { tmp =>
+    (s, dir) => withGateDir("graft-ssj-gate") { tmp =>
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_type"),
           (dec(col("value")) * 100)
@@ -615,7 +616,7 @@ object StreamGates {
         AND p.ts >= c.ts
         AND epoch_us(p.ts) <= epoch_us(c.ts) + 30*60*1000000
       ORDER BY c.user_id, click_us, purchase_us, purchase_cents"""),
-    covers = Seq("STREAM-interval-join-fold"))
+    covers = Seq("STREAM-interval-join-fold"), confs = StreamGateConfs)
 
   // --------------------------------------------- quota admission fold
   // transformWithState (the Spark 4 arbitrary-state API, RocksDB
@@ -627,10 +628,11 @@ object StreamGates {
   // row_number() window. The value column is deliberately dropped
   // (zeroed) before streaming: rows identical up to the sort key make
   // same-key tie order unobservable in both engines, keeping the
-  // admission boundary deterministic.
+  // admission boundary deterministic. Its declared confs add the
+  // RocksDB state store provider to the stream gates' partition count.
   private val q523 = QueryDef(
     "q523_stream_quota_admission",
-    (s, dir) => withGateDir(s, "graft-quota-gate") { tmp =>
+    (s, dir) => withGateDir("graft-quota-gate") { tmp =>
       import s.implicits._
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_type"),
@@ -647,24 +649,21 @@ object StreamGates {
         writeChronoSlices(ev, p, col("ts"), 4)
       }.toString
       val out = tmp.resolve("out").toString
-      QueryDef.withConf(s, "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        val stream = s.readStream
-          .schema(ev.schema)
-          .option("maxFilesPerTrigger", 2)
-          .parquet(src)
-          .as[EventStreams.Event]
-        val q = EventStreams.admitQuota(stream, limit = 5L)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[EventStreams.Admitted], _: Long) =>
-            batch.write.mode("append").parquet(out)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      val stream = s.readStream
+        .schema(ev.schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
+        .as[EventStreams.Event]
+      val q = EventStreams.admitQuota(stream, limit = 5L)
+        .writeStream
+        .outputMode("append")
+        .option("checkpointLocation", tmp.resolve("ckpt").toString)
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[EventStreams.Admitted], _: Long) =>
+          batch.write.mode("append").parquet(out)
+          ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
       // ts reported at MILLISECOND resolution: the processor orders
       // by ms, so same-ms rows are interchangeable — reporting µs
       // would re-expose the unobservable tie order
@@ -683,7 +682,9 @@ object StreamGates {
         CAST(n_admitted AS BIGINT) AS n_admitted
       FROM r WHERE n_admitted <= 5
       ORDER BY user_id, n_admitted, ts_ms, event_type"""),
-    covers = Seq("STREAM-quota-admission"))
+    covers = Seq("STREAM-quota-admission"),
+    confs = StreamGateConfs :+ ("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
 
   // --------------------------------------------- streaming dedup fold
   // dropDuplicatesWithinWatermark under the oracle: with infinite
@@ -696,7 +697,7 @@ object StreamGates {
   // point of the operator over plain dropDuplicates.)
   private val q524 = QueryDef(
     "q524_stream_dedup",
-    (s, dir) => withGateDir(s, "graft-dedup-gate") { tmp =>
+    (s, dir) => withGateDir("graft-dedup-gate") { tmp =>
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_type"),
           lit(0.0).as("value"))
@@ -726,7 +727,7 @@ object StreamGates {
     },
     Some("""SELECT DISTINCT user_id, epoch_us(ts) AS ts_us
       FROM events ORDER BY user_id, ts_us"""),
-    covers = Seq("STREAM-dedup-fold"))
+    covers = Seq("STREAM-dedup-fold"), confs = StreamGateConfs)
 
   // --------------------------------------------- stream-static enrich
   // The stream-static broadcast dimension join under the oracle:
@@ -738,7 +739,7 @@ object StreamGates {
   // segment (outer semantics preserved through the stream).
   private val q525 = QueryDef(
     "q525_stream_enrich",
-    (s, dir) => withGateDir(s, "graft-enrich-gate") { tmp =>
+    (s, dir) => withGateDir("graft-enrich-gate") { tmp =>
       val ev = t(s, dir, "events")
         .filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts"),
@@ -778,7 +779,7 @@ object StreamGates {
       FROM events e LEFT JOIN customer c ON c.c_custkey = e.user_id
       WHERE e.event_type = 'purchase'
       ORDER BY e.user_id, ts_us, cents, segment"""),
-    covers = Seq("STREAM-static-enrich"))
+    covers = Seq("STREAM-static-enrich"), confs = StreamGateConfs)
 
   // ---------------------------------- outer stream-stream join fold
   // The LEFT OUTER interval join — the only streaming join whose
@@ -799,7 +800,7 @@ object StreamGates {
   // pass through untouched).
   private val q526 = QueryDef(
     "q526_stream_outer_interval_join",
-    (s, dir) => withGateDir(s, "graft-ssoj-gate") { tmp =>
+    (s, dir) => withGateDir("graft-ssoj-gate") { tmp =>
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_type"),
           (dec(col("value")) * 100)
@@ -867,7 +868,7 @@ object StreamGates {
         epoch_us(purchase_ts) AS purchase_us, purchase_cents
       FROM (SELECT * FROM inner_m UNION ALL SELECT * FROM no_match)
       ORDER BY user_id, click_us, purchase_us, purchase_cents"""),
-    covers = Seq("STREAM-outer-interval-join"))
+    covers = Seq("STREAM-outer-interval-join"), confs = StreamGateConfs)
 
   // ------------------------------------------------- late-drop gate
   // The watermark's DROP side, the one §2.10 behavior not yet under
@@ -890,7 +891,7 @@ object StreamGates {
   // name, not here as an apparent aggregation bug.)
   private val q527 = QueryDef(
     "q527_stream_late_drop",
-    (s, dir) => withGateDir(s, "graft-late-gate") { tmp =>
+    (s, dir) => withGateDir("graft-late-gate") { tmp =>
       val ev = t(s, dir, "events")
         .select(col("ts"), col("event_type"),
           dec(col("value")).as("value"))
@@ -930,7 +931,7 @@ object StreamGates {
         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
       FROM events
       GROUP BY 1, 2 ORDER BY window_start_us, event_type"""),
-    covers = Seq("STREAM-late-drop", "§2.10d"))
+    covers = Seq("STREAM-late-drop", "§2.10d"), confs = StreamGateConfs)
 
   // --------------------------------- AvailableNow disruption clean
   // The reference's daily-batch contract (§2.10a) under the oracle:
@@ -943,7 +944,7 @@ object StreamGates {
   // One cleaner definition, two execution modes, one oracle.
   private val q528 = QueryDef(
     "q528_stream_available_now_clean",
-    (s, dir) => withGateDir(s, "graft-avnow-gate") { tmp =>
+    (s, dir) => withGateDir("graft-avnow-gate") { tmp =>
       val raw = NsGates.rawFromEvents(s, dir)
       val src = cachedSrc("avnow", dir) { p =>
         raw.repartition(4).write.mode("overwrite").json(p.toString)
@@ -959,7 +960,7 @@ object StreamGates {
         s.read.parquet(tmp.resolve("out").toString))
     },
     Some(NsGates.parityOracle),
-    covers = Seq("STREAM-available-now", "§2.10a"))
+    covers = Seq("STREAM-available-now", "§2.10a"), confs = StreamGateConfs)
 
   // The streaming state-sizing census. The one streaming regime the
   // engine's Auto doctrine cannot reach at run time is the state-store

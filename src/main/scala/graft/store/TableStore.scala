@@ -44,8 +44,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * is one [[commit]]. At rest a table directory holds its current
   * files and `_`-prefixed metadata, which Spark's file index skips, so
   * `spark.read.parquet(path(table))` reads the current table. A
-  * directory without `_manifest`, written before manifests, reads by
-  * footer inference; its files become version 1 at its first commit.
+  * directory that holds data files but no `_manifest` is not a table
+  * of this store: reading or committing to it fails, rather than
+  * guessing its schema or sweeping its files.
   */
 final class TableStore(spark: SparkSession, root: String) {
   import TableStore._
@@ -115,25 +116,25 @@ final class TableStore(spark: SparkSession, root: String) {
     }))).getBytes(UTF_8)
 
   /** The current version of `table`: its highest complete manifest,
-    * or, for a directory written before manifests, its data files with
-    * footer-inferred schemas (one part per data-holding subdirectory).
+    * or version 0 (no parts). Fails on a directory that holds data
+    * files, its own or a part's, but no `_manifest`: a first commit's
+    * sweep would delete them.
     */
   private[store] def snapshot(table: String): Snapshot = manifests(table) match {
     case Some(vs) => vs.reverseIterator.flatMap(load(table, _)).nextOption()
       .getOrElse(Snapshot(table, 0, "", Map.empty))
     case None =>
-      val parts = ("" +: listed(dir(table)).filter(s => s.isDirectory && !s.getPath.getName.contains("="))
-        .map(_.getPath.getName)).map(p => p -> dataFiles(dir(table, p))).collect {
-          case (p, files) if files.nonEmpty =>
-            p -> Part(asRead(spark.read.parquet(dir(table, p).toString).schema), files, None)
-        }
-      Snapshot(table, 0, "", parts.toMap, legacy = parts.nonEmpty)
+      val d = dir(table)
+      val stray = (d +: listed(d).filter(_.isDirectory).map(_.getPath)).filter(dataFiles(_).nonEmpty)
+      if (stray.nonEmpty)
+        throw new IllegalStateException(s"$d holds data files but no $ManifestDir: not a " +
+          s"table of this store (data files in ${stray.mkString(", ")})")
+      Snapshot(table, 0, "", Map.empty)
   }
 
   /** `part` of a snapshot as a DataFrame over exactly its files: the
     * file index is served from the manifest, so building the scan lists
-    * nothing and infers nothing, however many files there are. Hive-style
-    * `k=v` directories still yield their columns.
+    * nothing and infers nothing, however many files there are.
     */
   private[store] def read(s: Snapshot, part: String): Option[DataFrame] =
     s.parts.get(part).map { p =>
@@ -146,10 +147,8 @@ final class TableStore(spark: SparkSession, root: String) {
           def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
           def invalidateAll(): Unit = ()
         })
-      val partitionCols = index.partitionSchema.fieldNames.toSet
       spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-        StructType(p.schema.filterNot(f => partitionCols(f.name))), None,
-        new ParquetFileFormat, Map.empty)(spark))
+        p.schema, None, new ParquetFileFormat, Map.empty)(spark))
     }
 
   /** `name` as (table, part): `<table>/<part>` names a part. */
@@ -167,15 +166,12 @@ final class TableStore(spark: SparkSession, root: String) {
 
   // ------------------------------------------------------------ commit
 
-  /** Data files (Spark's `part-` files) of a part: its own and its
-    * `k=v` directories', by relative path, with sizes.
+  /** Data files (Spark's `part-` files) of a part directory, by
+    * name, with sizes.
     */
-  private def dataFiles(d: Path, rel: String = ""): Map[String, Long] =
-    listed(d).flatMap { s =>
-      val name = s.getPath.getName
-      if (s.isFile) Some(rel + name -> s.getLen).filter(_ => name.startsWith("part-"))
-      else if (name.contains("=")) dataFiles(s.getPath, s"$rel$name/")
-      else Nil
+  private def dataFiles(d: Path): Map[String, Long] =
+    listed(d).collect {
+      case s if s.isFile && s.getPath.getName.startsWith("part-") => s.getPath.getName -> s.getLen
     }.toMap
 
   /** The one write path. A commit builds on the snapshot `base`:
@@ -200,12 +196,10 @@ final class TableStore(spark: SparkSession, root: String) {
   private[store] def commit(
       base: Snapshot, writes: Seq[Write], before: Snapshot => Unit = _ => ()): Snapshot = {
     val table = base.table
-    // a legacy table's files become version 1 first; a new table is
-    // marked before any data lands, so its crashed first write is
-    // debris, not a legacy table
-    val on =
-      if (base.legacy) publish(base, base.copy(version = 1, writer = token), Nil)
-      else { requireLatest(base); if (base.version == 0) fs.mkdirs(new Path(dir(table), ManifestDir)); base }
+    // a new table is marked before any data lands, so its crashed
+    // first write is debris of a table, not a directory without one
+    requireLatest(base)
+    if (base.version == 0) fs.mkdirs(new Path(dir(table), ManifestDir))
     val written = writes.map { w =>
       val d = dir(table, w.part)
       val prior = dataFiles(d)
@@ -215,22 +209,22 @@ final class TableStore(spark: SparkSession, root: String) {
       // one write job's files share its id: another id is a second writer
       if (added.keys.flatMap(WriteJob.findFirstMatchIn(_).map(_.group(1))).toSet.size > 1)
         throw new ConcurrentModificationException(s"another writer is writing $table/${w.part}")
-      val kept = if (w.append) on.parts.get(w.part) else None
+      val kept = if (w.append) base.parts.get(w.part) else None
       (w.part, Part(asRead(w.df.schema), kept.fold(Map.empty[String, Long])(_.files) ++ added,
         kept.fold(Option(rows))(_.rows.map(_ + rows))), now, added)
     }
-    val staged = Snapshot(table, on.version + 1, token, on.parts ++ written.map(w => w._1 -> w._2))
+    val staged = Snapshot(table, base.version + 1, token, base.parts ++ written.map(w => w._1 -> w._2))
     val added = written.flatMap { case (part, _, _, files) =>
       files.keys.map(new Path(dir(table, part), _)) }
     try before(staged)
     catch {
       case NonFatal(e) =>
         // a lost race shows as the rival, not as its sweep under our readers
-        try requireLatest(on, added)
+        try requireLatest(base, added)
         catch { case lost: ConcurrentModificationException => lost.addSuppressed(e); throw lost }
         throw e
     }
-    val next = publish(on, staged, added)
+    val next = publish(base, staged, added)
     written.foreach { case (part, _, now, _) =>
       val live = next.parts.get(part).fold(Set.empty[String])(_.files.keySet)
       now.keys.filterNot(live).foreach(f => fs.delete(new Path(dir(table, part), f), false))
@@ -546,16 +540,13 @@ object TableStore {
 
   /** One named part of a table version: its schema, data files (path
     * relative to the part directory → size in bytes) and rows (None in
-    * a manifest that predates row counts, and in a legacy table).
+    * a manifest that predates row counts).
     */
   private[store] final case class Part(schema: StructType, files: Map[String, Long], rows: Option[Long])
 
-  /** One committed version of a table; version 0 has no manifest
-    * (absent, or `legacy`: written before manifests).
-    */
+  /** One committed version of a table; version 0 has no manifest. */
   private[store] final case class Snapshot(
-      table: String, version: Int, writer: String, parts: Map[String, Part],
-      legacy: Boolean = false)
+      table: String, version: Int, writer: String, parts: Map[String, Part])
 
   /** One part's new content in a [[TableStore.commit]]. */
   private[store] final case class Write(part: String, df: DataFrame, append: Boolean = false)

@@ -16,6 +16,13 @@ object GraftPlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A new session on the same context that starts as a copy of
+    * `spark`'s state: its confs, temp views and the extensions' rules.
+    * Changes to either session stay out of the other.
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** Catalyst expression behind a public Column, converted EAGERLY
     * (Spark 4 wraps ColumnNodes; `ExpressionUtils.expression` defers
     * conversion to analysis, which custom logical nodes never get

@@ -24,14 +24,20 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - The engine's rules, strategy and confs are installed once, at
   *    session build ([[SessionDefaults]]). Nothing in the engine adds
   *    rules or strategies to a live session or registers functions in
-  *    it, gates and the loader change confs only through the scoped
-  *    `QueryDef.withConf`, and the test session is the engine's.
+  *    it, and the test session is the engine's.
+  *  - No gate changes a session another gate can see. A gate declares
+  *    the confs it needs (`QueryDef.confs`) and runs in a session made
+  *    for them, so nothing under `queries/` or `plans/`, and not the
+  *    loader, sets or unsets a conf, except the one function that
+  *    builds that session (`QueryDef.session`). No `object` under
+  *    `plans/` holds a mutable map: a rule reads what its session
+  *    holds, never a JVM-wide registry.
   *  - The pipeline's layers (store, etl, analytics, sources) start no
   *    threads: its stage threads come only from `Main`'s stage pool,
   *    made per run from the calling thread, so every job carries the
   *    caller's Spark local properties (an op id, job tags).
-  *  - Every public `def` and `object` outside `queries/` and `dev/` has
-  *    a caller in `src/main`: its name appears in `src/main` code
+  *  - Every public `def`, `val` and `object` outside `queries/` and
+  *    `dev/` has a caller in `src/main`: its name appears in `src/main` code
   *    somewhere other than its own definition, or it is on a short
   *    list of kept entry points, each with its reason. Entry points
   *    that only specs call are compiled, documented and tested without
@@ -108,24 +114,6 @@ class EntryPointAuditSpec extends AnyFunSuite {
       """createOrReplaceTempFunction|call_function\("""
     val installs = violations(scalaFiles(root))(code => install.r.findFirstIn(code).isDefined)
 
-    // conf.set( under queries/ and in Tables, except inside withConf
-    val queryDef = root.resolve("queries/QueryDef.scala")
-    val withConf: Set[Int] = {
-      val lines = Files.readAllLines(queryDef).asScala.toIndexedSeq
-      val start = lines.indexWhere(_.contains("def withConf["))
-      if (start < 0) Set.empty
-      else {
-        val indent = lines(start).takeWhile(_ == ' ')
-        val end = lines.indexWhere(_ == indent + "}", start)
-        (start + 1 to (if (end < 0) start else end) + 1).toSet
-      }
-    }
-    val confFiles = scalaFiles(root.resolve("queries")) :+ root.resolve("Tables.scala")
-    val confSets = confFiles.flatMap(p => codeLines(p).collect {
-      case (code, n) if code.contains("conf.set(") && !(p == queryDef && withConf(n)) =>
-        s"$p:$n: ${code.trim}"
-    })
-
     val builder = """SparkSession\s*\.builder\b""".r
     val testBuilders = violations(
         scalaFiles(testRoot).filterNot(_.endsWith("EntryPointAuditSpec.scala"))) {
@@ -137,11 +125,59 @@ class EntryPointAuditSpec extends AnyFunSuite {
       "engine code installs a rule, strategy or function on a live session " +
         "(add it to GraftExtensions, or build the expression in its handle):\n" +
         installs.mkString("\n"))
-    assert(confSets.isEmpty,
-      "a conf set outside QueryDef.withConf (session-wide confs belong in " +
-        "SessionDefaults.sqlConfs):\n" + confSets.mkString("\n"))
     assert(testBuilders.isEmpty,
       "a test session not built through SessionDefaults:\n" + testBuilders.mkString("\n"))
+  }
+
+  /** 1-based line numbers of `def name` in `p`: its signature line
+    * through the last line before the next line at its indent or less;
+    * empty without one.
+    */
+  private def defLines(p: Path, name: String): Set[Int] = {
+    val lines = Files.readAllLines(p).asScala.toIndexedSeq
+    def indent(l: String) = l.takeWhile(_ == ' ').length
+    val start = lines.indexWhere(_.matches("""\s*(private(\[\w+\])?\s+)?def """ + name + """\b.*"""))
+    if (start < 0) Set.empty
+    else {
+      val end = lines.indexWhere(l => l.trim.nonEmpty && indent(l) <= indent(lines(start)), start + 1)
+      (start + 1 to (if (end < 0) lines.size else end)).toSet
+    }
+  }
+
+  test("no gate, rule or loader sets a conf outside the function that builds a gate's session") {
+    val queryDef = root.resolve("queries/QueryDef.scala")
+    val gateSession = defLines(queryDef, "session")
+    val confFiles = scalaFiles(root.resolve("queries")) ++ scalaFiles(root.resolve("plans")) :+
+      root.resolve("Tables.scala")
+    val confChanges = confFiles.flatMap(p => codeLines(p).collect {
+      case (code, n) if """\bconf\s*\.\s*(set|unset)\s*\(""".r.findFirstIn(code).isDefined &&
+          !(p == queryDef && gateSession(n)) =>
+        s"$p:$n: ${code.trim}"
+    })
+    assert(confChanges.isEmpty,
+      "a conf set or unset outside QueryDef.session (declare a gate's confs in " +
+        "QueryDef.confs; session-wide confs belong in SessionDefaults.sqlConfs):\n" +
+        confChanges.mkString("\n"))
+  }
+
+  test("no object under plans/ holds a mutable map") {
+    // a top-level object's members: the `val`s and `var`s at member
+    // indent from its `object` line to the next top-level definition
+    val mutableMap = """\b(ConcurrentHashMap|WeakHashMap|IdentityHashMap|TrieMap|""" +
+      """mutable\s*\.\s*\w*Map|java\.util\.\w*Map)\b"""
+    val registries = scalaFiles(root.resolve("plans")).flatMap { p =>
+      var inObject = false
+      codeLines(p).flatMap { case (code, n) =>
+        if ("""^\S""".r.findFirstIn(code).isDefined)
+          inObject = """^(private\s+|final\s+|case\s+)*object\b""".r.findFirstIn(code).isDefined
+        val member = """^  (\w+(\[\w+\])?\s+)*(val|var)\b""".r.findFirstIn(code).isDefined
+        if (inObject && member && mutableMap.r.findFirstIn(code).isDefined) Some(s"$p:$n: ${code.trim}")
+        else None
+      }
+    }
+    assert(registries.isEmpty,
+      "an object under plans/ holds a mutable map (a registration belongs to the " +
+        "session that makes it):\n" + registries.mkString("\n"))
   }
 
   test("the pipeline's layers start no threads of their own") {
@@ -209,7 +245,7 @@ class EntryPointAuditSpec extends AnyFunSuite {
     if (t == s) s else unparenthesized(t)
   }
 
-  /** Public `def`s and `object`s of a file as (name, line): members of
+  /** Public `def`s, `val`s and `object`s of a file as (name, line): members of
     * a public template (class, object or trait) and top-level objects,
     * leaving out `override`s, private and protected members, members
     * of private templates and of anonymous classes (`new T { … }`),
@@ -228,7 +264,7 @@ class EntryPointAuditSpec extends AnyFunSuite {
       case (line, i) =>
         declRe.findAllMatchIn(line).foreach { m =>
           val mods = Option(m.group(1)).getOrElse("")
-          if (scopes.head && Set("def", "object")(m.group(2)) &&
+          if (scopes.head && Set("def", "val", "object")(m.group(2)) &&
               !Seq("private", "protected", "override").exists(mods.contains))
             Option(m.group(3)).foreach(n => found += n -> (i + 1))
         }

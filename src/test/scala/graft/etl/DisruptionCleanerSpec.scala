@@ -14,6 +14,14 @@ class DisruptionCleanerSpec extends SparkSpec {
 
   private val clock = Clock(Instant.parse("2026-02-14T11:18:10.996856Z"))
 
+  /** The cleaner's output columns, in order: the reference's cleaned
+    * record.
+    */
+  private val outputColumns: Seq[String] = Seq(
+    "disruption_id", "type", "title", "description", "start_time",
+    "end_time", "duration_minutes", "impact_level", "affected_stations",
+    "is_resolved", "created_at", "updated_at")
+
   private def fixtureJson: String =
     """[
       {"id": "prio-12345", "type": "verstoring",
@@ -142,6 +150,6 @@ class DisruptionCleanerSpec extends SparkSpec {
       spark.sparkContext.emptyRDD[Row], NsSchemas.raw)
     val out = DisruptionCleaner.clean(raw, clock)
     assert(out.isEmpty)
-    assert(out.columns.toSeq == DisruptionCleaner.outputColumns)
+    assert(out.columns.toSeq == outputColumns)
   }
 }

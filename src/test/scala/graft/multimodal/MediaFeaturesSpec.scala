@@ -1,11 +1,24 @@
 package graft.multimodal
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.multimodal.MediaFeatures._
 
 class MediaFeaturesSpec extends SparkSpec {
+
+  /** One row per media object, the shape [[MediaFeatures.MediaRow]]
+    * decodes.
+    */
+  private val mediaSchema: StructType = StructType(Seq(
+    StructField("media_id", LongType, nullable = false),
+    StructField("media_type", StringType),   // image | audio | video
+    StructField("uri", StringType),
+    StructField("content", BinaryType),
+    StructField("meta_width", IntegerType),
+    StructField("meta_height", IntegerType),
+    StructField("meta_sample_rate", IntegerType)))
 
   private def mediaDf = {
     val bytes = (0 until 4096).map(i => ((i * 31 + 7) % 256).toByte).toArray

@@ -2,7 +2,7 @@ package graft.plans
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
@@ -11,10 +11,10 @@ import graft.store.{AggSpec, AggTable, TableStore}
 
 class MatViewRewriteSpec extends SparkSpec {
 
-  // the rule is in every engine session; a case's registrations are
-  // cleared when it ends
-  private def withRule[A](body: => A): A =
-    try body finally MatViewRewrite.clear()
+  // the rule is in every engine session; a case registers in a
+  // private clone of the test session, so no other case sees it
+  private def withRule[A](body: SparkSession => A): A =
+    body(GraftPlanBridge.cloneSession(spark))
 
   /** Root paths of every parquet scan in the optimized plan. */
   private def scannedPaths(df: DataFrame): Seq[String] =
@@ -26,7 +26,7 @@ class MatViewRewriteSpec extends SparkSpec {
     }.flatten
 
   /** base parquet (long measure) + AggTable folded over two batches. */
-  private def fixture(): (String, String) = {
+  private def fixture(mv: SparkSession): (String, String) = {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-mv").toString
     val base = s"$root/base"
@@ -37,14 +37,14 @@ class MatViewRewriteSpec extends SparkSpec {
     val df = spark.read.parquet(base)
     agg.accumulate("b1", df.filter(col("v") >= 3))
     agg.accumulate("b2", df.filter(col("v") < 3))
-    MatViewRewrite.register(base, agg)
+    MatViewRewrite.register(mv, base, agg)
     (base, store.path("stats") + "/state")
   }
 
   test("aggregate over the base table is answered from the state") {
-    withRule {
-      val (base, statePath) = fixture()
-      val q = spark.read.parquet(base)
+    withRule { mv =>
+      val (base, statePath) = fixture(mv)
+      val q = mv.read.parquet(base)
         .groupBy("k")
         .agg(count(lit(1)).as("n"), sum("v").as("s"),
           min("v").as("mn"), max("v").as("mx"))
@@ -61,9 +61,9 @@ class MatViewRewriteSpec extends SparkSpec {
   }
 
   test("key-predicate filters ride the rewrite; measure filters do not") {
-    withRule {
-      val (base, statePath) = fixture()
-      val keyFiltered = spark.read.parquet(base)
+    withRule { mv =>
+      val (base, statePath) = fixture(mv)
+      val keyFiltered = mv.read.parquet(base)
         .filter(col("k") =!= "b")
         .groupBy("k").agg(sum("v").as("s")).orderBy("k")
       assert(scannedPaths(keyFiltered).exists(_.contains(statePath.stripPrefix("file:"))))
@@ -71,7 +71,7 @@ class MatViewRewriteSpec extends SparkSpec {
         Seq(("a", 6L), ("c", 4L)))
 
       // a measure predicate cannot be answered by per-group state
-      val measureFiltered = spark.read.parquet(base)
+      val measureFiltered = mv.read.parquet(base)
         .filter(col("v") > 0)
         .groupBy("k").agg(sum("v").as("s"))
       assert(scannedPaths(measureFiltered).exists(_.endsWith("/base")))
@@ -79,27 +79,27 @@ class MatViewRewriteSpec extends SparkSpec {
   }
 
   test("non-algebraic aggregates and unregistered tables stay untouched") {
-    withRule {
-      val (base, _) = fixture()
+    withRule { mv =>
+      val (base, _) = fixture(mv)
       // avg is not derivable from the closed state set → base scan
-      val avgQ = spark.read.parquet(base).groupBy("k").agg(avg("v").as("a"))
+      val avgQ = mv.read.parquet(base).groupBy("k").agg(avg("v").as("a"))
       assert(scannedPaths(avgQ).exists(_.endsWith("/base")))
       // count(v) counts non-nulls — not derivable either
-      val countCol = spark.read.parquet(base).groupBy("k").agg(count(col("v")).as("n"))
+      val countCol = mv.read.parquet(base).groupBy("k").agg(count(col("v")).as("n"))
       assert(scannedPaths(countCol).exists(_.endsWith("/base")))
       // a different parquet table with the same shape is not rewritten
       import spark.implicits._
       val other = Files.createTempDirectory("graft-mv-other").toString + "/t"
       Seq(("a", 1L)).toDF("k", "v").write.parquet(other)
-      val q = spark.read.parquet(other).groupBy("k").agg(sum("v").as("s"))
+      val q = mv.read.parquet(other).groupBy("k").agg(sum("v").as("s"))
       assert(scannedPaths(q).exists(_.endsWith("/t")))
       assert(q.collect().head.getLong(1) == 1L)
     }
   }
 
   test("FILTER-clause aggregates stay on the base scan") {
-    withRule {
-      val (base, statePath) = fixture()
+    withRule { mv =>
+      val (base, statePath) = fixture(mv)
       // an aggregate with FILTER (WHERE …) counts a predicate-
       // dependent subset the per-group state never kept — rewriting
       // it to the state's cnt/sum would return the UNfiltered group
@@ -107,14 +107,14 @@ class MatViewRewriteSpec extends SparkSpec {
       // match in MatViewRewrite.tryRewrite guards against). A
       // wildcard match in the filter position would take q1/q2 off
       // the base and this test pins both the plan and the values.
-      val q1 = spark.read.parquet(base).groupBy("k")
+      val q1 = mv.read.parquet(base).groupBy("k")
         .agg(expr("count(*) FILTER (WHERE v > 2)").as("n")).orderBy("k")
       assert(scannedPaths(q1).exists(_.endsWith("/base")),
         s"FILTER count left the base scan: ${scannedPaths(q1)}")
       assert(q1.collect().map(r => (r.getString(0), r.getLong(1))).toSeq ==
         Seq(("a", 1L), ("b", 1L), ("c", 1L)))
 
-      val q2 = spark.read.parquet(base).groupBy("k")
+      val q2 = mv.read.parquet(base).groupBy("k")
         .agg(expr("sum(v) FILTER (WHERE v > 2)").as("s")).orderBy("k")
       assert(scannedPaths(q2).exists(_.endsWith("/base")),
         s"FILTER sum left the base scan: ${scannedPaths(q2)}")
@@ -125,7 +125,7 @@ class MatViewRewriteSpec extends SparkSpec {
       // count_if desugars to count with a non-foldable child (or a
       // filter clause depending on version) — either way it must not
       // be answered by the state's row counts
-      val q3 = spark.read.parquet(base).groupBy("k")
+      val q3 = mv.read.parquet(base).groupBy("k")
         .agg(expr("count_if(v < 0)").as("n")).orderBy("k")
       assert(scannedPaths(q3).exists(_.endsWith("/base")),
         s"count_if left the base scan: ${scannedPaths(q3)}")
@@ -135,7 +135,7 @@ class MatViewRewriteSpec extends SparkSpec {
   }
 
   test("sum over the exact DECIMAL(18,2) cast rewrites even for float measures") {
-    withRule {
+    withRule { mv =>
       import org.apache.spark.sql.types.DecimalType
       import spark.implicits._
       val root = Files.createTempDirectory("graft-mv-f").toString
@@ -143,15 +143,15 @@ class MatViewRewriteSpec extends SparkSpec {
       Seq(("a", 1.25), ("a", 2.50), ("b", 0.75)).toDF("k", "v").write.parquet(base)
       val store = new TableStore(spark, root)
       val agg = new AggTable(store, "stats", AggSpec(Seq("k"), Seq("v")))
-      agg.accumulate("b1", spark.read.parquet(base))
+      agg.accumulate("b1", mv.read.parquet(base))
       val statePath = store.path("stats") + "/state"
-      MatViewRewrite.register(base, agg)
+      MatViewRewrite.register(mv, base, agg)
 
       // bare float sum must NOT rewrite (order-dependent) ...
-      val bare = spark.read.parquet(base).groupBy("k").agg(sum("v").as("s"))
+      val bare = mv.read.parquet(base).groupBy("k").agg(sum("v").as("s"))
       assert(scannedPaths(bare).exists(_.endsWith("/base")))
       // ... but the state's own cast form must
-      val cast = spark.read.parquet(base).groupBy("k")
+      val cast = mv.read.parquet(base).groupBy("k")
         .agg(sum(col("v").cast(DecimalType(18, 2))).as("s")).orderBy("k")
       assert(scannedPaths(cast).exists(_.contains(statePath.stripPrefix("file:"))))
       assert(cast.collect().map(r => (r.getString(0), r.getDecimal(1).toString)).toSeq ==
@@ -160,7 +160,7 @@ class MatViewRewriteSpec extends SparkSpec {
   }
 
   test("stream-maintained state answers ad-hoc aggregates over the landed base") {
-    withRule {
+    withRule { mv =>
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import org.apache.spark.sql.types.DecimalType
       import spark.implicits._
@@ -196,8 +196,8 @@ class MatViewRewriteSpec extends SparkSpec {
       query.stop()
       (b1 ++ b2).toDF().write.mode("append").parquet(base)
 
-      MatViewRewrite.register(base, new AggTable(store, "ev_stats", spec))
-      val q = spark.read.parquet(base).groupBy("event_type")
+      MatViewRewrite.register(mv, base, new AggTable(store, "ev_stats", spec))
+      val q = mv.read.parquet(base).groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(DecimalType(18, 2))).as("s"),
           min("value").as("mn"), max("value").as("mx"))
@@ -210,17 +210,27 @@ class MatViewRewriteSpec extends SparkSpec {
   }
 
   test("rewrite preserves output ids for downstream operators (join + sort)") {
-    withRule {
-      import spark.implicits._
-      val (base, statePath) = fixture()
+    withRule { mv =>
+      import mv.implicits._
+      val (base, statePath) = fixture(mv)
       val dim = Seq(("a", "alpha"), ("b", "beta"), ("c", "gamma")).toDF("k", "label")
-      val q = spark.read.parquet(base)
+      val q = mv.read.parquet(base)
         .groupBy("k").agg(sum("v").as("s"))
         .join(dim, "k")
         .orderBy(desc("s"))
       assert(scannedPaths(q).exists(_.contains(statePath.stripPrefix("file:"))))
       assert(q.collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq ==
         Seq(("b", 10L, "beta"), ("a", 6L, "alpha"), ("c", 4L, "gamma")))
+    }
+  }
+
+  test("a registration is seen only by the session that holds it") {
+    withRule { mv =>
+      val (base, statePath) = fixture(mv)
+      def q(s: SparkSession) = s.read.parquet(base).groupBy("k").agg(sum("v").as("s"))
+      assert(scannedPaths(q(mv)).exists(_.contains(statePath.stripPrefix("file:"))))
+      assert(scannedPaths(q(spark)).exists(_.endsWith("/base")))
+      assert(scannedPaths(q(spark.newSession())).exists(_.endsWith("/base")))
     }
   }
 }

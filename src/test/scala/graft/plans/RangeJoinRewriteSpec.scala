@@ -68,59 +68,21 @@ class RangeJoinRewriteSpec extends SparkSpec {
     }
   }
 
-  test("a corrupt open-ended interval cannot explode the fan-out") {
-    import spark.implicits._
-    val base = 1700000000000L
-    // one row whose end_time is ~40 years after start (corrupt), at a
-    // 1-minute bin width → would be ~21M generated rows without a cap
-    val df = (Seq((1L, base, base + 40L * 365 * 24 * 3600 * 1000)) ++
-      (2 to 6).map(i => (i.toLong, base + i * 60000L, base + i * 60000L + 120000L)))
-      .map { case (id, s, e) => (id, new Timestamp(s), new Timestamp(e)) }
-      .toDF("id", "start_ts", "end_ts")
-    spark.conf.set(RangeJoinRewrite.binMinutesKey, "1")
-    spark.conf.set(RangeJoinRewrite.maxBinsKey, "100")
-    spark.conf.set(RangeJoinRewrite.onClampKey, "silent")
-    try withRule {
-      val rewritten = overlapJoin(df)
-      assert(rewritten.queryExecution.optimizedPlan.toString.contains("__graft_bin"))
-      // the corrupt row still pairs with every nearby short interval
-      // (they all start within the 100-bin horizon), the consecutive
-      // 2-minute intervals still pair with each other, and it's fast
-      val got = rewritten.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val expected = (2 to 6).map(i => (1L, i.toLong)).toSet ++
-        (2 to 5).map(i => (i.toLong, i + 1L))
-      assert(got == expected)
-    } finally {
-      spark.conf.unset(RangeJoinRewrite.binMinutesKey)
-      spark.conf.unset(RangeJoinRewrite.maxBinsKey)
-      spark.conf.unset(RangeJoinRewrite.onClampKey)
-    }
-  }
-
   test("by default an interval exceeding maxBins fails loudly, never silently drops") {
     import spark.implicits._
     val base = 1700000000000L
-    // row 1 spans 200 one-minute bins — over the 100-bin bound, small
-    // enough that the unbounded re-run stays fast
-    val df = (Seq((1L, base, base + 200L * 60000)) ++
+    val binMs = RangeJoinRewrite.BinMinutes * 60000L
+    // row 1 spans one bin more than the fan-out bound; the short rows
+    // start inside it
+    val df = (Seq((1L, base, base + (RangeJoinRewrite.MaxBins + 1) * binMs)) ++
       (2 to 4).map(i => (i.toLong, base + i * 60000L, base + i * 60000L + 120000L)))
       .map { case (id, s, e) => (id, new Timestamp(s), new Timestamp(e)) }
       .toDF("id", "start_ts", "end_ts")
-    spark.conf.set(RangeJoinRewrite.binMinutesKey, "1")
-    spark.conf.set(RangeJoinRewrite.maxBinsKey, "100")
-    try withRule {
+    withRule {
       val err = intercept[Exception](overlapJoin(df).collect())
       def messages(t: Throwable): Seq[String] =
         Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
       assert(messages(err).exists(_.contains("graft range-join rewrite")), err)
-      // maxBins=0 unbounds the explode: same query then succeeds exactly
-      spark.conf.set(RangeJoinRewrite.maxBinsKey, "0")
-      val got = overlapJoin(df).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == ((2 to 4).map(i => (1L, i.toLong)).toSet ++
-        (2 to 3).map(i => (i.toLong, i + 1L))))
-    } finally {
-      spark.conf.unset(RangeJoinRewrite.binMinutesKey)
-      spark.conf.unset(RangeJoinRewrite.maxBinsKey)
     }
   }
 

@@ -32,6 +32,19 @@ class GraphGateSourceSpec extends SparkSpec {
     assert(builds == 2, "invalidate must drop the entry")
   }
 
+  test("another session of the context gets the one build, bound to itself") {
+    var builds = 0
+    def frame = { builds += 1; spark.range(4).toDF("id") }
+    val other = spark.newSession()
+    val a = GraphGateSource.cached(spark, "spec-probe-rebind")(frame)
+    val b = GraphGateSource.cached(other, "spec-probe-rebind")(frame)
+    assert(builds == 1, s"build ran $builds times")
+    assert(a.sparkSession eq spark)
+    // so a query derived from it plans under that session's confs
+    assert(b.sparkSession eq other, "the frame must plan in the session that asked")
+    assert(b.collect().map(_.getLong(0)).sorted.toSeq == (0L until 4L))
+  }
+
   test("copurchaseW matches an independent self-join derivation") {
     val got = GraphGateSource.copurchaseW(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet

@@ -4,6 +4,8 @@ import java.io.FileNotFoundException
 import java.nio.file.Files
 import java.util.ConcurrentModificationException
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpec
@@ -255,21 +257,25 @@ class TableStoreSpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) FROM t").head().getLong(0) == 3L)
   }
 
-  test("a table written without the schema side file still reads") {
+  test("a directory of data files without a manifest fails on read and on commit") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-store-legacy").toString
+    val root = Files.createTempDirectory("graft-store-unmanaged").toString
     val store = new TableStore(spark, root)
-    Seq((1L, "a", 10L), (2L, "b", 10L)).toDF("k", "v", "ver")
-      .write.parquet(store.path("legacy"))
-    val df = store.read("legacy").get
-    assert(df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
-      Map(1L -> "a", 2L -> "b"))
-    // an append keeps the legacy files as part of the new version
-    assert(store.appendIfAbsent("legacy", Seq((3L, "c", 11L)).toDF("k", "v", "ver"), "k") == 1)
-    assert(new java.io.File(store.path("legacy"), "_manifest/2.json").isFile)
-    assert(new TableStore(spark, root).read("legacy").get.count() == 3)
-    store.upsert("legacy", Seq((4L, "d", 11L)).toDF("k", "v", "ver"), Seq("k"), "ver")
-    assert(store.read("legacy").get.count() == 4)
+    val rows = Seq((1L, "a", 10L), (2L, "b", 10L)).toDF("k", "v", "ver")
+    rows.write.parquet(store.path("plain"))
+    rows.write.parquet(store.path("parted") + "/state")
+    def files(t: String) = Files.walk(java.nio.file.Paths.get(store.path(t))).iterator()
+      .asScala.count(_.getFileName.toString.startsWith("part-"))
+    val before = Map("plain" -> files("plain"), "parted" -> files("parted"))
+    for (t <- Seq("plain", "parted")) {
+      val read = intercept[IllegalStateException](store.read(t))
+      assert(read.getMessage.contains("no _manifest"), read.getMessage)
+      intercept[IllegalStateException](store.write(t, rows))
+      intercept[IllegalStateException](store.appendIfAbsent(t, rows, "k"))
+    }
+    // nothing was swept
+    assert(Map("plain" -> files("plain"), "parted" -> files("parted")) == before)
+    assert(!new java.io.File(store.path("plain"), "_manifest").exists())
   }
 
   test("a fresh store reads a 41-file table without listing or starting a job") {
