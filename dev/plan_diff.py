@@ -15,11 +15,13 @@ and data:
   location of the Spark warehouse;
 - the multi-distinct aggregate rewrite (q206, q294): its Expand numbers
   the distinct groups (gid 1..k) and orders their columns in hash-set
-  order, which can change from run to run. Groups are renumbered in
-  column-name order, a run of the group columns in a list or a hash
-  partitioning is put in that order, and the Expand's projections are
-  compared as sorted sets (q88's multi-distinct profile varies the same
-  way).
+  order, which can change from run to run or with what ran before in
+  the JVM. Groups are renumbered in the order of their sorted column
+  names, leaving out the grouping keys; a run of the distinct columns
+  (each once, though a multi-column distinct shares them with other
+  groups, as in q294) in a list or a hash partitioning is put in name
+  order, and the Expand's projections are compared as sorted sets
+  (q88's multi-distinct profile varies the same way).
 """
 import difflib
 import os
@@ -83,13 +85,16 @@ def canonical_expand(text):
             continue
         projections = [split_top(p[1:-1]) for p in split_top(m.group(1))]
         gids = [next((x for x in items if re.fullmatch(r"\d+", x)), None) for items in projections]
-        groups = {gid: tuple(x for x in items if x not in ("null", gid))
+        # the grouping keys: the same item at the same place in every projection
+        keys = {pos[0] for pos in zip(*projections) if len(set(pos)) == 1}
+        groups = {gid: tuple(sorted(x for x in items if x not in ("null", gid) and x not in keys))
                   for gid, items in zip(gids, projections) if gid not in (None, "0")}
         if len(groups) < 2:
             continue
         order = sorted(groups, key=lambda g: groups[g])
         renumber = {old: str(new) for new, old in enumerate(order, 1)}
-        columns = [c for g in order for c in groups[g]]
+        # a multi-column distinct shares its columns with other groups
+        columns = sorted({c for cols in groups.values() for c in cols})
         text = re.sub(r"(gid#\w* = )(\d+)",
                       lambda mm: mm.group(1) + renumber.get(mm.group(2), mm.group(2)), text)
         text = re.sub(r"(\[|hashpartitioning\()([^\[\]]*?)(\]|, \d+\))",

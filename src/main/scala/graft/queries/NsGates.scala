@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 import graft.Tables.{load => t}
+import graft.analytics.NsQueries
 import graft.etl.{Clock, DisruptionCleaner}
 import graft.operators.RangeJoin
 
@@ -24,18 +25,9 @@ import QueryDef.dec
   * the translated query. Clock is pinned to 2024-01-31 (events span
   * January 2024).
   *
-  * Gate-variant deviations from the reference text, for determinism
-  * across engines (documented per SURVEY §7.4.2):
-  *  - presentation ROUND() dropped (Spark rounds the shortest decimal
-  *    string, DuckDB the binary value — they disagree on halfway
-  *    points); averages are exact decimal-sum / count divisions;
-  *  - every ORDER BY gets a unique tiebreak suffix;
-  *  - Q5's `SUM(COUNT(*)) OVER (ORDER BY date ROWS 6 PRECEDING)` is
-  *    ill-defined with multiple rows per date (frame order within a
-  *    date is engine-internal); replaced by the query's stated intent:
-  *    rolling over per-date totals, joined back;
-  *  - Q6's CAST(x AS INTEGER) → floor() first (SQLite/Spark truncate,
-  *    DuckDB rounds).
+  * The Spark side of q31–q35 and q531 is [[NsQueries]], whose scaladoc
+  * lists the deviations from the reference text that keep both engines
+  * deterministic; each oracle is the same query in DuckDB SQL.
   */
 object NsGates {
 
@@ -139,7 +131,7 @@ object NsGates {
   // Shared derivation: events → disruptions
   // ------------------------------------------------------------------
 
-  private def disruptions(s: SparkSession, dir: String): DataFrame =
+  private[queries] def disruptions(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "events").select(
       col("event_id").cast(StringType).as("disruption_id"),
       when(col("event_type") === "error", "calamity")
@@ -175,8 +167,10 @@ object NsGates {
                     CASE WHEN user_id % 3 = 0 THEN 'UTR' END) END AS affected_stations
       FROM events)"""
 
-  /** Pinned "now" for the -30/-7 day filters. */
-  private val clockDate = java.sql.Date.valueOf("2024-01-31")
+  /** Pinned "now": the -30/-7 day filters and the cleaner's clock
+    * (shared with q528).
+    */
+  private[queries] val clock = Clock(Instant.parse("2024-01-31T00:00:00Z"))
 
   private val stationsSql: String =
     """stations AS (SELECT * FROM (VALUES
@@ -185,34 +179,15 @@ object NsGates {
         ('GVC','Den Haag Centraal'), ('LEDN','Leiden Centraal'))
         AS t(station_code, station_name))"""
 
-  private def stationsDf(s: SparkSession): DataFrame = {
+  private[queries] def stationsDf(s: SparkSession): DataFrame = {
     val rows = graft.etl.NsSchemas.stationSeed.map { case (c, n, _, _, _) => (c, n) }
     s.createDataFrame(rows).toDF("station_code", "station_name")
   }
 
-  /** exact average: decimal sum cast double / count. */
-  private def avgDec(c: Column): Column =
-    sum(dec(c)).cast("double") / count(lit(1))
-
   // ------------------------------------------------------------------ Q1
   private val q31 = QueryDef(
     "q31_ns_rolling_trend",
-    (s, dir) => {
-      val daily = disruptions(s, dir)
-        .filter(col("start_time") >= date_sub(lit(clockDate), 30))
-        .groupBy(to_date(col("start_time")).as("disruption_date"), col("type"))
-        .agg(count(lit(1)).as("incident_count"),
-          avgDec(col("duration_minutes")).as("avg_duration_minutes"))
-      val w = Window.partitionBy("type").orderBy("disruption_date")
-        .rowsBetween(-6, Window.currentRow)
-      daily.select(
-          col("disruption_date"), col("type"), col("incident_count"),
-          col("avg_duration_minutes"),
-          sum(col("incident_count")).over(w).as("rolling_7day_total"),
-          (sum(col("incident_count")).over(w).cast("double") /
-            count(lit(1)).over(w)).as("rolling_7day_avg"))
-        .orderBy(desc("disruption_date"), desc("incident_count"), asc("type"))
-    },
+    (s, dir) => NsQueries.rollingTrend(disruptions(s, dir), clock),
     Some(s"""WITH $disruptionsSql,
       daily AS (
         SELECT CAST(start_time AS DATE) AS disruption_date, type,
@@ -233,29 +208,7 @@ object NsGates {
   // ------------------------------------------------------------------ Q2
   private val q32 = QueryDef(
     "q32_ns_station_severity",
-    (s, dir) => {
-      val un = disruptions(s, dir)
-        .filter(col("affected_stations").isNotNull)
-        .select(col("disruption_id"), col("impact_level"), col("duration_minutes"),
-          explode(split(col("affected_stations"), ",")).as("station_code"))
-        .withColumn("station_code", trim(col("station_code")))
-      val agg = un.groupBy("station_code").agg(
-        countDistinct(col("disruption_id")).as("total_disruptions"),
-        avgDec(col("duration_minutes")).as("avg_duration_minutes"),
-        (sum(col("impact_level")).cast("double") / count(lit(1))).as("avg_impact_level"),
-        max(col("impact_level")).as("max_impact_level"))
-      val pct = percent_rank().over(Window.orderBy("total_disruptions"))
-      agg.join(broadcast(stationsDf(s)), Seq("station_code"), "left")
-        .select(
-          col("station_code"), col("station_name"), col("total_disruptions"),
-          col("avg_duration_minutes"), col("avg_impact_level"), col("max_impact_level"),
-          pct.as("disruption_percentile"),
-          dense_rank().over(Window.orderBy(desc("total_disruptions")))
-            .cast(LongType).as("severity_rank"),
-          when(pct > 0.9, "HIGH RISK").when(pct > 0.7, "MEDIUM RISK")
-            .otherwise("LOW RISK").as("risk_category"))
-        .orderBy(desc("total_disruptions"), asc("station_code"))
-    },
+    (s, dir) => NsQueries.stationSeverity(disruptions(s, dir), stationsDf(s)),
     Some(s"""WITH $disruptionsSql, $stationsSql,
       un0 AS (SELECT disruption_id, impact_level, duration_minutes,
                 unnest(string_split(affected_stations, ',')) AS sc
@@ -281,30 +234,7 @@ object NsGates {
   // ------------------------------------------------------------------ Q3
   private val q33 = QueryDef(
     "q33_ns_day_over_day",
-    (s, dir) => {
-      val daily = disruptions(s, dir)
-        .groupBy(to_date(col("start_time")).as("disruption_date"))
-        .agg(
-          count(lit(1)).as("total_disruptions"),
-          sum(when(col("type") === "calamity", 1).otherwise(0)).as("calamities"),
-          sum(when(col("type") === "maintenance", 1).otherwise(0)).as("maintenance"),
-          sum(when(col("type") === "disruption", 1).otherwise(0)).as("disruptions"),
-          avgDec(col("duration_minutes")).as("avg_duration"),
-          max(col("impact_level")).as("max_impact"))
-      val w = Window.orderBy("disruption_date")
-      val prev = lag(col("total_disruptions"), 1).over(w)
-      daily.select(
-          col("disruption_date"), col("total_disruptions"), col("avg_duration"),
-          col("max_impact"),
-          prev.as("prev_day_total"),
-          lead(col("total_disruptions"), 1).over(w).as("next_day_total"),
-          (col("total_disruptions") - prev).as("dod_delta"),
-          ((col("total_disruptions") - prev).cast("double") * 100 /
-            nullif(prev, lit(0))).as("dod_pct_change"),
-          sum(col("total_disruptions"))
-            .over(w.rowsBetween(-6, Window.currentRow)).as("rolling_7day"))
-        .orderBy(desc("disruption_date"))
-    },
+    (s, dir) => NsQueries.dayOverDay(disruptions(s, dir)),
     Some(s"""WITH $disruptionsSql,
       daily AS (
         SELECT CAST(start_time AS DATE) AS disruption_date,
@@ -330,33 +260,7 @@ object NsGates {
   // ------------------------------------------------------------------ Q4
   private val q34 = QueryDef(
     "q34_ns_peak_hour",
-    (s, dir) => {
-      val hourly = disruptions(s, dir)
-        .filter(col("start_time").isNotNull)
-        .groupBy(
-          date_format(col("start_time"), "HH").as("hour_of_day"),
-          (dayofweek(col("start_time")) - 1).cast(IntegerType).as("dow"))
-        .agg(
-          count(lit(1)).as("disruption_count"),
-          avgDec(col("duration_minutes")).as("avg_duration"),
-          (sum(col("impact_level")).cast("double") / count(lit(1))).as("avg_impact"))
-      val unique = Window.orderBy(desc("disruption_count"), asc("hour_of_day"), asc("dow"))
-      val tied = Window.orderBy(desc("disruption_count"))
-      hourly.select(
-          element_at(typedLit(Map(0 -> "Sunday", 1 -> "Monday", 2 -> "Tuesday",
-            3 -> "Wednesday", 4 -> "Thursday", 5 -> "Friday", 6 -> "Saturday")),
-            col("dow")).as("day_name"),
-          concat(col("hour_of_day"), lit(":00")).as("hour_label"),
-          col("disruption_count"),
-          col("avg_duration"), col("avg_impact"),
-          row_number().over(unique).cast(LongType).as("row_num"),
-          rank().over(tied).cast(LongType).as("rank_with_gaps"),
-          dense_rank().over(tied).cast(LongType).as("dense_rank"),
-          col("hour_of_day"), col("dow"))
-        .orderBy(desc("disruption_count"), asc("hour_of_day"), asc("dow"))
-        .limit(20)
-        .drop("hour_of_day", "dow")
-    },
+    (s, dir) => NsQueries.peakHour(disruptions(s, dir)),
     Some(s"""WITH $disruptionsSql,
       hourly AS (
         SELECT strftime(start_time, '%H') AS hour_of_day,
@@ -381,42 +285,7 @@ object NsGates {
   // ------------------------------------------------------------------ Q5
   private val q35 = QueryDef(
     "q35_ns_complex",
-    (s, dir) => {
-      val d = disruptions(s, dir)
-      val metrics = d
-        .filter(col("start_time") >= date_sub(lit(clockDate), 30))
-        .groupBy(to_date(col("start_time")).as("disruption_date"), col("type"))
-        .agg(
-          count(lit(1)).as("incident_count"),
-          (sum(unix_micros(col("end_time")) - unix_micros(col("start_time")))
-            .cast("double") / 60000000d / count(lit(1))).as("avg_duration"))
-      val dailyTot = metrics.groupBy("disruption_date")
-        .agg(sum(col("incident_count")).as("day_total"))
-      val rolling = dailyTot.select(col("disruption_date"),
-        sum(col("day_total")).over(Window.orderBy("disruption_date")
-          .rowsBetween(-6, Window.currentRow)).as("rolling_7day_total"))
-      val impact = d.filter(col("affected_stations").isNotNull)
-        .select(explode(split(col("affected_stations"), ",")).as("sc"))
-        .select(trim(col("sc")).as("station_code"))
-        .groupBy("station_code").agg(count(lit(1)).as("disruption_count"))
-        .withColumn("severity_percentile",
-          percent_rank().over(Window.orderBy("disruption_count")))
-      val worst = impact.filter(col("severity_percentile") > 0.9)
-        .orderBy(desc("disruption_count"), asc("station_code"))
-        .limit(1)
-        .agg(min(col("station_code")).as("worst_station"))
-      val byDay = Window.partitionBy("disruption_date")
-      metrics.join(rolling, Seq("disruption_date"))
-        .crossJoin(broadcast(worst))
-        .select(
-          col("disruption_date"), col("type"), col("incident_count"),
-          col("avg_duration"), col("rolling_7day_total"), col("worst_station"),
-          (sum(when(col("type") === "cancellation", col("incident_count"))).over(byDay)
-            .cast("double") * 100 /
-            nullif(sum(col("incident_count")).over(byDay), lit(0)))
-            .as("cancellation_rate_pct"))
-        .orderBy(desc("disruption_date"), desc("incident_count"), asc("type"))
-    },
+    (s, dir) => NsQueries.complexAnalytics(disruptions(s, dir), clock),
     Some(s"""WITH $disruptionsSql,
       metrics AS (
         SELECT CAST(start_time AS DATE) AS disruption_date, type,
@@ -461,7 +330,7 @@ object NsGates {
       // overlap any interval starting inside it (b.end > a.start ≥
       // cutoff), so both join sides shrink to the window ± duration —
       // the reference's WHERE on a.start_time alone is preserved below.
-      val cutoff = date_sub(lit(clockDate), 7)
+      val cutoff = date_sub(clock.date, 7)
       val d = disruptions(s, dir)
         .select("disruption_id", "type", "start_time", "end_time")
         .filter(col("end_time") > cutoff)
@@ -500,11 +369,12 @@ object NsGates {
     covers = Seq("NSQ6", "J2"))
 
   // --------------------------------------------- Q6 via the optimizer rule
-  // Same query and oracle as q36, but the Spark side writes the NAIVE
-  // overlap theta self-join and lets [[graft.plans.RangeJoinRewrite]]
-  // — installed in every session by SessionDefaults, and switched on
-  // by its `enabled` key in the gate's declared `confs`, so the gate
-  // runs in its own session — rewrite it into the binned equi-join.
+  // Same query and oracle as q36, but the Spark side is
+  // [[NsQueries.overlapping]]'s NAIVE overlap theta self-join, which
+  // [[graft.plans.RangeJoinRewrite]] — installed in every session by
+  // SessionDefaults, and switched on by its `enabled` key in the gate's
+  // declared `confs`, so the gate runs in its own session — rewrites
+  // into the binned equi-join.
   // The gate fails loudly if the rewrite did NOT fire (no bin Generate
   // in the optimized plan, or a nested-loop join survived physical
   // planning), then hash-matches q36's oracle: the extension path
@@ -514,34 +384,7 @@ object NsGates {
   private val q531 = QueryDef(
     "q531_overlap_via_extension",
     (s, dir) => {
-      val cutoff = date_sub(lit(clockDate), 7)
-      val d = disruptions(s, dir)
-        .select("disruption_id", "type", "start_time", "end_time")
-        .filter(col("end_time") > cutoff)
-      def side(p: String) = d.select(
-        col("disruption_id").as(s"${p}_disruption_id"),
-        col("type").as(s"${p}_type"),
-        col("start_time").as(s"${p}_start_time"),
-        col("end_time").as(s"${p}_end_time"))
-      val joined = side("a").join(side("b"),
-        col("a_disruption_id") < col("b_disruption_id") &&
-          col("a_start_time") < col("b_end_time") &&
-          col("a_end_time") > col("b_start_time"))
-      val overlapMin = floor(
-        (unix_micros(least(col("a_end_time"), col("b_end_time"))) -
-          unix_micros(greatest(col("a_start_time"), col("b_start_time"))))
-          .cast("double") / 60000000d).cast(IntegerType)
-      val q = joined
-        .filter(col("a_start_time") >= cutoff)
-        .select(
-          col("a_disruption_id").as("disruption_a"),
-          col("b_disruption_id").as("disruption_b"),
-          col("a_type").as("type_a"), col("b_type").as("type_b"),
-          col("a_start_time").as("a_start"), col("a_end_time").as("a_end"),
-          col("b_start_time").as("b_start"), col("b_end_time").as("b_end"),
-          overlapMin.as("overlap_minutes"))
-        .orderBy(desc("overlap_minutes"), asc("disruption_a"), asc("disruption_b"))
-        .limit(50)
+      val q = NsQueries.overlapping(disruptions(s, dir), clock)
       val binGenerates = q.queryExecution.optimizedPlan.collect {
         case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
       }
@@ -553,20 +396,7 @@ object NsGates {
         "rewritten overlap join still plans a nested-loop join")
       q
     },
-    Some(s"""WITH $disruptionsSql
-      SELECT a.disruption_id AS disruption_a, b.disruption_id AS disruption_b,
-        a.type AS type_a, b.type AS type_b,
-        a.start_time AS a_start, a.end_time AS a_end,
-        b.start_time AS b_start, b.end_time AS b_end,
-        CAST(floor(CAST(epoch_us(least(a.end_time, b.end_time))
-          - epoch_us(greatest(a.start_time, b.start_time)) AS DOUBLE)
-          / CAST(60000000 AS DOUBLE)) AS INTEGER) AS overlap_minutes
-      FROM disruptions a JOIN disruptions b
-        ON a.disruption_id < b.disruption_id
-       AND a.start_time < b.end_time
-       AND a.end_time > b.start_time
-      WHERE a.start_time >= DATE '2024-01-31' - 7
-      ORDER BY overlap_minutes DESC, disruption_a, disruption_b LIMIT 50"""),
+    q36.oracle,
     covers = Seq("NSQ6", "J2", "EXT-rangejoin"),
     confs = Seq(graft.plans.RangeJoinRewrite.enabledKey -> "true"))
 
@@ -579,8 +409,6 @@ object NsGates {
   // aggregates prove the rename / type-map / title rules / coercing parse /
   // imputation / duration guards / impact cascade / regex station fallback
   // / validation chain end-to-end against an independent engine.
-  private val clock = Clock(Instant.parse("2024-01-31T00:00:00Z"))
-
   // clock + 2h as epoch micros, for the imputed-end count
   private val imputedUs: Long =
     Instant.parse("2024-01-31T02:00:00Z").toEpochMilli * 1000L
@@ -635,9 +463,6 @@ object NsGates {
         sum(when(unix_micros(col("end_time")) === imputedUs, 1).otherwise(0))
           .as("n_imputed_end"))
       .orderBy("type")
-
-  /** The pinned cleaner clock, shared with q528. */
-  private[queries] val gateClock = clock
 
   private val q46 = QueryDef(
     "q46_cleaner_parity",

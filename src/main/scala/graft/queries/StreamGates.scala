@@ -954,7 +954,7 @@ object StreamGates {
         src.toString,
         tmp.resolve("out").toString,
         tmp.resolve("ckpt").toString,
-        NsGates.gateClock)
+        NsGates.clock)
       q.awaitTermination()
       NsGates.cleanedReport(
         s.read.parquet(tmp.resolve("out").toString))

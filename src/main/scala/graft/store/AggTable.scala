@@ -79,9 +79,6 @@ final class AggTable(store: TableStore, table: String, val spec: AggSpec) {
 
   def state: Option[DataFrame] = store.read(s"$table/state")
 
-  /** Final aggregates of everything accumulated so far. */
-  def result: Option[DataFrame] = state.map(spec.finish)
-
   // The version this instance builds on and a driver-side mirror of
   // its ledger (O(batches) ids), seeded once and advanced by this
   // instance's commits: an accumulate pays no ledger-scan job, and
@@ -91,9 +88,7 @@ final class AggTable(store: TableStore, table: String, val spec: AggSpec) {
 
   private def current: (TableStore.Snapshot, Set[String]) = mirror.getOrElse {
     val base = store.snapshot(table)
-    // bounded-collect: O(batches) ids — the ledger's documented size
-    val ids = store.read(base, "ledger").fold(Set.empty[String])(
-      _.select("batch_id").collect().map(_.getString(0)).toSet)
+    val ids = store.ledger(base)
     mirror = Some((base, ids))
     (base, ids)
   }
@@ -102,15 +97,13 @@ final class AggTable(store: TableStore, table: String, val spec: AggSpec) {
     * applied (nothing happens).
     */
   def accumulate(batchId: String, batch: DataFrame): Boolean = {
-    val spark = batch.sparkSession
-    import spark.implicits._
     val (base, applied) = current
     if (applied.contains(batchId)) false
     else {
       val p = spec.partial(batch)
       val next = store.commit(base, Seq(
         TableStore.Write("state", store.read(base, "state").fold(p)(spec.merge(_, p))),
-        TableStore.Write("ledger", (applied + batchId).toSeq.sorted.toDF("batch_id").coalesce(1))))
+        store.ledgerWrite(applied + batchId)))
       mirror = Some((next, applied + batchId))
       true
     }

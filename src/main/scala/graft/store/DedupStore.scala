@@ -52,9 +52,7 @@ final class DedupStore(
 
   private def current: Mirror = mirror.getOrElse {
     val base = store.snapshot(table)
-    // bounded-collect: O(batches) ids — the ledger's documented size
-    val applied = store.read(base, "ledger").fold(Set.empty[String])(
-      _.select("batch_id").collect().map(_.getString(0)).toSet)
+    val applied = store.ledger(base)
     // NULL bloom cell = "no keys admitted yet" (an empty corpus after a
     // fully-duplicate or empty first batch) — flattened to None so every
     // consumer treats it as filter-absent
@@ -117,13 +115,10 @@ final class DedupStore(
       case (None, None) => null
     }
 
-    // the ledger is O(batches) rows forever — one partition, always;
-    // rebuilt from the driver mirror (sorted for determinism), no
-    // read-union pass
     val next = store.commit(base, Seq(
       TableStore.Write("docs", stored.fold(freshMat)(_.unionByName(freshMat))),
       TableStore.Write("bloom", Seq(Tuple1(mergedBits)).toDF("bloom")),
-      TableStore.Write("ledger", (applied + batchId).toSeq.sorted.toDF("batch_id").coalesce(1))))
+      store.ledgerWrite(applied + batchId)))
     mirror = Some(Mirror(next, applied + batchId, Option(mergedBits)))
     added
   }

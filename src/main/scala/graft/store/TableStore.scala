@@ -157,11 +157,26 @@ final class TableStore(spark: SparkSession, root: String) {
     case Array(t) => (t, "")
   }
 
-  def exists(table: String): Boolean = read(table).isDefined
-
   def read(table: String): Option[DataFrame] = {
     val (t, part) = split(table)
     read(snapshot(t), part)
+  }
+
+  /** The applied batch ids in `s`'s `ledger` part, the replay guard
+    * of [[AggTable]] and [[DedupStore]]: one `batch_id` column, sorted
+    * for determinism, in one partition always, O(batches) rows forever.
+    */
+  private[store] def ledger(s: Snapshot): Set[String] =
+    // bounded-collect: O(batches) ids — the ledger's documented size
+    read(s, "ledger").fold(Set.empty[String])(
+      _.select("batch_id").collect().map(_.getString(0)).toSet)
+
+  /** The `ledger` part holding `ids`, rebuilt from a writer's mirror
+    * (no read-union pass).
+    */
+  private[store] def ledgerWrite(ids: Set[String]): Write = {
+    import spark.implicits._
+    Write("ledger", ids.toSeq.sorted.toDF("batch_id").coalesce(1))
   }
 
   // ------------------------------------------------------------ commit

@@ -193,8 +193,6 @@ class EntryPointAuditSpec extends AnyFunSuite {
   /** Public entry points that stay with no caller in `src/main`. */
   private val uncalledKeeps: Map[(String, String), String] = Map(
     ("SparkEntry.scala", "entry") -> "the driver contract, called by name from outside the repo",
-    ("analytics/NsSqlQueries.scala", "NsSqlQueries") ->
-      "the Spark-SQL twin that NsSqlQueriesSpec checks NsQueries against",
     ("etl/Clock.scala", "golden") ->
       "the reference capture's clock, at which GoldenCleanSpec checks the reference's own rows",
     ("sources/DbSource.scala", "DbSource") -> "SURVEY S9's only implementation",

@@ -140,7 +140,7 @@ class MainSpec extends SparkSpec {
     val store = new TableStore(spark, root)
     assert(Seq("raw_disruptions", "stations").map(store.rowCount) ==
       Seq(clean("bronze_inserted"), new TableStore(spark, dir.resolve("clean").toString).rowCount("stations")))
-    assert(!store.exists("disruptions") && !store.exists("daily_stats"))
+    assert(store.read("disruptions").isEmpty && store.read("daily_stats").isEmpty)
     def manifests() = {
       val walk = Files.walk(dir.resolve("crashed"))
       try walk.iterator().asScala.filter(_.toString.contains("/_manifest/"))

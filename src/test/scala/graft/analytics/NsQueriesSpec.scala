@@ -62,7 +62,7 @@ class NsQueriesSpec extends SparkSpec {
     assert(top.getAs[String]("station_code") == "ASD")
     assert(top.getAs[Long]("total_disruptions") == 3L)
     assert(top.getAs[String]("station_name") == "Amsterdam Centraal")
-    assert(top.getAs[Int]("severity_rank") == 1)
+    assert(top.getAs[Long]("severity_rank") == 1L)
     // 6 station codes appear: ASD, UTR, RTD, GVC, EHV
     assert(rows.length == 5)
   }
@@ -86,7 +86,7 @@ class NsQueriesSpec extends SparkSpec {
     // 2026-03-09 is a Monday, 2026-03-10 a Tuesday, 2026-01-01 a Thursday.
     assert(rows.forall(r => Set("Monday", "Tuesday", "Thursday")
       .contains(r.getAs[String]("day_name"))))
-    assert(rows.head.getAs[Int]("row_num") == 1)
+    assert(rows.head.getAs[Long]("row_num") == 1L)
     // Ties: several buckets have count 1 → rank has gaps, dense doesn't.
     val counts = rows.map(_.getAs[Long]("disruption_count")).toSeq
     assert(counts == counts.sorted.reverse)
@@ -95,8 +95,8 @@ class NsQueriesSpec extends SparkSpec {
   test("Q5 complex analytics: cancellation rate via FILTER-rewrite window") {
     val rows = NsQueries.complexAnalytics(disruptions, clock).collect()
     val d10 = rows.filter(_.getAs[java.sql.Date]("disruption_date").toString == "2026-03-10")
-    // 03-10 has calamity 1, cancellation 1, disruption 1 → rate 33.33
-    assert(d10.forall(_.getAs[Double]("cancellation_rate_pct") == 33.33))
+    // 03-10 has calamity 1, cancellation 1, disruption 1 → rate 100/3
+    assert(d10.forall(_.getAs[Double]("cancellation_rate_pct") == 100.0 / 3))
     val d9 = rows.filter(_.getAs[java.sql.Date]("disruption_date").toString == "2026-03-09")
     // No cancellation on 03-09 → FILTER over empty set → NULL (not 0)
     assert(d9.forall(r => r.isNullAt(r.fieldIndex("cancellation_rate_pct"))))

@@ -46,7 +46,7 @@ class AggTablePropertiesSpec extends SparkSpec {
         }
         def rendered(df: org.apache.spark.sql.DataFrame): Seq[String] =
           df.orderBy("g").collect().map(_.toString).toSeq
-        val got = rendered(agg.result.get)
+        val got = rendered(agg.state.map(spec.finish).get)
         val oneShot = rendered(
           spec.finish(spec.partial(rows.toDF("g", "x"))))
         assert(got == oneShot, s"sample $i diverged: batches=$batches")

@@ -48,12 +48,12 @@ class AggTableSpec extends SparkSpec {
     import spark.implicits._
     val store = new TableStore(spark, Files.createTempDirectory("graft-agg").toString)
     val agg = new AggTable(store, "stats", spec)
-    assert(agg.result.isEmpty)
+    assert(agg.state.isEmpty)
     assert(agg.accumulate("b1", Seq(("a", 1.00), ("b", 2.00)).toDF("k", "v")))
     assert(agg.accumulate("b2", Seq(("a", 4.00)).toDF("k", "v")))
     // the reference's safe-to-re-run contract: same batch id twice ≡ once
     assert(!agg.accumulate("b2", Seq(("a", 4.00)).toDF("k", "v")))
-    val r = rows(agg.result.get)
+    val r = rows(agg.state.map(spec.finish).get)
     assert(r("a") == ((2L, 5.00, 2.50, 1.00, 4.00)))
     assert(r("b") == ((1L, 2.00, 2.00, 2.00, 2.00)))
   }
@@ -66,10 +66,10 @@ class AggTableSpec extends SparkSpec {
     agg.accumulate("b2", Seq(("a", 2.00)).toDF("k", "v"))
     // both are parts of <table>, written by ONE commit — a crash can
     // never persist the ledger without the matching state
-    assert(store.exists("stats/state") && store.exists("stats/ledger"))
-    assert(!store.exists("stats__batches"))
+    assert(store.read("stats/state").isDefined && store.read("stats/ledger").isDefined)
+    assert(store.read("stats__batches").isEmpty)
     assert(store.read("stats/ledger").get.collect()
       .map(_.getString(0)).toSet == Set("b1", "b2"))
-    assert(rows(agg.result.get)("a") == ((2L, 3.00, 1.50, 1.00, 2.00)))
+    assert(rows(agg.state.map(spec.finish).get)("a") == ((2L, 3.00, 1.50, 1.00, 2.00)))
   }
 }

@@ -321,7 +321,7 @@ class EventStreamsSpec extends SparkSpec {
     query.processAllAvailable()
     query.stop()
 
-    def result() = new graft.store.AggTable(store, "ev_stats", spec).result.get
+    def result() = new graft.store.AggTable(store, "ev_stats", spec).state.map(spec.finish).get
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val before = result()
     // two batches folded: click = both rows, view = one
@@ -356,7 +356,7 @@ class EventStreamsSpec extends SparkSpec {
       val ledgerReads = actions.filter(_ == ("collect" -> Seq("batch_id")))
       assert(ledgerReads.isEmpty, s"the second batch re-read the ledger: $actions")
     } finally query.stop()
-    val res = new graft.store.AggTable(store, "ev_stats", spec).result.get
+    val res = new graft.store.AggTable(store, "ev_stats", spec).state.map(spec.finish).get
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(res == Map("click" -> 1L, "view" -> 1L))
   }
